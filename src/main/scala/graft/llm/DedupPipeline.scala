@@ -86,8 +86,10 @@ object DedupPipeline {
                   jaccardThreshold: Double = 0.9): DataFrame = {
     val pairs = TextDedup.minhashLsh(docs, idCol, textCol, jaccardThreshold)
     val reps = components(pairs)
+    // docs(idCol), not col(idCol): with idCol == "id" the bare name
+    // matches both sides of the join
     docs.join(reps, docs(idCol) === reps("id"), "left_outer")
-      .filter(col("rep").isNull || col("rep") === col(idCol))
+      .filter(col("rep").isNull || col("rep") === docs(idCol))
       .select(docs.columns.map(docs(_)): _*)
   }
 

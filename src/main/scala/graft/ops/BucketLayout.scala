@@ -240,16 +240,12 @@ object BucketLayout {
     * current version — safe on a timer. Row-preserving, so the
     * CHECK-constraint gate is skipped like every compaction. */
   def compactBuckets(s: SparkSession, loc: String,
-                     smallerThanBytes: Long = 32L * 1024 * 1024): Long = {
-    var attempt = 0
-    while (attempt < 64) {
-      val latest = Snapshots.latestVersion(s, loc)
-      val spec = Snapshots.versionLayout(s, loc, latest).flatMap(parse)
+                     smallerThanBytes: Long = 32L * 1024 * 1024): Long =
+    Snapshots.commit(s, loc) { tip =>
+      val spec = tip.layout.flatMap(parse)
         .getOrElse(throw new IllegalStateException(
           s"$loc has no active bucket layout to compact"))
-      val files = Snapshots.versionFiles(s, loc, latest)
-      val dvs = Snapshots.versionDvs(s, loc, latest)
-      val schema = Snapshots.versionSchema(s, loc, latest)
+      val files = tip.files
       val lengths = Snapshots.fileSizes(s, files)
       val byBucket = files.groupBy(f => bucketOfPath(f).getOrElse(-1))
       val multi = byBucket.values.flatMap { fs =>
@@ -257,25 +253,21 @@ object BucketLayout {
           lengths.get(Snapshots.normPath(f)).exists(_ < smallerThanBytes))
         if (small.length >= 2) small else Nil
       }.toSeq
-      if (multi.isEmpty) return latest // nothing to bin-pack: no gain
-      val kept = files.filterNot(multi.toSet)
-      val dataDir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
-      val f = dataDir.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val newFiles = writeBucketed(
-        Snapshots.applyDv(s, Snapshots.readData(s, multi, schema), dvs),
-        spec, dataDir)
-      // carried files keep their vectors, FILTERED to entries naming
-      // kept files — entries for just-folded files are dead weight
-      val keepDvs = Snapshots.filterCarriedDvs(s, dvs, kept, dataDir)
-      if (Snapshots.tryPublish(s, loc, latest + 1, kept ++ newFiles,
-          dvs = keepDvs, schemaJson = schema.map(_.json),
-          layout = Some(format(spec)), carriedValid = true))
-        return latest + 1
-      f.delete(dataDir, true) // lost the race: recompute against new latest
-      attempt += 1
+      if (multi.isEmpty) Snapshots.Done(tip.version) // nothing to bin-pack: no gain
+      else {
+        val kept = files.filterNot(multi.toSet)
+        val dataDir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
+        val newFiles = writeBucketed(
+          Snapshots.applyDv(s, Snapshots.readData(s, multi, tip.schema), tip.dvs),
+          spec, dataDir)
+        // carried files keep their vectors, FILTERED to entries naming
+        // kept files — entries for just-folded files are dead weight
+        Snapshots.Publish(kept ++ newFiles,
+          dvs = Snapshots.filterCarriedDvs(s, tip.dvs, kept, dataDir),
+          schemaJson = tip.schemaJson, layout = Some(format(spec)),
+          carriedValid = true, scratch = Seq(dataDir))
+      }
     }
-    throw new IllegalStateException(s"lost the commit race 64 times at $loc")
-  }
 
   /** Rewrite the table hash-bucketed by `columns` (composite keys
     * allowed — `counts(i)` buckets for `columns(i)`, one file per live

@@ -86,37 +86,19 @@ object Constraints {
   def list(s: SparkSession, loc: String): Seq[(String, String)] =
     listVersioned(s, loc)._2
 
-  /** CAS-publish `cs` as chain version `prev + 1`; false = lost the race
-    * (someone else published prev + 1 first) — re-read and retry. */
-  private def tryWrite(s: SparkSession, loc: String, prev: Long,
-                       cs: Seq[(String, String)]): Boolean = {
-    val f = Snapshots.fs(s, loc)
-    val d = dir(loc)
-    f.mkdirs(d)
-    val tmp = new Path(d, s"_tmp_${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, true)
-    try out.write(cs.map { case (n, e) => s"$n\t$e\n" }.mkString.getBytes("UTF-8"))
-    finally out.close()
-    val target = new Path(d, f"cs${prev + 1}%05d")
-    // the same exactly-once claim as the manifest log (hard link on
-    // local FS — see Snapshots.atomicClaim)
-    Snapshots.atomicClaim(s, f, tmp, target)
-  }
-
-  /** Read-modify-write under the CAS loop: apply `change` to the current
-    * set and publish; a lost race re-reads and re-applies, so concurrent
-    * editors compose instead of clobbering. */
+  /** Read-modify-write under the shared bounded retry: apply `change`
+    * to the current set and claim it as chain version `v + 1` (the same
+    * exactly-once claim as the manifest log); a lost race re-reads and
+    * re-applies, so concurrent editors compose instead of clobbering. */
   private def update(s: SparkSession, loc: String,
-                     change: Seq[(String, String)] => Seq[(String, String)]): Unit = {
-    var attempt = 0
-    while (attempt < 64) {
+                     change: Seq[(String, String)] => Seq[(String, String)]): Unit =
+    Snapshots.retry(loc) {
       val (v, existing) = listVersioned(s, loc)
-      if (tryWrite(s, loc, v, change(existing))) return
-      attempt += 1
+      val bytes = change(existing).map { case (n, e) => s"$n\t$e\n" }.mkString
+        .getBytes("UTF-8")
+      if (Snapshots.claim(s, new Path(dir(loc), f"cs${v + 1}%05d"), bytes)) Some(())
+      else None
     }
-    throw new IllegalStateException(
-      s"lost the constraints CAS race 64 times at $loc")
-  }
 
   /** Add a named CHECK, validating the table's contents — rejected (and
     * rolled back by removing exactly this entry from the then-current

@@ -79,18 +79,11 @@ object Mv {
 
   private[graft] def registerUser(s: SparkSession, baseLoc: String,
                                   mvLoc: String): Unit = {
-    val f = Snapshots.fs(s, baseLoc)
-    f.mkdirs(usersDir(baseLoc))
-    val target = new Path(usersDir(baseLoc), entryName(mvLoc))
-    val tmp = new Path(usersDir(baseLoc),
-      s"_tmp_${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, true)
-    try out.write((mvLoc + "\n").getBytes("UTF-8"))
-    finally out.close()
     // same-MV re-register is idempotent (identical content); the claim
-    // failing because the entry already exists is success — and
-    // atomicClaim cleans its own tmp either way
-    Snapshots.atomicClaim(s, f, tmp, target)
+    // failing because the entry already exists is success — and the
+    // claim cleans its own tmp either way
+    Snapshots.claim(s, new Path(usersDir(baseLoc), entryName(mvLoc)),
+      (mvLoc + "\n").getBytes("UTF-8"))
   }
 
   /** The stored definition, if `loc` is a materialized view. */
@@ -224,8 +217,7 @@ object Mv {
               full: Boolean = false): Refreshed = {
     val d = readDef(s, mvLoc).getOrElse(throw new IllegalArgumentException(
       s"$mvLoc is not a materialized view (no mv.def)"))
-    var attempt = 0
-    while (attempt < 8) {
+    Snapshots.retry(mvLoc) {
       val tip = Snapshots.latestVersion(s, mvLoc)
       val vb = Snapshots.latestVersion(s, d.baseLoc)
       val tipLayout = if (tip <= 0) None
@@ -236,7 +228,7 @@ object Mv {
         val mv = base.groupBy(d.keys.map(col): _*).agg(aggExprs(d.sums).head,
           aggExprs(d.sums).tail: _*)
         val v = publish(s, mvLoc, tip + 1, mv, vb, tipLayout)
-        if (v > 0) return Refreshed(v, -1L, vb, -1L)
+        Option.when(v > 0)(Refreshed(v, -1L, vb, -1L))
       } else {
         val v0 = baseVersionOfTip(s, mvLoc).getOrElse(
           throw new IllegalStateException(s"$mvLoc's tip carries no " +
@@ -244,82 +236,81 @@ object Mv {
         require(vb >= v0, s"base ${d.baseLoc} is at version $vb, behind " +
           s"the MV cursor $v0 (base rolled back?) — " +
           "CALL refresh_mv(full => true)")
-        if (vb == v0) return Refreshed(tip, v0, vb, 0L)
-        val feed = Snapshots.changeFeed(s, d.baseLoc, v0, vb)
-        val sign = when(col("change") === "insert", 1L).otherwise(-1L)
-        // groups whose delta cancels out exactly (insert+delete of the
-        // same rows) fold to all-zeros — drop them so `groups_touched`
-        // reports groups CHANGED and pure churn takes the carry path
-        val unchanged = ((col("dn") === 0L) +: d.sums.flatMap(c => Seq(
-          coalesce(col(s"ds_$c"), lit(0L)) === 0L,
-          col(s"dc_$c") === 0L))).reduce(_ && _)
-        val dAgg = feed.groupBy(d.keys.map(col): _*).agg(
-          sum(sign).as("dn"),
-          d.sums.flatMap(c => Seq(
-            sum(sign * col(c).cast(LongType)).as(s"ds_$c"),
-            sum(when(col(c).isNotNull, sign).otherwise(0L)).as(s"dc_$c")
-          )): _*).filter(!unchanged).localCheckpoint(true)
-        val touched = dAgg.count()
-        if (touched == 0L) {
-          // churn that cancels out group-by-group (or a feed of empty
-          // commits): content is already right, but the CURSOR must
-          // still advance or every future refresh re-reads this span —
-          // carry the tip's files BY REFERENCE, zero data I/O
-          val ok = Snapshots.tryPublish(s, mvLoc, tip + 1,
-            Snapshots.versionFiles(s, mvLoc, tip),
-            schemaJson = Snapshots.versionSchema(s, mvLoc, tip).map(_.json),
-            layout = tipLayout.map(BucketLayout.format),
-            mvBase = Some(vb.toString), carriedValid = true)
-          if (ok) return Refreshed(tip + 1, v0, vb, 0L)
-        } else {
-          val tipFiles = Snapshots.versionFiles(s, mvLoc, tip)
-          // the SCALE path: a bucketed MV merges and rewrites ONLY the
-          // buckets the delta touches; every other file carries by
-          // reference — O(delta + touched buckets), never O(MV).
-          // Requires every live file bucket-addressed (a foreign commit
-          // to the MV sheds the layout header, so `tipLayout` already
-          // guards that; the path check is belt and braces)
-          val bucketed = tipLayout.filter(_ =>
-            tipFiles.forall(f => BucketLayout.bucketOfPath(f).nonEmpty))
-          val (mvOld, carryFiles) = bucketed match {
-            case Some(spec) =>
-              val touchedB = dAgg.select(BucketLayout.linearId(spec).as("b"))
-                .distinct().collect().map(_.getInt(0)).toSet
-              val (tf, cf) = tipFiles.partition(f =>
-                BucketLayout.bucketOfPath(f).exists(touchedB))
-              val schema = Snapshots.versionSchema(s, mvLoc, tip).getOrElse(
-                throw new IllegalStateException(s"$mvLoc tip has no schema"))
-              val df = if (tf.isEmpty) s.createDataFrame(
-                  s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-                else Snapshots.readData(s, tf, Some(schema))
-              (df, cf)
-            case None => (Snapshots.read(s, mvLoc, tip), Nil)
+        if (vb == v0) Some(Refreshed(tip, v0, vb, 0L))
+        else {
+          val feed = Snapshots.changeFeed(s, d.baseLoc, v0, vb)
+          val sign = when(col("change") === "insert", 1L).otherwise(-1L)
+          // groups whose delta cancels out exactly (insert+delete of the
+          // same rows) fold to all-zeros — drop them so `groups_touched`
+          // reports groups CHANGED and pure churn takes the carry path
+          val unchanged = ((col("dn") === 0L) +: d.sums.flatMap(c => Seq(
+            coalesce(col(s"ds_$c"), lit(0L)) === 0L,
+            col(s"dc_$c") === 0L))).reduce(_ && _)
+          val dAgg = feed.groupBy(d.keys.map(col): _*).agg(
+            sum(sign).as("dn"),
+            d.sums.flatMap(c => Seq(
+              sum(sign * col(c).cast(LongType)).as(s"ds_$c"),
+              sum(when(col(c).isNotNull, sign).otherwise(0L)).as(s"dc_$c")
+            )): _*).filter(!unchanged).localCheckpoint(true)
+          val touched = dAgg.count()
+          if (touched == 0L) {
+            // churn that cancels out group-by-group (or a feed of empty
+            // commits): content is already right, but the CURSOR must
+            // still advance or every future refresh re-reads this span —
+            // carry the tip's files BY REFERENCE, zero data I/O
+            val ok = Snapshots.tryPublish(s, mvLoc, tip + 1, Snapshots.Publish(
+              Snapshots.versionFiles(s, mvLoc, tip),
+              schemaJson = Snapshots.versionSchema(s, mvLoc, tip).map(_.json),
+              layout = tipLayout.map(BucketLayout.format),
+              mvBase = Some(vb.toString), carriedValid = true))
+            Option.when(ok)(Refreshed(tip + 1, v0, vb, 0L))
+          } else {
+            val tipFiles = Snapshots.versionFiles(s, mvLoc, tip)
+            // the SCALE path: a bucketed MV merges and rewrites ONLY the
+            // buckets the delta touches; every other file carries by
+            // reference — O(delta + touched buckets), never O(MV).
+            // Requires every live file bucket-addressed (a foreign commit
+            // to the MV sheds the layout header, so `tipLayout` already
+            // guards that; the path check is belt and braces)
+            val bucketed = tipLayout.filter(_ =>
+              tipFiles.forall(f => BucketLayout.bucketOfPath(f).nonEmpty))
+            val (mvOld, carryFiles) = bucketed match {
+              case Some(spec) =>
+                val touchedB = dAgg.select(BucketLayout.linearId(spec).as("b"))
+                  .distinct().collect().map(_.getInt(0)).toSet
+                val (tf, cf) = tipFiles.partition(f =>
+                  BucketLayout.bucketOfPath(f).exists(touchedB))
+                val schema = Snapshots.versionSchema(s, mvLoc, tip).getOrElse(
+                  throw new IllegalStateException(s"$mvLoc tip has no schema"))
+                val df = if (tf.isEmpty) s.createDataFrame(
+                    s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+                  else Snapshots.readData(s, tf, Some(schema))
+                (df, cf)
+              case None => (Snapshots.read(s, mvLoc, tip), Nil)
+            }
+            val joinCond = d.keys.map(k => mvOld(k) <=> dAgg(k)).reduce(_ && _)
+            val merged = mvOld.join(dAgg, joinCond, "full_outer").select(
+              d.keys.map(k => coalesce(mvOld(k), dAgg(k)).as(k)) ++
+                Seq((coalesce(mvOld("n"), lit(0L)) +
+                  coalesce(dAgg("dn"), lit(0L))).as("n")) ++
+                d.sums.flatMap { c =>
+                  val cnt = coalesce(mvOld(s"c_$c"), lit(0L)) +
+                    coalesce(dAgg(s"dc_$c"), lit(0L))
+                  // SUM of zero non-null values is NULL, not 0 — the
+                  // c_<col> count exists exactly for this distinction
+                  Seq(when(cnt === 0L, lit(null).cast(LongType))
+                    .otherwise(coalesce(mvOld(s"s_$c"), lit(0L)) +
+                      coalesce(dAgg(s"ds_$c"), lit(0L))).as(s"s_$c"),
+                    cnt.as(s"c_$c"))
+                }: _*)
+              .filter(col("n") > 0L)
+            val v = publish(s, mvLoc, tip + 1, merged, vb, bucketed,
+              carryFiles)
+            Option.when(v > 0)(Refreshed(v, v0, vb, touched))
           }
-          val joinCond = d.keys.map(k => mvOld(k) <=> dAgg(k)).reduce(_ && _)
-          val merged = mvOld.join(dAgg, joinCond, "full_outer").select(
-            d.keys.map(k => coalesce(mvOld(k), dAgg(k)).as(k)) ++
-              Seq((coalesce(mvOld("n"), lit(0L)) +
-                coalesce(dAgg("dn"), lit(0L))).as("n")) ++
-              d.sums.flatMap { c =>
-                val cnt = coalesce(mvOld(s"c_$c"), lit(0L)) +
-                  coalesce(dAgg(s"dc_$c"), lit(0L))
-                // SUM of zero non-null values is NULL, not 0 — the
-                // c_<col> count exists exactly for this distinction
-                Seq(when(cnt === 0L, lit(null).cast(LongType))
-                  .otherwise(coalesce(mvOld(s"s_$c"), lit(0L)) +
-                    coalesce(dAgg(s"ds_$c"), lit(0L))).as(s"s_$c"),
-                  cnt.as(s"c_$c"))
-              }: _*)
-            .filter(col("n") > 0L)
-          val v = publish(s, mvLoc, tip + 1, merged, vb, bucketed,
-            carryFiles)
-          if (v > 0) return Refreshed(v, v0, vb, touched)
         }
       }
-      attempt += 1
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the MV refresh race 8 times at $mvLoc")
   }
 
   /** One replace-publish attempt at an EXPECTED version — a blind retry
@@ -340,10 +331,10 @@ object Mv {
         f.listStatus(dataDir).toSeq
           .map(_.getPath).filter(_.getName.startsWith("part-")).map(_.toString)
     }
-    if (Snapshots.tryPublish(s, mvLoc, version, carried ++ newFiles,
-        schemaJson = Some(df.schema.json),
+    if (Snapshots.tryPublish(s, mvLoc, version, Snapshots.Publish(
+        carried ++ newFiles, schemaJson = Some(df.schema.json),
         layout = layout.map(BucketLayout.format),
-        mvBase = Some(baseVersion.toString)))
+        mvBase = Some(baseVersion.toString))))
       version
     else { f.delete(dataDir, true); -1L }
   }

@@ -103,14 +103,10 @@ object Refs {
       else ms.find(_._1 == version).getOrElse(
         throw new NoSuchElementException(
           s"version $version not found at $loc (expired or never committed)"))
-    val header = Snapshots.headerLines(s, p)
-    val ok = Snapshots.tryPublish(s, bl, 1L, Snapshots.readManifest(s, p),
-      dvs = header.filter(_.startsWith("#dv=")).map(_.stripPrefix("#dv=")),
-      schemaJson = header.find(_.startsWith("#schema="))
-        .map(_.stripPrefix("#schema=")),
-      lineage = Some(s"branch:$loc@v$v"),
-      layout = header.find(_.startsWith("#layout=")).map(_.stripPrefix("#layout=")),
-      carriedValid = true) // fork carries validated rows by reference
+    val ok = Snapshots.tryPublish(s, bl, 1L,
+      new Snapshots.Version(s, v, Some(p)).carry.copy(
+        lineage = Some(s"branch:$loc@v$v"),
+        carriedValid = true)) // fork carries validated rows by reference
     if (!ok) throw new IllegalStateException(
       s"branch '$name' concurrently created at $loc")
     v
@@ -140,44 +136,30 @@ object Refs {
     require(bms.nonEmpty, s"no branch '$name' at $loc")
     val base = forkBase(s, bl)
     val (bv, bp) = bms.last
-    val files = Snapshots.readManifest(s, bp)
-    val header = Snapshots.headerLines(s, bp)
+    val head = new Snapshots.Version(s, bv, Some(bp))
     val lineage = s"publish:$name@v$bv"
     // the fork state rides in the branch's own v1 (carried by
     // reference), so the check never needs the parent's possibly-expired
     // base manifest; normPath'd comparison (manifestRefs) so spelling
     // differences between committing paths never fake a divergence
-    val (_, forkP) = bms.head
-    val forkState = Snapshots.manifestRefs(s, forkP)
-    var attempt = 0
-    while (attempt < 64) {
-      val (latest, lp) = Snapshots.manifests(s, loc).last
-      val parentState = Snapshots.manifestRefs(s, lp)
-      if (parentState != forkState) {
-        // idempotent retry: the parent's newest commit IS this publish
-        if (Snapshots.headerLines(s, lp).contains(s"#lineage=$lineage"))
-          return latest
-        throw new IllegalStateException(
-          s"$loc (v$latest) advanced past fork state v$base of '$name'; " +
-            "re-branch and re-apply, or roll the parent back first")
-      }
-      if (Snapshots.tryPublish(s, loc, latest + 1, files,
-          dvs = header.filter(_.startsWith("#dv=")).map(_.stripPrefix("#dv=")),
-          schemaJson = header.find(_.startsWith("#schema="))
-            .map(_.stripPrefix("#schema=")),
-          lineage = Some(lineage),
-          layout = header.find(_.startsWith("#layout="))
-            .map(_.stripPrefix("#layout=")))) {
-        // the parent's sidecars attach per version — without a refresh
-        // the first query after a WAP publish loses zone-map/Bloom/gram
-        // pruning and the metadata-only aggregates (incremental by file,
-        // best-effort, same rule as every other write path)
-        Snapshots.autoStats(s, loc)
-        return latest + 1
-      }
-      attempt += 1
+    val forkState = Snapshots.manifestRefs(s, bms.head._2)
+    var replay = false
+    val v = Snapshots.commit(s, loc) { tip =>
+      if (tip.refs == forkState) head.carry.copy(lineage = Some(lineage))
+      // idempotent retry: the parent's newest commit IS this publish
+      else if (tip.lineage.contains(lineage)) {
+        replay = true
+        Snapshots.Done(tip.version)
+      } else throw new IllegalStateException(
+        s"$loc (v${tip.version}) advanced past fork state v$base of '$name'; " +
+          "re-branch and re-apply, or roll the parent back first")
     }
-    throw new IllegalStateException(s"lost the commit race 64 times at $loc")
+    // the parent's sidecars attach per version — without a refresh the
+    // first query after a WAP publish loses zone-map/Bloom/gram pruning
+    // and the metadata-only aggregates (incremental by file, best-effort,
+    // same rule as every other write path)
+    if (!replay) Snapshots.autoStats(s, loc)
+    v
   }
 
   /** Fold `manifestRefs` of many manifests into one liveness set ONE
@@ -274,15 +256,8 @@ object Refs {
     require(v > 0, s"nothing to tag at $loc")
     require(Snapshots.manifests(s, loc).exists(_._1 == v),
       s"version $v not found at $loc (expired or never committed)")
-    val f = Snapshots.fs(s, loc)
-    f.mkdirs(refsDir(loc))
-    val tmp = new Path(refsDir(loc), s"_tmp_${java.util.UUID.randomUUID()}.tag")
-    val out = f.create(tmp, true)
-    try out.write(s"$v\n".getBytes("UTF-8")) finally out.close()
-    val target = tagPath(loc, name)
-    // the same exactly-once claim as the manifest log (hard link on
-    // local FS — see Snapshots.atomicClaim)
-    if (Snapshots.atomicClaim(s, f, tmp, target)) v
+    // the same exactly-once claim as the manifest log
+    if (Snapshots.claim(s, tagPath(loc, name), s"$v\n".getBytes("UTF-8"))) v
     else throw new IllegalStateException(
       s"tag '$name' already exists at $loc (tags are immutable; drop it first)")
   }

@@ -125,7 +125,6 @@ object Replicate {
       if (line.startsWith("#dv=")) "#dv=" + rewritePath(line.stripPrefix("#dv="))
       else if (line.startsWith("#") || line.isEmpty) line
       else rewritePath(line)
-    val f = Snapshots.fs(s, dstLoc)
     def textOf(p: Path): String = {
       val in = Snapshots.fs(s, p.toString).open(p)
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString
@@ -177,14 +176,8 @@ object Replicate {
       freshDvs.foreach(dv =>
         copyDvRewritten(s, dv, rewritePath(dv), srcRoot, dstRoot))
       val text = rewrittenText(p)
-      val md = Snapshots.manifestDir(dstLoc)
-      f.mkdirs(md)
-      val tmp = new Path(md,
-        f"_tmp_${java.util.UUID.randomUUID().toString}%s_v$v%05d.txt")
-      val out = f.create(tmp, true)
-      try out.write(text.getBytes("UTF-8")) finally out.close()
-      val target = new Path(md, f"v$v%05d.txt")
-      if (!Snapshots.atomicClaim(s, f, tmp, target) &&
+      val target = new Path(Snapshots.manifestDir(dstLoc), f"v$v%05d.txt")
+      if (!Snapshots.claim(s, target, text.getBytes("UTF-8")) &&
           textOf(target) != text)
         throw new java.util.ConcurrentModificationException(
           s"$dstLoc grew a divergent v$v while replicating — refusing")

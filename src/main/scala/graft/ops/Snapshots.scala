@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileSystem, Options, Path}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Versioned table snapshots over immutable data files — a minimal
   * manifest-based table format (the mechanism behind Iceberg/Delta-style
@@ -20,18 +21,20 @@ import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileSystem
   *    time travel over the whole TABLE, complementing the row-level
   *    SCD2 `snapshotAsOf` in [[Merge]].
   *
-  * Concurrency: commits are optimistic CAS loops. A committer reads the
-  * latest manifest, writes the next version to a unique temp file, and
-  * claims the version name with `FileContext.rename(…, Rename.NONE)` —
-  * rename-without-overwrite, which FAILS if the target exists (atomic on
-  * HDFS; on the local FS the existence check is client-side, a window
-  * narrow enough for tests). A loser re-reads the new latest — picking up
-  * the winner's files — and retries at the next version, so concurrent
-  * appends serialize with no version lost. Deployment precondition (the
-  * usual table-format rule): the manifest directory must live on a
-  * filesystem with atomic no-overwrite rename (HDFS, or an object store
-  * fronted by a consistent metastore); raw S3 renames are copy+delete and
-  * cannot fence two writers.
+  * Concurrency: every verb commits through ONE optimistic primitive,
+  * [[commit]]. A round lists `_manifests` once, lets the verb derive its
+  * next manifest from that tip, and [[claim]]s `v<tip+1>` — a unique
+  * temp file, then an exactly-once no-overwrite claim: a hard link on
+  * the local FS (link(2) fails EEXIST, atomically), the FileContext
+  * `Rename.NONE` rename elsewhere (atomic server-side on HDFS). A loser
+  * deletes its attempt's scratch files, re-reads the new tip — picking
+  * up the winner's files — and retries at the next version, so
+  * concurrent appends serialize with no version lost; [[commit]] owns
+  * the only retry bound. Deployment precondition (the usual table-format
+  * rule): the manifest directory must live on a filesystem with atomic
+  * no-overwrite rename (HDFS, or an object store fronted by a consistent
+  * metastore); raw S3 renames are copy+delete and cannot fence two
+  * writers.
   *
   * Scale notes (100 TB): commits append ONLY their delta's files; the
   * manifest is O(live files), not O(rows), and is written by the driver
@@ -147,54 +150,143 @@ object Snapshots {
       .map(normPath).toSet
   }
 
+  private def headerValues(header: Seq[String], key: String): Seq[String] = {
+    val tag = s"#$key="
+    header.collect { case l if l.startsWith(tag) => l.stripPrefix(tag) }
+  }
+
+  // ---- the commit primitive ----
+
+  /** One published manifest, parsed lazily: the body (live files) and
+    * the header block (`#dv=`, `#schema=`, `#layout=`, …) are read on
+    * first use, and a header wanted after the body is cut from the body
+    * already in hand. No path = the empty pre-history (version 0). */
+  private[graft] class Version(s: SparkSession, val version: Long,
+                               path: Option[Path]) {
+    private var body: Seq[String] = null
+    lazy val files: Seq[String] = path.fold(Seq.empty[String]) { p =>
+      body = manifestLines(s, p)
+      body.filterNot(l => l.startsWith("#") || l.isEmpty)
+    }
+    lazy val header: Seq[String] = path.fold(Seq.empty[String]) { p =>
+      if (body != null) body.takeWhile(_.startsWith("#")) else headerLines(s, p)
+    }
+    lazy val dvs: Seq[String] = headerValues(header, "dv")
+    lazy val schemaJson: Option[String] = headerValues(header, "schema").headOption
+    lazy val schema: Option[StructType] = schemaFromHeader(header)
+    lazy val layout: Option[String] = headerValues(header, "layout").headOption
+    def lineage: Option[String] = headerValues(header, "lineage").headOption
+    /** Every file this version references, normalized ([[manifestRefs]]). */
+    lazy val refs: Set[String] = (files ++ dvs).map(normPath).toSet
+    /** This version's content, republished by reference: files, delete
+      * vectors, schema and layout — never its `#marker=` or `#mvbase=`,
+      * which describe the commit that made this version (a copied
+      * marker would outlive the expire of its own version). */
+    def carry: Publish =
+      Publish(files, dvs = dvs, schemaJson = schemaJson, layout = layout)
+  }
+
+  /** The log tip one round of [[commit]] works against: ONE listing of
+    * `_manifests`, reused for the marker check; the newest manifest is
+    * read lazily, so a blind replace pays no manifest read at all. */
+  private[graft] final class Tip(s: SparkSession, loc: String,
+                                 listing: Seq[(Long, Path)])
+      extends Version(s, listing.lastOption.fold(0L)(_._1),
+        listing.lastOption.map(_._2)) {
+    def markers: Set[String] = Snapshots.markers(s, loc, listing)
+    /** This tip, refusing an empty table — for verbs that edit content. */
+    def committed: Tip =
+      if (listing.nonEmpty) this
+      else throw new IllegalArgumentException(s"no committed snapshots at $loc")
+  }
+
+  /** What one attempt of [[commit]] decided. */
+  private[graft] sealed trait Step
+
+  /** Publish this manifest at tip + 1 (header fields render in a fixed
+    * order, [[tryPublish]]). `carriedValid` marks rows validated when
+    * first committed (rollback, fork, compaction, layout rewrites): they
+    * skip the CHECK-constraint gate. `scratch` = directories this attempt
+    * wrote, deleted when its claim is lost; files written BEFORE the
+    * first attempt are not scratch — they ride every retry. */
+  private[graft] final case class Publish(files: Seq[String],
+                                          marker: Option[String] = None,
+                                          dvs: Seq[String] = Nil,
+                                          schemaJson: Option[String] = None,
+                                          lineage: Option[String] = None,
+                                          layout: Option[String] = None,
+                                          mvBase: Option[String] = None,
+                                          carriedValid: Boolean = false,
+                                          scratch: Seq[Path] = Nil) extends Step
+
+  /** Finish with `version` and commit nothing (a replay, a no-gain pass). */
+  private[graft] final case class Done(version: Long) extends Step
+
+  private val MaxAttempts = 64
+
+  /** THE commit primitive — optimistic read → derive → claim, with the
+    * one retry bound and the one lost-race error every verb shares. Each
+    * round lists `_manifests` once, runs `attempt` on that [[Tip]], and
+    * claims `tip + 1` with the [[Publish]] it returns; a lost claim
+    * deletes the attempt's scratch and re-runs it on the new tip. A
+    * conflict rule is just what `attempt` does with the fresh tip:
+    * append-merge verbs re-derive from it, blind replaces ignore its
+    * content, derived rewrites check it for append-only interleaves and
+    * throw otherwise. Returns the published version, or `Done`'s. */
+  private[graft] def commit(s: SparkSession, loc: String)(attempt: Tip => Step): Long =
+    retry(loc) {
+      val tip = new Tip(s, loc, manifests(s, loc))
+      attempt(tip) match {
+        case Done(v) => Some(v)
+        case p: Publish =>
+          if (tryPublish(s, loc, tip.version + 1, p)) Some(tip.version + 1)
+          else { p.scratch.foreach(fs(s, loc).delete(_, true)); None }
+      }
+    }
+
+  /** The bounded optimistic retry behind [[commit]], shared with the
+    * claim chains that are not table manifests (view definitions,
+    * constraint sets, MV refresh): `round` yields its result, or None
+    * after losing a claim — it then re-reads and runs again. */
+  private[graft] def retry[T](loc: String)(round: => Option[T]): T = {
+    var attempt = 0
+    while (attempt < MaxAttempts) {
+      val r = round
+      if (r.isDefined) return r.get
+      attempt += 1
+    }
+    throw new IllegalStateException(s"lost the commit race $MaxAttempts times at $loc")
+  }
+
   /** Append `df` as a new snapshot; returns the published version.
     *
     * `marker`, if given, makes the commit IDEMPOTENT: it is recorded in
     * the published manifest (a `#` header line), so data and marker
-    * become visible in the same atomic rename, and the marker set is
-    * re-checked INSIDE the CAS loop immediately before each publish
-    * attempt — two live attempts of the same logical commit (a zombie
-    * driver racing its restarted successor) cannot both land. The loser
-    * either loses the version rename (and sees the marker on re-read) or
+    * become visible in the same atomic claim, and the marker set is
+    * re-checked in EVERY commit round, against the same listing the
+    * round claims on — two live attempts of the same logical commit (a
+    * zombie driver racing its restarted successor) cannot both land. The
+    * loser either loses the claim (and sees the marker next round) or
     * sees the marker up front; both paths remove its orphaned data
     * directory and return -1. */
   def commitAppend(df: DataFrame, loc: String,
                    marker: Option[String] = None): Long = {
     val s = df.sparkSession
-    val f = fs(s, loc)
-    val commitId = java.util.UUID.randomUUID().toString
-    val dataDir = new Path(loc, s"data/$commitId")
-    df.write.mode(SaveMode.ErrorIfExists).parquet(dataDir.toString)
-    val newFiles = f.listStatus(dataDir).toSeq
-      .map(_.getPath).filter(p => p.getName.startsWith("part-"))
-      .map(_.toString)
-    var attempt = 0
-    while (attempt < 64) {
-      if (marker.exists(m => markers(s, loc).contains(m))) {
-        f.delete(dataDir, true) // duplicate: our files are unreferenced garbage
-        return -1L
-      }
-      val prev = manifests(s, loc).lastOption
-      val prevFiles = prev.map { case (_, p) => readManifest(s, p) }.getOrElse(Nil)
-      // carried files keep their delete vectors; the append's fresh files
-      // have none, and a DV can never reference them (new unique paths)
-      val prevHeader = prev.map { case (_, p) => headerLines(s, p) }.getOrElse(Nil)
-      val prevDvs = prevHeader.filter(_.startsWith("#dv="))
-        .map(_.stripPrefix("#dv="))
-      // additive evolution: the append may widen the schema; legacy
-      // schema-less tables stay on footer inference
-      val schemaJson = prev match {
-        case None => Some(df.schema.json)
-        case Some(_) => schemaFromHeader(prevHeader)
-          .map(ps => mergeAdditive(ps, df.schema).json)
-      }
-      val version = prev.map(_._1).getOrElse(0L) + 1
-      if (tryPublish(s, loc, version, prevFiles ++ newFiles, marker, prevDvs,
-          schemaJson))
-        return version
-      attempt += 1
+    val dataDir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
+    val newFiles = writeData(s, df, dataDir)
+    commit(s, loc) { tip =>
+      if (marker.exists(tip.markers)) {
+        fs(s, loc).delete(dataDir, true) // duplicate: our files are unreferenced garbage
+        Done(-1L)
+      } else
+        // carried files keep their delete vectors; the append's fresh
+        // files have none, and a DV can never reference them (new unique
+        // paths). Additive evolution: the append may widen the schema;
+        // legacy schema-less tables stay on footer inference
+        Publish(tip.files ++ newFiles, marker, tip.dvs,
+          if (tip.version == 0) Some(df.schema.json)
+          else tip.schema.map(mergeAdditive(_, df.schema).json))
     }
-    throw new IllegalStateException(s"lost the commit race 64 times at $loc")
   }
 
   // Incremental marker cache: published manifests are immutable, so the
@@ -219,8 +311,11 @@ object Snapshots {
     * since the last call (full sweep on a cold driver or after an
     * expire) — markers are `#` HEADER lines, so no manifest body (the
     * O(live files) part) is ever read. */
-  def markers(s: SparkSession, loc: String): Set[String] = {
-    val ms = manifests(s, loc)
+  def markers(s: SparkSession, loc: String): Set[String] =
+    markers(s, loc, manifests(s, loc))
+
+  private def markers(s: SparkSession, loc: String,
+                      ms: Seq[(Long, Path)]): Set[String] = {
     if (ms.isEmpty) return Set.empty
     val key = normPath(loc)
     val cached = markerCache.get(key)
@@ -230,9 +325,7 @@ object Snapshots {
       case _ => (Long.MinValue, Set.empty[String])
     }
     val out = baseSet ++ ms.iterator.filter(_._1 > fromV).flatMap {
-      case (_, p) =>
-        headerLines(s, p).filter(_.startsWith("#marker="))
-          .map(_.stripPrefix("#marker="))
+      case (_, p) => headerValues(headerLines(s, p), "marker")
     }
     markerCache.put(key, (ms.last._1, ms.length, out))
     out
@@ -241,76 +334,50 @@ object Snapshots {
   /** Publish already-written data files as an APPEND commit — the
     * manifest half of [[commitAppend]], for callers (the DSv2 SQL and
     * streaming write paths) whose files were produced by Spark's own
-    * writers rather than a DataFrame save. Same CAS loop, same DV carry,
-    * same idempotent-marker contract as [[commitAppend]]: with `marker`
-    * set, the marker set is re-checked inside the loop and a duplicate
-    * returns -1 (the caller owns deleting its now-unreferenced files). */
+    * writers rather than a DataFrame save. Same DV carry, same
+    * idempotent-marker contract as [[commitAppend]]: with `marker` set,
+    * the marker set is re-checked every round and a duplicate returns -1
+    * (the caller owns deleting its now-unreferenced files). */
   private[graft] def publishAppend(s: SparkSession, loc: String,
                                    newFiles: Seq[String],
                                    marker: Option[String] = None,
                                    schemaIfEmpty: Option[String] = None,
-                                   routedLayout: Option[String] = None): Long = {
-    var attempt = 0
-    while (attempt < 64) {
-      if (marker.exists(m => markers(s, loc).contains(m))) return -1L
-      val prev = manifests(s, loc).lastOption
-      val prevHeader = prev.map { case (_, p) => headerLines(s, p) }.getOrElse(Nil)
-      val prevFiles = prev.map { case (_, p) => readManifest(s, p) }.getOrElse(Nil)
-      val prevDvs = prevHeader.filter(_.startsWith("#dv="))
-        .map(_.stripPrefix("#dv="))
-      val version = prev.map(_._1).getOrElse(0L) + 1
-      // a first commit onto an empty directory records the writer's
-      // schema (the streaming route creates tables this way); later
-      // appends carry the table's header
-      val schemaJson = prev match {
-        case None => schemaIfEmpty
-        case Some(_) => schemaFromHeader(prevHeader).map(_.json)
-      }
-      // a bucket layout SURVIVES an append iff the batch was ROUTED FOR
-      // THIS EXACT LAYOUT — `routedLayout` is the spec the writer hashed
-      // with (BucketLayout.appendBucketed), re-checked against the
-      // CURRENT header inside the CAS loop: a concurrent re-bucket with
-      // a different count would otherwise accept mod-N files under a
-      // mod-M header and make SPJ silently drop matches. A file-less
-      // append (empty streaming epoch) carries unconditionally — the
-      // file set is untouched. Any other append drops the layout (the
-      // documented honest degrade, never wrong rows). Buckets holding
-      // several files stay SPJ-able (the scan groups same-keyed files)
-      // and merely stop reporting sortedness.
-      val prevLayout = prevHeader.find(_.startsWith("#layout="))
-        .map(_.stripPrefix("#layout="))
-      val layout = prevLayout.filter { pl =>
-        newFiles.isEmpty ||
-          (routedLayout.contains(pl) && newFiles.forall(f =>
-            BucketLayout.bucketOfPath(f).isDefined))
-      }
-      if (tryPublish(s, loc, version, prevFiles ++ newFiles, marker, prevDvs,
-          schemaJson, layout = layout))
-        return version
-      attempt += 1
+                                   routedLayout: Option[String] = None): Long =
+    commit(s, loc) { tip =>
+      if (marker.exists(tip.markers)) Done(-1L)
+      else Publish(tip.files ++ newFiles, marker, tip.dvs,
+        // a first commit onto an empty directory records the writer's
+        // schema (the streaming route creates tables this way); later
+        // appends carry the table's header
+        schemaJson = if (tip.version == 0) schemaIfEmpty else tip.schemaJson,
+        // a bucket layout SURVIVES an append iff the batch was ROUTED FOR
+        // THIS EXACT LAYOUT — `routedLayout` is the spec the writer hashed
+        // with (BucketLayout.appendBucketed), re-checked against the
+        // CURRENT header every round: a concurrent re-bucket with a
+        // different count would otherwise accept mod-N files under a
+        // mod-M header and make SPJ silently drop matches. A file-less
+        // append (empty streaming epoch) carries unconditionally — the
+        // file set is untouched. Any other append drops the layout (the
+        // documented honest degrade, never wrong rows). Buckets holding
+        // several files stay SPJ-able (the scan groups same-keyed files)
+        // and merely stop reporting sortedness.
+        layout = tip.layout.filter { pl =>
+          newFiles.isEmpty ||
+            (routedLayout.contains(pl) && newFiles.forall(f =>
+              BucketLayout.bucketOfPath(f).isDefined))
+        })
     }
-    throw new IllegalStateException(s"lost the commit race 64 times at $loc")
-  }
 
   /** Publish already-written files as a logical REPLACE at whatever the
     * latest version is — `INSERT OVERWRITE` through the DSv2 write path
-    * (content is defined wholly by the written files, so a lost CAS race
+    * (content is defined wholly by the written files, so a lost race
     * just retries at the next version; no staleness to detect, unlike
     * [[publishReplaceExact]]). */
   private[graft] def publishReplaceLoop(s: SparkSession, loc: String,
                                         newFiles: Seq[String],
                                         schemaJson: Option[String],
-                                        layout: Option[String] = None): Long = {
-    var attempt = 0
-    while (attempt < 64) {
-      val version = latestVersion(s, loc) + 1
-      if (tryPublish(s, loc, version, newFiles, schemaJson = schemaJson,
-          layout = layout))
-        return version
-      attempt += 1
-    }
-    throw new IllegalStateException(s"lost the commit race 64 times at $loc")
-  }
+                                        layout: Option[String] = None): Long =
+    commit(s, loc)(_ => Publish(newFiles, schemaJson = schemaJson, layout = layout))
 
   /** Publish an already-written BUCKET-layout rewrite
     * ([[BucketLayout.commitBucketed]] / [[BucketLayout.splitBuckets]])
@@ -356,44 +423,36 @@ object Snapshots {
                                            newFiles: Seq[String],
                                            schemaJson: Option[String],
                                            layout: Option[String]): Long = {
-    var expected = derivedFrom
-    var extras: Seq[String] = Nil
-    var lay = layout
-    var schema = schemaJson
     // the derived version's manifest is immutable: read it once, on the
     // first conflict only (the clean-claim fast path never pays it)
     lazy val oldSet = versionFiles(s, loc, derivedFrom).map(normPath).toSet
     lazy val oldDvs = versionDvs(s, loc, derivedFrom).map(normPath).toSet
-    var attempt = 0
-    while (attempt < 64) {
-      if (tryPublish(s, loc, expected + 1, newFiles ++ extras,
-          schemaJson = schema, layout = lay, carriedValid = true))
-        return expected + 1
-      val latest = latestVersion(s, loc)
-      val latestFiles = versionFiles(s, loc, latest)
-      val appendOnly =
-        oldSet.subsetOf(latestFiles.map(normPath).toSet) &&
-          versionDvs(s, loc, latest).map(normPath).toSet == oldDvs
-      if (!appendOnly) throw new java.util.ConcurrentModificationException(
-        s"$loc moved past v$derivedFrom with a non-append commit during " +
-          "a derived rewrite — publishing the rewrite would drop or " +
-          "resurrect the interleaved commit's rows; re-run the verb " +
-          "against the new version")
-      extras = latestFiles.filterNot(f => oldSet(normPath(f)))
-      // riders + rewrite files mix two routings, so no layout describes
-      // the union — EXCEPT a pure header commit (newFiles empty): the
-      // published content is then exactly the tip's files, which the
-      // tip's own layout describes, so keep THAT rather than silently
-      // dropping a CREATE-declared layout on a benign ingest race (the
-      // caller can detect the unapplied header and retry)
-      lay = if (extras.isEmpty) layout
-            else if (newFiles.isEmpty) versionLayout(s, loc, latest)
-            else None
-      schema = versionSchema(s, loc, latest).map(_.json).orElse(schema)
-      expected = latest
-      attempt += 1
+    commit(s, loc) { tip =>
+      if (tip.version == derivedFrom)
+        Publish(newFiles, schemaJson = schemaJson, layout = layout, carriedValid = true)
+      else {
+        val appendOnly = oldSet.subsetOf(tip.files.map(normPath).toSet) &&
+          tip.dvs.map(normPath).toSet == oldDvs
+        if (!appendOnly) throw new java.util.ConcurrentModificationException(
+          s"$loc moved past v$derivedFrom with a non-append commit during " +
+            "a derived rewrite — publishing the rewrite would drop or " +
+            "resurrect the interleaved commit's rows; re-run the verb " +
+            "against the new version")
+        val extras = tip.files.filterNot(f => oldSet(normPath(f)))
+        Publish(newFiles ++ extras, carriedValid = true,
+          schemaJson = tip.schemaJson.orElse(schemaJson),
+          // riders + rewrite files mix two routings, so no layout
+          // describes the union — EXCEPT a pure header commit (newFiles
+          // empty): the published content is then exactly the tip's
+          // files, which the tip's own layout describes, so keep THAT
+          // rather than silently dropping a CREATE-declared layout on a
+          // benign ingest race (the caller can detect the unapplied
+          // header and retry)
+          layout = if (extras.isEmpty) layout
+                   else if (newFiles.isEmpty) tip.layout
+                   else None)
+      }
     }
-    throw new IllegalStateException(s"lost the commit race 64 times at $loc")
   }
 
   /** The bucket layout a version recorded (`#layout=` header), if any —
@@ -402,15 +461,14 @@ object Snapshots {
                                    version: Long): Option[String] = {
     val v = if (version < 0) latestVersion(s, loc) else version
     manifests(s, loc).find(_._1 == v)
-      .flatMap { case (_, p) => headerLines(s, p).find(_.startsWith("#layout=")) }
-      .map(_.stripPrefix("#layout="))
+      .flatMap { case (_, p) => headerValues(headerLines(s, p), "layout").headOption }
   }
 
   /** Publish already-written files as a REPLACE of exactly the content of
     * `expectedPrev` — the commit half of a SQL row-level operation whose
-    * rewrite was DERIVED from that version's rows. NO retry loop on a
-    * lost race: a concurrent commit means the derivation is stale, so the
-    * only correct outcomes are first-committer-wins or a
+    * rewrite was DERIVED from that version's rows. ONE claim, no retry:
+    * a concurrent commit means the derivation is stale, so the only
+    * correct outcomes are first-committer-wins or a
     * ConcurrentModificationException the caller re-runs from scratch —
     * retrying here would silently drop the interleaved commit's rows
     * (write skew). The Delta/Iceberg conflict rule. */
@@ -439,7 +497,7 @@ object Snapshots {
     val schemaJson = versionSchema(s, loc, expectedPrev).map(_.json)
     val dvs = if (keptFiles.isEmpty) Nil else versionDvs(s, loc, expectedPrev)
     // a ROUTED row-level rewrite keeps the bucket layout: the publish
-    // lands at exactly expectedPrev + 1 (the no-overwrite rename IS the
+    // lands at exactly expectedPrev + 1 (the no-overwrite claim IS the
     // proof nothing committed in between, so the header we routed for is
     // still the table's), and the carry only needs every published file
     // bucket-pathed — kept files come from the layout version, new files
@@ -448,8 +506,8 @@ object Snapshots {
     val layout = routedLayout.filter(_ =>
       (keptFiles ++ newFiles).forall(f =>
         BucketLayout.bucketOfPath(f).isDefined))
-    if (tryPublish(s, loc, expectedPrev + 1, keptFiles ++ newFiles, dvs = dvs,
-        schemaJson = schemaJson, layout = layout))
+    if (tryPublish(s, loc, expectedPrev + 1, Publish(keptFiles ++ newFiles,
+        dvs = dvs, schemaJson = schemaJson, layout = layout)))
       expectedPrev + 1
     else throw new java.util.ConcurrentModificationException(
       s"snapshot table at $loc moved past version $expectedPrev during a " +
@@ -457,18 +515,18 @@ object Snapshots {
   }
 
   /** Replace the table's content with `df` as a new snapshot (logical
-    * overwrite; old versions stay readable — no file is deleted). Same
-    * CAS loop as [[commitAppend]]: racing a concurrent append, the
-    * replace either publishes first (the append lands after it, on top)
-    * or retries at the next version — either serialization is a valid
-    * history and no version is lost. */
+    * overwrite; old versions stay readable — no file is deleted). Racing
+    * a concurrent append, the replace either publishes first (the append
+    * lands after it, on top) or retries at the next version — either
+    * serialization is a valid history and no version is lost. */
   def commitReplace(df: DataFrame, loc: String): Long =
     commitReplaceImpl(df, loc, carriedValid = false)
 
-  /** `carriedValid` exempts row-preserving rewrites (compaction) from
+  /** [[commitReplace]] with two knobs for maintenance rewrites.
+    * `carriedValid` exempts row-preserving rewrites (compaction) from
     * the CHECK-constraint gate — their rows were validated when first
-    * committed, and re-validating a full OPTIMIZE would double its read. */
-  /** `derivedFrom = Some(v)` marks the replace as a DERIVED rewrite of
+    * committed, and re-validating a full OPTIMIZE would double its read.
+    * `derivedFrom = Some(v)` marks the replace as a DERIVED rewrite of
     * version v (compaction, Z-order): conflict handling switches from
     * blind retry (correct only for self-contained overwrites, whose
     * content does not depend on the prior state) to
@@ -479,87 +537,73 @@ object Snapshots {
                                        carriedValid: Boolean,
                                        derivedFrom: Option[Long] = None): Long = {
     val s = df.sparkSession
-    val f = fs(s, loc)
-    val commitId = java.util.UUID.randomUUID().toString
-    val dataDir = new Path(loc, s"data/$commitId")
-    df.write.mode(SaveMode.ErrorIfExists).parquet(dataDir.toString)
-    val newFiles = f.listStatus(dataDir).toSeq
-      .map(_.getPath).filter(_.getName.startsWith("part-")).map(_.toString)
+    val dataDir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
+    val newFiles = writeData(s, df, dataDir)
     derivedFrom match {
       case Some(prev) =>
         try publishDerivedReplace(s, loc, prev, newFiles,
           Some(df.schema.json), layout = None)
-        catch { case e: Throwable => f.delete(dataDir, true); throw e }
+        catch { case e: Throwable => fs(s, loc).delete(dataDir, true); throw e }
       case None =>
-        var attempt = 0
-        while (attempt < 64) {
-          val version = latestVersion(s, loc) + 1
-          // a replace REDEFINES the table: its schema is df's, dvs drop
-          if (tryPublish(s, loc, version, newFiles,
-              schemaJson = Some(df.schema.json), carriedValid = carriedValid))
-            return version
-          attempt += 1
-        }
-        throw new IllegalStateException(s"lost the commit race 64 times at $loc")
+        // a replace REDEFINES the table: its schema is df's, dvs drop
+        commit(s, loc)(_ => Publish(newFiles, schemaJson = Some(df.schema.json),
+          carriedValid = carriedValid))
     }
   }
 
-  /** One publish attempt: write a UNIQUE temp file (two racers must not
-    * share one), then claim `v<NNNNN>.txt` with rename-without-overwrite.
-    * Returns false (and removes its temp) if another committer claimed
-    * the version first. Plain `FileSystem.rename` is useless as a fence
-    * here — on the local FS it silently overwrites an existing target —
-    * which is exactly what `FileContext` + `Options.Rename.NONE` exists
-    * to fix. */
+  /** One claim of `v<version>` for manifest `p`: false if another
+    * committer claimed the version first. The header block renders in
+    * one fixed order — marker, lineage, schema, layout, mvbase, then the
+    * delete vectors — ahead of the data-file lines. */
   private[graft] def tryPublish(s: SparkSession, loc: String, version: Long,
-                         files: Seq[String],
-                         marker: Option[String] = None,
-                         dvs: Seq[String] = Nil,
-                         schemaJson: Option[String] = None,
-                         lineage: Option[String] = None,
-                         layout: Option[String] = None,
-                         mvBase: Option[String] = None,
-                         carriedValid: Boolean = false): Boolean = {
-    (marker ++ lineage ++ layout ++ mvBase).foreach(m => require(!m.contains("\n") && !m.contains("\r"),
-      "header values must be single lines"))
+                                p: Publish): Boolean = {
+    (p.marker ++ p.lineage ++ p.layout ++ p.mvBase).foreach(m =>
+      require(!m.contains("\n") && !m.contains("\r"),
+        "header values must be single lines"))
     // CHECK-constraint gate (ops/Constraints): every publish path funnels
     // here, so validating the commit's NEW files at this one choke point
     // covers API commits, SQL DML, streaming epochs, and fast-forward
     // alike — O(new data), before the manifest can become visible.
-    // `carriedValid` marks publishes whose rows were validated when first
-    // committed (rollback, branch fork, compaction, layout rewrites).
-    if (!carriedValid && files.nonEmpty && Constraints.has(s, loc)) {
+    if (!p.carriedValid && p.files.nonEmpty && Constraints.has(s, loc)) {
       // normPath'd on both sides: manifest spellings vary by committing
       // path (DSv2 streaming records scheme-less strings, listings are
       // scheme-qualified), and a raw-string diff would silently
       // re-validate every CARRIED file — an O(table) read inside the
-      // CAS loop, not wrong rows, but the wrong cost class
+      // commit round, not wrong rows, but the wrong cost class
       val prev = if (version <= 1L) Set.empty[String]
                  else versionFiles(s, loc, version - 1).map(normPath).toSet
-      Constraints.enforce(s, loc, files.filterNot(f => prev(normPath(f))),
-        schemaJson.map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]))
+      Constraints.enforce(s, loc, p.files.filterNot(f => prev(normPath(f))),
+        p.schemaJson.map(j => DataType.fromJson(j).asInstanceOf[StructType]))
     }
-    val f = fs(s, loc)
-    val md = manifestDir(loc)
-    f.mkdirs(md)
-    val tmp = new Path(md,
-      f"_tmp_${java.util.UUID.randomUUID().toString}%s_v$version%05d.txt")
-    val out = f.create(tmp, true)
     // delete-vector references and the table schema ride in the header
     // block (leading '#' lines) like markers, so a version's DV set and
     // schema are an O(header) read — and a schema-bearing version never
     // needs parquet footer inference (nor any files at all: an empty
     // CREATEd table is just a schema header over zero file lines)
-    val header = marker.map(m => s"#marker=$m\n").getOrElse("") +
-      lineage.map(l => s"#lineage=$l\n").getOrElse("") +
-      schemaJson.map(j => s"#schema=$j\n").getOrElse("") +
-      layout.map(l => s"#layout=$l\n").getOrElse("") +
-      mvBase.map(v => s"#mvbase=$v\n").getOrElse("") +
-      dvs.map(d => s"#dv=$d\n").mkString
-    try out.write((header + files.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    val target = new Path(md, f"v$version%05d.txt")
+    val header = p.marker.map(m => s"#marker=$m\n").getOrElse("") +
+      p.lineage.map(l => s"#lineage=$l\n").getOrElse("") +
+      p.schemaJson.map(j => s"#schema=$j\n").getOrElse("") +
+      p.layout.map(l => s"#layout=$l\n").getOrElse("") +
+      p.mvBase.map(v => s"#mvbase=$v\n").getOrElse("") +
+      p.dvs.map(d => s"#dv=$d\n").mkString
+    claim(s, new Path(manifestDir(loc), f"v$version%05d.txt"),
+      (header + p.files.mkString("\n") + "\n").getBytes("UTF-8"))
+  }
+
+  /** Write `bytes` to a UNIQUE temp file beside `target` (two racers
+    * must not share one), then claim `target` exactly once among racers:
+    * true = this caller owns it, false = someone else does. The temp file
+    * is gone either way. The one claim every metadata chain uses —
+    * manifests, tags, view and constraint versions, MV registrations,
+    * replicated manifests. */
+  private[graft] def claim(s: SparkSession, target: Path,
+                           bytes: Array[Byte]): Boolean = {
+    val f = fs(s, target.toString)
+    val dir = target.getParent
+    f.mkdirs(dir)
+    val tmp = new Path(dir, s"_tmp_${java.util.UUID.randomUUID()}_${target.getName}")
+    val out = f.create(tmp, true)
+    try out.write(bytes) finally out.close()
     atomicClaim(s, f, tmp, target)
   }
 
@@ -576,8 +620,8 @@ object Snapshots {
     * also never moves a `.crc` for the target, so manifests carry no
     * checksum shadow at all. Non-local filesystems (HDFS et al.) keep
     * the FileContext rename, whose no-overwrite IS atomic server-side. */
-  private[graft] def atomicClaim(s: SparkSession, f: FileSystem,
-                                 tmp: Path, target: Path): Boolean = {
+  private def atomicClaim(s: SparkSession, f: FileSystem,
+                          tmp: Path, target: Path): Boolean = {
     val scheme = Option(target.toUri.getScheme).getOrElse(
       FileSystem.getDefaultUri(s.sparkContext.hadoopConfiguration).getScheme)
     if (scheme == null || scheme == "file") {
@@ -612,15 +656,12 @@ object Snapshots {
       if (version < 0) ms.last
       else ms.find(_._1 == version).getOrElse(
         throw new NoSuchElementException(s"version $version not found at $loc"))
-    val files = readManifest(s, p)
-    val header = headerLines(s, p)
-    val schema = schemaFromHeader(header)
-    if (files.isEmpty)
-      schema.map(sc => s.createDataFrame(
+    val m = new Version(s, v, Some(p))
+    if (m.files.isEmpty)
+      m.schema.map(sc => s.createDataFrame(
           s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc))
         .getOrElse(s.emptyDataFrame)
-    else applyDv(s, readData(s, files, schema),
-      header.filter(_.startsWith("#dv=")).map(_.stripPrefix("#dv=")))
+    else applyDv(s, readData(s, m.files, m.schema), m.dvs)
   }
 
   /** The live file list of a pinned version — the unit a DSv2 scan plans
@@ -720,9 +761,9 @@ object Snapshots {
                   schema: org.apache.spark.sql.types.StructType,
                   layout: Option[String] = None): Long = {
     require(latestVersion(s, loc) == 0L, s"table already exists at $loc")
-    if (!tryPublish(s, loc, 1L, Nil, schemaJson = Some(schema.json),
-        layout = layout))
-      throw new IllegalStateException(s"lost the create race at $loc")
+    if (!tryPublish(s, loc, 1L,
+        Publish(Nil, schemaJson = Some(schema.json), layout = layout)))
+      throw new IllegalStateException(s"table concurrently created at $loc")
     1L
   }
 
@@ -732,34 +773,22 @@ object Snapshots {
     * as null). Only defined for schema-bearing tables; columns must be
     * new, and arrive nullable (additive evolution's contract). */
   def commitAddColumns(s: SparkSession, loc: String,
-                       newCols: org.apache.spark.sql.types.StructType): Long = {
-    var attempt = 0
-    while (attempt < 64) {
-      val prev = manifests(s, loc).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no committed snapshots at $loc"))
-      val header = headerLines(s, prev._2)
-      val prevSchema = schemaFromHeader(header).getOrElse(
-        throw new UnsupportedOperationException(
-          s"$loc predates schema headers; rewrite it (commitReplace) first"))
+                       newCols: StructType): Long =
+    commit(s, loc) { tip =>
+      val prevSchema = schemaOf(tip.committed, loc)
       val clash = newCols.fieldNames.map(_.toLowerCase)
         .intersect(prevSchema.fieldNames.map(_.toLowerCase))
       require(clash.isEmpty, s"columns already exist: ${clash.mkString(", ")}")
-      val widened = mergeAdditive(prevSchema, newCols)
-      val files = readManifest(s, prev._2)
-      val dvs = header.filter(_.startsWith("#dv=")).map(_.stripPrefix("#dv="))
       // a pure metadata commit keeps the file set, so the bucket layout
       // (and the zero-Exchange plans it enables) SURVIVES schema widening
       // — added columns are not layout keys (they're new), and every
       // file stays routed exactly as published
-      val layout = header.find(_.startsWith("#layout="))
-        .map(_.stripPrefix("#layout="))
-      if (tryPublish(s, loc, prev._1 + 1, files, dvs = dvs,
-          schemaJson = Some(widened.json), layout = layout))
-        return prev._1 + 1
-      attempt += 1
+      tip.carry.copy(schemaJson = Some(mergeAdditive(prevSchema, newCols).json))
     }
-    throw new IllegalStateException(s"lost the commit race 64 times at $loc")
-  }
+
+  private def schemaOf(v: Version, loc: String): StructType =
+    v.schema.getOrElse(throw new UnsupportedOperationException(
+      s"$loc predates schema headers; rewrite it (commitReplace) first"))
 
   /** `ALTER TABLE … ALTER COLUMN c SET DEFAULT <sql>` / `DROP DEFAULT`
     * as a pure metadata commit: republishes the SAME files, DVs, and
@@ -771,15 +800,9 @@ object Snapshots {
     * the standard CURRENT/EXISTS split. */
   def commitSetDefault(s: SparkSession, loc: String, column: String,
                        currentDefault: Option[String]): Long = {
-    import org.apache.spark.sql.types.{MetadataBuilder, StructType}
-    var attempt = 0
-    while (attempt < 64) {
-      val prev = manifests(s, loc).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no committed snapshots at $loc"))
-      val header = headerLines(s, prev._2)
-      val prevSchema = schemaFromHeader(header).getOrElse(
-        throw new UnsupportedOperationException(
-          s"$loc predates schema headers; rewrite it (commitReplace) first"))
+    import org.apache.spark.sql.types.MetadataBuilder
+    commit(s, loc) { tip =>
+      val prevSchema = schemaOf(tip.committed, loc)
       require(prevSchema.fields.exists(_.name.equalsIgnoreCase(column)),
         s"no column '$column' in ${prevSchema.fieldNames.mkString(", ")}")
       val updated = StructType(prevSchema.fields.map { f =>
@@ -793,16 +816,8 @@ object Snapshots {
           f.copy(metadata = mb.build())
         }
       })
-      val files = readManifest(s, prev._2)
-      val dvs = header.filter(_.startsWith("#dv=")).map(_.stripPrefix("#dv="))
-      val layout = header.find(_.startsWith("#layout="))
-        .map(_.stripPrefix("#layout="))
-      if (tryPublish(s, loc, prev._1 + 1, files, dvs = dvs,
-          schemaJson = Some(updated.json), layout = layout))
-        return prev._1 + 1
-      attempt += 1
+      tip.carry.copy(schemaJson = Some(updated.json))
     }
-    throw new IllegalStateException(s"lost the commit race 64 times at $loc")
   }
 
   /** The DESTRUCTIVE-evolution recipe this format ships INSTEAD of
@@ -830,25 +845,22 @@ object Snapshots {
     val srcVersion = latestVersion(s, loc)
     require(srcVersion > 0L, s"no committed snapshots to migrate at $loc")
     val df = transform(read(s, loc, srcVersion))
-    val f = fs(s, newLoc)
     val dataDir = new Path(newLoc, s"data/${java.util.UUID.randomUUID()}")
     val newFiles = writeData(s, df, dataDir)
-    if (tryPublish(s, newLoc, 1L, newFiles, schemaJson = Some(df.schema.json),
-        lineage = Some(s"$loc@v$srcVersion")))
+    if (tryPublish(s, newLoc, 1L, Publish(newFiles,
+        schemaJson = Some(df.schema.json), lineage = Some(s"$loc@v$srcVersion"))))
       1L
     else {
-      f.delete(dataDir, true)
-      throw new IllegalStateException(s"lost the create race at $newLoc")
+      fs(s, newLoc).delete(dataDir, true)
+      throw new IllegalStateException(s"migration target concurrently created at $newLoc")
     }
   }
 
   /** The provenance a migrated table's v1 recorded (`#lineage=` header),
     * or None for tables not created by [[migrate]]. */
   def lineage(s: SparkSession, loc: String): Option[String] =
-    manifests(s, loc).headOption.flatMap { case (_, p) =>
-      headerLines(s, p).find(_.startsWith("#lineage="))
-        .map(_.stripPrefix("#lineage="))
-    }
+    manifests(s, loc).headOption.flatMap { case (v, p) =>
+      new Version(s, v, Some(p)).lineage }
 
   /** Roll the table back to `toVersion` by RE-PUBLISHING that version's
     * manifest as the newest commit — the metadata-only undo every
@@ -867,33 +879,22 @@ object Snapshots {
     * whatever version number the race leaves free. */
   def rollback(s: SparkSession, loc: String, toVersion: Long): Long = {
     val ms = manifests(s, loc)
-    val (_, p) = ms.find(_._1 == toVersion).getOrElse(
-      throw new NoSuchElementException(
+    val src = ms.find(_._1 == toVersion).map { case (v, p) => new Version(s, v, Some(p)) }
+      .getOrElse(throw new NoSuchElementException(
         s"version $toVersion not found at $loc (expired or never committed)"))
-    val files = readManifest(s, p)
-    val header = headerLines(s, p)
-    val dvs = header.filter(_.startsWith("#dv=")).map(_.stripPrefix("#dv="))
-    val schema = header.find(_.startsWith("#schema=")).map(_.stripPrefix("#schema="))
-    val layout = header.find(_.startsWith("#layout=")).map(_.stripPrefix("#layout="))
-    var attempt = 0
-    while (attempt < 64) {
-      val latest = latestVersion(s, loc)
-      if (latest == toVersion) return latest // already there: auditable no-op
-      if (tryPublish(s, loc, latest + 1, files, dvs = dvs, schemaJson = schema,
-          lineage = Some(s"rollback:$loc@v$toVersion"), layout = layout,
-          carriedValid = true)) { // carried by reference; constraints gate
-        // sidecars attach per (location, version): without a refresh the
-        // very next query after a metadata-only undo loses zone-map /
-        // Bloom / gram pruning AND the metadata-only count(*) — at
-        // 100 TB, "undo in one rename" followed by a full scan. The
-        // attach is incremental by file, so an all-carried restore costs
-        // O(manifest); best-effort like every auto-stats site.
-        autoStats(s, loc)
-        return latest + 1      // writes, not history (ops/Constraints)
-      }
-      attempt += 1
-    }
-    throw new IllegalStateException(s"lost the commit race 64 times at $loc")
+    val v = commit(s, loc) { tip =>
+      if (tip.version == toVersion) Done(toVersion) // already there: auditable no-op
+      else src.carry.copy(lineage = Some(s"rollback:$loc@v$toVersion"),
+        carriedValid = true) // carried by reference; constraints gate
+    }                        // writes, not history (ops/Constraints)
+    // sidecars attach per (location, version): without a refresh the
+    // very next query after a metadata-only undo loses zone-map /
+    // Bloom / gram pruning AND the metadata-only count(*) — at
+    // 100 TB, "undo in one rename" followed by a full scan. The
+    // attach is incremental by file, so an all-carried restore costs
+    // O(manifest); best-effort like every auto-stats site.
+    if (v != toVersion) autoStats(s, loc)
+    v
   }
 
   /** The delete-vector files a pinned version applies on read (merge-on-
@@ -902,10 +903,7 @@ object Snapshots {
   private[graft] def versionDvs(s: SparkSession, loc: String, version: Long): Seq[String] = {
     if (version == 0L) return Nil
     manifests(s, loc).find(_._1 == version)
-      .map { case (_, p) =>
-        headerLines(s, p).filter(_.startsWith("#dv="))
-          .map(_.stripPrefix("#dv="))
-      }
+      .map { case (_, p) => headerValues(headerLines(s, p), "dv") }
       .getOrElse(throw new NoSuchElementException(
         s"version $version not found at $loc"))
   }
@@ -1099,19 +1097,11 @@ object Snapshots {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     require(lo.isDefined || hi.isDefined,
       "a range delete needs at least one bound")
-    val f = fs(s, loc)
-    var attempt = 0
-    while (attempt < 64) {
-      val prev = manifests(s, loc).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no committed snapshots at $loc"))
-      val files = readManifest(s, prev._2)
-      val header = headerLines(s, prev._2)
-      val dvs = header.filter(_.startsWith("#dv=")).map(_.stripPrefix("#dv="))
-      val schema = schemaFromHeader(header)
-      val layout = header.find(_.startsWith("#layout="))
-        .map(_.stripPrefix("#layout="))
+    commit(s, loc) { t =>
+      val tip = t.committed
       val (inside, outside, straddle) =
-        classifyRange(s, loc, prev._1, files, column, lo, hi)
+        classifyRange(s, loc, tip.version, tip.files, column, lo, hi)
+      val schema = tip.schema
       // the predicate for the straddler scan, typed through the table
       // schema (CAST the rendered bound back in the column's own type) —
       // only built when a straddler exists (an empty/fully-classified
@@ -1135,13 +1125,13 @@ object Snapshots {
         if (straddle.isEmpty) (Nil, Nil)
         else affectedFiles(s, straddle, pred, schema)
       val dataDir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
-      val routed = layout.flatMap(BucketLayout.parse)
+      val routed = tip.layout.flatMap(BucketLayout.parse)
       val newFiles: Seq[String] =
         if (affected.isEmpty) Nil
         else {
           // DV-applied read, survivors only; ROUTED when a layout is live
           // so retention never costs the table its co-partitioned plans
-          val df = applyDv(s, readData(s, affected, schema), dvs)
+          val df = applyDv(s, readData(s, affected, schema), tip.dvs)
             .filter(!coalesce(pred, lit(false)))
           routed match {
             case Some(spec) => BucketLayout.writeBucketed(df, spec, dataDir)
@@ -1149,16 +1139,11 @@ object Snapshots {
           }
         }
       val kept = outside ++ keptStraddle
-      val keepDvs = filterCarriedDvs(s, dvs, kept, dataDir)
-      if (tryPublish(s, loc, prev._1 + 1, kept ++ newFiles, dvs = keepDvs,
-          schemaJson = schema.map(_.json),
-          layout = layout.filter(_ =>
-            routed.isDefined || affected.isEmpty)))
-        return prev._1 + 1
-      f.delete(dataDir, true) // lost the race: recompute against new latest
-      attempt += 1
+      Publish(kept ++ newFiles, dvs = filterCarriedDvs(s, tip.dvs, kept, dataDir),
+        schemaJson = tip.schemaJson,
+        layout = tip.layout.filter(_ => routed.isDefined || affected.isEmpty),
+        scratch = Seq(dataDir))
     }
-    throw new IllegalStateException(s"lost the commit race 64 times at $loc")
   }
 
   /** Ternary zone-map classification for [[commitDeleteRange]]: files
@@ -1282,63 +1267,39 @@ object Snapshots {
                       pred: org.apache.spark.sql.Column,
                       pruneBy: Option[(String, String, String)] = None): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val f = fs(s, loc)
-    var attempt = 0
-    while (attempt < 64) {
-      val prev = manifests(s, loc).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no committed snapshots at $loc"))
-      val files = readManifest(s, prev._2)
-      val header = headerLines(s, prev._2)
-      val dvs = header.filter(_.startsWith("#dv=")).map(_.stripPrefix("#dv="))
-      val schema = schemaFromHeader(header)
-      // a DV-only commit leaves the FILE SET untouched, so a bucket
-      // layout stays valid and carries — the one non-bucket commit kind
-      // that preserves co-partitioned joins (the scan subtracts vectors
-      // per file without reordering)
-      val layout = header.find(_.startsWith("#layout="))
-        .map(_.stripPrefix("#layout="))
+    // a DV-only commit leaves the FILE SET untouched, so a bucket layout
+    // stays valid and carries (tip.carry) — the one non-bucket commit
+    // kind that preserves co-partitioned joins (the scan subtracts
+    // vectors per file without reordering)
+    commit(s, loc) { t =>
+      val tip = t.committed
       val candidates = pruneBy match {
-        case Some((c, lo, hi)) => statFiles(s, loc, prev._1, files, c, lo, hi)
-        case None => files
+        case Some((c, lo, hi)) => statFiles(s, loc, tip.version, tip.files, c, lo, hi)
+        case None => tip.files
       }
-      if (candidates.isEmpty) {
-        // auditable no-op, same contract as a no-match copy-on-write delete
-        if (tryPublish(s, loc, prev._1 + 1, files, dvs = dvs,
-            schemaJson = schema.map(_.json), layout = layout))
-          return prev._1 + 1
-      } else {
-        val hits = readData(s, candidates, schema)
+      // auditable no-op, same contract as a no-match copy-on-write delete
+      if (candidates.isEmpty) tip.carry
+      else {
+        val hits = readData(s, candidates, tip.schema)
           .filter(coalesce(pred, lit(false)))
           .select(col("_metadata.file_path").as("file"),
             col("_metadata.row_index").as("pos"))
-        val freshHits = subtractDv(s, hits, dvs, "file", "pos")
+        val freshHits = subtractDv(s, hits, tip.dvs, "file", "pos")
         // candidates held no fresh match: publish the carry-only no-op
         // commit (as the candidates.isEmpty branch does) — writing an
         // EMPTY vector would still produce a part file (coalesce(1) emits
         // one even for zero rows), flipping every later SQL read onto the
         // DV scan and tripping a tailing stream's DV fail-fast for nothing
-        if (freshHits.isEmpty) {
-          if (tryPublish(s, loc, prev._1 + 1, files, dvs = dvs,
-              schemaJson = schema.map(_.json), layout = layout))
-            return prev._1 + 1
-        } else {
-          val commitId = java.util.UUID.randomUUID().toString
-          val dvDir = new Path(loc, s"data/$commitId")
+        if (freshHits.isEmpty) tip.carry
+        else {
+          val dvDir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
           // coalesce(1): a DV is tiny by contract — one file keeps the
           // manifest header and the read-side broadcast build cheap
-          freshHits.coalesce(1)
-            .write.mode(SaveMode.ErrorIfExists).parquet(dvDir.toString)
-          val newDvs = f.listStatus(dvDir).toSeq
-            .map(_.getPath).filter(_.getName.startsWith("part-")).map(_.toString)
-          if (tryPublish(s, loc, prev._1 + 1, files, dvs = dvs ++ newDvs,
-              schemaJson = schema.map(_.json), layout = layout))
-            return prev._1 + 1
-          f.delete(dvDir, true) // lost the race: recompute against new latest
+          val newDvs = writeData(s, freshHits.coalesce(1), dvDir)
+          tip.carry.copy(dvs = tip.dvs ++ newDvs, scratch = Seq(dvDir))
         }
       }
-      attempt += 1
     }
-    throw new IllegalStateException(s"lost the commit race 64 times at $loc")
   }
 
   /** Rows an earlier delete vector already removed must never re-enter a
@@ -1387,25 +1348,16 @@ object Snapshots {
                       set: Map[String, org.apache.spark.sql.Column],
                       pruneBy: Option[(String, String, String)] = None): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val f = fs(s, loc)
-    var attempt = 0
-    while (attempt < 64) {
-      val prev = manifests(s, loc).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no committed snapshots at $loc"))
-      val files = readManifest(s, prev._2)
-      val header = headerLines(s, prev._2)
-      val dvs = header.filter(_.startsWith("#dv=")).map(_.stripPrefix("#dv="))
-      val schema = schemaFromHeader(header)
+    commit(s, loc) { t =>
+      val tip = t.committed
+      val carry = Publish(tip.files, dvs = tip.dvs, schemaJson = tip.schemaJson)
       val candidates = pruneBy match {
-        case Some((c, lo, hi)) => statFiles(s, loc, prev._1, files, c, lo, hi)
-        case None => files
+        case Some((c, lo, hi)) => statFiles(s, loc, tip.version, tip.files, c, lo, hi)
+        case None => tip.files
       }
-      if (candidates.isEmpty) {
-        if (tryPublish(s, loc, prev._1 + 1, files, dvs = dvs,
-            schemaJson = schema.map(_.json)))
-          return prev._1 + 1
-      } else {
-        val base = readData(s, candidates, schema)
+      if (candidates.isEmpty) carry
+      else {
+        val base = readData(s, candidates, tip.schema)
         val matched = base
           .withColumn("__graft_fp", col("_metadata.file_path"))
           .withColumn("__graft_ri", col("_metadata.row_index"))
@@ -1413,15 +1365,12 @@ object Snapshots {
         val dataCols = base.columns.toIndexedSeq
         require(set.keySet.subsetOf(dataCols.toSet),
           s"SET names unknown columns: ${set.keySet -- dataCols.toSet}")
-        val fresh = subtractDv(s, matched, dvs, "__graft_fp", "__graft_ri")
+        val fresh = subtractDv(s, matched, tip.dvs, "__graft_fp", "__graft_ri")
         // no fresh match → carry-only no-op commit, never an empty vector
         // (an empty DV file would degrade every later scan; see
         // commitDeleteMoR)
-        if (fresh.isEmpty) {
-          if (tryPublish(s, loc, prev._1 + 1, files, dvs = dvs,
-              schemaJson = schema.map(_.json)))
-            return prev._1 + 1
-        } else {
+        if (fresh.isEmpty) carry
+        else {
           val commitId = java.util.UUID.randomUUID().toString
           // the vector and the updated images are two actions over the same
           // deterministic frame (immutable files, fixed DV set within the
@@ -1437,15 +1386,11 @@ object Snapshots {
           val newFiles = writeData(s,
             fresh.select(dataCols.map(c =>
               set.get(c).map(_.as(c)).getOrElse(col(c))): _*), updDir)
-          if (tryPublish(s, loc, prev._1 + 1, files ++ newFiles,
-              dvs = dvs ++ newDvs, schemaJson = schema.map(_.json)))
-            return prev._1 + 1
-          f.delete(dvDir, true); f.delete(updDir, true)
+          carry.copy(files = tip.files ++ newFiles, dvs = tip.dvs ++ newDvs,
+            scratch = Seq(dvDir, updDir))
         }
       }
-      attempt += 1
     }
-    throw new IllegalStateException(s"lost the commit race 64 times at $loc")
   }
 
   /** Row-level MERGE (upsert), merge-on-read: matched keys are removed
@@ -1461,23 +1406,17 @@ object Snapshots {
   def commitMergeMoR(s: SparkSession, loc: String, source: DataFrame,
                      keyCol: String): Long = {
     import org.apache.spark.sql.functions.{col, max, min}
-    val f = fs(s, loc)
     val keys = source.select(col(keyCol)).distinct()
     val env = source.agg(min(col(keyCol)).cast("string").as("lo"),
       max(col(keyCol)).cast("string").as("hi")).head()
     val envelope: Option[(String, String)] =
       if (env.isNullAt(0) || env.isNullAt(1)) None
       else Some((env.getString(0), env.getString(1)))
-    var attempt = 0
-    while (attempt < 64) {
-      val prev = manifests(s, loc).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no committed snapshots at $loc"))
-      val files = readManifest(s, prev._2)
-      val header = headerLines(s, prev._2)
-      val dvs = header.filter(_.startsWith("#dv=")).map(_.stripPrefix("#dv="))
-      val schema = schemaFromHeader(header)
+    commit(s, loc) { t =>
+      val tip = t.committed
+      val (files, schema) = (tip.files, tip.schema)
       val candidates = envelope match {
-        case Some((lo, hi)) => statFiles(s, loc, prev._1, files, keyCol, lo, hi)
+        case Some((lo, hi)) => statFiles(s, loc, tip.version, files, keyCol, lo, hi)
         case None => Nil // empty/all-NULL-key source: nothing can match
       }
       val commitId = java.util.UUID.randomUUID().toString
@@ -1489,7 +1428,7 @@ object Snapshots {
             .select(col(keyCol), col("_metadata.file_path").as("__graft_fp"),
               col("_metadata.row_index").as("__graft_ri"))
             .join(keys, Seq(keyCol), "left_semi")
-          val freshHits = subtractDv(s, hits, dvs, "__graft_fp", "__graft_ri")
+          val freshHits = subtractDv(s, hits, tip.dvs, "__graft_fp", "__graft_ri")
           // candidate files held no fresh key match → pure insert merge:
           // no vector at all, never an empty DV file (see commitDeleteMoR)
           if (freshHits.isEmpty) Nil
@@ -1504,58 +1443,38 @@ object Snapshots {
       val newFiles = writeData(s,
         schema.map(sc => source.select(
           sc.fieldNames.toIndexedSeq.map(col): _*)).getOrElse(source), srcDir)
-      if (tryPublish(s, loc, prev._1 + 1, files ++ newFiles,
-          dvs = dvs ++ newDvs, schemaJson = schema.map(_.json)))
-        return prev._1 + 1
-      f.delete(dvDir, true); f.delete(srcDir, true)
-      attempt += 1
+      Publish(files ++ newFiles, dvs = tip.dvs ++ newDvs,
+        schemaJson = tip.schemaJson, scratch = Seq(dvDir, srcDir))
     }
-    throw new IllegalStateException(s"lost the commit race 64 times at $loc")
   }
 
   private def rewriteAffected(s: SparkSession, loc: String,
                               pred: org.apache.spark.sql.Column,
                               rewrite: DataFrame => DataFrame,
-                              pruneBy: Option[(String, String, String)] = None): Long = {
-    val f = fs(s, loc)
-    var attempt = 0
-    while (attempt < 64) {
-      val prev = manifests(s, loc).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no committed snapshots at $loc"))
-      val files = readManifest(s, prev._2)
-      val header = headerLines(s, prev._2)
-      val dvs = header.filter(_.startsWith("#dv=")).map(_.stripPrefix("#dv="))
-      val schema = schemaFromHeader(header)
+                              pruneBy: Option[(String, String, String)] = None): Long =
+    commit(s, loc) { t =>
+      val tip = t.committed
+      val files = tip.files
       val candidates = pruneBy match {
-        case Some((c, lo, hi)) => statFiles(s, loc, prev._1, files, c, lo, hi)
+        case Some((c, lo, hi)) => statFiles(s, loc, tip.version, files, c, lo, hi)
         case None => files
       }
-      val (affected, keptCand) = affectedFiles(s, candidates, pred, schema)
+      val (affected, keptCand) = affectedFiles(s, candidates, pred, tip.schema)
       val kept = keptCand ++ files.filterNot(candidates.toSet)
-      if (affected.isEmpty) {
-        if (tryPublish(s, loc, prev._1 + 1, files, dvs = dvs,
-            schemaJson = schema.map(_.json))) return prev._1 + 1
-      } else {
-        val commitId = java.util.UUID.randomUUID().toString
-        val dataDir = new Path(loc, s"data/$commitId")
+      val carry = Publish(files, dvs = tip.dvs, schemaJson = tip.schemaJson)
+      if (affected.isEmpty) carry
+      else {
+        val dataDir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
         // the rewrite reads dv-APPLIED content under the TABLE schema: a
         // row already merge-on-read deleted must not be resurrected, and
         // a file predating an added column rewrites with it null-filled.
         // Carried files keep their DV entries; entries for rewritten files
         // go inert with the paths they name (never reused).
-        rewrite(applyDv(s, readData(s, affected, schema), dvs))
-          .write.mode(SaveMode.ErrorIfExists).parquet(dataDir.toString)
-        val newFiles = f.listStatus(dataDir).toSeq
-          .map(_.getPath).filter(_.getName.startsWith("part-")).map(_.toString)
-        if (tryPublish(s, loc, prev._1 + 1, kept ++ newFiles, dvs = dvs,
-            schemaJson = schema.map(_.json)))
-          return prev._1 + 1
-        f.delete(dataDir, true) // lost the race: recompute against new latest
+        val newFiles = writeData(s,
+          rewrite(applyDv(s, readData(s, affected, tip.schema), tip.dvs)), dataDir)
+        carry.copy(files = kept ++ newFiles, scratch = Seq(dataDir))
       }
-      attempt += 1
     }
-    throw new IllegalStateException(s"lost the commit race 64 times at $loc")
-  }
 
   /** Row-level MERGE (upsert) as a commit: rows of `source` REPLACE
     * same-key rows of the table and insert where no key matches —
@@ -1568,7 +1487,6 @@ object Snapshots {
   def commitMerge(s: SparkSession, loc: String, source: DataFrame,
                   keyCol: String): Long = {
     import org.apache.spark.sql.functions.{col, input_file_name, max, min}
-    val f = fs(s, loc)
     val keys = source.select(col(keyCol)).distinct()
     // the source's key envelope, computed ONCE: every matched key lies in
     // [lo, hi] by definition, so the envelope is a valid pruneBy range for
@@ -1580,16 +1498,11 @@ object Snapshots {
     val envelope: Option[(String, String)] =
       if (env.isNullAt(0) || env.isNullAt(1)) None
       else Some((env.getString(0), env.getString(1)))
-    var attempt = 0
-    while (attempt < 64) {
-      val prev = manifests(s, loc).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no committed snapshots at $loc"))
-      val files = readManifest(s, prev._2)
-      val header = headerLines(s, prev._2)
-      val dvs = header.filter(_.startsWith("#dv=")).map(_.stripPrefix("#dv="))
-      val schema = schemaFromHeader(header)
+    commit(s, loc) { t =>
+      val tip = t.committed
+      val (files, schema) = (tip.files, tip.schema)
       val candidates = envelope match {
-        case Some((lo, hi)) => statFiles(s, loc, prev._1, files, keyCol, lo, hi)
+        case Some((lo, hi)) => statFiles(s, loc, tip.version, files, keyCol, lo, hi)
         // empty or all-NULL-key source: equality can never match, so no
         // file needs scanning — every row becomes an insert
         case None => Nil
@@ -1604,23 +1517,15 @@ object Snapshots {
           .select(col("f")).distinct()
           .collect().map(r => normPath(r.getString(0))).toSet
       val (affected, kept) = files.partition(x => hit.contains(normPath(x)))
-      val commitId = java.util.UUID.randomUUID().toString
-      val dataDir = new Path(loc, s"data/$commitId")
+      val dataDir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
       val survivors =
         if (affected.isEmpty) source
-        else applyDv(s, readData(s, affected, schema), dvs)
+        else applyDv(s, readData(s, affected, schema), tip.dvs)
           .join(keys, Seq(keyCol), "left_anti")
           .unionByName(source)
-      survivors.write.mode(SaveMode.ErrorIfExists).parquet(dataDir.toString)
-      val newFiles = f.listStatus(dataDir).toSeq
-        .map(_.getPath).filter(_.getName.startsWith("part-")).map(_.toString)
-      if (tryPublish(s, loc, prev._1 + 1, kept ++ newFiles, dvs = dvs,
-          schemaJson = schema.map(_.json)))
-        return prev._1 + 1
-      f.delete(dataDir, true)
-      attempt += 1
+      Publish(kept ++ writeData(s, survivors, dataDir), dvs = tip.dvs,
+        schemaJson = tip.schemaJson, scratch = Seq(dataDir))
     }
-    throw new IllegalStateException(s"lost the commit race 64 times at $loc")
   }
 
   /** Change data feed: every row-level change from `fromVersion`
@@ -1745,16 +1650,14 @@ object Snapshots {
     val rows = manifests(s, loc).foldLeft(
       (Seq.empty[(Long, java.sql.Timestamp, Int, Int, Int, Int, Option[String])],
         Set.empty[String])) { case ((acc, prevFiles), (v, p)) =>
-      val files = versionFiles(s, loc, v).map(normPath).toSet
-      val dvs = versionDvs(s, loc, v)
+      val m = new Version(s, v, Some(p))
+      val files = m.files.map(normPath).toSet
       // provenance: rollback/publish/branch/migrate commits record their
       // origin in the #lineage= header — surfaced so "what did commit N
       // do" is answerable from the history table alone
-      val lineage = headerLines(s, p).find(_.startsWith("#lineage="))
-        .map(_.stripPrefix("#lineage="))
       val row = (v, new java.sql.Timestamp(times.getOrElse(v, 0L)),
-        files.size, dvs.length,
-        (files -- prevFiles).size, (prevFiles -- files).size, lineage)
+        files.size, m.dvs.length,
+        (files -- prevFiles).size, (prevFiles -- files).size, m.lineage)
       (acc :+ row, files)
     }._1
     s.createDataFrame(rows).toDF(
@@ -2602,38 +2505,26 @@ object Snapshots {
     * against the new latest, so concurrent appends are never dropped. */
   def commitCompactionPartial(s: SparkSession, loc: String,
                               smallerThanBytes: Long = 32L * 1024 * 1024,
-                              targetBytes: Long = 128L * 1024 * 1024): Long = {
-    val f = fs(s, loc)
-    var attempt = 0
-    while (attempt < 64) {
-      val prev = manifests(s, loc).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no committed snapshots at $loc"))
-      val files = readManifest(s, prev._2)
-      val header = headerLines(s, prev._2)
-      val dvs = header.filter(_.startsWith("#dv=")).map(_.stripPrefix("#dv="))
-      val schema = schemaFromHeader(header)
-      val lengths = fileSizes(s, files)
-      val (small, kept) = files.partition(x =>
+                              targetBytes: Long = 128L * 1024 * 1024): Long =
+    commit(s, loc) { t =>
+      val tip = t.committed
+      val lengths = fileSizes(s, tip.files)
+      val (small, kept) = tip.files.partition(x =>
         lengths.get(normPath(x)).exists(_ < smallerThanBytes))
-      if (small.length < 2) return prev._1 // no bin-packing gain; no commit
-      val scoped = scopedAdvisory(s, targetBytes)
-      val dataDir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
-      val newFiles = writeData(scoped,
-        applyDv(scoped, readData(scoped, small, schema), dvs).hint("rebalance"),
-        dataDir)
-      // kept files may still be DV-covered — carry the vectors with them,
-      // FILTERED to entries naming kept files (entries whose files were
-      // just rewritten DV-applied are dead weight every later DV scan's
-      // broadcast build would re-read)
-      val keepDvs = filterCarriedDvs(s, dvs, kept, dataDir)
-      if (tryPublish(s, loc, prev._1 + 1, kept ++ newFiles, dvs = keepDvs,
-          schemaJson = schema.map(_.json), carriedValid = true))
-        return prev._1 + 1
-      f.delete(dataDir, true) // lost the race: recompute against new latest
-      attempt += 1
+      if (small.length < 2) Done(tip.version) // no bin-packing gain; no commit
+      else {
+        val scoped = scopedAdvisory(s, targetBytes)
+        val dataDir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
+        val newFiles = writeData(scoped, applyDv(scoped,
+          readData(scoped, small, tip.schema), tip.dvs).hint("rebalance"), dataDir)
+        // kept files may still be DV-covered — carry the vectors with them,
+        // FILTERED to entries naming kept files (entries whose files were
+        // just rewritten DV-applied are dead weight every later DV scan's
+        // broadcast build would re-read)
+        Publish(kept ++ newFiles, dvs = filterCarriedDvs(s, tip.dvs, kept, dataDir),
+          schemaJson = tip.schemaJson, carriedValid = true, scratch = Seq(dataDir))
+      }
     }
-    throw new IllegalStateException(s"lost the commit race 64 times at $loc")
-  }
 
   /** Fold the latest version's merge-on-read DELETE VECTORS away by
     * rewriting ONLY the files their entries name — the missing middle
@@ -2650,60 +2541,46 @@ object Snapshots {
     * carry-by-reference verb: a lost race recomputes against the new
     * latest, so concurrent appends are never dropped. */
   def commitFoldDvs(s: SparkSession, loc: String,
-                    targetBytes: Long = 128L * 1024 * 1024): Long = {
-    val f = fs(s, loc)
-    var attempt = 0
-    while (attempt < 64) {
-      val prev = manifests(s, loc).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no committed snapshots at $loc"))
-      val header = headerLines(s, prev._2)
-      val dvs = header.filter(_.startsWith("#dv=")).map(_.stripPrefix("#dv="))
-      if (dvs.isEmpty) return prev._1 // nothing to fold; no commit
-      val files = readManifest(s, prev._2)
-      val schema = schemaFromHeader(header)
-      val layout = header.find(_.startsWith("#layout="))
-        .map(_.stripPrefix("#layout="))
-      // the files the vectors actually name — O(distinct deleted-from
-      // files) driver strings, the same cardinality class as a manifest
-      val named = s.read.parquet(dvs: _*).select("file").distinct()
-        .collect().map(r => normPath(r.getString(0))).toSet
-      val (affected, kept) = files.partition(x => named(normPath(x)))
-      if (affected.isEmpty) {
+                    targetBytes: Long = 128L * 1024 * 1024): Long =
+    commit(s, loc) { t =>
+      val tip = t.committed
+      val (dvs, schema, layout) = (tip.dvs, tip.schema, tip.layout)
+      // vectors drop from every publish below — each entry either folds
+      // with its file or names a dead one
+      lazy val carry = tip.carry.copy(dvs = Nil, carriedValid = true)
+      if (dvs.isEmpty) Done(tip.version) // nothing to fold; no commit
+      else {
+        // the files the vectors actually name — O(distinct deleted-from
+        // files) driver strings, the same cardinality class as a manifest
+        val named = s.read.parquet(dvs: _*).select("file").distinct()
+          .collect().map(r => normPath(r.getString(0))).toSet
+        val (affected, kept) = tip.files.partition(x => named(normPath(x)))
         // every entry names a gone file: dropping the refs is metadata
-        if (tryPublish(s, loc, prev._1 + 1, files,
-            schemaJson = schema.map(_.json), layout = layout,
-            carriedValid = true))
-          return prev._1 + 1
-      } else {
-        val dataDir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
-        val routed = layout.flatMap(BucketLayout.parse)
-        val newFiles = routed match {
-          case Some(spec) => BucketLayout.writeBucketed(
-            applyDv(s, readData(s, affected, schema), dvs), spec, dataDir)
-          case None =>
-            // the rebalance hint resolves advisoryPartitionSizeInBytes
-            // from df.sparkSession, so the READ must be built under the
-            // scoped session too — else targetBytes is silently inert
-            val scoped = scopedAdvisory(s, targetBytes)
-            writeData(scoped,
-              applyDv(scoped, readData(scoped, affected, schema), dvs)
-                .hint("rebalance"), dataDir)
-        }
-        // all kept files were routed (the layout was active) and the
-        // rewrite routed too, so the layout carries; vectors drop —
-        // every entry either folded with its file or named a dead one
-        if (tryPublish(s, loc, prev._1 + 1, kept ++ newFiles,
-            schemaJson = schema.map(_.json),
+        if (affected.isEmpty) carry
+        else {
+          val dataDir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
+          val routed = layout.flatMap(BucketLayout.parse)
+          val newFiles = routed match {
+            case Some(spec) => BucketLayout.writeBucketed(
+              applyDv(s, readData(s, affected, schema), dvs), spec, dataDir)
+            case None =>
+              // the rebalance hint resolves advisoryPartitionSizeInBytes
+              // from df.sparkSession, so the READ must be built under the
+              // scoped session too — else targetBytes is silently inert
+              val scoped = scopedAdvisory(s, targetBytes)
+              writeData(scoped,
+                applyDv(scoped, readData(scoped, affected, schema), dvs)
+                  .hint("rebalance"), dataDir)
+          }
+          // all kept files were routed (the layout was active) and the
+          // rewrite routed too, so the layout carries
+          carry.copy(files = kept ++ newFiles,
             layout = layout.filter(_ => routed.isDefined || kept.forall(
               x => BucketLayout.bucketOfPath(x).isDefined)),
-            carriedValid = true))
-          return prev._1 + 1
-        f.delete(dataDir, true) // lost the race: recompute against new latest
+            scratch = Seq(dataDir))
+        }
       }
-      attempt += 1
     }
-    throw new IllegalStateException(s"lost the commit race 64 times at $loc")
-  }
 
   /** Retention GC: keep the newest `retainLast` versions, drop every
     * older manifest, then delete dead data files. Returns (manifests

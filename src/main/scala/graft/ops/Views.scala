@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 /** Persisted VIEWS in the snapshot catalog — view text as a versioned
   * metadata object, the same two primitives as everything else in the
   * format: one tiny file per definition version, published by the
-  * exactly-once atomic claim ([[Snapshots.atomicClaim]]), resolved at
+  * exactly-once atomic claim ([[Snapshots.claim]]), resolved at
   * READ time by re-parsing the stored SQL (late binding: schema
   * evolution of the underlying tables flows through; a view over a
   * `VERSION AS OF` read stays pinned because the pin is IN the text).
@@ -109,23 +109,14 @@ object Views {
       throw new IllegalStateException(
         s"view already exists at $loc (use CREATE OR REPLACE VIEW)")
     }
-    val f = Snapshots.fs(s, loc)
-    f.mkdirs(viewDir(loc))
-    val body = s"#sql=${esc(sql)}\n" +
+    val body = (s"#sql=${esc(sql)}\n" +
       (if (aliases.nonEmpty) s"#aliases=${aliases.map(esc).mkString(",")}\n"
-       else "")
+       else "")).getBytes("UTF-8")
     var v = cur.lastOption.map(_._1).getOrElse(0L) + 1
-    var attempt = 0
-    while (attempt < 64) {
-      val tmp = new Path(viewDir(loc), s"_tmp_${java.util.UUID.randomUUID()}.txt")
-      val out = f.create(tmp, true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-      if (Snapshots.atomicClaim(s, f, tmp, new Path(viewDir(loc), f"v$v%05d.txt")))
-        return v
-      v += 1 // lost the race: someone else published this version
-      attempt += 1
+    Snapshots.retry(loc) {
+      if (Snapshots.claim(s, new Path(viewDir(loc), f"v$v%05d.txt"), body)) Some(v)
+      else { v += 1; None } // lost the race: someone else published this version
     }
-    throw new IllegalStateException(s"lost the view publish race 64 times at $loc")
   }
 
   /** Drop the view (its whole definition history). False if absent.

@@ -93,9 +93,9 @@ object ManifestProbe {
     Seq(10000, 100000).foreach { n =>
       val loc = s"$base/chain$n"
       val (_, tBuild) = time((1 to n).foreach { v =>
-        require(Snapshots.tryPublish(spark, loc, v.toLong,
+        require(Snapshots.tryPublish(spark, loc, v.toLong, Snapshots.Publish(
           Seq(f"$loc/data/c$v%07d/part-0.parquet"),
-          marker = Some(s"epoch-$v")), s"chain build lost v$v")
+          marker = Some(s"epoch-$v"))), s"chain build lost v$v")
       })
       val (latest, tList) = time(Snapshots.latestVersion(spark, loc))
       require(latest == n.toLong)

@@ -18,24 +18,29 @@ class DedupPipelineSpec extends SparkTestBase {
 
   test("cleanCorpus keeps one representative per near-dup cluster") {
     import spark.implicits._
-    val docs = Tables.documents(spark, sf0001).select($"doc_id", $"text")
-    val pairs = TextDedup.minhashLsh(docs, "doc_id", "text", 0.9)
-      .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1)))
-    val clustered = pairs.flatMap(p => Seq(p._1, p._2)).toSet
-    val survivors = DedupPipeline.cleanCorpus(docs, "doc_id", "text", 0.9)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    // every doc outside the pair graph survives
-    val all = docs.select("doc_id").collect().map(_.getLong(0)).toSet
-    assert((all diff clustered).subsetOf(survivors))
-    // per cluster exactly one survivor, and it's the minimum
-    val comps = DedupPipeline.components(pairs.toSeq.toDF("id1", "id2"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val byRep = comps.groupBy(_._2)
-    for ((rep, members) <- byRep) {
-      val ids = members.map(_._1).toSet
-      assert((ids intersect survivors) == Set(rep))
+    // "id" is also the components output's column name: the survivor
+    // filter must still resolve the corpus's own id column
+    Seq("doc_id", "id").foreach { idCol =>
+      val docs = Tables.documents(spark, sf0001)
+        .select($"doc_id".as(idCol), $"text")
+      val pairs = TextDedup.minhashLsh(docs, idCol, "text", 0.9)
+        .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1)))
+      val clustered = pairs.flatMap(p => Seq(p._1, p._2)).toSet
+      val survivors = DedupPipeline.cleanCorpus(docs, idCol, "text", 0.9)
+        .select(idCol).collect().map(_.getLong(0)).toSet
+      // every doc outside the pair graph survives
+      val all = docs.select(idCol).collect().map(_.getLong(0)).toSet
+      assert((all diff clustered).subsetOf(survivors))
+      // per cluster exactly one survivor, and it's the minimum
+      val comps = DedupPipeline.components(pairs.toSeq.toDF("id1", "id2"))
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      val byRep = comps.groupBy(_._2)
+      for ((rep, members) <- byRep) {
+        val ids = members.map(_._1).toSet
+        assert((ids intersect survivors) == Set(rep))
+      }
+      assert(survivors.size == all.size - clustered.size + byRep.size)
     }
-    assert(survivors.size == all.size - clustered.size + byRep.size)
   }
 
   test("keepBest picks the highest-quality member per cluster, ties by min id") {

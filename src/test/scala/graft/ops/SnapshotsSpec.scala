@@ -511,4 +511,149 @@ class SnapshotsSpec extends SparkTestBase {
     assert(Snapshots.read(spark, loc3, v3).count() == 90L)
     assert(Snapshots.versionDvs(spark, loc3, v3).isEmpty)
   }
+
+  test("commit primitive: a lost claim drops its scratch and re-derives; 64 losses raise") {
+    import spark.implicits._
+    val fs = new Path("/tmp").getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def parts(dir: Path): Seq[String] = fs.listStatus(dir).toSeq.map(_.getPath)
+      .filter(_.getName.startsWith("part-")).map(_.toString)
+
+    // (a) the attempt lets a competing append claim tip + 1 before it
+    // returns: it loses once, its scratch dir goes, and the next round
+    // re-derives on the racer's tip and lands at tip + 2 with both rows
+    val loc = "/tmp/graft-test/snap_commit_lost"
+    wipe(loc)
+    Snapshots.commitAppend(Seq(1L).toDF("id"), loc)
+    val rounds = scala.collection.mutable.ArrayBuffer.empty[(Long, Path)]
+    val v = Snapshots.commit(spark, loc) { tip =>
+      val dir = new Path(loc, s"data/attempt-${rounds.size}")
+      rounds += (tip.version -> dir)
+      Seq(2L).toDF("id").coalesce(1).write.parquet(dir.toString)
+      if (rounds.size == 1) Snapshots.commitAppend(Seq(3L).toDF("id"), loc)
+      Snapshots.Publish(tip.files ++ parts(dir), schemaJson = tip.schemaJson,
+        scratch = Seq(dir))
+    }
+    assert(rounds.map(_._1).toSeq == Seq(1L, 2L))
+    assert(v == 3L)
+    assert(!fs.exists(rounds.head._2), "the lost attempt's scratch survived")
+    assert(Snapshots.read(spark, loc).as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 3L))
+
+    // (b) 64 straight losses raise the one lost-race error and leave no
+    // temp manifest and no scratch behind
+    val lossLoc = "/tmp/graft-test/snap_commit_bound"
+    wipe(lossLoc)
+    Snapshots.commitAppend(Seq(1L).toDF("id"), lossLoc)
+    var n = 0
+    val err = intercept[IllegalStateException](Snapshots.commit(spark, lossLoc) { tip =>
+      n += 1
+      val dir = new Path(lossLoc, s"data/lost-$n")
+      fs.create(new Path(dir, "part-0")).close()
+      Snapshots.publishAppend(spark, lossLoc, Nil) // a file-less racer wins
+      Snapshots.Publish(tip.files, scratch = Seq(dir))
+    })
+    assert(err.getMessage.contains("lost the commit race 64 times"))
+    assert(n == 64)
+    assert(Snapshots.latestVersion(spark, lossLoc) == 65L)
+    assert(!fs.listStatus(new Path(lossLoc, "_manifests"))
+      .exists(_.getPath.getName.startsWith("_tmp_")))
+    assert((1 to 64).forall(i => !fs.exists(new Path(lossLoc, s"data/lost-$i"))))
+
+    // (c) files written BEFORE the first attempt survive a lost claim:
+    // a constraint UDF runs inside the claim round's CHECK gate (after
+    // the tip was read, before the claim) and lets a racer in
+    val preLoc = "/tmp/graft-test/snap_commit_prewritten"
+    wipe(preLoc)
+    spark.udf.register("graft_race_hook", (_: Long) => RaceHook.fire())
+    Snapshots.commitAppend(Seq(1L).toDF("id"), preLoc)
+    Constraints.add(spark, preLoc, "race", "graft_race_hook(id)")
+    def armRacer(): Unit =
+      RaceHook.arm(() => Snapshots.publishAppend(spark, preLoc, Nil))
+    armRacer()
+    assert(Snapshots.commitAppend(Seq(2L).toDF("id"), preLoc) == 3L) // lost v2
+    val callerDir = new Path(preLoc, "data/caller-written")
+    Seq(3L).toDF("id").coalesce(1).write.parquet(callerDir.toString)
+    val callerFiles = parts(callerDir)
+    armRacer()
+    assert(Snapshots.publishAppend(spark, preLoc, callerFiles) == 5L) // lost v4
+    callerFiles.foreach(p => assert(fs.exists(new Path(p))))
+    assert(Snapshots.read(spark, preLoc).as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 3L))
+  }
+
+  test("manifest format: header fields render in one fixed order above the files") {
+    val loc = "/tmp/graft-test/snap_manifest_format"
+    wipe(loc)
+    assert(Snapshots.tryPublish(spark, loc, 1L, Snapshots.Publish(
+      Seq("/d/a.parquet", "/d/b.parquet"), marker = Some("batch=7"),
+      dvs = Seq("/d/dv1.parquet", "/d/dv2.parquet"), schemaJson = Some("{s}"),
+      lineage = Some("src@v3"), layout = Some("bucket,4,id"),
+      mvBase = Some("9"), carriedValid = true)))
+    val text = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$loc/_manifests/v00001.txt")), "UTF-8")
+    assert(text ==
+      "#marker=batch=7\n#lineage=src@v3\n#schema={s}\n#layout=bucket,4,id\n" +
+        "#mvbase=9\n#dv=/d/dv1.parquet\n#dv=/d/dv2.parquet\n" +
+        "/d/a.parquet\n/d/b.parquet\n")
+  }
+
+  test("carry-forward commits never re-record the source's marker or mvbase") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val loc = "/tmp/graft-test/snap_carry_marker"
+    wipe(loc)
+    Snapshots.commitAppend(Seq(1L, 2L).toDF("id"), loc)
+    def header(l: String, v: Long) = Snapshots.headerLines(spark,
+      new Path(f"$l/_manifests/v$v%05d.txt"))
+    def stamped(h: Seq[String]) =
+      h.exists(x => x.startsWith("#marker=") || x.startsWith("#mvbase="))
+    // republish the tip with a marker and an mvbase (and, optionally,
+    // delete vectors), as a streaming epoch or an MV refresh would
+    def stamp(l: String, dvs: Seq[String] = Nil): Long = {
+      val v = Snapshots.commit(spark, l)(tip => tip.carry.copy(
+        marker = Some(s"batch=${tip.version}"), mvBase = Some("5"),
+        dvs = tip.dvs ++ dvs, carriedValid = true))
+      assert(stamped(header(l, v)))
+      v
+    }
+    def assertClean(l: String, v: Long): Unit =
+      assert(!stamped(header(l, v)), s"v$v of $l re-recorded a marker/mvbase")
+
+    val s1 = stamp(loc)
+    assertClean(loc, Snapshots.commitAddColumns(spark, loc,
+      StructType(Seq(StructField("x", LongType)))))
+    stamp(loc)
+    assertClean(loc, Snapshots.commitSetDefault(spark, loc, "x", Some("0")))
+    assertClean(loc, Snapshots.rollback(spark, loc, s1))
+    // fast-forward: the branch head carries a marker; the publish must not
+    Refs.createBranch(spark, loc, "audit")
+    val bl = Refs.branchLoc(loc, "audit")
+    stamp(bl)
+    assertClean(loc, Refs.fastForward(spark, loc, "audit"))
+    // fold_dvs ref-drop: every vector entry names a gone file
+    val dvDir = s"$loc/data/dv-gone"
+    Seq(("/nonexistent/part-0.parquet", 0L)).toDF("file", "pos")
+      .coalesce(1).write.parquet(dvDir)
+    val fs = new Path(dvDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dvFiles = fs.listStatus(new Path(dvDir)).toSeq.map(_.getPath)
+      .filter(_.getName.startsWith("part-")).map(_.toString)
+    stamp(loc, dvFiles)
+    val folded = Snapshots.commitFoldDvs(spark, loc)
+    assertClean(loc, folded)
+    assert(Snapshots.versionDvs(spark, loc, folded).isEmpty)
+    assert(Snapshots.read(spark, loc).count() == 2L)
+  }
+}
+
+/** A one-shot action a constraint UDF fires from inside a commit round's
+  * CHECK gate — after the round read its tip, before it claims. */
+object RaceHook {
+  private val pending =
+    new java.util.concurrent.atomic.AtomicReference[() => Unit](null)
+  def arm(racer: () => Unit): Unit = pending.set(racer)
+  def fire(): Boolean = {
+    val r = pending.getAndSet(null)
+    if (r != null) r()
+    true
+  }
 }
