@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
 
 /** SparkSession factory with the engine's scale-aware defaults.
@@ -10,7 +11,10 @@ import org.apache.spark.sql.SparkSession
   *  - shuffle partitions sized to the machine, not the 200 default,
   *  - UTC so timestamp semantics match the DuckDB oracle,
   *  - nanosAsLong so the nanosecond-precision `events` parquet is readable
-  *    (normalized back to TIMESTAMP_NTZ in [[Tables.events]]).
+  *    (normalized back to TIMESTAMP_NTZ in [[Tables.events]]),
+  *  - the engine's fork-free `file:` filesystem, [[LocalFs]], for every
+  *    `file:` call, tasks included, unless the site `core-site.xml` names
+  *    a `file:` filesystem.
   */
 object Sessions {
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
@@ -51,4 +55,5 @@ object Sessions {
       // at 100 TB the laid-out fact is read in place
       .config("spark.sql.sources.v2.bucketing.shuffle.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config(LocalFs.settings(new Configuration()).toMap)
 }

@@ -36,14 +36,8 @@ object Compaction {
     val p = new Path(dir)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return Seq.empty
-    val it = fs.listFiles(p, true)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    while (it.hasNext) {
-      val f = it.next()
-      val n = f.getPath.getName
-      if (!n.startsWith("_") && !n.startsWith(".")) buf += ((n, f.getLen))
-    }
-    buf.toSeq
+    Snapshots.filesUnder(fs, p).map(f => (f.getPath.getName, f.getLen))
+      .filter { case (n, _) => !n.startsWith("_") && !n.startsWith(".") }.toSeq
   }
 
   /** File count + bytes under `dir` (data files only, recursive). */

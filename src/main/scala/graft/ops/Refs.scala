@@ -206,10 +206,8 @@ object Refs {
     var kept = 0
     val dataRoot = new Path(bl, "data")
     if (f.exists(dataRoot)) {
-      val it = f.listFiles(dataRoot, true)
       val dead = scala.collection.mutable.ArrayBuffer.empty[Path]
-      while (it.hasNext) {
-        val st = it.next()
+      Snapshots.filesUnder(f, dataRoot).foreach { st =>
         if (st.isFile) {
           if (parentLive.contains(Snapshots.normPath(st.getPath.toString)))
             kept += 1

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileStatus, FileSystem, Options, Path}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Versioned table snapshots over immutable data files — a minimal
@@ -1020,6 +1020,18 @@ object Snapshots {
         p.indexOf(':') < 0)
       p
     else new Path(p).toUri.getPath
+
+  /** Every file under `root`, depth first in `listStatus` order (the
+    * order of a recursive `FileSystem.listFiles`), lazily: a caller that
+    * stops early lists no further directories. The engine's one recursive
+    * walk. It yields plain `FileStatus`es, never `listFiles`'
+    * `LocatedFileStatus`, which reads each file's permission (an `ls -ld`
+    * fork on Hadoop's local FS without libhadoop) and block locations —
+    * neither of which any walk here uses. */
+  private[graft] def filesUnder(f: FileSystem, root: Path): Iterator[FileStatus] =
+    f.listStatus(root).iterator.flatMap { st =>
+      if (st.isDirectory) filesUnder(f, st.getPath) else Iterator.single(st)
+    }
 
   /** Files of the latest version whose rows intersect `pred`, found by
     * one scan of the live file list tagged with `input_file_name` —
@@ -2667,29 +2679,17 @@ object Snapshots {
     val orphanHorizon = System.currentTimeMillis() - orphanGraceMs
     var deleted = 0
     if (f.exists(dataRoot)) {
-      val it = f.listFiles(dataRoot, true)
-      val dead = scala.collection.mutable.ArrayBuffer.empty[Path]
-      while (it.hasNext) {
-        val st = it.next()
-        val name = st.getPath.getName
+      val dead = filesUnder(f, dataRoot).filter { st =>
         val pStr = normPath(st.getPath.toString)
-        if (name.startsWith("part-") && !live.contains(pStr) &&
-            (expiredRefs.contains(pStr) ||
-             st.getModificationTime < orphanHorizon))
-          dead += st.getPath
-      }
+        st.getPath.getName.startsWith("part-") && !live.contains(pStr) &&
+          (expiredRefs.contains(pStr) || st.getModificationTime < orphanHorizon)
+      }.map(_.getPath).toList
       dead.foreach { p => if (f.delete(p, false)) deleted += 1 }
       // drop commit directories the sweep emptied of data files
       // (_SUCCESS markers go with their directory) — but never a young
       // directory that might belong to an in-flight commit
       f.listStatus(dataRoot).foreach { d =>
-        def hasData = {
-          val c = f.listFiles(d.getPath, true)
-          var found = false
-          while (!found && c.hasNext)
-            found = c.next().getPath.getName.startsWith("part-")
-          found
-        }
+        def hasData = filesUnder(f, d.getPath).exists(_.getPath.getName.startsWith("part-"))
         if (d.isDirectory && d.getModificationTime < orphanHorizon && !hasData)
           f.delete(d.getPath, true)
       }

@@ -590,14 +590,9 @@ object OpsQueries {
     def mtimes(): Map[String, Long] = {
       val p = new org.apache.hadoop.fs.Path(s"$dst/data")
       val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val it = fs.listFiles(p, true)
-      val b = Map.newBuilder[String, Long]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.startsWith("part-"))
-          b += (st.getPath.toString -> st.getModificationTime)
-      }
-      b.result()
+      graft.ops.Snapshots.filesUnder(fs, p)
+        .filter(_.getPath.getName.startsWith("part-"))
+        .map(st => st.getPath.toString -> st.getModificationTime).toMap
     }
     val firstWave = mtimes()
     require(firstWave.nonEmpty, "first replicate shipped nothing")
