@@ -18,9 +18,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
-    withDefaults(SparkSession.builder().master(s"local[$cores]"), cores)
+    started(withDefaults(SparkSession.builder().master(s"local[$cores]"), cores)
       .appName("graft")
-      .getOrCreate()
+      .getOrCreate())
 
   /** Local session WITH task retries (`local[N, F]`). Production
     * clusters run `spark.task.maxFailures=4`; plain `local[N]` is the
@@ -28,10 +28,22 @@ object Sessions {
     * behave like the cluster (and any fault-injection test of the
     * recovery story) needs this form. */
   def localResilient(cores: Int, maxTaskFailures: Int = 2): SparkSession =
-    withDefaults(
+    started(withDefaults(
         SparkSession.builder().master(s"local[$cores, $maxTaskFailures]"), cores)
       .appName("graft")
-      .getOrCreate()
+      .getOrCreate())
+
+  /** Spark forks `getconf PAGESIZE` once per JVM, in the static
+    * initializer of its executor process-tree metrics reader, which the
+    * first executor-metrics poll runs 10–20 s into a session — in the
+    * middle of whatever the session does then. Run that initializer as
+    * the session starts, so a started session starts no process. */
+  private def started(s: SparkSession): SparkSession = {
+    try Class.forName("org.apache.spark.executor.ProcfsMetricsGetter$", true,
+      classOf[SparkSession].getClassLoader)
+    catch { case _: ClassNotFoundException => () }
+    s
+  }
 
   def withDefaults(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
     b.config("spark.sql.shuffle.partitions", shufflePartitions.toString)

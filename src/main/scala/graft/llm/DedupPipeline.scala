@@ -18,7 +18,9 @@ import org.apache.spark.sql.functions._
 object DedupPipeline {
 
   /** (id, rep): component-minimum representative for every node that
-    * appears in `pairs` (id1 < id2 edge list). `checkpointDir` selects
+    * appears in `pairs` (id1 < id2 edge list). Raises
+    * IllegalStateException when labels still change in round `maxIters`
+    * (a component wider than the rounds). `checkpointDir` selects
     * the reliable-checkpoint pin for long-running cluster jobs where an
     * executor loss must not fail the whole fold
     * ([[graft.ops.Checkpoints]]); the default stays executor-local. */
@@ -75,6 +77,14 @@ object DedupPipeline {
       labels = flowed.select(col("id"), col("rep"))
       converged = obs.get("n_changed").asInstanceOf[Long] == 0L
       iter += 1
+    }
+    // labels still moving after the last round are not components: a
+    // chain longer than the rounds would come back split, under-deduped
+    if (!converged) {
+      graft.ops.Checkpoints.release(pinned, checkpointDir)
+      throw new IllegalStateException(
+        s"components did not converge in $maxIters rounds (labels still " +
+          "changed in the last round); raise maxIters")
     }
     labels
   }

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Hash-bucket table layout for SHUFFLE-FREE co-clustered joins — the
@@ -76,7 +76,6 @@ object BucketLayout {
       Spec(Seq(column), Seq(buckets))
   }
 
-  private val DirPrefix = "__graft_bucket="
   private val PathRe = """__graft_bucket=(\d+)""".r
 
   def format(spec: Spec): String =
@@ -141,28 +140,21 @@ object BucketLayout {
     * key-sorted within. One recipe shared by build/append/fold so the
     * routing contract (hash, sort, dir prefix) can never diverge
     * between them. Routed with [[routeProbes]] so linear bucket k lands
-    * on shuffle partition k exactly (all slots busy — the
-    * dynamic-partition write then sees each bucket in exactly one task
-    * → one file per bucket, not one per (task × bucket)). Sort by
-    * (bucket, keys…): the dynamic-partition writer REQUIRES its input
-    * sorted by the partition column and would otherwise insert its own
-    * sort on the bucket alone — non-stable, destroying the key order
-    * inside each file that
-    * [[graft.sources.v2.SnapshotRowScan.outputOrdering]] reports.
-    * Returns the written files. */
+    * on shuffle partition k exactly (all slots busy — the routing
+    * writer then sees each bucket in exactly one task → one file per
+    * bucket, not one per (task × bucket)). Sorted by (bucket, keys…):
+    * the snapshot data writer ([[Snapshots.writeData]] with the layout)
+    * rolls a new file whenever the bucket changes, so grouping the
+    * buckets keeps one file per bucket, and the key order inside each
+    * file is what [[graft.sources.v2.SnapshotRowScan.outputOrdering]]
+    * reports. Returns the written files. */
   private[graft] def writeBucketed(df: DataFrame, spec: Spec,
                                    dataDir: Path): Seq[String] = {
-    val b = "__graft_bucket"
     val probes = routeProbes(spec.buckets)
-    df.withColumn(b, linearId(spec))
-      .repartition(spec.buckets, element_at(lit(probes), col(b) + 1))
-      .sortWithinPartitions((col(b) +: spec.columns.map(col)): _*)
-      .write.mode(SaveMode.ErrorIfExists)
-      .partitionBy(b).parquet(dataDir.toString)
-    val f = dataDir.getFileSystem(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    f.globStatus(new Path(dataDir, s"$DirPrefix*/part-*"))
-      .toSeq.map(_.getPath.toString)
+    Snapshots.writeData(df
+      .repartition(spec.buckets, element_at(lit(probes), linearId(spec) + 1))
+      .sortWithinPartitions((linearId(spec) +: spec.columns.map(col)): _*),
+      dataDir, Some(spec))
   }
 
   /** APPEND under the table's existing bucket layout — continuous
@@ -327,7 +319,7 @@ object BucketLayout {
     * only land in the new buckets that refine it — a row never crosses
     * old-bucket boundaries, and the rewrite is per-task local: scan
     * tasks read old-bucket files, compute the new linear id, LOCALLY
-    * sort by (new bucket, keys…), and the dynamic-partition writer rolls
+    * sort by (new bucket, keys…), and the routing writer rolls
     * one file per (task, new bucket). Zero Exchange anywhere in the plan
     * (pinned in SnapshotSpjSpec with a shuffle-records listener) — at
     * 100 TB this turns "bucket count too small" from a full-table
@@ -408,15 +400,10 @@ object BucketLayout {
       math.max(4L * 1024 * 1024, totalBytes / (2L * slots)).toString)
     val df = Snapshots.applyDv(scoped,
       Snapshots.readData(scoped, files, schema), dvs)
-    val b = "__graft_bucket"
     val dataDir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
-    df.withColumn(b, linearId(newSpec))
-      .sortWithinPartitions((col(b) +: newSpec.columns.map(col)): _*)
-      .write.mode(SaveMode.ErrorIfExists)
-      .partitionBy(b).parquet(dataDir.toString)
     val f = dataDir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val newFiles = f.globStatus(new Path(dataDir, s"$DirPrefix*/part-*"))
-      .toSeq.map(_.getPath.toString)
+    val newFiles = Snapshots.writeData(df.sortWithinPartitions(
+      (linearId(newSpec) +: newSpec.columns.map(col)): _*), dataDir, Some(newSpec))
     try Snapshots.publishLayout(s, loc, latest, newFiles,
       schema.map(_.json).getOrElse(df.schema.json), format(newSpec))
     catch { case e: Throwable => f.delete(dataDir, true); throw e }

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
@@ -326,10 +326,7 @@ object Mv {
     val dataDir = new Path(mvLoc, s"data/${java.util.UUID.randomUUID()}")
     val newFiles = layout match {
       case Some(spec) => BucketLayout.writeBucketed(df, spec, dataDir)
-      case None =>
-        df.write.mode(SaveMode.ErrorIfExists).parquet(dataDir.toString)
-        f.listStatus(dataDir).toSeq
-          .map(_.getPath).filter(_.getName.startsWith("part-")).map(_.toString)
+      case None => Snapshots.writeData(df, dataDir)
     }
     if (Snapshots.tryPublish(s, mvLoc, version, Snapshots.Publish(
         carried ++ newFiles, schemaJson = Some(df.schema.json),

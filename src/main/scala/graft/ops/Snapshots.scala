@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileStatus, FileSystem, Options, Path}
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -273,7 +273,7 @@ object Snapshots {
                    marker: Option[String] = None): Long = {
     val s = df.sparkSession
     val dataDir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
-    val newFiles = writeData(s, df, dataDir)
+    val newFiles = writeData(df, dataDir)
     commit(s, loc) { tip =>
       if (marker.exists(tip.markers)) {
         fs(s, loc).delete(dataDir, true) // duplicate: our files are unreferenced garbage
@@ -333,8 +333,8 @@ object Snapshots {
 
   /** Publish already-written data files as an APPEND commit — the
     * manifest half of [[commitAppend]], for callers (the DSv2 SQL and
-    * streaming write paths) whose files were produced by Spark's own
-    * writers rather than a DataFrame save. Same DV carry, same
+    * streaming write paths, the bucketed append) whose files were
+    * already written. Same DV carry, same
     * idempotent-marker contract as [[commitAppend]]: with `marker` set,
     * the marker set is re-checked every round and a duplicate returns -1
     * (the caller owns deleting its now-unreferenced files). */
@@ -538,7 +538,7 @@ object Snapshots {
                                        derivedFrom: Option[Long] = None): Long = {
     val s = df.sparkSession
     val dataDir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
-    val newFiles = writeData(s, df, dataDir)
+    val newFiles = writeData(df, dataDir)
     derivedFrom match {
       case Some(prev) =>
         try publishDerivedReplace(s, loc, prev, newFiles,
@@ -754,7 +754,7 @@ object Snapshots {
     * has any committed version. `layout` declares a bucket layout AT
     * BIRTH (`CREATE TABLE … PARTITIONED BY (bucket(n, key))`): the empty
     * version carries the `#layout=` header, so the very FIRST `INSERT
-    * INTO` routes through [[graft.sources.v2.SnapshotBucketedWrite]] and
+    * INTO` routes through the routed [[graft.sources.v2.SnapshotWrite]] and
     * the table never exists in an un-co-partitioned state — no
     * `CALL system.bucket` rewrite needed, ever. */
   def createEmpty(s: SparkSession, loc: String,
@@ -846,7 +846,7 @@ object Snapshots {
     require(srcVersion > 0L, s"no committed snapshots to migrate at $loc")
     val df = transform(read(s, loc, srcVersion))
     val dataDir = new Path(newLoc, s"data/${java.util.UUID.randomUUID()}")
-    val newFiles = writeData(s, df, dataDir)
+    val newFiles = writeData(df, dataDir)
     if (tryPublish(s, newLoc, 1L, Publish(newFiles,
         schemaJson = Some(df.schema.json), lineage = Some(s"$loc@v$srcVersion"))))
       1L
@@ -1147,7 +1147,7 @@ object Snapshots {
             .filter(!coalesce(pred, lit(false)))
           routed match {
             case Some(spec) => BucketLayout.writeBucketed(df, spec, dataDir)
-            case None => writeData(s, df, dataDir)
+            case None => writeData(df, dataDir)
           }
         }
       val kept = outside ++ keptStraddle
@@ -1307,7 +1307,7 @@ object Snapshots {
           val dvDir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
           // coalesce(1): a DV is tiny by contract — one file keeps the
           // manifest header and the read-side broadcast build cheap
-          val newDvs = writeData(s, freshHits.coalesce(1), dvDir)
+          val newDvs = writeData(freshHits.coalesce(1), dvDir)
           tip.carry.copy(dvs = tip.dvs ++ newDvs, scratch = Seq(dvDir))
         }
       }
@@ -1331,14 +1331,39 @@ object Snapshots {
     }
   }
 
-  /** Write `df` into a fresh commit-local directory and return the part
-    * files it produced (empty partitions produce none) — the data half of
-    * every commit attempt; the caller deletes the directory on a lost
-    * race. */
-  private def writeData(s: SparkSession, df: DataFrame, dir: Path): Seq[String] = {
-    df.write.mode(SaveMode.ErrorIfExists).parquet(dir.toString)
-    fs(s, dir.toString).listStatus(dir).toSeq
-      .map(_.getPath).filter(_.getName.startsWith("part-")).map(_.toString)
+  /** Write `df` into a fresh commit-local directory and return the data
+    * files it produced — the data half of every commit attempt; the
+    * caller deletes the directory on a lost race. The one DataFrame
+    * entry to the snapshot data writer
+    * ([[graft.sources.v2.SnapshotDataWriterFactory]], routed by `layout`
+    * when given, the factory every SQL write runs too): Spark executes
+    * `df`'s plan inside a SQL execution id, each task writes its rows
+    * straight to final `part-` paths (an empty task writes nothing, so an
+    * all-empty `df` yields no files and the manifest's schema header
+    * alone describes it), and the result is the files named in the
+    * committed task messages. No output committer runs — no
+    * `_temporary` tree, no rename, no `_SUCCESS`, no listing: the
+    * manifest claim is the commit's only atomic step. A failing task
+    * aborts its writer (deleting its own files); files of a failed or
+    * superseded attempt are orphans `expire`'s grace-window sweep
+    * reclaims. */
+  private[graft] def writeData(df: DataFrame, dir: Path,
+                               layout: Option[BucketLayout.Spec] = None): Seq[String] = {
+    val qe = df.queryExecution
+    val factory = graft.sources.v2.SnapshotWrite.writerFactory(
+      df.sparkSession, df.schema, dir.toString, layout)
+    graft.sources.v2.SnapshotWrite.filesOf(
+      org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+          Some(s"snapshot-write $dir")) {
+        df.sparkSession.sparkContext.runJob(qe.executedPlan.execute(),
+          (ctx: org.apache.spark.TaskContext,
+           rows: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+            val w = factory.createWriter(ctx.partitionId(), ctx.taskAttemptId())
+            try { rows.foreach(w.write); w.commit() }
+            catch { case t: Throwable => w.abort(); throw t }
+            finally w.close()
+          })
+      })
   }
 
   /** Row-level UPDATE, merge-on-read: under immutable files an update IS
@@ -1390,12 +1415,12 @@ object Snapshots {
           val dvDir = new Path(loc, s"data/$commitId-dv")
           val updDir = new Path(loc, s"data/$commitId")
           // coalesce(1): a DV is tiny by contract (compaction folds it)
-          val newDvs = writeData(s,
+          val newDvs = writeData(
             fresh.select(col("__graft_fp").as("file"),
               col("__graft_ri").as("pos")).coalesce(1), dvDir)
           // all RHS computed from the pre-update attributes in ONE select —
           // matched-only rows, so no when(pred) guard is needed
-          val newFiles = writeData(s,
+          val newFiles = writeData(
             fresh.select(dataCols.map(c =>
               set.get(c).map(_.as(c)).getOrElse(col(c))): _*), updDir)
           carry.copy(files = tip.files ++ newFiles, dvs = tip.dvs ++ newDvs,
@@ -1444,7 +1469,7 @@ object Snapshots {
           // candidate files held no fresh key match → pure insert merge:
           // no vector at all, never an empty DV file (see commitDeleteMoR)
           if (freshHits.isEmpty) Nil
-          else writeData(s,
+          else writeData(
             freshHits.select(col("__graft_fp").as("file"),
               col("__graft_ri").as("pos")).coalesce(1), dvDir)
         }
@@ -1452,7 +1477,7 @@ object Snapshots {
       // file shares one shape (it must carry all table columns, the same
       // unionByName contract the copy-on-write path imposes)
       val srcDir = new Path(loc, s"data/$commitId")
-      val newFiles = writeData(s,
+      val newFiles = writeData(
         schema.map(sc => source.select(
           sc.fieldNames.toIndexedSeq.map(col): _*)).getOrElse(source), srcDir)
       Publish(files ++ newFiles, dvs = tip.dvs ++ newDvs,
@@ -1482,7 +1507,7 @@ object Snapshots {
         // a file predating an added column rewrites with it null-filled.
         // Carried files keep their DV entries; entries for rewritten files
         // go inert with the paths they name (never reused).
-        val newFiles = writeData(s,
+        val newFiles = writeData(
           rewrite(applyDv(s, readData(s, affected, tip.schema), tip.dvs)), dataDir)
         carry.copy(files = kept ++ newFiles, scratch = Seq(dataDir))
       }
@@ -1535,7 +1560,7 @@ object Snapshots {
         else applyDv(s, readData(s, affected, schema), tip.dvs)
           .join(keys, Seq(keyCol), "left_anti")
           .unionByName(source)
-      Publish(kept ++ writeData(s, survivors, dataDir), dvs = tip.dvs,
+      Publish(kept ++ writeData(survivors, dataDir), dvs = tip.dvs,
         schemaJson = tip.schemaJson, scratch = Seq(dataDir))
     }
   }
@@ -2481,14 +2506,9 @@ object Snapshots {
     val (live, dead) = named.partition(f => keptSet(normPath(f)))
     if (dead.isEmpty) return dvs
     if (live.isEmpty) return Nil
-    val dvDir = new Path(dataDir, "dv")
-    val f = fs(s, dvDir.toString)
-    s.read.parquet(dvs: _*)
+    writeData(s.read.parquet(dvs: _*)
       .filter(org.apache.spark.sql.functions.col("file").isin(live.toSeq: _*))
-      .coalesce(1)
-      .write.mode(SaveMode.ErrorIfExists).parquet(dvDir.toString)
-    f.listStatus(dvDir).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("part-")).map(_.toString)
+      .coalesce(1), new Path(dataDir, "dv"))
   }
 
   private def scopedAdvisory(s: SparkSession, targetBytes: Long): SparkSession = {
@@ -2527,7 +2547,7 @@ object Snapshots {
       else {
         val scoped = scopedAdvisory(s, targetBytes)
         val dataDir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
-        val newFiles = writeData(scoped, applyDv(scoped,
+        val newFiles = writeData(applyDv(scoped,
           readData(scoped, small, tip.schema), tip.dvs).hint("rebalance"), dataDir)
         // kept files may still be DV-covered — carry the vectors with them,
         // FILTERED to entries naming kept files (entries whose files were
@@ -2580,7 +2600,7 @@ object Snapshots {
               // from df.sparkSession, so the READ must be built under the
               // scoped session too — else targetBytes is silently inert
               val scoped = scopedAdvisory(s, targetBytes)
-              writeData(scoped,
+              writeData(
                 applyDv(scoped, readData(scoped, affected, schema), dvs)
                   .hint("rebalance"), dataDir)
           }
@@ -2685,9 +2705,8 @@ object Snapshots {
           (expiredRefs.contains(pStr) || st.getModificationTime < orphanHorizon)
       }.map(_.getPath).toList
       dead.foreach { p => if (f.delete(p, false)) deleted += 1 }
-      // drop commit directories the sweep emptied of data files
-      // (_SUCCESS markers go with their directory) — but never a young
-      // directory that might belong to an in-flight commit
+      // drop commit directories the sweep emptied of data files — but
+      // never a young directory that might belong to an in-flight commit
       f.listStatus(dataRoot).foreach { d =>
         def hasData = filesUnder(f, d.getPath).exists(_.getPath.getName.startsWith("part-"))
         if (d.isDirectory && d.getModificationTime < orphanHorizon && !hasData)

@@ -1423,7 +1423,7 @@ object OpsQueries {
   }
 
   /** PURE-SQL layout-preserving ingest ([[graft.sources.v2
-    * .SnapshotBucketedWrite]]): bucket the fact once, then `INSERT INTO`
+    * .SnapshotWrite]]): bucket the fact once, then `INSERT INTO`
     * it twice through plain SQL — the DSv2 write declares the layout's
     * own `clustered(bucket(n, key))` distribution
     * (`RequiresDistributionAndOrdering`), files land routed, the header
@@ -2336,7 +2336,7 @@ object OpsQueries {
   }
 
   /** The WRITE direction of the streaming story
-    * (`sources/v2/SnapshotStreamingWrite.scala`): a rate-limited file
+    * (`sources/v2/SnapshotWrite.scala`): a rate-limited file
     * stream (`maxFilesPerTrigger`) drains through
     * `writeStream.toTable(<catalog>.<table>)` under Trigger.AvailableNow
     * — the DSv2 route CREATES the snapshot table (schema-bearing first

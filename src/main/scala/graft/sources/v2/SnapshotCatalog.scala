@@ -248,7 +248,7 @@ class SnapshotCatalog extends TableCatalog with ProcedureCatalog
     * `PARTITIONED BY (bucket(n₁, c₁)[, bucket(n₂, c₂)…])` declares the
     * BUCKET LAYOUT AT BIRTH: the empty version carries the `#layout=`
     * header, so the first INSERT (or the CTAS backfill write) routes
-    * through [[SnapshotBucketedWrite]] and the table is co-partition-
+    * through the routed [[SnapshotWrite]] and the table is co-partition-
     * joinable from its first row — no post-hoc `CALL system.bucket`
     * rewrite. One single-column transform per key (the only shape
     * Spark's SPJ machinery plans — composite keys are a transform PER

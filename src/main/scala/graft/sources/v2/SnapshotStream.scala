@@ -89,17 +89,17 @@ private[v2] class SnapshotStreamTable(schema: StructType,
 
   /** `writeStream.format(SnapshotStreamProvider).option("location", …)`
     * — the provider route to the exactly-once streaming append
-    * ([[SnapshotStreamingWrite]]); the catalog route is
+    * ([[SnapshotWrite.toStreaming]]); the catalog route is
     * `writeStream.toTable("<cat>.<table>")`. */
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
     new org.apache.spark.sql.connector.write.WriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new org.apache.spark.sql.connector.write.Write {
-          override def toStreaming =
-            new SnapshotStreamingWrite(SparkSession.active, loc,
-              info.schema(), info.queryId())
-        }
+      override def build(): org.apache.spark.sql.connector.write.Write = {
+        val spark = SparkSession.active
+        new SnapshotWrite(spark, loc, info.schema(), layout = None,
+          publish = Snapshots.publishAppend(spark, loc, _),
+          streamQuery = Some(info.queryId()))
+      }
     }
 
   override def newScanBuilder(scanOptions: CaseInsensitiveStringMap): ScanBuilder =

@@ -1,14 +1,11 @@
 package graft.sources.v2
 
-import java.util.UUID
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsDelete, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.connector.write.{BatchWrite, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetTable, ParquetWrite}
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -21,9 +18,9 @@ import graft.ops.Snapshots
   * list (pushdown, pruning, vectorization intact), and the WRITE side
   * routes every SQL statement into the manifest commit protocol:
   *
-  *  - `INSERT INTO snap.t ...`            → append commit (CAS loop);
-  *    on a bucket-laid table the write is the ROUTED
-  *    [[SnapshotBucketedWrite]], so the layout (and the zero-Exchange
+  *  - `INSERT INTO snap.t ...`            → append commit through the
+  *    one snapshot data writer ([[SnapshotWrite]]); on a bucket-laid
+  *    table the write is ROUTED, so the layout (and the zero-Exchange
   *    SPJ plan) survives pure-SQL ingest
   *  - `DELETE FROM snap.t WHERE <pred>`   → [[Snapshots.commitDelete]]'s
   *    copy-on-write path when every conjunct translates to a v1 filter
@@ -33,8 +30,8 @@ import graft.ops.Snapshots
   *    whose routed write keeps the layout at the same cost class)
   *  - `DELETE` with a subquery, `UPDATE`, `MERGE INTO` →
   *    `SupportsRowLevelOperations` group-based rewrite: Spark computes
-  *    the surviving rows, writes them through the native v2 parquet
-  *    write into a fresh commit directory, and the batch commit
+  *    the surviving rows, writes them through the same data writer
+  *    into a fresh commit directory, and the batch commit
   *    publishes them as a REPLACE of the version the scan pinned —
   *    with first-committer-wins conflict detection
   *    ([[Snapshots.publishReplaceExact]]): a concurrent commit between
@@ -184,40 +181,27 @@ class SnapshotTable(ident: String, spark: SparkSession,
 
   // ---- INSERT INTO: append commit; INSERT OVERWRITE: replace commit;
   //      writeStream.toTable: exactly-once streaming append ----
-  /** A table with a bucket layout routes every SQL INSERT through
-    * [[SnapshotBucketedWrite]] — the write declares the layout's own
-    * `clustered(bucket(n, keys…))` distribution, files land routed, and
-    * the layout header (and with it the zero-Exchange SPJ plan) SURVIVES
-    * pure-SQL ingest — batch INSERTs and `writeStream.toTable` epochs
-    * alike (the streaming twin adds the exactly-once marker). */
+  /** Every SQL INSERT is one [[SnapshotWrite]]. On a table with a bucket
+    * layout it declares the layout's own `clustered(bucket(n, keys…))`
+    * distribution, files land routed, and the layout header (and with
+    * it the zero-Exchange SPJ plan) SURVIVES pure-SQL ingest — batch
+    * INSERTs and `writeStream.toTable` epochs alike (the streaming side
+    * adds the exactly-once marker). Streaming is append-only: an
+    * overwrite write has no streaming side. */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     requireMutable("INSERT")
     new WriteBuilder with org.apache.spark.sql.connector.write.SupportsTruncate {
       private var replace = false
       override def truncate(): WriteBuilder = { replace = true; this }
-      override def build(): Write = layout match {
-        case Some(spec) =>
-          val fmt = graft.ops.BucketLayout.format(spec)
-          new SnapshotBucketedWrite(spark, loc, info.schema(), spec,
-            publish = newFiles =>
-              if (replace) Snapshots.publishReplaceLoop(spark, loc, newFiles,
-                Some(info.schema().json), layout = Some(fmt))
-              else Snapshots.publishAppend(spark, loc, newFiles,
-                routedLayout = Some(fmt)),
-            info.queryId())
-        case None =>
-          val batch = SnapshotTable.publishingWrite(spark, loc, delegate, info,
-            newFiles =>
-              if (replace) Snapshots.publishReplaceLoop(spark, loc, newFiles,
-                Some(info.schema().json))
-              else Snapshots.publishAppend(spark, loc, newFiles))
-          if (replace) batch // streaming complete mode unsupported (default throw)
-          else new Write {
-            override def description(): String = batch.description()
-            override def toBatch = batch.toBatch
-            override def toStreaming =
-              new SnapshotStreamingWrite(spark, loc, info.schema(), info.queryId())
-          }
+      override def build(): Write = {
+        val fmt = layout.map(graft.ops.BucketLayout.format)
+        new SnapshotWrite(spark, loc, info.schema(), layout,
+          publish = newFiles =>
+            if (replace) Snapshots.publishReplaceLoop(spark, loc, newFiles,
+              Some(info.schema().json), layout = fmt)
+            else Snapshots.publishAppend(spark, loc, newFiles,
+              routedLayout = fmt),
+          streamQuery = Option.when(!replace)(info.queryId()))
       }
     }
   }
@@ -292,80 +276,25 @@ class SnapshotTable(ident: String, spark: SparkSession,
             Snapshots.publishReplaceGroups(spark, loc, base, kept, newFiles,
               routedLayout = routed)
           }
-          override def build(): Write = layout match {
-            // a bucket-laid table ROUTES its row-level rewrite: replaced
-            // groups' surviving rows land under their bucket paths (the
-            // same RequiresDistributionAndOrdering write as INSERT), kept
-            // files are routed already, and the exact-version publish
-            // carries the layout — a 100 TB fact keeps its zero-Exchange
-            // join plan through SQL UPDATE / MERGE / DELETE, not just
-            // through ingest. Cost class unchanged: O(affected files)
-            // via runtime group filtering, plus the batch-sized routing
-            // shuffle the layout contract requires.
-            case Some(spec) =>
-              new SnapshotBucketedWrite(spark, loc, wi.schema(), spec,
-                publish = newFiles => publishGroups(newFiles,
-                  Some(graft.ops.BucketLayout.format(spec))))
-            case None =>
-              SnapshotTable.publishingWrite(spark, loc, delegate, wi,
-                newFiles => publishGroups(newFiles, None))
-          }
+          // a bucket-laid table ROUTES its row-level rewrite: replaced
+          // groups' surviving rows land under their bucket paths (the
+          // same RequiresDistributionAndOrdering write as INSERT), kept
+          // files are routed already, and the exact-version publish
+          // carries the layout — a 100 TB fact keeps its zero-Exchange
+          // join plan through SQL UPDATE / MERGE / DELETE, not just
+          // through ingest. Cost class unchanged: O(affected files)
+          // via runtime group filtering, plus the batch-sized routing
+          // shuffle the layout contract requires.
+          override def build(): Write =
+            new SnapshotWrite(spark, loc, wi.schema(), layout,
+              publish = newFiles => publishGroups(newFiles,
+                layout.map(graft.ops.BucketLayout.format)))
         }
     }
   }
 }
 
 object SnapshotTable {
-
-  /** A v2 Write that delegates the data path to Spark's native parquet
-    * write aimed at a FRESH commit directory, then publishes the written
-    * files through `publish` at batch-commit time — data lands first,
-    * one atomic manifest rename makes it visible, abort removes the
-    * orphan directory (which [[Snapshots.expire]]'s grace sweep would
-    * also collect). */
-  private[v2] def publishingWrite(spark: SparkSession, loc: String,
-                                  delegate: ParquetTable,
-                                  info: LogicalWriteInfo,
-                                  publish: Seq[String] => Long): Write = {
-    val dataDir = s"$loc/data/${UUID.randomUUID()}"
-    val inner = ParquetWrite(Seq(dataDir), "parquet",
-      delegate.supportsDataType _, info)
-    new Write {
-      override def description(): String = s"snapshot-commit $dataDir"
-      override def toBatch: BatchWrite = new BatchWrite {
-        private val innerBatch = inner.toBatch
-        // a group-based ReplaceData declares metadata attributes
-        // (__graft_file), so Spark's DataAndMetadataWritingSparkTask
-        // applies its own row projection: writers receive exactly
-        // info.schema data rows — no operation-column stripping needed
-        override def createBatchWriterFactory(pi: PhysicalWriteInfo) =
-          innerBatch.createBatchWriterFactory(pi)
-        override def useCommitCoordinator(): Boolean =
-          innerBatch.useCommitCoordinator()
-        override def commit(messages: Array[WriterCommitMessage]): Unit = {
-          innerBatch.commit(messages) // files land under dataDir
-          val dir = new Path(dataDir)
-          val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val newFiles =
-            if (!fs.exists(dir)) Nil // empty write still publishes
-            else fs.listStatus(dir).toSeq.map(_.getPath)
-              .filter(_.getName.startsWith("part-")).map(_.toString)
-          try publish(newFiles)
-          catch { case e: Throwable => fs.delete(dir, true); throw e }
-          // declared sidecar columns refresh with every SQL write —
-          // incremental (new files only), best-effort (never fails the
-          // already-published commit)
-          Snapshots.autoStats(spark, loc)
-        }
-        override def abort(messages: Array[WriterCommitMessage]): Unit = {
-          innerBatch.abort(messages)
-          val dir = new Path(dataDir)
-          dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(dir, true)
-        }
-      }
-    }
-  }
 
   /** DELETE filters that form a single-column RANGE — the shape
     * [[graft.ops.Snapshots.commitDeleteRange]] classifies against the

@@ -16,6 +16,19 @@ class DedupPipelineSpec extends SparkTestBase {
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
   }
 
+  test("components raises when the rounds run out before the labels converge") {
+    import spark.implicits._
+    // a 10-node chain needs 9 rounds for label 1 to reach node 10
+    val chain = (1L until 10L).map(i => (i, i + 1)).toDF("id1", "id2")
+    val e = intercept[IllegalStateException](
+      DedupPipeline.components(chain, maxIters = 3))
+    assert(e.getMessage.contains("did not converge in 3 rounds"))
+    // enough rounds: one component, represented by its minimum
+    val comps = DedupPipeline.components(chain, maxIters = 12)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(comps == (1L to 10L).map(_ -> 1L).toMap)
+  }
+
   test("cleanCorpus keeps one representative per near-dup cluster") {
     import spark.implicits._
     // "id" is also the components output's column name: the survivor
