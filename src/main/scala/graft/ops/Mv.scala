@@ -1,17 +1,21 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
-/** CATALOG-LEVEL materialized views: a snapshot table whose content is
-  * a grouped aggregate of another snapshot table, refreshed
-  * INCREMENTALLY from the base's change feed — never by re-scanning the
-  * base. This is the warehouse-grade face of [[MaterializedView]]'s
-  * delta-fold algebra (Gupta & Mumick 1995): the reference's only
-  * equivalent is re-running the whole aggregate job on base+delta
-  * (MR job chains have no incremental story; SURVEY.md §2.3).
+/** Materialized views: a snapshot table whose content is a grouped
+  * aggregate of another snapshot table, refreshed INCREMENTALLY from the
+  * base's change feed — never by re-scanning the base. The engine's one
+  * implementation of the Gupta & Mumick (1995) delta fold: [[aggregate]]
+  * builds the view, [[deltaAggregate]] weighs a change feed's inserts +1
+  * and deletes −1, and [[merge]] folds one into the other. [[create]] and
+  * [[refresh]] run them over stored tables; the same three functions
+  * compose in memory for callers without a table (the `mv_incremental`
+  * query, a `foreachBatch` stream). The reference's only equivalent is
+  * re-running the whole aggregate job on base+delta (MR job chains have
+  * no incremental story; SURVEY.md §2.3).
   *
   * Definition (`_manifests/mv.def`, a POLICY file like autostats.cols):
   * base location, grouping keys, summed columns. State (the refresh
@@ -20,7 +24,10 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * ATOMICALLY with the content it describes, so a crash between any two
   * steps can never double-fold a delta (the next refresh re-reads the
   * tip's header and replays from there; [[Snapshots.changeFeed]] is a
-  * pure function of the immutable manifest chain).
+  * pure function of the immutable manifest chain). Because every
+  * version keeps its cursor, [[rewind]] can republish an older version
+  * by reference and refresh from there again — the prior state is an
+  * immutable version, not a copy.
   *
   * MV schema: keys…, `n` (group row count), and per summed column `c`
   * both `s_<c>` (exact BIGINT sum) and `c_<c>` (non-null count). The
@@ -34,11 +41,11 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * 100 TB design: a refresh costs O(delta) + O(MV), never O(base) — the
   * change feed aggregates first (one partial-agg shuffle, map-side
   * combine), then null-safe-merges with the MV on the group key and
-  * rewrites the MV (aggregate-sized, typically vocabulary-sized). For
-  * an MV too big to rewrite per refresh, the bucketed ops-level path
-  * ([[MaterializedView.refreshBucketed]]) writes only changed buckets.
+  * rewrites the MV (aggregate-sized, typically vocabulary-sized). An MV
+  * too big to rewrite per refresh is created bucketed (`buckets > 0`):
+  * refresh then reads and rewrites only the buckets the delta touches.
   * Groups whose row count reaches 0 vanish, bit-identical to a full
-  * recompute — which is exactly what makes the registered query
+  * recompute — which is exactly what makes the registered queries
   * oracle-checkable (the oracle recomputes, the engine maintains, the
   * hash gate demands equality).
   */
@@ -101,12 +108,9 @@ object Mv {
   /** The base version the MV's tip content reflects (`#mvbase=` header).
     * Absent on a tip published outside the MV machinery (a rollback
     * re-publish) — refresh then demands `full = true` to re-anchor. */
-  def baseVersionOfTip(s: SparkSession, loc: String): Option[Long] = {
-    val ms = Snapshots.manifests(s, loc)
-    if (ms.isEmpty) None
-    else Snapshots.headerLines(s, ms.last._2)
-      .find(_.startsWith("#mvbase=")).map(_.stripPrefix("#mvbase=").toLong)
-  }
+  def baseVersionOfTip(s: SparkSession, loc: String): Option[Long] =
+    Snapshots.manifests(s, loc).lastOption
+      .flatMap(m => cursorOf(Snapshots.headerLines(s, m._2)))
 
   /** The cursor a SPECIFIC MV version recorded — what the rewrite rule
     * reads, so the freshness verdict and the version it serves come
@@ -114,8 +118,10 @@ object Mv {
   def baseVersionAt(s: SparkSession, loc: String,
                     version: Long): Option[Long] =
     Snapshots.manifests(s, loc).find(_._1 == version)
-      .flatMap { case (_, p) => Snapshots.headerLines(s, p)
-        .find(_.startsWith("#mvbase=")).map(_.stripPrefix("#mvbase=").toLong) }
+      .flatMap(m => cursorOf(Snapshots.headerLines(s, m._2)))
+
+  private def cursorOf(header: Seq[String]): Option[Long] =
+    header.find(_.startsWith("#mvbase=")).map(_.stripPrefix("#mvbase=").toLong)
 
   /** `<base>.mvs` metadata rows: every MV registered over `baseLoc`
     * with its definition and staleness — `fresh` is exactly the
@@ -138,11 +144,61 @@ object Mv {
       "base_cursor", "base_tip", "fresh", "versions_behind")
   }
 
-  /** The aggregate both build and refresh maintain. */
-  private def aggExprs(sums: Seq[String]): Seq[Column] =
-    count(lit(1)).as("n") +: sums.flatMap(c => Seq(
+  // ---- the fold: plain DataFrame functions, stored or in memory ----
+
+  /** The view itself: per group of `keys`, `n` and per summed column
+    * `s_<c>`/`c_<c>` (the MV schema above). */
+  def aggregate(base: DataFrame, keys: Seq[String],
+                sums: Seq[String]): DataFrame = {
+    val aggs = count(lit(1)).as("n") +: sums.flatMap(c => Seq(
       sum(col(c).cast(LongType)).as(s"s_$c"),
       count(col(c)).as(s"c_$c")))
+    base.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The delta of a change feed whose `change` column holds `insert` or
+    * `delete` ([[Snapshots.changeFeed]]'s shape): per group `dn`,
+    * `ds_<c>` and `dc_<c>`, inserts weighted +1 and deletes −1. Groups
+    * whose delta cancels exactly (insert+delete of the same rows) drop
+    * out, so the row count is the number of groups the feed CHANGES. */
+  def deltaAggregate(feed: DataFrame, keys: Seq[String],
+                     sums: Seq[String]): DataFrame = {
+    val sign = when(col("change") === "insert", 1L).otherwise(-1L)
+    val unchanged = ((col("dn") === 0L) +: sums.flatMap(c => Seq(
+      coalesce(col(s"ds_$c"), lit(0L)) === 0L,
+      col(s"dc_$c") === 0L))).reduce(_ && _)
+    feed.groupBy(keys.map(col): _*).agg(
+      sum(sign).as("dn"),
+      sums.flatMap(c => Seq(
+        sum(sign * col(c).cast(LongType)).as(s"ds_$c"),
+        sum(when(col(c).isNotNull, sign).otherwise(0L)).as(s"dc_$c")
+      )): _*).filter(!unchanged)
+  }
+
+  /** MV ⊕ delta: a null-safe full-outer merge on the keys; groups whose
+    * row count reaches 0 vanish. */
+  def merge(mv: DataFrame, delta: DataFrame, keys: Seq[String],
+            sums: Seq[String]): DataFrame = {
+    // the delta's keys renamed apart, so the condition names each side's
+    // key unambiguously even when view and feed come from one scan
+    val dk = keys.indices.map(i => s"__dk$i")
+    val d = delta.select(keys.zip(dk).map { case (k, n) => col(k).as(n) } ++
+      delta.columns.filterNot(keys.contains).map(col): _*)
+    val on = keys.zip(dk).map { case (k, n) => mv(k) <=> d(n) }.reduce(_ && _)
+    mv.join(d, on, "full_outer").select(
+      keys.zip(dk).map { case (k, n) => coalesce(mv(k), d(n)).as(k) } ++
+        Seq((coalesce(mv("n"), lit(0L)) + coalesce(d("dn"), lit(0L))).as("n")) ++
+        sums.flatMap { c =>
+          val cnt = coalesce(mv(s"c_$c"), lit(0L)) + coalesce(d(s"dc_$c"), lit(0L))
+          // SUM of zero non-null values is NULL, not 0 — the c_<col>
+          // count exists exactly for this distinction
+          Seq(when(cnt === 0L, lit(null).cast(LongType))
+            .otherwise(coalesce(mv(s"s_$c"), lit(0L)) +
+              coalesce(d(s"ds_$c"), lit(0L))).as(s"s_$c"),
+            cnt.as(s"c_$c"))
+        }: _*)
+      .filter(col("n") > 0L)
+  }
 
   private def validate(base: DataFrame, keys: Seq[String],
                        sums: Seq[String]): Unit = {
@@ -185,11 +241,9 @@ object Mv {
     require(vb > 0, s"base $baseLoc has no committed snapshots")
     val base = Snapshots.read(s, baseLoc, vb)
     validate(base, keys, sums)
-    val mv = base.groupBy(keys.map(col): _*).agg(aggExprs(sums).head,
-      aggExprs(sums).tail: _*)
     val layout =
       if (buckets > 0) Some(BucketLayout.Spec(keys.head, buckets)) else None
-    val v = publish(s, mvLoc, 1L, mv, vb, layout)
+    val v = publish(s, mvLoc, 1L, aggregate(base, keys, sums), vb, layout)
     require(v == 1L, s"$mvLoc raced a concurrent create — DROP and retry")
     val f = Snapshots.fs(s, mvLoc)
     val tmp = new Path(Snapshots.manifestDir(mvLoc),
@@ -225,9 +279,8 @@ object Mv {
       if (full) {
         val base = Snapshots.read(s, d.baseLoc, vb)
         validate(base, d.keys, d.sums)
-        val mv = base.groupBy(d.keys.map(col): _*).agg(aggExprs(d.sums).head,
-          aggExprs(d.sums).tail: _*)
-        val v = publish(s, mvLoc, tip + 1, mv, vb, tipLayout)
+        val v = publish(s, mvLoc, tip + 1, aggregate(base, d.keys, d.sums),
+          vb, tipLayout)
         Option.when(v > 0)(Refreshed(v, -1L, vb, -1L))
       } else {
         val v0 = baseVersionOfTip(s, mvLoc).getOrElse(
@@ -238,20 +291,11 @@ object Mv {
           "CALL refresh_mv(full => true)")
         if (vb == v0) Some(Refreshed(tip, v0, vb, 0L))
         else {
-          val feed = Snapshots.changeFeed(s, d.baseLoc, v0, vb)
-          val sign = when(col("change") === "insert", 1L).otherwise(-1L)
-          // groups whose delta cancels out exactly (insert+delete of the
-          // same rows) fold to all-zeros — drop them so `groups_touched`
-          // reports groups CHANGED and pure churn takes the carry path
-          val unchanged = ((col("dn") === 0L) +: d.sums.flatMap(c => Seq(
-            coalesce(col(s"ds_$c"), lit(0L)) === 0L,
-            col(s"dc_$c") === 0L))).reduce(_ && _)
-          val dAgg = feed.groupBy(d.keys.map(col): _*).agg(
-            sum(sign).as("dn"),
-            d.sums.flatMap(c => Seq(
-              sum(sign * col(c).cast(LongType)).as(s"ds_$c"),
-              sum(when(col(c).isNotNull, sign).otherwise(0L)).as(s"dc_$c")
-            )): _*).filter(!unchanged).localCheckpoint(true)
+          // cancelled groups are already out of the delta, so
+          // `groups_touched` counts groups CHANGED and pure churn takes
+          // the carry path
+          val dAgg = deltaAggregate(Snapshots.changeFeed(s, d.baseLoc, v0, vb),
+            d.keys, d.sums).localCheckpoint(true)
           val touched = dAgg.count()
           if (touched == 0L) {
             // churn that cancels out group-by-group (or a feed of empty
@@ -288,28 +332,35 @@ object Mv {
                 (df, cf)
               case None => (Snapshots.read(s, mvLoc, tip), Nil)
             }
-            val joinCond = d.keys.map(k => mvOld(k) <=> dAgg(k)).reduce(_ && _)
-            val merged = mvOld.join(dAgg, joinCond, "full_outer").select(
-              d.keys.map(k => coalesce(mvOld(k), dAgg(k)).as(k)) ++
-                Seq((coalesce(mvOld("n"), lit(0L)) +
-                  coalesce(dAgg("dn"), lit(0L))).as("n")) ++
-                d.sums.flatMap { c =>
-                  val cnt = coalesce(mvOld(s"c_$c"), lit(0L)) +
-                    coalesce(dAgg(s"dc_$c"), lit(0L))
-                  // SUM of zero non-null values is NULL, not 0 — the
-                  // c_<col> count exists exactly for this distinction
-                  Seq(when(cnt === 0L, lit(null).cast(LongType))
-                    .otherwise(coalesce(mvOld(s"s_$c"), lit(0L)) +
-                      coalesce(dAgg(s"ds_$c"), lit(0L))).as(s"s_$c"),
-                    cnt.as(s"c_$c"))
-                }: _*)
-              .filter(col("n") > 0L)
-            val v = publish(s, mvLoc, tip + 1, merged, vb, bucketed,
-              carryFiles)
+            val v = publish(s, mvLoc, tip + 1,
+              merge(mvOld, dAgg, d.keys, d.sums), vb, bucketed, carryFiles)
             Option.when(v > 0)(Refreshed(v, v0, vb, touched))
           }
         }
       }
+    }
+  }
+
+  /** Republish MV `version` as the new tip, by reference: its files,
+    * schema, layout and its own `#mvbase=` cursor, with no data I/O. The
+    * next [[refresh]] folds the base's change feed from that cursor
+    * again, so a caller that wants "yesterday's view plus today's delta"
+    * every time (a benchmark, a what-if replay) rewinds instead of
+    * keeping a copy; whatever was committed to the MV after `version`
+    * — refreshes or foreign writes — stays readable by time travel and
+    * no longer counts. Only a version an MV create or refresh published
+    * carries a cursor; rewinding to any other raises. Returns the
+    * published version (`version` itself when it already is the tip). */
+  def rewind(s: SparkSession, mvLoc: String, version: Long): Long = {
+    val src = Snapshots.manifests(s, mvLoc).find(_._1 == version)
+      .map { case (v, p) => new Snapshots.Version(s, v, Some(p)) }
+      .getOrElse(throw new NoSuchElementException(
+        s"version $version not found at $mvLoc"))
+    val cursor = cursorOf(src.header).getOrElse(throw new IllegalArgumentException(
+      s"$mvLoc version $version carries no #mvbase cursor — not an MV version"))
+    Snapshots.commit(s, mvLoc) { tip =>
+      if (tip.version == version) Snapshots.Done(version)
+      else src.carry.copy(mvBase = Some(cursor.toString), carriedValid = true)
     }
   }
 

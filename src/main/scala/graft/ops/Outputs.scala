@@ -4,10 +4,13 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Sink surface (SURVEY.md §2.8): key<TAB>value text output, per-value
-  * multiple outputs, null sink. File commit semantics (temp dir + rename,
-  * `lib/output/FileOutputCommitter.java:319`) come free — Spark's
-  * InsertIntoHadoopFsRelationCommand drives the same committer class.
-  */
+  * multiple outputs, Bloom-filtered and rebalanced parquet, null sink —
+  * plain directory outputs, the MapReduce-parity writers. File commit
+  * semantics (temp dir + rename, `lib/output/FileOutputCommitter.java:319`)
+  * come free — Spark's InsertIntoHadoopFsRelationCommand drives the same
+  * committer class. Snapshot tables (and the materialized views kept on
+  * them, [[Mv]]) do not write through here: their files go through the
+  * one direct snapshot writer, and a manifest claim publishes them. */
 object Outputs {
 
   /** TextOutputFormat (`lib/output/TextOutputFormat.java:44`): one
@@ -62,39 +65,6 @@ object Outputs {
       f(cached).write.mode(SaveMode.Overwrite).parquet(s"$path/$name")
     } finally cached.unpersist()
   }
-
-  /** The MapFile-analog serving layout as a reusable writer (reference
-    * `IO/MapFile.java` — sorted data + index; here: a bucketed+sorted
-    * table, optionally hash-partitioned into directories): bucketing
-    * makes key-equi-joins against the table SHUFFLE-FREE on the table
-    * side and point lookups open one bucket file; the optional partition
-    * column turns selective rewrites into partition-directory swaps
-    * (the [[MaterializedView]] refresh path). Drops any existing table
-    * and clears its managed location first — the in-memory catalog
-    * forgets tables across sessions but their files linger. */
-  def writeBucketedSorted(df: DataFrame, table: String, nBuckets: Int,
-                          keyCol: String,
-                          partitionCol: Option[String] = None): Unit = {
-    val s = df.sparkSession
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    val wh = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), table)
-    wh.getFileSystem(s.sparkContext.hadoopConfiguration).delete(wh, true)
-    // align the write distribution with the bucket function (the Iceberg
-    // write.distribution-mode=hash idiom): repartition(n, key) assigns
-    // partition = pmod(murmur3(key), n) — exactly the bucket id — so each
-    // task holds ONE bucket and writes one file per partition directory.
-    // Unaligned, every task writes a file for every bucket it happens to
-    // hold: measured 513 parquet files (≈2x the (p, bucket) floor) and
-    // ~25 s of writer-init task CPU for a 15k-row MV.
-    val w = df.repartition(nBuckets, col(keyCol))
-      .write.bucketBy(nBuckets, keyCol).sortBy(keyCol)
-    partitionCol.fold(w)(p => w.partitionBy(p)).saveAsTable(table)
-  }
-
-  /** Managed location of a table created by [[writeBucketedSorted]]. */
-  private[ops] def managedLocation(s: SparkSession, table: String) =
-    new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"), table)
 
   /** NullOutputFormat (`lib/output/NullOutputFormat.java:36`): execute for
     * effects/metrics only, discard records — the noop sink forces full

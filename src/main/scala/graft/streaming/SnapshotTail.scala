@@ -17,8 +17,8 @@ import graft.ops.Snapshots
   * only AFTER the handler returns, so a consumer that dies mid-handler
   * re-reads the same interval next run. Pair with an idempotent handler
   * (e.g. [[SnapshotSink.commitBatch]] keyed on the interval, or the MV
-  * fold in [[graft.ops.MaterializedView]], which tolerates replayed
-  * deltas applied from a restored state) for end-to-end exactly-once.
+  * fold in [[graft.ops.Mv]], which tolerates a replayed delta folded
+  * again from a rewound MV version) for end-to-end exactly-once.
   *
   * Scale notes: the cursor is one tiny file per consumer; the interval
   * read is [[Snapshots.changeFeed]]'s per-step symmetric file difference

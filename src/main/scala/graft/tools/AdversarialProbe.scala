@@ -42,7 +42,7 @@ object AdversarialProbe {
     // cache writeback): run D of this harness charged a structurally
     // unchanged minhash x32 100s vs 14-16s in adjacent runs. min-of-N is
     // only legal for IDEMPOTENT probes; anything that mutates state
-    // under measurement (the bucketed-MV refresh) must keep reps = 1.
+    // under measurement (an MV refresh, an append) must keep reps = 1.
     def time(n: String, reps: Int = 2)(f: => Long): Double = {
       val s = (1 to reps).map { _ =>
         spark.catalog.clearCache() // each op pays its own persist cost
@@ -420,74 +420,31 @@ object AdversarialProbe {
     // merge, so the hot group collapses map-side exactly like the merge
     // hot-key probe above; the full-outer merge then carries one row per
     // DISTINCT key. Wall must track the feed size.
+    val (mvKeys, mvSums) = (Seq("k"), Seq("v"))
     def mvInputs(mult: Int): (DataFrame, DataFrame) = {
       val n = mult * 600000L
       val base = spark.range(n).select(
         (col("id") % 50000L).as("k"), (col("id") % 997L).as("v"))
-      val mv = graft.ops.MaterializedView.build(base, "k", col("v"))
-      val delta = spark.range(n).select(
+      val mv = graft.ops.Mv.aggregate(base, mvKeys, mvSums)
+      val feed = spark.range(n).select(
         when(col("id") % 2 === 0, lit(0L)).otherwise(col("id") % 50000L).as("k"),
         (col("id") % 991L).as("v"),
-        when(col("id") % 3 === 0, lit("D")).otherwise(lit("I")).as("op"))
-      (mv.localCheckpoint(), delta.localCheckpoint())
+        when(col("id") % 3 === 0, lit("delete")).otherwise(lit("insert")).as("change"))
+      (mv.localCheckpoint(), feed.localCheckpoint())
     }
-    val (mvStateLo, mvDeltaLo) = mvInputs(lo)
-    val (mvStateHi, mvDeltaHi) = mvInputs(hi)
-    val mvLo = time(s"mv hot-key delta x$lo")(
-      graft.ops.MaterializedView.applyDelta(
-        mvStateLo, mvDeltaLo, "k", col("v"), col("op")).count())
-    val mvHi = time(s"mv hot-key delta x$hi")(
-      graft.ops.MaterializedView.applyDelta(
-        mvStateHi, mvDeltaHi, "k", col("v"), col("op")).count())
+    def mvFold(mv: DataFrame, feed: DataFrame): Long = graft.ops.Mv.merge(
+      mv, graft.ops.Mv.deltaAggregate(feed, mvKeys, mvSums), mvKeys, mvSums).count()
+    val (mvStateLo, mvFeedLo) = mvInputs(lo)
+    val (mvStateHi, mvFeedHi) = mvInputs(hi)
+    val mvLo = time(s"mv hot-key delta x$lo")(mvFold(mvStateLo, mvFeedLo))
+    val mvHi = time(s"mv hot-key delta x$hi")(mvFold(mvStateHi, mvFeedHi))
     verdict("mv_hotkey_delta", mvLo, mvHi, dataRatio)
-
-    // Bucketed-MV selective refresh (round 8): the stored-MV claim is
-    // that a refresh costs Δ + changed-partitions, never base-ROW-count
-    // — a rebuild scans every base row, a refresh scans the feed plus
-    // the touched 1/64th of the (key-domain-sized) view. Probe: the
-    // SAME fixed single-partition feed against a base 4× larger; the
-    // refresh wall must stay FLAT (model 1×) while the rebuild it
-    // replaces grows with the base. Rebuild walls print as the
-    // reference points.
-    def mvbBase(mult: Int): DataFrame = {
-      val n = mult * 600000L
-      spark.range(n).select((col("id") % 50000L).as("key"),
-        (col("id") % 997L).as("v")).localCheckpoint()
-    }
-    val mvbDelta = spark.range(600000L)
-      .select((col("id") % 50000L).as("key"), (col("id") % 991L).as("v"),
-        when(col("id") % 3 === 0, lit("D")).otherwise(lit("I")).as("op"))
-      .filter(pmod(xxhash64(col("key")), lit(64L)) === 0) // one partition's keys
-      .localCheckpoint()
-    val (mvbLoT, mvbHiT) = ("graft_probe_mvb_lo", "graft_probe_mvb_hi")
-    val mvbBaseLo = mvbBase(lo)
-    val mvbBaseHi = mvbBase(hi)
-    time(s"mv_bucketed rebuild x$lo (reference)", reps = 1) {
-      graft.ops.MaterializedView.buildBucketed(
-        mvbBaseLo, "key", col("v"), mvbLoT, 4, 64)
-      spark.table(mvbLoT).count()
-    }
-    time(s"mv_bucketed rebuild x$hi (reference)", reps = 1) {
-      graft.ops.MaterializedView.buildBucketed(
-        mvbBaseHi, "key", col("v"), mvbHiT, 4, 64)
-      spark.table(mvbHiT).count()
-    }
-    val mvbLo = time(s"mv_bucketed 1-partition refresh (base x$lo)", reps = 1) {
-      graft.ops.MaterializedView.refreshBucketed(
-        spark, mvbLoT, mvbDelta, "key", col("v"), col("op"), 64)
-      spark.table(mvbLoT).count()
-    }
-    val mvbHi = time(s"mv_bucketed 1-partition refresh (base x$hi)", reps = 1) {
-      graft.ops.MaterializedView.refreshBucketed(
-        spark, mvbHiT, mvbDelta, "key", col("v"), col("op"), 64)
-      spark.table(mvbHiT).count()
-    }
-    verdict("mv_bucketed_refresh_flat", mvbLo, mvbHi, 1.0)
-    Seq(mvbLoT, mvbHiT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
 
     // CATALOG-level MV (ops/Mv, round 15): refresh folds the base's
     // CHANGE FEED — O(delta + touched buckets), cursor atomic in the
-    // manifest — where full = true re-scans the base. A 10k-row / 10-key
+    // manifest — where full = true re-scans the base. This is also the
+    // stored view's flat-in-base probe: the refresh reads the feed and
+    // the touched buckets, never the base. A 10k-row / 10-key
     // delta against a 48M-row snapshot base (big enough that the
     // recompute's base scan dominates its fixed costs — the regime the
     // verb exists for; at 12M both sides were ~1.5s of overhead): the

@@ -1,108 +1,88 @@
 package graft.ops
 
 import graft.SparkTestBase
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Pins the STORED materialized-view lifecycle
-  * ([[MaterializedView.buildBucketed]]/[[MaterializedView.refreshBucketed]]):
-  * the scaladoc's 100 TB claims as executable facts —
-  *  1. the refresh merge reads the MV shuffle-free (bucketed scan, the
-  *     plan's ONLY Exchange is on the Δ side) and partition-pruned;
-  *  2. the refresh writes only changed partitions (untouched directories
-  *     keep their exact file lists), including dropping partitions the
-  *     deletes emptied;
-  *  3. the maintained table is bit-identical to a full recompute.
+/** Pins the bucketed materialized-view refresh ([[Mv.create]] with
+  * `buckets > 0`, then [[Mv.refresh]]) on a 97-key base:
+  *  1. the refreshed view is bit-identical to a full recompute, and a
+  *     bucket the deletes emptied keeps no file in the new manifest;
+  *  2. refreshing in two steps lands where one step over the whole
+  *     change feed lands.
+  * That the refresh rewrites only the touched buckets and carries the
+  * rest by reference is MvSpec's bucketed case.
   */
 class MvBucketedSpec extends SparkTestBase {
   import spark.implicits._
 
-  private val table = "graft_spec_mv_bucketed"
+  private val root = "/tmp/graft-test/mv_bucketed"
+
+  private def fresh(name: String): String = {
+    val loc = s"$root/$name"
+    val p = new Path(loc)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    loc
+  }
 
   private def baseDf = spark.range(2000)
     .select((col("id") % 97).as("key"), (col("id") * 3 % 1000).as("v"))
 
-  // inserts for keys 0..9 (hits a few partitions), deletes that empty
-  // key 42 entirely (every base row of that key deleted)
-  private def deltaDf = {
-    val ins = spark.range(40)
-      .select((col("id") % 10).as("key"), lit(7L).as("v"), lit("I").as("op"))
-    val del = baseDf.filter(col("key") === 42)
-      .select(col("key"), col("v"), lit("D").as("op"))
-    ins.unionByName(del)
-  }
+  // inserts for keys 0..9 (hits a few buckets)
+  private def insDf(keep: Column => Column = _ => lit(true)): DataFrame =
+    spark.range(40).select((col("id") % 10).as("key"), lit(7L).as("v"))
+      .filter(keep(col("key")))
+
+  private def content(df: DataFrame): Set[(Long, Long, Long, Long)] =
+    df.select("key", "n", "s_v", "c_v").as[(Long, Long, Long, Long)]
+      .collect().toSet
+
+  /** The view recomputed from scratch over the base tip. */
+  private def recompute(baseLoc: String): Set[(Long, Long, Long, Long)] =
+    content(Snapshots.read(spark, baseLoc).groupBy("key").agg(
+      count(lit(1)).as("n"), sum(col("v")).as("s_v"), count(col("v")).as("c_v")))
+
+  private def bucketOf(k: Long): Int =
+    spark.range(1).select(BucketLayout.bucketId(lit(k), 8)).head().getInt(0)
 
   test("refresh lands bit-identical to a full recompute, emptied partitions dropped") {
-    MaterializedView.buildBucketed(baseDf, "key", col("v"), table, 4, 8)
-    MaterializedView.refreshBucketed(spark, table, deltaDf, "key", col("v"), col("op"), 8)
-    val got = spark.table(table).select("k", "n", "s")
-      .as[(Long, Long, Long)].collect().toSet
-    val recomputed = MaterializedView.applyDelta(
-        MaterializedView.build(baseDf, "key", col("v")),
-        deltaDf, "key", col("v"), col("op"))
-      .as[(Long, Long, Long)].collect().toSet
-    assert(got === recomputed)
+    val base = fresh("base1"); val mv = fresh("mv1")
+    Snapshots.commitAppend(baseDf, base)
+    Mv.create(spark, mv, base, Seq("key"), Seq("v"), buckets = 8)
+    // inserts, then deletes that empty key 42's whole bucket (every
+    // base and inserted row of every key that hashes there)
+    val b42 = bucketOf(42L)
+    Snapshots.commitAppend(insDf(), base)
+    Snapshots.commitDelete(spark, base, BucketLayout.bucketId(col("key"), 8) === b42)
+    val r = Mv.refresh(spark, mv)
+    assert(r.fromBase == 1L && r.toBase == 3L && r.groupsTouched > 0L)
+    val got = content(Snapshots.read(spark, mv))
+    assert(got === recompute(base))
     assert(!got.exists(_._1 == 42L), "fully-deleted key must vanish")
-    // key 42's partition had a single key, so its directory must be gone
-    val p42 = pmodValue(42L, 8)
-    val only42 = baseDf.select(col("key").as("k")).distinct()
-      .withColumn("p", pmod(xxhash64(col("k")), lit(8L)))
-      .groupBy("p").agg(count(lit(1)).as("nk"), min("k").as("mk"))
-      .filter(col("p") === p42).head()
-    if (only42.getLong(1) == 1L && only42.getLong(2) == 42L)
-      assert(!spark.table(table).inputFiles.exists(_.contains(s"p=$p42")))
-  }
-
-  test("refresh touches only changed partitions; MV side merges shuffle-free") {
-    MaterializedView.buildBucketed(baseDf, "key", col("v"), table, 4, 8)
-    val before = spark.table(table).inputFiles.sorted
-    // data-dependent keys (5 and 6) — a literal key would constant-fold
-    // the merge's equi-condition away and degrade the plan under test
-    val delta = spark.range(10)
-      .select((col("id") % 2 + 5).as("key"), col("id").as("v"), lit("I").as("op"))
-    val changedPs = Set(pmodValue(5L, 8), pmodValue(6L, 8))
-    def inChanged(f: String): Boolean = changedPs.exists(p => f.contains(s"p=$p"))
-
-    // plan pin on the refresh's own merge relation: exactly one Exchange
-    // (the Δ side), a Bucketed scan, and a partition filter on p
-    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val (merged, changed) = MaterializedView.bucketedRefreshPlan(
-        spark, table, delta, "key", col("v"), col("op"), 8)
-      assert(changed.toSet === changedPs)
-      val plan = merged.queryExecution.executedPlan.toString
-      assert(plan.linesIterator.count(_.contains("Exchange")) === 1,
-        s"expected the delta-side Exchange only:\n$plan")
-      assert(plan.contains("Bucketed: true"), s"MV scan must use buckets:\n$plan")
-      assert(plan.contains("PartitionFilters: [p"),
-        s"MV scan must prune partitions:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
-
-    MaterializedView.refreshBucketed(spark, table, delta, "key", col("v"), col("op"), 8)
-    val after = spark.table(table).inputFiles.sorted
-    assert(before.filterNot(inChanged) === after.filterNot(inChanged),
-      "unchanged partitions must keep their exact files")
-    assert(before.filter(inChanged) !== after.filter(inChanged),
-      "the changed partitions must have been rewritten")
+    val tipFiles = Snapshots.versionFiles(spark, mv, r.mvVersion)
+    assert(tipFiles.nonEmpty && !tipFiles.exists(_.contains(s"__graft_bucket=$b42/")),
+      s"emptied bucket $b42 must leave no file: $tipFiles")
+    assert(Snapshots.versionLayout(spark, mv, r.mvVersion).contains("bucket,8,key"))
   }
 
   test("repeated refreshes converge with one-shot application") {
-    MaterializedView.buildBucketed(baseDf, "key", col("v"), table, 4, 8)
-    val (d1, d2) = (deltaDf.filter(col("key") % 2 === 0),
-      deltaDf.filter(col("key") % 2 =!= 0))
-    MaterializedView.refreshBucketed(spark, table, d1, "key", col("v"), col("op"), 8)
-    MaterializedView.refreshBucketed(spark, table, d2, "key", col("v"), col("op"), 8)
-    val twoStep = spark.table(table).select("k", "n", "s")
-      .as[(Long, Long, Long)].collect().toSet
-    MaterializedView.buildBucketed(baseDf, "key", col("v"), table, 4, 8)
-    MaterializedView.refreshBucketed(spark, table, deltaDf, "key", col("v"), col("op"), 8)
-    val oneShot = spark.table(table).select("k", "n", "s")
-      .as[(Long, Long, Long)].collect().toSet
-    assert(twoStep === oneShot)
+    val base = fresh("base2")
+    val (twoStep, oneShot) = (fresh("mv2a"), fresh("mv2b"))
+    Snapshots.commitAppend(baseDf, base)
+    Seq(twoStep, oneShot).foreach(
+      Mv.create(spark, _, base, Seq("key"), Seq("v"), buckets = 8))
+    // the first half of the delta: even inserts and key 42's deletes
+    Snapshots.commitAppend(insDf(k => k % 2 === 0), base)
+    Snapshots.commitDelete(spark, base, col("key") === 42L)
+    Mv.refresh(spark, twoStep)
+    // the second half: odd inserts
+    Snapshots.commitAppend(insDf(k => k % 2 =!= 0), base)
+    Mv.refresh(spark, twoStep)
+    val r = Mv.refresh(spark, oneShot)
+    assert(r.fromBase == 1L && r.toBase == 4L)
+    val got = content(Snapshots.read(spark, twoStep))
+    assert(got === content(Snapshots.read(spark, oneShot)))
+    assert(got === recompute(base))
   }
-
-  /** pmod(xxhash64(k), n) computed through Spark itself so the expected
-    * partition ids can never drift from the implementation's hash. */
-  private def pmodValue(k: Long, n: Int): Long =
-    spark.range(1).select(pmod(xxhash64(lit(k)), lit(n.toLong))).head().getLong(0)
 }

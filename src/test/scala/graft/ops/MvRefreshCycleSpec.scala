@@ -1,88 +1,87 @@
 package graft.ops
 
 import graft.SparkTestBase
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
-/** Pins the FUSED steady-state Δ-cycle ([[MaterializedView.refreshCycle]],
-  * r16: the restore write is gone — the fold reads the pristine copy
-  * directly and dynamically overwrites every changed partition once):
-  *  1. a cycle lands bit-identical to pristine+Δ recomputed from scratch,
-  *     including dropping partitions the deletes emptied;
-  *  2. the healing contract survives the fusion — a partition corrupted
-  *     by a half-applied previous cycle is rewritten from pristine+Δ,
-  *     because every changed partition is fully rewritten;
-  *  3. repeated cycles are idempotent (each resets its changed
-  *     partitions to pristine before folding).
+/** Pins the steady-state Δ-cycle: [[Mv.rewind]] to MV version 1 (the
+  * pristine view, an immutable version rather than a copy), then
+  * [[Mv.refresh]] over the base's change feed since that version's
+  * cursor:
+  *  1. a cycle lands bit-identical to pristine+Δ recomputed from
+  *     scratch, including dropping the group the deletes emptied;
+  *  2. a garbage commit to the MV between cycles (what a half-applied
+  *     or foreign write leaves) is discarded by the next rewind;
+  *  3. repeated cycles are idempotent.
   */
 class MvRefreshCycleSpec extends SparkTestBase {
   import spark.implicits._
 
-  private val table = "graft_spec_mv_cycle"
-  private def pristineDir = s"/tmp/graft-test/mv_cycle_pristine_${getClass.getSimpleName}"
+  private val root = "/tmp/graft-test/mv_cycle"
 
   private def baseDf = spark.range(2000)
     .select((col("id") % 97).as("key"), (col("id") * 3 % 1000).as("v"))
 
-  private def deltaDf = {
-    val ins = spark.range(40)
-      .select((col("id") % 10).as("key"), lit(7L).as("v"), lit("I").as("op"))
-    val del = baseDf.filter(col("key") === 42)
-      .select(col("key"), col("v"), lit("D").as("op"))
-    ins.unionByName(del)
+  private def insDf = spark.range(40)
+    .select((col("id") % 10).as("key"), lit(7L).as("v"))
+
+  /** pristine+Δ recomputed from the DataFrames, not from either table. */
+  private def expected: Set[(Long, Long, Long, Long)] =
+    baseDf.filter(col("key") =!= 42L).unionByName(insDf).groupBy("key")
+      .agg(count(lit(1)).as("n"), sum(col("v")).as("s_v"),
+        count(col("v")).as("c_v"))
+      .as[(Long, Long, Long, Long)].collect().toSet
+
+  private def content(mv: String): Set[(Long, Long, Long, Long)] =
+    Snapshots.read(spark, mv).select("key", "n", "s_v", "c_v")
+      .as[(Long, Long, Long, Long)].collect().toSet
+
+  /** Base v1 with the MV at cursor 1; base v2 deletes key 42, v3
+    * appends the inserts. Returns the MV location. */
+  private def seed(name: String): String = {
+    val (base, mv) = (s"$root/$name/base", s"$root/$name/mv")
+    val p = new Path(s"$root/$name")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    Snapshots.commitAppend(baseDf, base)
+    Mv.create(spark, mv, base, Seq("key"), Seq("v"), buckets = 8)
+    Snapshots.commitDelete(spark, base, col("key") === 42L)
+    Snapshots.commitAppend(insDf, base)
+    mv
   }
 
-  private def expected: Set[(Long, Long, Long)] = MaterializedView.applyDelta(
-      MaterializedView.build(baseDf, "key", col("v")),
-      deltaDf, "key", col("v"), col("op"))
-    .as[(Long, Long, Long)].collect().toSet
-
-  private def seed(): Unit = {
-    val p = new org.apache.hadoop.fs.Path(pristineDir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    MaterializedView.savePristine(baseDf, "key", col("v"), pristineDir, 8)
-    MaterializedView.seedFromPristine(spark, pristineDir, table, 4)
+  private def cycle(mv: String): Unit = {
+    Mv.rewind(spark, mv, 1L)
+    val r = Mv.refresh(spark, mv)
+    assert(r.fromBase == 1L && r.toBase == 3L)
   }
 
   test("one cycle equals pristine+delta recomputed; emptied key vanishes") {
-    seed()
-    MaterializedView.refreshCycle(
-      spark, table, pristineDir, deltaDf, "key", col("v"), col("op"), 8, 4)
-    val got = spark.table(table).select("k", "n", "s")
-      .as[(Long, Long, Long)].collect().toSet
+    val mv = seed("one")
+    cycle(mv)
+    val got = content(mv)
     assert(got === expected)
     assert(!got.exists(_._1 == 42L), "fully-deleted key must vanish")
   }
 
   test("a corrupted changed partition heals — fused write still rewrites from pristine") {
-    seed()
-    // corrupt the partition that key 5 (an insert target) hashes to, the
-    // way a half-applied previous cycle would leave it: garbage counts
-    val p5 = spark.range(1)
-      .select(pmod(xxhash64(lit(5L)), lit(8L))).head().getLong(0)
-    val prevMode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try Seq((5L, 999999L, -1L, p5)).toDF("k", "n", "s", "p")
-      .repartition(4, col("k"))
-      .write.mode("overwrite").insertInto(table)
-    finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
-    assert(spark.table(table).filter(col("k") === 5L).head().getLong(1) == 999999L)
-    MaterializedView.refreshCycle(
-      spark, table, pristineDir, deltaDf, "key", col("v"), col("op"), 8, 4)
-    val got = spark.table(table).select("k", "n", "s")
-      .as[(Long, Long, Long)].collect().toSet
-    assert(got === expected, "the corrupted partition must heal to pristine+delta")
+    val mv = seed("heal")
+    cycle(mv)
+    // corrupt key 5 (an insert target) the way a half-applied write
+    // would leave it: a garbage row committed on top of the view
+    Snapshots.commitAppend(
+      Seq((5L, 999999L, -1L, 1L)).toDF("key", "n", "s_v", "c_v"), mv)
+    assert(content(mv).exists(r => r._1 == 5L && r._2 == 999999L))
+    cycle(mv)
+    assert(content(mv) === expected,
+      "the corrupted group must heal to pristine+delta")
   }
 
   test("repeated cycles are idempotent") {
-    seed()
-    MaterializedView.refreshCycle(
-      spark, table, pristineDir, deltaDf, "key", col("v"), col("op"), 8, 4)
-    val first = spark.table(table).select("k", "n", "s")
-      .as[(Long, Long, Long)].collect().toSet
-    MaterializedView.refreshCycle(
-      spark, table, pristineDir, deltaDf, "key", col("v"), col("op"), 8, 4)
-    val second = spark.table(table).select("k", "n", "s")
-      .as[(Long, Long, Long)].collect().toSet
+    val mv = seed("repeat")
+    cycle(mv)
+    val first = content(mv)
+    cycle(mv)
+    val second = content(mv)
     assert(first === expected && second === expected)
   }
 }

@@ -217,11 +217,55 @@ class MvSpec extends SparkTestBase {
     assert(mvContent(mv) == recompute(base))
     // the layout header survives refresh — SPJ plans keep working
     assert(Snapshots.versionLayout(spark, mv, 2L).contains("bucket,8,k"))
-    // deletes fold through the same path: empty a whole group
+    // deletes fold through the same path: leave k1 the only key of its
+    // bucket, then empty its group — the emptied bucket keeps no file
+    val mates = spark.range(40).select(concat(lit("k"), col("id")).as("k"))
+      .filter(BucketLayout.bucketId(col("k"), 8) === hot && col("k") =!= "k1")
+      .as[String].collect().toSeq
+    if (mates.nonEmpty) {
+      Snapshots.commitDelete(spark, base, col("k").isin(mates: _*))
+      Mv.refresh(spark, mv)
+    }
     Snapshots.commitDelete(spark, base, col("k") === "k1")
     Mv.refresh(spark, mv)
     assert(mvContent(mv) == recompute(base))
     assert(!mvContent(mv).exists(_._1 == "k1"))
+    val tipFiles = Snapshots.versionFiles(spark, mv,
+      Snapshots.latestVersion(spark, mv))
+    assert(tipFiles.nonEmpty && !tipFiles.exists(_.contains(s"__graft_bucket=$hot/")),
+      s"emptied bucket $hot must leave no file: $tipFiles")
+  }
+
+  test("rewind + refresh cadence: every call equals the recompute, base untouched") {
+    val base = fresh("base11"); val mv = fresh("mv11")
+    import spark.implicits._
+    def rows(ids: Seq[Long]) = ids.map(i => (i, s"k${i % 40}", i % 7))
+      .toDF("id", "k", "v")
+    // base v1, the MV at cursor 1, then v2 deletes and v3 appends
+    Snapshots.commitAppend(rows(1L to 400L), base)
+    Mv.create(spark, mv, base, Seq("k"), Seq("v"), buckets = 8)
+    Snapshots.commitDelete(spark, base, col("id") % 7 === 0L)
+    Snapshots.commitAppend(rows(401L to 440L), base)
+    val baseManifests = Snapshots.manifests(spark, base).map(_._1)
+    var foreign = -1L
+    (1 to 3).foreach { call =>
+      if (call == 2) {
+        // a foreign append to the MV between calls: garbage counts
+        foreign = Snapshots.commitAppend(
+          Seq(("k1", 999999L, -1L, 1L)).toDF("k", "n", "s_v", "c_v"), mv)
+        assert(mvContent(mv).exists(_._2 == 999999L))
+      }
+      Mv.rewind(spark, mv, 1L)
+      assert(Mv.baseVersionOfTip(spark, mv).contains(1L))
+      assert(Snapshots.versionLayout(spark, mv, -1L).contains("bucket,8,k"))
+      val r = Mv.refresh(spark, mv)
+      assert(r.fromBase == 1L && r.toBase == 3L && r.groupsTouched > 0L)
+      assert(mvContent(mv) == recompute(base), s"call $call")
+    }
+    assert(Snapshots.manifests(spark, base).map(_._1) == baseManifests,
+      "rewind and refresh never commit to the base")
+    val e = intercept[IllegalArgumentException](Mv.rewind(spark, mv, foreign))
+    assert(e.getMessage.contains("#mvbase"))
   }
 
   test("CREATE/REFRESH MATERIALIZED VIEW: the standard SQL spelling") {

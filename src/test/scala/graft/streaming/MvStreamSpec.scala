@@ -4,12 +4,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
-import graft.ops.MaterializedView
+import graft.ops.Mv
 
 /** Streaming MV maintenance: folding a change-feed STREAM into the view
-  * with foreachBatch + [[MaterializedView.applyDelta]] converges to the
-  * batch recompute whatever the micro-batch split — the streaming face
-  * of MvSpec's any-split algebra (the same foreachBatch idiom a
+  * with foreachBatch + [[Mv.deltaAggregate]] and [[Mv.merge]] converges
+  * to the batch recompute whatever the micro-batch split — the streaming
+  * face of MvSpec's any-split algebra (the same foreachBatch idiom a
   * production refresh job uses against a table sink). */
 case class MvEv(k: Int, v: Long, op: String)
 
@@ -25,15 +25,17 @@ class MvStreamSpec extends SparkTestBase {
       MvEv(3, 999L, "D"), MvEv(7, 49L, "D"), MvEv(7, 89L, "D"),
       MvEv(22, 1L, "I"), MvEv(22, 1L, "D"))
 
-    var mv: DataFrame = MaterializedView.build(base.toDF("k", "v"), "k", col("v"))
-      .cache()
+    val (keys, sums) = (Seq("k"), Seq("v"))
+    var mv: DataFrame = Mv.aggregate(base.toDF("k", "v"), keys, sums).cache()
     mv.count()
 
     val mem = MemoryStream[MvEv]
     val q = mem.toDS().toDF().writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val next = MaterializedView.applyDelta(
-          mv, batch, "k", col("v"), col("op")).cache()
+        val feed = batch.withColumn("change",
+          when(col("op") === "I", "insert").otherwise("delete"))
+        val next = Mv.merge(mv, Mv.deltaAggregate(feed, keys, sums), keys, sums)
+          .cache()
         next.count() // materialize before swapping the state handle
         mv = next
       }
@@ -53,7 +55,7 @@ class MvStreamSpec extends SparkTestBase {
     val eff = base.diff(deleted) ++ inserted
     val expect = eff.groupBy(_._1)
       .map { case (k, vs) => k -> (vs.size.toLong, vs.map(_._2).sum) }
-    val got = mv.as[(Int, Long, Long)].collect()
+    val got = mv.select("k", "n", "s_v").as[(Int, Long, Long)].collect()
       .map { case (k, n, s) => k -> (n, s) }.toMap
     assert(got === expect)
   }
