@@ -117,8 +117,7 @@ object BloomSidecar {
     attachCore(s, loc, version, cols, fpp,
       headerPath(loc, _), dataPath(loc, _), extraHeader = "",
       build = { fresh =>
-        val schema = Snapshots.versionSchema(s, loc, version)
-        val hashed = Snapshots.readData(s, fresh, schema).select(
+        val hashed = fresh.select(
           input_file_name().as("file") +:
             cols.map(c => when(col(c).isNotNull,
               xxhash64(col(c).cast("string"))).as(c)): _*)
@@ -161,9 +160,7 @@ object BloomSidecar {
     attachCore(s, loc, version, cols, fpp,
       gramHeaderPath(loc, _), gramDataPath(loc, _),
       extraHeader = s"#gram=$gram\n",
-      build = { fresh =>
-        val schema = Snapshots.versionSchema(s, loc, version)
-        val src = Snapshots.readData(s, fresh, schema)
+      build = { src =>
         cols.map { c =>
           // per-row distinct bounds the explode; BloomAgg's map-side
           // partial dedups per file before any shuffle
@@ -201,11 +198,10 @@ object BloomSidecar {
       extraHeader = s"#p=$p\n",
       accept = _.p == p,
       build = { fresh =>
-        val schema = Snapshots.versionSchema(s, loc, version)
         def sk(c: String) = expr(
           s"graft_hll(CASE WHEN `$c` IS NOT NULL THEN " +
             s"xxhash64(CAST(`$c` AS STRING)) END, $p)")
-        Snapshots.readData(s, fresh, schema)
+        fresh
           .groupBy(input_file_name().as("file"))
           .agg(sk(cols.head).as("sk0"),
             cols.tail.zipWithIndex.map { case (c, i) =>
@@ -307,16 +303,18 @@ object BloomSidecar {
   }
 
   /** The shared sidecar lifecycle: inherit covered files by reference
-    * from the prior chain, build filter rows for fresh files only, fold
-    * the chain when it exceeds [[CompactChain]], publish data-then-header
-    * (crash leaves the old complete sidecar or an ignored orphan). */
+    * from the prior chain, build filter rows from the fresh files' rows
+    * only, fold the chain when it exceeds [[CompactChain]], publish
+    * data-then-header (crash leaves the old complete sidecar or an
+    * ignored orphan). */
   private def attachCore(s: SparkSession, loc: String, version: Long,
                          cols: Seq[String], fpp: Double,
                          hp: Long => Path, dp: Long => Path,
                          extraHeader: String,
-                         build: Seq[String] => DataFrame,
+                         build: DataFrame => DataFrame,
                          accept: Header => Boolean = _ => true): Unit = {
-    val files = Snapshots.versionFiles(s, loc, version)
+    val m = Snapshots.version(s, loc, version)
+    val files = m.files
     if (files.isEmpty) return
     val f = hp(version).getFileSystem(s.sparkContext.hadoopConfiguration)
     val live = files.map(Snapshots.normPath).toSet
@@ -338,7 +336,7 @@ object BloomSidecar {
         .intersect(live)
     val fresh = files.filterNot(x => covered.contains(Snapshots.normPath(x)))
     val scanned: Option[DataFrame] =
-      if (fresh.isEmpty) None else Some(build(fresh))
+      if (fresh.isEmpty) None else Some(build(Snapshots.readData(s, fresh, m.schema)))
 
     // which parquets the new header will reference, and what (if
     // anything) this attach writes to its own version's parquet
@@ -528,16 +526,14 @@ object BloomSidecar {
     * full list when no sidecar covers the column. */
   def readBloomPruned(s: SparkSession, loc: String, column: String,
                       values: Seq[String], version: Long = -1L): DataFrame = {
-    val v = if (version < 0) Snapshots.latestVersion(s, loc) else version
-    val files = Snapshots.versionFiles(s, loc, v)
+    val m = Snapshots.version(s, loc, version)
+    val files = m.files
     if (files.isEmpty) return s.emptyDataFrame
-    val schema = Snapshots.versionSchema(s, loc, v)
-    val keep = bloomFiles(s, loc, v, files, column, values)
+    val keep = bloomFiles(s, loc, m.version, files, column, values)
     val residual = (df: DataFrame) =>
       df.filter(col(column).cast("string").isin(values: _*))
     if (keep.isEmpty)
-      residual(Snapshots.readData(s, files, schema)).filter(lit(false))
-    else residual(Snapshots.applyDv(
-      s, Snapshots.readData(s, keep, schema), Snapshots.versionDvs(s, loc, v)))
+      residual(Snapshots.readData(s, files, m.schema)).filter(lit(false))
+    else residual(Snapshots.applyDv(s, Snapshots.readData(s, keep, m.schema), m.dvs))
   }
 }

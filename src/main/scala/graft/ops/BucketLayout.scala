@@ -172,8 +172,7 @@ object BucketLayout {
   def appendBucketed(s: SparkSession, loc: String,
                      df: DataFrame,
                      marker: Option[String] = None): Long = {
-    val spec = Snapshots.versionLayout(s, loc,
-        Snapshots.latestVersion(s, loc)).flatMap(parse)
+    val spec = Snapshots.version(s, loc).layout.flatMap(parse)
       .getOrElse(throw new IllegalStateException(
         s"$loc has no active bucket layout — run commitBucketed " +
           "(CALL <cat>.system.bucket) first, or use a plain append"))
@@ -347,8 +346,9 @@ object BucketLayout {
 
   private def splitBucketsImpl(s: SparkSession, loc: String,
                                countsOf: Spec => Seq[Int]): Long = {
-    val latest = Snapshots.latestVersion(s, loc)
-    val spec = Snapshots.versionLayout(s, loc, latest).flatMap(parse)
+    val tip = Snapshots.version(s, loc)
+    val latest = tip.version
+    val spec = tip.layout.flatMap(parse)
       .getOrElse(throw new IllegalStateException(
         s"$loc has no active bucket layout to split"))
     val newCounts = countsOf(spec)
@@ -363,9 +363,7 @@ object BucketLayout {
           "commitBucketed for an arbitrary re-layout") }
     val newSpec = Spec(spec.columns, newCounts)
     if (newSpec == spec) return latest
-    val files = Snapshots.versionFiles(s, loc, latest)
-    val dvs = Snapshots.versionDvs(s, loc, latest)
-    val schema = Snapshots.versionSchema(s, loc, latest)
+    val (files, dvs, schema) = (tip.files, tip.dvs, tip.schema)
     if (files.isEmpty) {
       // birth layout, no rows yet: a pure header commit — but a first
       // INSERT can interleave, its files routed under the OLD spec, and
@@ -379,7 +377,7 @@ object BucketLayout {
         schema.map(_.json).getOrElse(
           throw new IllegalStateException(s"$loc: empty table without a " +
             "schema header cannot carry a layout")), format(newSpec))
-      return if (Snapshots.versionLayout(s, loc, v).contains(format(newSpec))) v
+      return if (Snapshots.version(s, loc, v).layout.contains(format(newSpec))) v
              else splitBucketsImpl(s, loc, _ => newCounts)
     }
     // SATURATE the executors without a shuffle: the natural scan

@@ -105,24 +105,6 @@ object Mv {
     }
   }
 
-  /** The base version the MV's tip content reflects (`#mvbase=` header).
-    * Absent on a tip published outside the MV machinery (a rollback
-    * re-publish) — refresh then demands `full = true` to re-anchor. */
-  def baseVersionOfTip(s: SparkSession, loc: String): Option[Long] =
-    Snapshots.manifests(s, loc).lastOption
-      .flatMap(m => cursorOf(Snapshots.headerLines(s, m._2)))
-
-  /** The cursor a SPECIFIC MV version recorded — what the rewrite rule
-    * reads, so the freshness verdict and the version it serves come
-    * from one immutable manifest (no tip re-read in between). */
-  def baseVersionAt(s: SparkSession, loc: String,
-                    version: Long): Option[Long] =
-    Snapshots.manifests(s, loc).find(_._1 == version)
-      .flatMap(m => cursorOf(Snapshots.headerLines(s, m._2)))
-
-  private def cursorOf(header: Seq[String]): Option[Long] =
-    header.find(_.startsWith("#mvbase=")).map(_.stripPrefix("#mvbase=").toLong)
-
   /** `<base>.mvs` metadata rows: every MV registered over `baseLoc`
     * with its definition and staleness — `fresh` is exactly the
     * transparent-rewrite serving condition (cursor == base tip), and
@@ -133,9 +115,11 @@ object Mv {
     val tip = Snapshots.latestVersion(s, baseLoc)
     usersOf(s, baseLoc).flatMap { mvLoc =>
       readDef(s, mvLoc).filter(_.baseLoc == baseLoc).map { d =>
-        val cursor = baseVersionOfTip(s, mvLoc)
-        (mvLoc, d.keys.mkString(","), d.sums.mkString(","),
-          Snapshots.latestVersion(s, mvLoc),
+        // version and cursor from ONE manifest: a refresh landing in
+        // between must not yield a row that mixes two MV versions
+        val mv = Snapshots.version(s, mvLoc)
+        val cursor = mv.mvBase
+        (mvLoc, d.keys.mkString(","), d.sums.mkString(","), mv.version,
           cursor.getOrElse(-1L), tip,
           cursor.contains(tip),
           cursor.map(c => math.max(0L, tip - c)).getOrElse(-1L))
@@ -235,7 +219,7 @@ object Mv {
   def create(s: SparkSession, mvLoc: String, baseLoc: String,
              keys: Seq[String], sums: Seq[String],
              buckets: Int = 0): Refreshed = {
-    require(Snapshots.manifests(s, mvLoc).isEmpty,
+    require(Snapshots.latestVersion(s, mvLoc) == 0L,
       s"$mvLoc already exists — DROP it first")
     val vb = Snapshots.latestVersion(s, baseLoc)
     require(vb > 0, s"base $baseLoc has no committed snapshots")
@@ -243,9 +227,11 @@ object Mv {
     validate(base, keys, sums)
     val layout =
       if (buckets > 0) Some(BucketLayout.Spec(keys.head, buckets)) else None
-    val v = publish(s, mvLoc, 1L, aggregate(base, keys, sums), vb, layout)
-    require(v == 1L, s"$mvLoc raced a concurrent create — DROP and retry")
     val f = Snapshots.fs(s, mvLoc)
+    val p = written(mvLoc, aggregate(base, keys, sums), vb, layout)
+    val won = Snapshots.tryPublish(s, mvLoc, 1L, p)
+    if (!won) p.scratch.foreach(f.delete(_, true))
+    require(won, s"$mvLoc raced a concurrent create — DROP and retry")
     val tmp = new Path(Snapshots.manifestDir(mvLoc),
       s"_tmp_mvdef_${java.util.UUID.randomUUID()}")
     val out = f.create(tmp, true)
@@ -257,7 +243,7 @@ object Mv {
       if (!f.rename(tmp, defPath(mvLoc))) f.delete(tmp, false)
     }
     registerUser(s, baseLoc, mvLoc)
-    Refreshed(v, 0L, vb, -1L)
+    Refreshed(1L, 0L, vb, -1L)
   }
 
   /** Advance the MV to the base tip. Incremental by default: aggregate
@@ -271,45 +257,45 @@ object Mv {
               full: Boolean = false): Refreshed = {
     val d = readDef(s, mvLoc).getOrElse(throw new IllegalArgumentException(
       s"$mvLoc is not a materialized view (no mv.def)"))
-    Snapshots.retry(mvLoc) {
-      val tip = Snapshots.latestVersion(s, mvLoc)
+    // the cursor interval and touched-group count of the round that
+    // landed (each round re-derives them from its own tip)
+    var from, to, touched = 0L
+    val v = Snapshots.commit(s, mvLoc) { tip =>
       val vb = Snapshots.latestVersion(s, d.baseLoc)
-      val tipLayout = if (tip <= 0) None
-        else Snapshots.versionLayout(s, mvLoc, tip).flatMap(BucketLayout.parse)
+      to = vb
+      val tipLayout = tip.layout.flatMap(BucketLayout.parse)
       if (full) {
         val base = Snapshots.read(s, d.baseLoc, vb)
         validate(base, d.keys, d.sums)
-        val v = publish(s, mvLoc, tip + 1, aggregate(base, d.keys, d.sums),
-          vb, tipLayout)
-        Option.when(v > 0)(Refreshed(v, -1L, vb, -1L))
+        from = -1L; touched = -1L
+        written(mvLoc, aggregate(base, d.keys, d.sums), vb, tipLayout)
       } else {
-        val v0 = baseVersionOfTip(s, mvLoc).getOrElse(
+        val v0 = tip.mvBase.getOrElse(
           throw new IllegalStateException(s"$mvLoc's tip carries no " +
             "#mvbase cursor (rolled back?) — CALL refresh_mv(full => true)"))
         require(vb >= v0, s"base ${d.baseLoc} is at version $vb, behind " +
           s"the MV cursor $v0 (base rolled back?) — " +
           "CALL refresh_mv(full => true)")
-        if (vb == v0) Some(Refreshed(tip, v0, vb, 0L))
+        from = v0; touched = 0L
+        if (vb == v0) Snapshots.Done(tip.version)
         else {
           // cancelled groups are already out of the delta, so
           // `groups_touched` counts groups CHANGED and pure churn takes
           // the carry path
           val dAgg = deltaAggregate(Snapshots.changeFeed(s, d.baseLoc, v0, vb),
             d.keys, d.sums).localCheckpoint(true)
-          val touched = dAgg.count()
-          if (touched == 0L) {
+          touched = dAgg.count()
+          if (touched == 0L)
             // churn that cancels out group-by-group (or a feed of empty
             // commits): content is already right, but the CURSOR must
             // still advance or every future refresh re-reads this span —
             // carry the tip's files BY REFERENCE, zero data I/O
-            val ok = Snapshots.tryPublish(s, mvLoc, tip + 1, Snapshots.Publish(
-              Snapshots.versionFiles(s, mvLoc, tip),
-              schemaJson = Snapshots.versionSchema(s, mvLoc, tip).map(_.json),
+            Snapshots.Publish(tip.files,
+              schemaJson = tip.schema.map(_.json),
               layout = tipLayout.map(BucketLayout.format),
-              mvBase = Some(vb.toString), carriedValid = true))
-            Option.when(ok)(Refreshed(tip + 1, v0, vb, 0L))
-          } else {
-            val tipFiles = Snapshots.versionFiles(s, mvLoc, tip)
+              mvBase = Some(vb.toString), carriedValid = true)
+          else {
+            val tipFiles = tip.files
             // the SCALE path: a bucketed MV merges and rewrites ONLY the
             // buckets the delta touches; every other file carries by
             // reference — O(delta + touched buckets), never O(MV).
@@ -324,21 +310,21 @@ object Mv {
                   .distinct().collect().map(_.getInt(0)).toSet
                 val (tf, cf) = tipFiles.partition(f =>
                   BucketLayout.bucketOfPath(f).exists(touchedB))
-                val schema = Snapshots.versionSchema(s, mvLoc, tip).getOrElse(
+                val schema = tip.schema.getOrElse(
                   throw new IllegalStateException(s"$mvLoc tip has no schema"))
                 val df = if (tf.isEmpty) s.createDataFrame(
                     s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
                   else Snapshots.readData(s, tf, Some(schema))
                 (df, cf)
-              case None => (Snapshots.read(s, mvLoc, tip), Nil)
+              case None => (tip.data, Nil)
             }
-            val v = publish(s, mvLoc, tip + 1,
-              merge(mvOld, dAgg, d.keys, d.sums), vb, bucketed, carryFiles)
-            Option.when(v > 0)(Refreshed(v, v0, vb, touched))
+            written(mvLoc, merge(mvOld, dAgg, d.keys, d.sums), vb, bucketed,
+              carryFiles)
           }
         }
       }
     }
+    Refreshed(v, from, to, touched)
   }
 
   /** Republish MV `version` as the new tip, by reference: its files,
@@ -352,38 +338,31 @@ object Mv {
     * carries a cursor; rewinding to any other raises. Returns the
     * published version (`version` itself when it already is the tip). */
   def rewind(s: SparkSession, mvLoc: String, version: Long): Long = {
-    val src = Snapshots.manifests(s, mvLoc).find(_._1 == version)
-      .map { case (v, p) => new Snapshots.Version(s, v, Some(p)) }
-      .getOrElse(throw new NoSuchElementException(
-        s"version $version not found at $mvLoc"))
-    val cursor = cursorOf(src.header).getOrElse(throw new IllegalArgumentException(
+    val src = Snapshots.version(s, mvLoc, version)
+    val cursor = src.mvBase.getOrElse(throw new IllegalArgumentException(
       s"$mvLoc version $version carries no #mvbase cursor — not an MV version"))
     Snapshots.commit(s, mvLoc) { tip =>
-      if (tip.version == version) Snapshots.Done(version)
+      if (tip.version == src.version) Snapshots.Done(src.version)
       else src.carry.copy(mvBase = Some(cursor.toString), carriedValid = true)
     }
   }
 
-  /** One replace-publish attempt at an EXPECTED version — a blind retry
-    * would fold the same delta over an interleaved refresh's content, so
-    * losing the CAS must restart from the new tip, not republish.
-    * `layout` routes the write bucketed and records the header;
-    * `carried` files (untouched buckets) ride along by reference. */
-  private def publish(s: SparkSession, mvLoc: String, version: Long,
-                      df: DataFrame, baseVersion: Long,
-                      layout: Option[BucketLayout.Spec] = None,
-                      carried: Seq[String] = Nil): Long = {
-    val f = Snapshots.fs(s, mvLoc)
+  /** `df` written as a fresh data directory of the MV (routed bucketed
+    * when `layout` is set), as the [[Snapshots.Publish]] that records it
+    * — with `carried` files (untouched buckets) by reference, the layout
+    * header and cursor `baseVersion`; the directory is the round's
+    * scratch, so a lost claim deletes it and the next round folds the
+    * delta again over the new tip, never over a stale one. */
+  private def written(mvLoc: String, df: DataFrame, baseVersion: Long,
+                      layout: Option[BucketLayout.Spec],
+                      carried: Seq[String] = Nil): Snapshots.Publish = {
     val dataDir = new Path(mvLoc, s"data/${java.util.UUID.randomUUID()}")
     val newFiles = layout match {
       case Some(spec) => BucketLayout.writeBucketed(df, spec, dataDir)
       case None => Snapshots.writeData(df, dataDir)
     }
-    if (Snapshots.tryPublish(s, mvLoc, version, Snapshots.Publish(
-        carried ++ newFiles, schemaJson = Some(df.schema.json),
-        layout = layout.map(BucketLayout.format),
-        mvBase = Some(baseVersion.toString))))
-      version
-    else { f.delete(dataDir, true); -1L }
+    Snapshots.Publish(carried ++ newFiles, schemaJson = Some(df.schema.json),
+      layout = layout.map(BucketLayout.format),
+      mvBase = Some(baseVersion.toString), scratch = Seq(dataDir))
   }
 }

@@ -93,23 +93,23 @@ object Refs {
   def createBranch(s: SparkSession, loc: String, name: String,
                    version: Long = -1L): Long = {
     require(parentOf(loc).isEmpty, s"cannot branch a branch: $loc")
-    val ms = Snapshots.manifests(s, loc)
+    val ms = Snapshots.log(s, loc)
     require(ms.nonEmpty, s"no committed snapshots at $loc")
     val bl = branchLoc(loc, name)
     require(Snapshots.latestVersion(s, bl) == 0,
       s"branch '$name' already exists at $loc")
-    val (v, p) =
+    val src =
       if (version < 0) ms.last
-      else ms.find(_._1 == version).getOrElse(
+      else ms.find(_.version == version).getOrElse(
         throw new NoSuchElementException(
           s"version $version not found at $loc (expired or never committed)"))
     val ok = Snapshots.tryPublish(s, bl, 1L,
-      new Snapshots.Version(s, v, Some(p)).carry.copy(
-        lineage = Some(s"branch:$loc@v$v"),
+      src.carry.copy(
+        lineage = Some(s"branch:$loc@v${src.version}"),
         carriedValid = true)) // fork carries validated rows by reference
     if (!ok) throw new IllegalStateException(
       s"branch '$name' concurrently created at $loc")
-    v
+    src.version
   }
 
   /** The fork point recorded in the branch's v1 lineage header. */
@@ -132,17 +132,16 @@ object Refs {
     * honor parent references when sweeping. */
   def fastForward(s: SparkSession, loc: String, name: String): Long = {
     val bl = branchLoc(loc, name)
-    val bms = Snapshots.manifests(s, bl)
+    val bms = Snapshots.log(s, bl)
     require(bms.nonEmpty, s"no branch '$name' at $loc")
     val base = forkBase(s, bl)
-    val (bv, bp) = bms.last
-    val head = new Snapshots.Version(s, bv, Some(bp))
-    val lineage = s"publish:$name@v$bv"
+    val head = bms.last
+    val lineage = s"publish:$name@v${head.version}"
     // the fork state rides in the branch's own v1 (carried by
     // reference), so the check never needs the parent's possibly-expired
-    // base manifest; normPath'd comparison (manifestRefs) so spelling
+    // base manifest; normPath'd comparison (Version.refs) so spelling
     // differences between committing paths never fake a divergence
-    val forkState = Snapshots.manifestRefs(s, bms.head._2)
+    val forkState = bms.head.refs
     var replay = false
     val v = Snapshots.commit(s, loc) { tip =>
       if (tip.refs == forkState) head.carry.copy(lineage = Some(lineage))
@@ -162,16 +161,15 @@ object Refs {
     v
   }
 
-  /** Fold `manifestRefs` of many manifests into one liveness set ONE
+  /** Fold the refs of many versions into one liveness set ONE
     * MANIFEST AT A TIME — peak driver memory is the result set plus a
     * single manifest's refs, never the concatenation of every
     * manifest's ref list that a `flatMap(…).toSet` would materialize
     * first (multi-GB of transient strings on a deep un-expired history
     * at the 1M-file operating point). */
-  private def foldRefs(s: SparkSession,
-                       manifestPaths: Iterable[Path]): Set[String] = {
+  private def foldRefs(versions: Iterable[Snapshots.Version]): Set[String] = {
     val live = scala.collection.mutable.HashSet.empty[String]
-    manifestPaths.foreach(p => live ++= Snapshots.manifestRefs(s, p))
+    versions.foreach(live ++= _.refs)
     live.toSet
   }
 
@@ -191,16 +189,15 @@ object Refs {
     val f = Snapshots.fs(s, bl)
     val blPath = new Path(bl)
     if (!f.exists(blPath)) return 0
-    // normPath'd on both sides (manifestRefs vs listing): manifest
+    // normPath'd on both sides (Version.refs vs listing): manifest
     // spellings vary by committing path; a raw-string compare here would
     // delete parent-published files — permanent parent data loss.
     // Liveness = parent manifests ∪ every OTHER branch's manifests,
     // mirroring the set expire builds (cross-ref liveness must hold in
     // both directions).
-    val parentLive: Set[String] = foldRefs(s,
-      Snapshots.manifests(s, loc).map(_._2) ++
-        listBranches(s, loc).filterNot(_ == name).flatMap(n =>
-          Snapshots.manifests(s, branchLoc(loc, n)).map(_._2)))
+    val parentLive: Set[String] = foldRefs(Snapshots.log(s, loc) ++
+      listBranches(s, loc).filterNot(_ == name).flatMap(n =>
+        Snapshots.log(s, branchLoc(loc, n))))
     // manifests go first so no reader plans from a half-swept branch
     f.delete(Snapshots.manifestDir(bl), true)
     var kept = 0
@@ -240,8 +237,7 @@ object Refs {
     * the fork carry means these include PARENT data files, which the
     * parent's expire must therefore treat as live. */
   private[graft] def branchRefs(s: SparkSession, loc: String): Set[String] =
-    foldRefs(s, listBranches(s, loc).flatMap(n =>
-      Snapshots.manifests(s, branchLoc(loc, n)).map(_._2)))
+    foldRefs(listBranches(s, loc).flatMap(n => Snapshots.log(s, branchLoc(loc, n))))
 
   // -------------------------------------------------------------------- tags
 
@@ -252,7 +248,7 @@ object Refs {
   def tag(s: SparkSession, loc: String, name: String, version: Long = -1L): Long = {
     val v = if (version < 0) Snapshots.latestVersion(s, loc) else version
     require(v > 0, s"nothing to tag at $loc")
-    require(Snapshots.manifests(s, loc).exists(_._1 == v),
+    require(Snapshots.log(s, loc).exists(_.version == v),
       s"version $v not found at $loc (expired or never committed)")
     // the same exactly-once claim as the manifest log
     if (Snapshots.claim(s, tagPath(loc, name), s"$v\n".getBytes("UTF-8"))) v

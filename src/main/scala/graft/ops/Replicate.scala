@@ -51,7 +51,7 @@ object Replicate {
 
   def replicate(s: SparkSession, srcLoc: String, dstLoc: String,
                 numTasks: Int = 32, withHistory: Boolean = false): Long = {
-    require(Snapshots.manifests(s, srcLoc).nonEmpty,
+    require(Snapshots.latestVersion(s, srcLoc) > 0,
       s"no committed snapshots at $srcLoc")
     val srcRoot = Snapshots.normPath(srcLoc)
     val dstRoot = Snapshots.normPath(dstLoc)
@@ -113,7 +113,7 @@ object Replicate {
   private def shipChain(s: SparkSession, srcLoc: String, dstLoc: String,
                         srcRoot: String, dstRoot: String,
                         numTasks: Int, withHistory: Boolean = false): Unit = {
-    val srcMs = Snapshots.manifests(s, srcLoc)
+    val srcMs = Snapshots.log(s, srcLoc)
     require(srcMs.nonEmpty, s"no committed snapshots at $srcLoc")
     def rewritePath(p: String): String = {
       val n = Snapshots.normPath(p)
@@ -138,34 +138,33 @@ object Replicate {
         }.mkString
 
     // ---- divergence gate: the replica's tip must BE the source's ----
-    val dstMs = Snapshots.manifests(s, dstLoc)
-    dstMs.lastOption.foreach { case (dv, dp) =>
-      val srcSame = srcMs.find(_._1 == dv).getOrElse(
+    val dstMs = Snapshots.log(s, dstLoc)
+    dstMs.lastOption.foreach { dst =>
+      val dv = dst.version
+      val srcSame = srcMs.find(_.version == dv).getOrElse(
         throw new IllegalStateException(
           s"$dstLoc is at v$dv but $srcLoc no longer has that manifest " +
             "(expired?) — cannot verify the replica's lineage; re-seed it"))
-      if (textOf(dp) != rewrittenText(srcSame._2))
+      if (textOf(dst.path.get) != rewrittenText(srcSame.path.get))
         throw new java.util.ConcurrentModificationException(
           s"$dstLoc diverged from $srcLoc at v$dv — a replica is " +
             "read-only by contract; refusing to merge two histories " +
             "(re-seed the replica, or fork it explicitly)")
     }
-    val have = dstMs.map(_._1).toSet
+    val have = dstMs.map(_.version).toSet
 
     // ---- ship each missing version's ADDED files, then its manifest ----
-    val todo = srcMs.filter { case (v, _) => !have.contains(v) }
+    val todo = srcMs.filterNot(m => have.contains(m.version))
     var prevRefs: Set[String] =
-      dstMs.lastOption.flatMap { case (dv, _) =>
-        srcMs.find(_._1 == dv).map { case (_, p) =>
-          Snapshots.manifestRefs(s, p) }
-      }.getOrElse(Set.empty)
+      dstMs.lastOption.flatMap(dst => srcMs.find(_.version == dst.version))
+        .fold(Set.empty[String])(_.refs)
     // versions below the replica tip that the source still carries but
     // the replica never saw can't exist (manifests publish in order and
     // the gate above pinned the tip) — `todo` is a suffix of the chain
-    todo.foreach { case (v, p) =>
-      val dvRefs = Snapshots.headerLines(s, p).filter(_.startsWith("#dv="))
-        .map(l => Snapshots.normPath(l.stripPrefix("#dv="))).toSet
-      val refs = Snapshots.manifestRefs(s, p)
+    todo.foreach { m =>
+      val v = m.version
+      val dvRefs = m.dvs.map(Snapshots.normPath).toSet
+      val refs = m.refs
       val fresh = (refs -- prevRefs).toSeq
       val (freshDvs, freshData) = fresh.partition(dvRefs)
       copyFiles(s, freshData.map(n => n -> rewritePath(n)), numTasks)
@@ -175,7 +174,7 @@ object Replicate {
       // files' spelling or deleted rows resurrect
       freshDvs.foreach(dv =>
         copyDvRewritten(s, dv, rewritePath(dv), srcRoot, dstRoot))
-      val text = rewrittenText(p)
+      val text = rewrittenText(m.path.get)
       val target = new Path(Snapshots.manifestDir(dstLoc), f"v$v%05d.txt")
       if (!Snapshots.claim(s, target, text.getBytes("UTF-8")) &&
           textOf(target) != text)
@@ -190,9 +189,9 @@ object Replicate {
     // historical read at the replica plans full scans; with it, the
     // pruning tier travels with each version). Still O(sidecars), never
     // O(data): every data file already shipped with its version.
-    val tip = srcMs.last._1
+    val tip = srcMs.last.version
     val sidecarVersions =
-      if (withHistory) srcMs.map(_._1) else Seq(tip)
+      if (withHistory) srcMs.map(_.version) else Seq(tip)
     sidecarVersions.foreach(v =>
       copySidecars(s, srcLoc, dstLoc, v, rewritePath, srcRoot, dstRoot))
     shipPolicies(s, srcLoc, dstLoc, srcRoot, dstRoot)

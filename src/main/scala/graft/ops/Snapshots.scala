@@ -52,20 +52,41 @@ object Snapshots {
 
   private[graft] def manifestDir(loc: String) = new Path(loc, "_manifests")
 
-  private[graft] def manifests(s: SparkSession, loc: String): Seq[(Long, Path)] = {
-    val md = manifestDir(loc)
-    val f = fs(s, loc)
-    if (!f.exists(md)) Seq.empty
-    else f.listStatus(md).toSeq
-      .filter(_.getPath.getName.matches("v\\d+\\.txt"))
-      .map(st => (st.getPath.getName.stripPrefix("v").stripSuffix(".txt").toLong,
-        st.getPath))
-      .sortBy(_._1)
+  /** THE listing of `_manifests` — every surviving version, oldest
+    * first, each parsed lazily ([[Version]]) and carrying its publish
+    * time (the manifest's mtime). One `listStatus`: a missing directory
+    * is an empty log, not an extra existence probe. */
+  private[graft] def log(s: SparkSession, loc: String): IndexedSeq[Version] = {
+    val listed =
+      try fs(s, loc).listStatus(manifestDir(loc))
+      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+    listed.iterator.filter(_.getPath.getName.matches("v\\d+\\.txt"))
+      .map(st => new Version(s,
+        st.getPath.getName.stripPrefix("v").stripSuffix(".txt").toLong,
+        Some(st.getPath), st.getModificationTime))
+      .toIndexedSeq.sortBy(_.version)
   }
+
+  /** Version `v` of the table — THE read of a version: one listing, every
+    * field (files, delete vectors, schema, layout, MV cursor) served
+    * lazily from the one object. `v < 0` = the tip; 0 = the empty
+    * pre-history every table starts from (no manifest, no files) — what
+    * lets [[diff]]/[[changeFeed]] treat "since the beginning" as just
+    * another interval. */
+  private[graft] def version(s: SparkSession, loc: String, v: Long = -1L): Version =
+    at(s, loc, log(s, loc), v)
+
+  /** [[version]] `v` of an already-listed [[log]]. */
+  private[graft] def at(s: SparkSession, loc: String, log: Seq[Version],
+                        v: Long): Version =
+    if (v == 0L) new Version(s, 0L, None)
+    else if (v < 0) log.lastOption.getOrElse(new Version(s, 0L, None))
+    else log.find(_.version == v).getOrElse(
+      throw new NoSuchElementException(s"version $v not found at $loc"))
 
   /** Latest committed version, or 0 if the table is empty. */
   def latestVersion(s: SparkSession, loc: String): Long =
-    manifests(s, loc).lastOption.map(_._1).getOrElse(0L)
+    log(s, loc).lastOption.fold(0L)(_.version)
 
   // Plan-time metadata cache. Manifests and sidecars are immutable per
   // (loc, version) once published — every rewrite goes through
@@ -133,23 +154,6 @@ object Snapshots {
     } finally rd.close()
   }
 
-  private[graft] def readManifest(s: SparkSession, p: Path): Seq[String] =
-    manifestLines(s, p).filterNot(l => l.startsWith("#") || l.isEmpty)
-
-  /** Every file a manifest references — data lines plus `#dv=` headers —
-    * NORMALIZED ([[normPath]]). The one helper every liveness/identity
-    * comparison must go through: manifest lines are spelled however the
-    * committing path spelled them (the DSv2 streaming write records
-    * scheme-less strings, listStatus returns scheme-qualified ones), so
-    * comparing raw spellings against filesystem listings silently
-    * misses files — a sweep that "misses" a live file DELETES it. */
-  private[graft] def manifestRefs(s: SparkSession, p: Path): Set[String] = {
-    val lines = manifestLines(s, p)
-    (lines.filter(_.startsWith("#dv=")).map(_.stripPrefix("#dv=")) ++
-      lines.filterNot(l => l.startsWith("#") || l.isEmpty))
-      .map(normPath).toSet
-  }
-
   private def headerValues(header: Seq[String], key: String): Seq[String] = {
     val tag = s"#$key="
     header.collect { case l if l.startsWith(tag) => l.stripPrefix(tag) }
@@ -158,11 +162,12 @@ object Snapshots {
   // ---- the commit primitive ----
 
   /** One published manifest, parsed lazily: the body (live files) and
-    * the header block (`#dv=`, `#schema=`, `#layout=`, …) are read on
-    * first use, and a header wanted after the body is cut from the body
-    * already in hand. No path = the empty pre-history (version 0). */
+    * the header block (`#dv=`, `#schema=`, `#layout=`, `#mvbase=`, …) are
+    * read on first use, and a header wanted after the body is cut from
+    * the body already in hand. No path = the empty pre-history (version
+    * 0). `mtime` = the manifest's publish time, from the listing. */
   private[graft] class Version(s: SparkSession, val version: Long,
-                               path: Option[Path]) {
+                               val path: Option[Path], val mtime: Long = 0L) {
     private var body: Seq[String] = null
     lazy val files: Seq[String] = path.fold(Seq.empty[String]) { p =>
       body = manifestLines(s, p)
@@ -173,11 +178,35 @@ object Snapshots {
     }
     lazy val dvs: Seq[String] = headerValues(header, "dv")
     lazy val schemaJson: Option[String] = headerValues(header, "schema").headOption
-    lazy val schema: Option[StructType] = schemaFromHeader(header)
+    lazy val schema: Option[StructType] =
+      schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
     lazy val layout: Option[String] = headerValues(header, "layout").headOption
+    /** The base version a materialized view's version was refreshed to
+      * (`#mvbase=`, [[Mv]]); None on plain tables. */
+    lazy val mvBase: Option[Long] = headerValues(header, "mvbase").headOption.map(_.toLong)
     def lineage: Option[String] = headerValues(header, "lineage").headOption
-    /** Every file this version references, normalized ([[manifestRefs]]). */
-    lazy val refs: Set[String] = (files ++ dvs).map(normPath).toSet
+    /** This version's rows: its files under its schema, minus its delete
+      * vectors (no files = an empty frame of the schema, if any). */
+    def data: DataFrame =
+      if (files.isEmpty)
+        schema.map(sc => s.createDataFrame(
+            s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc))
+          .getOrElse(s.emptyDataFrame)
+      else applyDv(s, readData(s, files, schema), dvs)
+    /** Every file this version references — data lines plus `#dv=`
+      * headers — NORMALIZED ([[normPath]]). The one set every liveness/
+      * identity comparison must go through: manifest lines are spelled
+      * however the committing path spelled them (the DSv2 streaming write
+      * records scheme-less strings, listStatus returns scheme-qualified
+      * ones), so comparing raw spellings against filesystem listings
+      * silently misses files — a sweep that "misses" a live file DELETES
+      * it. Not kept on the object, so a sweep over a long log holds one
+      * manifest's refs at a time. */
+    def refs: Set[String] = path.fold(Set.empty[String]) { p =>
+      val lines = manifestLines(s, p)
+      (headerValues(lines, "dv") ++ lines.filterNot(l => l.startsWith("#") || l.isEmpty))
+        .map(normPath).toSet
+    }
     /** This version's content, republished by reference: files, delete
       * vectors, schema and layout — never its `#marker=` or `#mvbase=`,
       * which describe the commit that made this version (a copied
@@ -190,9 +219,9 @@ object Snapshots {
     * `_manifests`, reused for the marker check; the newest manifest is
     * read lazily, so a blind replace pays no manifest read at all. */
   private[graft] final class Tip(s: SparkSession, loc: String,
-                                 listing: Seq[(Long, Path)])
-      extends Version(s, listing.lastOption.fold(0L)(_._1),
-        listing.lastOption.map(_._2)) {
+                                 listing: Seq[Version])
+      extends Version(s, listing.lastOption.fold(0L)(_.version),
+        listing.lastOption.flatMap(_.path), listing.lastOption.fold(0L)(_.mtime)) {
     def markers: Set[String] = Snapshots.markers(s, loc, listing)
     /** This tip, refusing an empty table — for verbs that edit content. */
     def committed: Tip =
@@ -235,7 +264,7 @@ object Snapshots {
     * throw otherwise. Returns the published version, or `Done`'s. */
   private[graft] def commit(s: SparkSession, loc: String)(attempt: Tip => Step): Long =
     retry(loc) {
-      val tip = new Tip(s, loc, manifests(s, loc))
+      val tip = new Tip(s, loc, log(s, loc))
       attempt(tip) match {
         case Done(v) => Some(v)
         case p: Publish =>
@@ -246,7 +275,7 @@ object Snapshots {
 
   /** The bounded optimistic retry behind [[commit]], shared with the
     * claim chains that are not table manifests (view definitions,
-    * constraint sets, MV refresh): `round` yields its result, or None
+    * constraint sets): `round` yields its result, or None
     * after losing a claim — it then re-reads and runs again. */
   private[graft] def retry[T](loc: String)(round: => Option[T]): T = {
     var attempt = 0
@@ -312,22 +341,21 @@ object Snapshots {
     * expire) — markers are `#` HEADER lines, so no manifest body (the
     * O(live files) part) is ever read. */
   def markers(s: SparkSession, loc: String): Set[String] =
-    markers(s, loc, manifests(s, loc))
+    markers(s, loc, log(s, loc))
 
   private def markers(s: SparkSession, loc: String,
-                      ms: Seq[(Long, Path)]): Set[String] = {
+                      ms: Seq[Version]): Set[String] = {
     if (ms.isEmpty) return Set.empty
     val key = normPath(loc)
     val cached = markerCache.get(key)
     val (fromV, baseSet) = cached match {
       case (cMax, cCount, set)
-        if ms.count(_._1 <= cMax) == cCount => (cMax, set)
+        if ms.count(_.version <= cMax) == cCount => (cMax, set)
       case _ => (Long.MinValue, Set.empty[String])
     }
-    val out = baseSet ++ ms.iterator.filter(_._1 > fromV).flatMap {
-      case (_, p) => headerValues(headerLines(s, p), "marker")
-    }
-    markerCache.put(key, (ms.last._1, ms.length, out))
+    val out = baseSet ++ ms.iterator.filter(_.version > fromV)
+      .flatMap(m => headerValues(m.header, "marker"))
+    markerCache.put(key, (ms.last.version, ms.length, out))
     out
   }
 
@@ -425,8 +453,9 @@ object Snapshots {
                                            layout: Option[String]): Long = {
     // the derived version's manifest is immutable: read it once, on the
     // first conflict only (the clean-claim fast path never pays it)
-    lazy val oldSet = versionFiles(s, loc, derivedFrom).map(normPath).toSet
-    lazy val oldDvs = versionDvs(s, loc, derivedFrom).map(normPath).toSet
+    lazy val old = version(s, loc, derivedFrom)
+    lazy val oldSet = old.files.map(normPath).toSet
+    lazy val oldDvs = old.dvs.map(normPath).toSet
     commit(s, loc) { tip =>
       if (tip.version == derivedFrom)
         Publish(newFiles, schemaJson = schemaJson, layout = layout, carriedValid = true)
@@ -453,15 +482,6 @@ object Snapshots {
                    else None)
       }
     }
-  }
-
-  /** The bucket layout a version recorded (`#layout=` header), if any —
-    * an O(header) read, same class as [[versionSchema]]. */
-  private[graft] def versionLayout(s: SparkSession, loc: String,
-                                   version: Long): Option[String] = {
-    val v = if (version < 0) latestVersion(s, loc) else version
-    manifests(s, loc).find(_._1 == v)
-      .flatMap { case (_, p) => headerValues(headerLines(s, p), "layout").headOption }
   }
 
   /** Publish already-written files as a REPLACE of exactly the content of
@@ -494,8 +514,9 @@ object Snapshots {
                                           routedLayout: Option[String] = None): Long = {
     // a row-level rewrite preserves the table schema (carried from the
     // version the scan pinned)
-    val schemaJson = versionSchema(s, loc, expectedPrev).map(_.json)
-    val dvs = if (keptFiles.isEmpty) Nil else versionDvs(s, loc, expectedPrev)
+    val prev = version(s, loc, expectedPrev)
+    val schemaJson = prev.schema.map(_.json)
+    val dvs = if (keptFiles.isEmpty) Nil else prev.dvs
     // a ROUTED row-level rewrite keeps the bucket layout: the publish
     // lands at exactly expectedPrev + 1 (the no-overwrite claim IS the
     // proof nothing committed in between, so the header we routed for is
@@ -571,7 +592,7 @@ object Snapshots {
       // re-validate every CARRIED file — an O(table) read inside the
       // commit round, not wrong rows, but the wrong cost class
       val prev = if (version <= 1L) Set.empty[String]
-                 else versionFiles(s, loc, version - 1).map(normPath).toSet
+                 else this.version(s, loc, version - 1).files.map(normPath).toSet
       Constraints.enforce(s, loc, p.files.filterNot(f => prev(normPath(f))),
         p.schemaJson.map(j => DataType.fromJson(j).asInstanceOf[StructType]))
     }
@@ -650,54 +671,11 @@ object Snapshots {
   /** Read a pinned version (default: latest). An empty table (version 0)
     * is an error — there is nothing to infer a schema from. */
   def read(s: SparkSession, loc: String, version: Long = -1L): DataFrame = {
-    val ms = manifests(s, loc)
+    val ms = log(s, loc)
     require(ms.nonEmpty, s"no committed snapshots at $loc")
-    val (v, p) =
-      if (version < 0) ms.last
-      else ms.find(_._1 == version).getOrElse(
-        throw new NoSuchElementException(s"version $version not found at $loc"))
-    val m = new Version(s, v, Some(p))
-    if (m.files.isEmpty)
-      m.schema.map(sc => s.createDataFrame(
-          s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc))
-        .getOrElse(s.emptyDataFrame)
-    else applyDv(s, readData(s, m.files, m.schema), m.dvs)
+    if (version == 0L) throw new NoSuchElementException(s"version 0 not found at $loc")
+    at(s, loc, ms, version).data
   }
-
-  /** The live file list of a pinned version — the unit a DSv2 scan plans
-    * from (see [[graft.sources.v2.SnapshotCatalog]]). Version 0 is the
-    * defined empty pre-history of every table (no manifest, no files) —
-    * what lets [[diff]]/[[changeFeed]] treat "since the beginning" as
-    * just another interval. */
-  private[graft] def versionFiles(s: SparkSession, loc: String, version: Long): Seq[String] = {
-    if (version == 0L) return Nil
-    val ms = manifests(s, loc)
-    ms.find(_._1 == version)
-      .map { case (_, p) => readManifest(s, p) }
-      .getOrElse(throw new NoSuchElementException(
-        s"version $version not found at $loc"))
-  }
-
-  /** The table schema a pinned version recorded (`#schema=` header,
-    * written by every commit since round 10) — readers plan against it
-    * with NO parquet footer inference, files missing later-added columns
-    * read them as null, and an empty CREATEd table has a schema before
-    * its first row. Absent on legacy manifests (readers fall back to
-    * inference). */
-  private[graft] def versionSchema(s: SparkSession, loc: String,
-                                   version: Long): Option[org.apache.spark.sql.types.StructType] = {
-    if (version == 0L) return None
-    manifests(s, loc).find(_._1 == version)
-      .map { case (_, p) => schemaFromHeader(headerLines(s, p)) }
-      .getOrElse(throw new NoSuchElementException(
-        s"version $version not found at $loc"))
-  }
-
-  private def schemaFromHeader(header: Seq[String]): Option[org.apache.spark.sql.types.StructType] =
-    header.find(_.startsWith("#schema="))
-      .map(l => org.apache.spark.sql.types.DataType
-        .fromJson(l.stripPrefix("#schema="))
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
 
   /** Read data files under an explicit schema when the manifest carries
     * one (no footer inference; missing columns → null), inferring only
@@ -859,8 +837,7 @@ object Snapshots {
   /** The provenance a migrated table's v1 recorded (`#lineage=` header),
     * or None for tables not created by [[migrate]]. */
   def lineage(s: SparkSession, loc: String): Option[String] =
-    manifests(s, loc).headOption.flatMap { case (v, p) =>
-      new Version(s, v, Some(p)).lineage }
+    log(s, loc).headOption.flatMap(_.lineage)
 
   /** Roll the table back to `toVersion` by RE-PUBLISHING that version's
     * manifest as the newest commit — the metadata-only undo every
@@ -878,10 +855,10 @@ object Snapshots {
     * CAS loop: concurrent commits lose nothing, the rollback lands on
     * whatever version number the race leaves free. */
   def rollback(s: SparkSession, loc: String, toVersion: Long): Long = {
-    val ms = manifests(s, loc)
-    val src = ms.find(_._1 == toVersion).map { case (v, p) => new Version(s, v, Some(p)) }
-      .getOrElse(throw new NoSuchElementException(
-        s"version $toVersion not found at $loc (expired or never committed)"))
+    // the pre-history and the tip alias are no rollback targets
+    if (toVersion <= 0L)
+      throw new NoSuchElementException(s"version $toVersion not found at $loc")
+    val src = version(s, loc, toVersion)
     val v = commit(s, loc) { tip =>
       if (tip.version == toVersion) Done(toVersion) // already there: auditable no-op
       else src.carry.copy(lineage = Some(s"rollback:$loc@v$toVersion"),
@@ -895,17 +872,6 @@ object Snapshots {
     // O(manifest); best-effort like every auto-stats site.
     if (v != toVersion) autoStats(s, loc)
     v
-  }
-
-  /** The delete-vector files a pinned version applies on read (merge-on-
-    * read deletes, [[commitDeleteMoR]]) — `#dv=` header lines, so the
-    * lookup never reads the manifest body. */
-  private[graft] def versionDvs(s: SparkSession, loc: String, version: Long): Seq[String] = {
-    if (version == 0L) return Nil
-    manifests(s, loc).find(_._1 == version)
-      .map { case (_, p) => headerValues(headerLines(s, p), "dv") }
-      .getOrElse(throw new NoSuchElementException(
-        s"version $version not found at $loc"))
   }
 
   /** Subtract delete-vector rows: anti-join on the parquet metadata
@@ -949,11 +915,14 @@ object Snapshots {
     * null on both sides. */
   def diff(s: SparkSession, loc: String, fromVersion: Long,
            toVersion: Long): DataFrame = {
+    val ms = log(s, loc)
+    diff(s, loc, at(s, loc, ms, fromVersion), at(s, loc, ms, toVersion))
+  }
+
+  private def diff(s: SparkSession, loc: String, from: Version,
+                   to: Version): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val fromF = versionFiles(s, loc, fromVersion)
-    val toF = versionFiles(s, loc, toVersion)
-    val fromDv = versionDvs(s, loc, fromVersion)
-    val toDv = versionDvs(s, loc, toVersion)
+    val (fromF, toF, fromDv, toDv) = (from.files, to.files, from.dvs, to.dvs)
     val removedF = fromF.filterNot(toF.toSet)
     val addedF = toF.filterNot(fromF.toSet)
     // a carried file contributes to the delta iff its delete-vector
@@ -969,7 +938,7 @@ object Snapshots {
       .filter(f => dvChangedTargets.contains(normPath(f)))
     // both sides read under the TO-version schema: the delta is expressed
     // in the destination's shape (added columns null on older files)
-    val toSchema = versionSchema(s, loc, toVersion)
+    val toSchema = to.schema
     def readState(files: Seq[String], dvs: Seq[String]): Option[DataFrame] =
       if (files.isEmpty) None
       else Some(applyDv(s, readData(s, files, toSchema), dvs))
@@ -979,7 +948,7 @@ object Snapshots {
       case (None, None) =>
         // identical manifests — shape the empty result from the pinned
         // version so downstream schema handling is uniform
-        val base = read(s, loc, toVersion)
+        val base = read(s, loc, to.version)
         base.filter(lit(false)).select(
           lit("insert").as("change") +: base.columns.map(col).toIndexedSeq: _*)
       case (a, r) =>
@@ -1172,12 +1141,10 @@ object Snapshots {
     val sp = statsPath(loc, version)
     if (!fs(s, loc).exists(sp)) return (Nil, Nil, files)
     val lines = manifestLines(s, sp)
-    val cols = lines.headOption.filter(_.startsWith("#cols="))
-      .map(_.stripPrefix("#cols=").split(',').toSeq).getOrElse(Nil)
+    val (cols, types) = statsHeader(lines)
     val ci = cols.indexOf(column)
     if (ci < 0) return (Nil, Nil, files)
-    val dt = lines.lift(1).filter(_.startsWith("#types="))
-      .map(_.stripPrefix("#types=").split(',').toSeq).flatMap(_.lift(ci))
+    val dt = types.lift(ci)
       .flatMap(t => try Some(DataType.fromDDL(t))
         catch { case _: Exception => None })
       .getOrElse(return (Nil, Nil, files))
@@ -1577,21 +1544,12 @@ object Snapshots {
                  toVersion: Long = -1L): DataFrame = {
     import org.apache.spark.sql.functions.{col, element_at, input_file_name,
       lit, regexp_extract, typedLit}
-    val to = if (toVersion < 0) latestVersion(s, loc) else toVersion
+    // one listing for the whole interval, each manifest read once
+    val ms = log(s, loc)
+    val to = if (toVersion < 0) ms.lastOption.fold(0L)(_.version) else toVersion
     require(to > fromVersion,
       s"empty feed: toVersion $to must exceed fromVersion $fromVersion")
-    val byV = manifests(s, loc).toMap
-    // each manifest read once for the whole interval
-    val cache = scala.collection.mutable.Map.empty[Long, (Seq[String], Seq[String])]
-    def state(v: Long): (Seq[String], Seq[String]) = cache.getOrElseUpdate(v,
-      if (v == 0L) (Nil, Nil)
-      else {
-        val p = byV.getOrElse(v, throw new NoSuchElementException(
-          s"version $v not found at $loc"))
-        val lines = manifestLines(s, p)
-        (lines.filterNot(l => l.startsWith("#") || l.isEmpty),
-          lines.filter(_.startsWith("#dv=")).map(_.stripPrefix("#dv=")))
-      })
+    val states = (fromVersion to to).map(at(s, loc, ms, _))
     // An append-only step (nothing removed, delete vectors unchanged)
     // contributes exactly its added files' rows as inserts — no exceptAll
     // needed. CONTIGUOUS append-only steps collapse into ONE scan of all
@@ -1600,15 +1558,13 @@ object Snapshots {
     // over a 1000-commit append history plans one scan plus one map
     // lookup, not a 1000-deep union (ChangeFeedPlanSpec pins the plan
     // depth). Replace/DML/DV steps fall back to the per-step [[diff]].
-    val steps: IndexedSeq[Either[(Long, Seq[String]), Long]] =
-      (fromVersion until to).map { v =>
-        val (ff, fd) = state(v)
-        val (tf, td) = state(v + 1)
-        val removed = ff.filterNot(tf.toSet)
-        val added = tf.filterNot(ff.toSet)
-        if (removed.isEmpty && fd == td) Left((v + 1, added))
-        else Right(v + 1)
-      }.toIndexedSeq
+    val steps: IndexedSeq[Either[(Long, Seq[String]), (Version, Version)]] =
+      states.zip(states.tail).map { case (a, b) =>
+        val removed = a.files.filterNot(b.files.toSet)
+        val added = b.files.filterNot(a.files.toSet)
+        if (removed.isEmpty && a.dvs == b.dvs) Left((b.version, added))
+        else Right((a, b))
+      }
     def appendRun(run: Seq[(Long, Seq[String])]): Option[DataFrame] = {
       val files = run.flatMap(_._2)
       if (files.isEmpty) None
@@ -1618,7 +1574,7 @@ object Snapshots {
         val dirToV: Map[String, Long] = run.flatMap { case (ver, fl) =>
           fl.map(f => new Path(f).getParent.getName -> ver)
         }.toMap
-        val df = readData(s, files, versionSchema(s, loc, to))
+        val df = readData(s, files, states.last.schema)
         Some(df.select(lit("insert").as("change") +:
           element_at(typedLit(dirToV),
             regexp_extract(input_file_name(), "/([^/]+)/[^/]+$", 1))
@@ -1637,9 +1593,9 @@ object Snapshots {
         appendRun(steps.slice(i, j).map(_.left.toOption.get)).foreach(parts += _)
         i = j
       } else {
-        val ver = steps(i).toOption.get
-        val d = diff(s, loc, ver - 1, ver)
-        parts += d.select(col("change") +: lit(ver).as("_commit_version") +:
+        val (a, b) = steps(i).toOption.get
+        val d = diff(s, loc, a, b)
+        parts += d.select(col("change") +: lit(b.version).as("_commit_version") +:
           d.columns.filterNot(_ == "change").map(col): _*)
         i += 1
       }
@@ -1658,24 +1614,11 @@ object Snapshots {
   // catalog can expose them as metadata tables (`<cat>.<t>.history`,
   // `<cat>.<t>.files`) the way Iceberg/Delta do.
 
-  /** Manifest publish times: (version, mtime millis), ascending — one
-    * directory listing, no per-file RPCs. */
-  private def manifestTimes(s: SparkSession, loc: String): Seq[(Long, Long)] = {
-    val md = manifestDir(loc)
-    val f = fs(s, loc)
-    if (!f.exists(md)) Seq.empty
-    else f.listStatus(md).toSeq
-      .filter(_.getPath.getName.matches("v\\d+\\.txt"))
-      .map(st => (st.getPath.getName.stripPrefix("v").stripSuffix(".txt").toLong,
-        st.getModificationTime))
-      .sortBy(_._1)
-  }
-
   /** The newest version published at or before `tsMillis` (SQL
     * `TIMESTAMP AS OF`), or None when the table's first commit is later
     * than the asked instant. */
   def versionAtTime(s: SparkSession, loc: String, tsMillis: Long): Option[Long] =
-    manifestTimes(s, loc).takeWhile(_._2 <= tsMillis).lastOption.map(_._1)
+    log(s, loc).takeWhile(_.mtime <= tsMillis).lastOption.map(_.version)
 
   /** Commit history as a DataFrame: one row per version with its publish
     * time, file/delete-vector counts, and the file-set delta against the
@@ -1683,16 +1626,17 @@ object Snapshots {
     * (n, 0), a replace (new, old), a merge-on-read delete (0, 0) with
     * n_dvs rising). Manifest-sized: no data file is opened. */
   def history(s: SparkSession, loc: String): DataFrame = {
-    val times = manifestTimes(s, loc).toMap
-    val rows = manifests(s, loc).foldLeft(
+    val rows = log(s, loc).foldLeft(
       (Seq.empty[(Long, java.sql.Timestamp, Int, Int, Int, Int, Option[String])],
-        Set.empty[String])) { case ((acc, prevFiles), (v, p)) =>
-      val m = new Version(s, v, Some(p))
+        Set.empty[String])) { case ((acc, prevFiles), e) =>
+      // a fresh reader per step: the listed Version would keep every
+      // manifest body of the log alive until the fold ends
+      val m = new Version(s, e.version, e.path)
       val files = m.files.map(normPath).toSet
       // provenance: rollback/publish/branch/migrate commits record their
       // origin in the #lineage= header — surfaced so "what did commit N
       // do" is answerable from the history table alone
-      val row = (v, new java.sql.Timestamp(times.getOrElse(v, 0L)),
+      val row = (m.version, new java.sql.Timestamp(e.mtime),
         files.size, m.dvs.length,
         (files -- prevFiles).size, (prevFiles -- files).size, m.lineage)
       (acc :+ row, files)
@@ -1710,8 +1654,8 @@ object Snapshots {
     val sp = statsPath(loc, version)
     if (!fs(s, loc).exists(sp)) return Map.empty
     val lines = manifestLines(s, sp)
-    val nCols = lines.headOption.filter(_.startsWith("#cols="))
-      .map(_.stripPrefix("#cols=").split(',').length).getOrElse(return Map.empty)
+    val nCols = statsHeader(lines)._1.length
+    if (nCols == 0) return Map.empty
     lines.filterNot(_.startsWith("#")).map(_.split("\t", -1))
       .filter(a => a.length == 2 + 2 * nCols || a.length == 2 + 3 * nCols)
       .flatMap(a => a(1 + 2 * nCols).toLongOption.map(a(0) -> _)).toMap
@@ -1724,16 +1668,16 @@ object Snapshots {
     * counts as covered when its line carries a parseable row count;
     * `proven_rows` is null when any covered file predates counts. */
   def statsMeta(s: SparkSession, loc: String, version: Long = -1L): DataFrame = {
-    val v = if (version < 0) latestVersion(s, loc) else version
-    val total = versionFiles(s, loc, v).length
+    val m = this.version(s, loc, version)
+    val v = m.version
+    val total = m.files.length
     val sp = statsPath(loc, v)
     val f = fs(s, loc)
     val (cols, covered, rows): (Seq[String], Map[String, Int], Option[Long]) =
       if (!f.exists(sp)) (Nil, Map.empty, None)
       else {
         val lines = manifestLines(s, sp)
-        val cs = lines.headOption.filter(_.startsWith("#cols="))
-          .map(_.stripPrefix("#cols=").split(',').toSeq).getOrElse(Nil)
+        val cs = statsHeader(lines)._1
         val widths = Set(2 + 2 * cs.length, 2 + 3 * cs.length)
         val data = lines.filterNot(_.startsWith("#")).map(_.split("\t", -1))
           .filter(a => widths.contains(a.length))
@@ -1744,9 +1688,7 @@ object Snapshots {
     val bloomCols: Set[String] = {
       val hp = BloomSidecar.headerPath(loc, v)
       if (!f.exists(hp)) Set.empty
-      else manifestLines(s, hp).find(_.startsWith("#cols="))
-        .map(_.stripPrefix("#cols=").split(',').map(_.trim).toSet)
-        .getOrElse(Set.empty)
+      else statsHeader(manifestLines(s, hp))._1.map(_.trim).toSet
     }
     val all = (cols ++ bloomCols.toSeq.sorted).distinct
     val out = all.map { c =>
@@ -1778,14 +1720,14 @@ object Snapshots {
       StructField("n_files", IntegerType, nullable = false),
       StructField("bytes", LongType, nullable = false),
       StructField("rows", LongType, nullable = true)))
-    val v = if (version < 0) latestVersion(s, loc) else version
-    val spec = versionLayout(s, loc, v).flatMap(BucketLayout.parse)
-    spec match {
+    val m = this.version(s, loc, version)
+    val v = m.version
+    m.layout.flatMap(BucketLayout.parse) match {
       case None =>
         s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           schema)
       case Some(sp) =>
-        val files = versionFiles(s, loc, v)
+        val files = m.files
         val sizes = fileSizes(s, files)
         // per-file proven rows from the version's stats sidecar, if any
         val rowsByFile: Map[String, Long] = {
@@ -1793,8 +1735,7 @@ object Snapshots {
           if (!fs(s, loc).exists(p)) Map.empty
           else {
             val lines = manifestLines(s, p)
-            val k = lines.headOption.filter(_.startsWith("#cols="))
-              .map(_.stripPrefix("#cols=").split(',').length).getOrElse(0)
+            val k = statsHeader(lines)._1.length
             val widths = Set(2 + 2 * k, 2 + 3 * k)
             lines.filterNot(_.startsWith("#")).map(_.split("\t", -1))
               .filter(a => widths.contains(a.length))
@@ -1834,8 +1775,8 @@ object Snapshots {
     * count the stats sidecar proved (null without one). Sizes come from
     * one directory listing per commit directory, not per-file RPCs. */
   def filesMeta(s: SparkSession, loc: String, version: Long = -1L): DataFrame = {
-    val v = if (version < 0) latestVersion(s, loc) else version
-    val files = versionFiles(s, loc, v)
+    val m = this.version(s, loc, version)
+    val (v, files) = (m.version, m.files)
     val counts = sidecarCounts(s, loc, v)
     val sizes = fileSizes(s, files)
     val rows = files.map { file =>
@@ -1857,6 +1798,15 @@ object Snapshots {
   private def statsPath(loc: String, version: Long) =
     new Path(manifestDir(loc), f"v$version%05d.stats.txt")
 
+  /** A sidecar's header: the `#cols=` list (first line) and the
+    * `#types=` list (second line), each empty when absent. */
+  private def statsHeader(lines: Seq[String]): (Seq[String], Seq[String]) = {
+    def list(i: Int, key: String): Seq[String] =
+      lines.lift(i).filter(_.startsWith(s"#$key="))
+        .map(_.stripPrefix(s"#$key=").split(',').toSeq).getOrElse(Nil)
+    (list(0, "cols"), list(1, "types"))
+  }
+
   /** Compute and attach per-file (min, max, row count) sidecar stats for
     * `cols` to an existing version (typically called right after a
     * commit). INCREMENTAL: files already covered by the PREVIOUS
@@ -1874,7 +1824,8 @@ object Snapshots {
   def attachStats(s: SparkSession, loc: String, version: Long,
                   cols: Seq[String]): Unit = {
     import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min}
-    val files = versionFiles(s, loc, version)
+    val m = this.version(s, loc, version)
+    val files = m.files
     if (files.isEmpty) return
     val f = fs(s, loc)
     val header = s"#cols=${cols.mkString(",")}"
@@ -1895,7 +1846,7 @@ object Snapshots {
     // "planner drops files without opening one" claim holds literally.
     // Inherited from the matching previous sidecar (immutable files keep
     // their types too); one footer open only when starting from scratch.
-    val tableSchema = versionSchema(s, loc, version)
+    val tableSchema = m.schema
     val typesHeader = prevLines.lift(1).filter(_.startsWith("#types="))
       .filter(_ => known.nonEmpty)
       .getOrElse {
@@ -2040,9 +1991,7 @@ object Snapshots {
                                  version: Long): Seq[String] = {
     val sp = statsPath(loc, version)
     if (!fs(s, loc).exists(sp)) return Nil
-    manifestLines(s, sp).headOption.filter(_.startsWith("#cols="))
-      .map(_.stripPrefix("#cols=").split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
+    statsHeader(manifestLines(s, sp))._1.map(_.trim).filter(_.nonEmpty)
   }
 
   /** The subset of `files` whose sidecar range for `column` intersects
@@ -2070,14 +2019,10 @@ object Snapshots {
     val f = fs(s, loc)
     if (!f.exists(sp)) return files
     val lines = manifestLines(s, sp)
-    val cols = lines.headOption.filter(_.startsWith("#cols="))
-      .map(_.stripPrefix("#cols=").split(',').toSeq).getOrElse(Nil)
+    val (cols, types) = statsHeader(lines)
     val ci = cols.indexOf(column)
     if (ci < 0) return files
-    val dtOpt = lines.lift(1).filter(_.startsWith("#types="))
-      .map(_.stripPrefix("#types=").split(',').toSeq)
-      .flatMap(_.lift(ci))
-      .map(org.apache.spark.sql.types.DataType.fromDDL)
+    val dtOpt = types.lift(ci).map(org.apache.spark.sql.types.DataType.fromDDL)
     if (dtOpt.isEmpty) return files // legacy/typeless sidecar: never skip
     val dt = dtOpt.get
     // split with a negative limit: a trailing empty field (null max on the
@@ -2119,10 +2064,7 @@ object Snapshots {
     val sp = statsPath(loc, version)
     if (files.isEmpty || wants.isEmpty || !fs(s, loc).exists(sp)) return None
     val lines = manifestLines(s, sp)
-    val cols = lines.headOption.filter(_.startsWith("#cols="))
-      .map(_.stripPrefix("#cols=").split(',').toSeq).getOrElse(Nil)
-    val types = lines.lift(1).filter(_.startsWith("#types="))
-      .map(_.stripPrefix("#types=").split(',').toSeq).getOrElse(Nil)
+    val (cols, types) = statsHeader(lines)
     if (cols.isEmpty || types.length != cols.length) return None
     // two provable widths: count-bearing (path, (min,max)·c, rowCount)
     // and the full layout with trailing per-column non-null counts;
@@ -2227,8 +2169,9 @@ object Snapshots {
       if (!f.rename(tmp, autoStatsPath(loc))) f.delete(tmp, false)
     }
     invalidateMeta(s, autoStatsPath(loc))
-    val v = latestVersion(s, loc)
-    if (v > 0 && versionFiles(s, loc, v).nonEmpty) {
+    val tip = version(s, loc)
+    if (tip.files.nonEmpty) {
+      val v = tip.version
       if (cols.nonEmpty) attachStats(s, loc, v, cols)
       if (bloomCols.nonEmpty) BloomSidecar.attachBlooms(s, loc, v, bloomCols)
       if (gramCols.nonEmpty) BloomSidecar.attachGramBlooms(s, loc, v, gramCols)
@@ -2283,8 +2226,9 @@ object Snapshots {
     val ndvs = lineAt(3)
     if (stats.isEmpty && blooms.isEmpty && grams.isEmpty && ndvs.isEmpty) return
     try {
-      val v = latestVersion(s, loc)
-      if (v > 0 && versionFiles(s, loc, v).nonEmpty) {
+      val tip = version(s, loc)
+      if (tip.files.nonEmpty) {
+        val v = tip.version
         stats.foreach(cols => attachStats(s, loc, v, cols))
         blooms.foreach(cols => BloomSidecar.attachBlooms(s, loc, v, cols))
         grams.foreach(cols => BloomSidecar.attachGramBlooms(s, loc, v, cols))
@@ -2322,10 +2266,7 @@ object Snapshots {
     val sp = statsPath(loc, version)
     if (n <= 0 || files.isEmpty || !fs(s, loc).exists(sp)) return None
     val lines = manifestLines(s, sp)
-    val cols = lines.headOption.filter(_.startsWith("#cols="))
-      .map(_.stripPrefix("#cols=").split(',').toSeq).getOrElse(Nil)
-    val types = lines.lift(1).filter(_.startsWith("#types="))
-      .map(_.stripPrefix("#types=").split(',').toSeq).getOrElse(Nil)
+    val (cols, types) = statsHeader(lines)
     val ci = cols.indexOf(column)
     if (ci < 0 || types.length != cols.length) return None
     val dt = try DataType.fromDDL(types(ci)) catch { case _: Exception => return None }
@@ -2407,16 +2348,15 @@ object Snapshots {
   def readPruned(s: SparkSession, loc: String, column: String,
                  lo: String, hi: String, version: Long = -1L): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val v = if (version < 0) latestVersion(s, loc) else version
-    val files = versionFiles(s, loc, v)
+    val m = this.version(s, loc, version)
+    val files = m.files
     // an empty version (version 0 / empty table) mirrors read(): there is
     // no schema to infer, and zero-path parquet reads fail obscurely
     if (files.isEmpty) return s.emptyDataFrame
-    val schema = versionSchema(s, loc, v)
-    val keep = statFiles(s, loc, v, files, column, lo, hi)
+    val keep = statFiles(s, loc, m.version, files, column, lo, hi)
     if (keep.isEmpty)
-      readData(s, files, schema).filter(org.apache.spark.sql.functions.lit(false))
-    else applyDv(s, readData(s, keep, schema), versionDvs(s, loc, v))
+      readData(s, files, m.schema).filter(org.apache.spark.sql.functions.lit(false))
+    else applyDv(s, readData(s, keep, m.schema), m.dvs)
       .filter(col(column).between(lo, hi))
   }
 
@@ -2638,7 +2578,7 @@ object Snapshots {
              orphanGraceMs: Long = 10L * 60 * 1000): (Int, Int) = {
     require(retainLast >= 1, "must retain at least the latest version")
     val f = fs(s, loc)
-    val ms = manifests(s, loc)
+    val ms = log(s, loc)
     // a tag is a retention pin: tagged versions survive regardless of
     // age — and a BRANCH's v1 is pinned structurally: it records the
     // fork lineage and the fork state that fastForward and the refs
@@ -2647,13 +2587,13 @@ object Snapshots {
       (if (Refs.parentOf(loc).isDefined) Set(1L) else Set.empty[Long])
     val (dropped, kept) = {
       val tail = ms.takeRight(retainLast)
-      val (pin, drop) = ms.dropRight(retainLast).partition(m => pinned(m._1))
+      val (pin, drop) = ms.dropRight(retainLast).partition(m => pinned(m.version))
       (drop, pin ++ tail)
     }
     // branch manifests carry parent files by reference (the fork), and a
     // fast-forwarded parent carries branch files — both directions pin
     // liveness across the ref boundary, so the sweep consults them. All
-    // sets are normPath'd (manifestRefs): manifest spellings vary by
+    // sets are normPath'd (Version.refs): manifest spellings vary by
     // committing path, listings are scheme-qualified, and a raw-string
     // compare here deletes live files.
     // folded one manifest at a time (mutable set), so peak driver memory
@@ -2661,29 +2601,27 @@ object Snapshots {
     // concatenation a flatMap(…).toSet would stage on a deep history
     val live = {
       val acc = scala.collection.mutable.HashSet.empty[String]
-      kept.foreach { case (_, p) => acc ++= manifestRefs(s, p) }
+      kept.foreach(acc ++= _.refs)
       acc ++= Refs.branchRefs(s, loc)
-      Refs.parentOf(loc).foreach(pl =>
-        manifests(s, pl).foreach { case (_, p) => acc ++= manifestRefs(s, p) })
+      Refs.parentOf(loc).foreach(pl => log(s, pl).foreach(acc ++= _.refs))
       acc
     }
     val expiredRefs = {
       val acc = scala.collection.mutable.HashSet.empty[String]
-      dropped.foreach { case (_, p) =>
-        manifestRefs(s, p).foreach(r => if (!live.contains(r)) acc += r)
-      }
+      dropped.foreach(_.refs.foreach(r => if (!live.contains(r)) acc += r))
       acc
     }
     // a kept version's bloom header may carry older versions' parquets
     // by reference (#base delta chain) — those stay alive with it
     val keptBloomBases: Set[Long] =
-      kept.flatMap { case (v, _) => BloomSidecar.baseVersions(s, loc, v) }.toSet
+      kept.flatMap(m => BloomSidecar.baseVersions(s, loc, m.version)).toSet
     val keptGramBases: Set[Long] =
-      kept.flatMap { case (v, _) => BloomSidecar.gramBaseVersions(s, loc, v) }.toSet
+      kept.flatMap(m => BloomSidecar.gramBaseVersions(s, loc, m.version)).toSet
     val keptNdvBases: Set[Long] =
-      kept.flatMap { case (v, _) => BloomSidecar.ndvBaseVersions(s, loc, v) }.toSet
-    dropped.foreach { case (v, p) =>
-      f.delete(p, false)
+      kept.flatMap(m => BloomSidecar.ndvBaseVersions(s, loc, m.version)).toSet
+    dropped.foreach { m =>
+      val v = m.version
+      m.path.foreach(f.delete(_, false))
       f.delete(statsPath(loc, v), false) // zone-map sidecar goes with it
       f.delete(BloomSidecar.headerPath(loc, v), false) // bloom sidecar too
       f.delete(BloomSidecar.gramHeaderPath(loc, v), false)

@@ -91,9 +91,10 @@ object ZOrder {
                       targetBytes: Long = 128L * 1024 * 1024,
                       numFiles: Int = 0): Long = {
     require(cols.nonEmpty, "clusterSnapshot needs at least one column")
-    val cur = Snapshots.latestVersion(s, loc)
-    val df = Snapshots.read(s, loc, cur)
-    val files = Snapshots.versionFiles(s, loc, cur)
+    val tip = Snapshots.version(s, loc)
+    val cur = tip.version
+    require(cur > 0, s"no committed snapshots at $loc")
+    val (df, files) = (tip.data, tip.files)
     if (files.isEmpty) return cur
     val aggs = cols.flatMap(c => Seq(
       min(col(c).cast("long")), max(col(c).cast("long"))))

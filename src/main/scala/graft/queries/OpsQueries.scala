@@ -670,7 +670,7 @@ object OpsQueries {
     graft.ops.BloomSidecar.attachNdv(s, loc, 1L,
       Seq("ck_mod", "o_orderpriority", "o_orderstatus"))
     val ndv = graft.ops.BloomSidecar.ndvCounts(s, loc, 1L,
-      graft.ops.Snapshots.versionFiles(s, loc, 1L))
+      graft.ops.Snapshots.version(s, loc, 1L).files)
     require(ndv.keySet == Set("ck_mod", "o_orderpriority", "o_orderstatus"),
       s"sidecar must cover all three columns: ${ndv.keySet}")
     ndv.toSeq.sortBy(_._1).toDF("col_name", "ndv")
@@ -837,17 +837,17 @@ object OpsQueries {
     graft.ops.Snapshots.commitAppend(
       o.filter(col("o_orderdate") >= "1999-01-01").coalesce(2), loc)
     graft.ops.Snapshots.setAutoStats(s, loc, Seq("o_orderdate"))
-    val v1Files = graft.ops.Snapshots.versionFiles(s, loc, 1L)
+    val v1Files = graft.ops.Snapshots.version(s, loc, 1L).files
       .map(graft.ops.Snapshots.normPath).toSet
-    val v3Only = (graft.ops.Snapshots.versionFiles(s, loc, 3L)
+    val v3Only = (graft.ops.Snapshots.version(s, loc, 3L).files
       .map(graft.ops.Snapshots.normPath).toSet
-      -- graft.ops.Snapshots.versionFiles(s, loc, 2L)
+      -- graft.ops.Snapshots.version(s, loc, 2L).files
            .map(graft.ops.Snapshots.normPath).toSet)
     // the cutoff lands INSIDE slice 2's range: slice 1 drops as
     // metadata, slice 3 carries untouched, slice 2 alone rewrites
     s.sql("""DELETE FROM graft_snap_dml.orders_ret
             |WHERE o_orderdate < TIMESTAMP_NTZ '1998-01-01 00:00:00'""".stripMargin)
-    val after = graft.ops.Snapshots.versionFiles(s, loc, 4L)
+    val after = graft.ops.Snapshots.version(s, loc, 4L).files
       .map(graft.ops.Snapshots.normPath).toSet
     require(v3Only.subsetOf(after),
       "retention rewrote fully-outside files")
@@ -906,16 +906,15 @@ object OpsQueries {
     graft.ops.Snapshots.commitAppend(
       Tables.orders(s, d).filter(col("o_orderkey") % 3 === 0), loc)
     s.sql("CALL graft_snap_dml.system.attach_stats('orders_lc', 'o_orderkey')")
-    val dataBefore = graft.ops.Snapshots.versionFiles(s, loc, 1L).toSet
+    val dataBefore = graft.ops.Snapshots.version(s, loc, 1L).files.toSet
     s.sql("CALL graft_snap_dml.system.delete_mor('orders_lc', " +
       "\"o_orderstatus = 'F'\")")
-    require(graft.ops.Snapshots.versionFiles(s, loc, 2L).toSet == dataBefore,
+    require(graft.ops.Snapshots.version(s, loc, 2L).files.toSet == dataBefore,
       "CALL delete_mor must not rewrite data files")
-    require(graft.ops.Snapshots.versionDvs(s, loc, 2L).nonEmpty,
+    require(graft.ops.Snapshots.version(s, loc, 2L).dvs.nonEmpty,
       "CALL delete_mor must have committed a delete vector")
     s.sql("CALL graft_snap_dml.system.optimize('orders_lc')")
-    require(graft.ops.Snapshots.versionDvs(
-        s, loc, graft.ops.Snapshots.latestVersion(s, loc)).isEmpty,
+    require(graft.ops.Snapshots.version(s, loc).dvs.isEmpty,
       "CALL optimize must fold delete vectors")
     s.sql("CALL graft_snap_dml.system.expire('orders_lc', 1)")
     s.sql("""SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
@@ -999,12 +998,10 @@ object OpsQueries {
     s.sql("""INSERT INTO graft_snap_dml.orders_def
             |SELECT o_orderkey, o_custkey, o_totalprice
             |FROM orders_src_def WHERE o_orderkey % 3 = 0""".stripMargin)
-    val before = graft.ops.Snapshots.versionFiles(s, loc,
-      graft.ops.Snapshots.latestVersion(s, loc)).toSet
+    val before = graft.ops.Snapshots.version(s, loc).files.toSet
     s.sql("""ALTER TABLE graft_snap_dml.orders_def
             |ADD COLUMN source STRING DEFAULT 'legacy'""".stripMargin)
-    val after = graft.ops.Snapshots.versionFiles(s, loc,
-      graft.ops.Snapshots.latestVersion(s, loc)).toSet
+    val after = graft.ops.Snapshots.version(s, loc).files.toSet
     require(after == before,
       "ADD COLUMN DEFAULT must be a metadata-only commit (no file rewritten)")
     // post-evolution ingest: naming the column, and OMITTING it (the
@@ -1107,7 +1104,7 @@ object OpsQueries {
     graft.ops.Snapshots.commitAppend(o.filter(col("o_orderkey") % 3 === 0), loc)
     val filesBefore = graft.ops.Snapshots.read(s, loc, 1).inputFiles.toSet
     graft.ops.Snapshots.commitDeleteMoR(s, loc, col("o_orderstatus") === "F")
-    val filesAfter = graft.ops.Snapshots.versionFiles(s, loc, 2).toSet
+    val filesAfter = graft.ops.Snapshots.version(s, loc, 2).files.toSet
     require(filesAfter.map(f => new org.apache.hadoop.fs.Path(f).toUri.getPath)
         == filesBefore.map(f => new org.apache.hadoop.fs.Path(f).toUri.getPath),
       "merge-on-read delete must carry every data file unrewritten")
@@ -1141,17 +1138,17 @@ object OpsQueries {
     val thr = o.agg(max(col("o_orderkey"))).head.getLong(0) / 4
     s.sql(s"CALL graft_snap_dml.system.delete_mor('orders_fdv', " +
       s"'o_orderkey <= $thr')")
-    require(graft.ops.Snapshots.versionDvs(s, loc, 2L).nonEmpty,
+    require(graft.ops.Snapshots.version(s, loc, 2L).dvs.nonEmpty,
       "delete_mor must commit a delete vector")
-    val before = graft.ops.Snapshots.versionFiles(s, loc, 2L)
+    val before = graft.ops.Snapshots.version(s, loc, 2L).files
       .map(f => new org.apache.hadoop.fs.Path(f).toUri.getPath).toSet
     val res = s.sql("CALL graft_snap_dml.system.fold_dvs('orders_fdv')")
       .collect()
     require(res.head.getInt(1) == 0, "fold_dvs must leave zero vectors")
     val v = graft.ops.Snapshots.latestVersion(s, loc)
-    require(graft.ops.Snapshots.versionDvs(s, loc, v).isEmpty,
+    require(graft.ops.Snapshots.version(s, loc, v).dvs.isEmpty,
       "the folded version must carry no delete vectors")
-    val after = graft.ops.Snapshots.versionFiles(s, loc, v)
+    val after = graft.ops.Snapshots.version(s, loc, v).files
       .map(f => new org.apache.hadoop.fs.Path(f).toUri.getPath).toSet
     val carried = after.intersect(before)
     require(carried.size >= 2,
@@ -1241,7 +1238,7 @@ object OpsQueries {
         |WHERE o_orderkey BETWEEN 100 AND 500
         |ORDER BY o_orderkey""".stripMargin)
     val planned = plannedParquetFiles(df)
-    val total = graft.ops.Snapshots.versionFiles(s, loc, 1L).length
+    val total = graft.ops.Snapshots.version(s, loc, 1L).files.length
     require(planned < total,
       s"SQL zone maps skipped nothing: planned $planned of $total files")
     df
@@ -1281,7 +1278,7 @@ object OpsQueries {
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         col("o_totalprice"), col("o_orderdate"), col("o_orderpriority"))
       .orderBy(col("o_orderkey"))
-    val total = graft.ops.Snapshots.versionFiles(s, loc, 1L).length
+    val total = graft.ops.Snapshots.version(s, loc, 1L).files.length
     val planned = df.inputFiles.length
     require(planned < total,
       s"blooms skipped nothing: planned $planned of $total files")
@@ -1314,8 +1311,7 @@ object OpsQueries {
         |WHERE o_orderkey BETWEEN 100 AND 500 AND o_custkey BETWEEN 100 AND 200
         |ORDER BY o_orderkey""".stripMargin)
     val planned = plannedParquetFiles(df)
-    val total = graft.ops.Snapshots.versionFiles(
-      s, loc, graft.ops.Snapshots.latestVersion(s, loc)).length
+    val total = graft.ops.Snapshots.version(s, loc).files.length
     require(planned < total,
       s"clustered box skipped nothing: planned $planned of $total files")
     df
@@ -1455,10 +1451,10 @@ object OpsQueries {
       })
     val loc = s"$root/orders_spji"
     val v = graft.ops.Snapshots.latestVersion(s, loc)
-    require(graft.ops.Snapshots.versionLayout(s, loc, v)
+    require(graft.ops.Snapshots.version(s, loc, v).layout
         .contains("bucket,8,o_orderkey"),
       "SQL INSERT must carry the bucket layout header")
-    val unrouted = graft.ops.Snapshots.versionFiles(s, loc, v)
+    val unrouted = graft.ops.Snapshots.version(s, loc, v).files
       .filterNot(f => graft.ops.BucketLayout.bucketOfPath(f).isDefined)
     require(unrouted.isEmpty, s"SQL INSERT landed unrouted files: $unrouted")
     val q =
@@ -1500,7 +1496,7 @@ object OpsQueries {
           Tables.lineitem(s, d).repartition(4), s"$root/lines_bsp")
         s.sql("CALL graft_snap_dml.system.bucket('lines_bsp', 'l_orderkey', 8)")
       })
-    require(graft.ops.Snapshots.versionLayout(s, s"$root/orders_bsp", -1L)
+    require(graft.ops.Snapshots.version(s, s"$root/orders_bsp", -1L).layout
         .contains("bucket,8,o_orderkey"), "split must scale the layout header")
     val q =
       """SELECT o.o_orderkey, l.l_linenumber, o.o_totalprice, l.l_quantity
@@ -1544,7 +1540,7 @@ object OpsQueries {
           s"$root/rets_spjm")
         s.sql("CALL graft_snap_dml.system.bucket('rets_spjm', 'l_orderkey,l_linenumber', 4)")
       })
-    require(graft.ops.Snapshots.versionLayout(s, s"$root/lines_spjm", -1L)
+    require(graft.ops.Snapshots.version(s, s"$root/lines_spjm", -1L).layout
         .contains("bucket,4*4,l_orderkey,l_linenumber"),
       "composite layout header missing")
     val q =
@@ -1632,9 +1628,9 @@ object OpsQueries {
     Seq(s"$root/orders_ctb" -> "bucket,8,o_orderkey",
         s"$root/lines_ctb" -> "bucket,8,l_orderkey").foreach { case (loc, want) =>
       val v = graft.ops.Snapshots.latestVersion(s, loc)
-      require(graft.ops.Snapshots.versionLayout(s, loc, v).contains(want),
+      require(graft.ops.Snapshots.version(s, loc, v).layout.contains(want),
         s"CREATE-declared layout lost by v$v at $loc")
-      val unrouted = graft.ops.Snapshots.versionFiles(s, loc, v)
+      val unrouted = graft.ops.Snapshots.version(s, loc, v).files
         .filterNot(f => graft.ops.BucketLayout.bucketOfPath(f).isDefined)
       require(unrouted.isEmpty, s"unrouted files under a birth layout: $unrouted")
     }
@@ -1750,7 +1746,7 @@ object OpsQueries {
          |WHERE text LIKE '%$needle%'
          |ORDER BY doc_id""".stripMargin)
     val planned = plannedParquetFiles(df)
-    val total = graft.ops.Snapshots.versionFiles(s, loc, 1L).length
+    val total = graft.ops.Snapshots.version(s, loc, 1L).files.length
     require(planned < total,
       s"gram sidecar skipped nothing: planned $planned of $total files")
     df
@@ -1932,7 +1928,7 @@ object OpsQueries {
         |WHERE o_orderkey IN (7, 33, 1234)
         |ORDER BY o_orderkey""".stripMargin)
     val planned = plannedParquetFiles(df)
-    val total = graft.ops.Snapshots.versionFiles(s, loc, 1L).length
+    val total = graft.ops.Snapshots.version(s, loc, 1L).files.length
     require(planned < total,
       s"SQL blooms skipped nothing: planned $planned of $total files")
     df
@@ -2088,8 +2084,7 @@ object OpsQueries {
         |WHERE o_orderkey BETWEEN 100 AND 400
         |ORDER BY o_orderkey""".stripMargin)
     val planned = plannedParquetFiles(df)
-    val total = graft.ops.Snapshots.versionFiles(
-      s, loc, graft.ops.Snapshots.latestVersion(s, loc)).length
+    val total = graft.ops.Snapshots.version(s, loc).files.length
     require(planned < total,
       s"auto-maintained sidecar skipped nothing: planned $planned of $total")
     df
@@ -2133,7 +2128,7 @@ object OpsQueries {
         |ORDER BY f.o_orderkey""".stripMargin)
     val rows = df.collect() // runtime filters only exist at execution
     val kept = graft.sources.v2.RuntimePrunedScan.lastKeptFiles(loc)
-    val total = graft.ops.Snapshots.versionFiles(s, loc, 1L).length
+    val total = graft.ops.Snapshots.version(s, loc, 1L).files.length
     require(kept.exists(_ < total),
       s"runtime join keys skipped nothing: kept $kept of $total files")
     s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq, 1), df.schema)
@@ -2163,7 +2158,7 @@ object OpsQueries {
         |FROM graft_snap_dml.orders_topn
         |ORDER BY o_orderkey DESC LIMIT 100""".stripMargin)
     val planned = plannedParquetFiles(df)
-    val total = graft.ops.Snapshots.versionFiles(s, loc, 1L).length
+    val total = graft.ops.Snapshots.version(s, loc, 1L).files.length
     require(planned < total,
       s"top-n skipped nothing: planned $planned of $total files")
     df

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
-import graft.ops.{BucketLayout, Mv, Snapshots}
+import graft.ops.{Mv, Snapshots}
 
 /** TRANSPARENT materialized-view routing: an `Aggregate` whose shape a
   * registered MV ([[graft.ops.Mv]]) already stores — same base table,
@@ -93,9 +93,8 @@ case class MvRewrite(session: SparkSession) extends Rule[LogicalPlan] {
             // refresh racing this plan could otherwise advance the MV
             // between the header check and the relation build, serving
             // content for a newer base version than the query pinned
-            val tip = Snapshots.latestVersion(session, mvLoc)
-            if (tip <= 0 || !Mv.baseVersionAt(session, mvLoc, tip)
-                .contains(table.snapshotVersion)) None // STALE: never serve
+            val tip = Snapshots.version(session, mvLoc)
+            if (!tip.mvBase.contains(table.snapshotVersion)) None // STALE: never serve
             else build(mvLoc, tip, mapped.flatten)
           }
         }
@@ -131,14 +130,11 @@ case class MvRewrite(session: SparkSession) extends Rule[LogicalPlan] {
   /** Project(MV columns aliased to the aggregate's exprIds) over a
     * relation PINNED at exactly the tip whose freshness header the
     * caller verified. */
-  private def build(mvLoc: String, tip: Long,
+  private def build(mvLoc: String, tip: Snapshots.Version,
                     mapping: Seq[(NamedExpression, String)]): Option[LogicalPlan] = {
-    val schema = Snapshots.versionSchema(session, mvLoc, tip).getOrElse(
-      return None)
-    val mvTable = new SnapshotTable(s"mv:$mvLoc@v$tip", session, mvLoc, tip,
-      pinned = true, Snapshots.versionFiles(session, mvLoc, tip),
-      Some(schema), Snapshots.versionDvs(session, mvLoc, tip),
-      Snapshots.versionLayout(session, mvLoc, tip).flatMap(BucketLayout.parse))
+    if (tip.schema.isEmpty) return None
+    val mvTable = new SnapshotTable(s"mv:$mvLoc@v${tip.version}", session,
+      mvLoc, tip, pinned = true)
     val rel = DataSourceV2Relation.create(mvTable, None, None)
     val byName = rel.output.map(a => a.name -> a).toMap
     val projections = mapping.map { case (ne, mvCol) =>

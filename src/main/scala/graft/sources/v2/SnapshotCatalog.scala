@@ -179,23 +179,19 @@ class SnapshotCatalog extends TableCatalog with ProcedureCatalog
 
   private def tableAt(ident: Identifier, version: Long): Table = {
     val loc = location(ident)
-    val latest = Snapshots.latestVersion(spark, loc)
-    if (latest == 0)
+    val log = Snapshots.log(spark, loc)
+    if (log.isEmpty)
       return metaTable(ident, version).getOrElse(
         throw new NoSuchTableException(
           Seq(catalogName) ++ ident.namespace() :+ ident.name()))
-    val v = if (version < 0) latest else version
     // a stale/expired version surfaces as NoSuchTable with the version
     // spelled out, not a planner-time file-not-found
-    val files =
-      try Snapshots.versionFiles(spark, loc, v)
+    val v =
+      try Snapshots.at(spark, loc, log, version)
       catch { case _: NoSuchElementException => throw new NoSuchTableException(
-        Seq(catalogName) ++ ident.namespace() :+ s"${ident.name()}@v$v") }
-    new SnapshotTable(s"$catalogName.${ident.toString}@v$v", spark, loc, v,
-      pinned = version >= 0, files, Snapshots.versionSchema(spark, loc, v),
-      Snapshots.versionDvs(spark, loc, v),
-      Snapshots.versionLayout(spark, loc, v)
-        .flatMap(graft.ops.BucketLayout.parse))
+        Seq(catalogName) ++ ident.namespace() :+ s"${ident.name()}@v$version") }
+    new SnapshotTable(s"$catalogName.${ident.toString}@v${v.version}", spark,
+      loc, v, pinned = version >= 0)
   }
 
   /** The one V2 function this catalog defines: `bucket(n, key)`, the

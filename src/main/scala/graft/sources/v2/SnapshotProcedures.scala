@@ -218,7 +218,7 @@ object SnapshotProcedures {
     // into (and one fewer manifest header read)
     val v = graft.ops.BucketLayout.splitBuckets(spark, loc, input.getInt(1))
     Snapshots.autoStats(spark, loc)
-    Seq[Any](v, Snapshots.versionLayout(spark, loc, v)
+    Seq[Any](v, Snapshots.version(spark, loc, v).layout
       .flatMap(graft.ops.BucketLayout.parse).map(_.buckets).getOrElse(-1))
   }
 
@@ -235,7 +235,7 @@ object SnapshotProcedures {
     val v = graft.ops.BucketLayout.compactBuckets(spark, loc,
       input.getInt(1).toLong * 1024 * 1024)
     Snapshots.autoStats(spark, loc)
-    Seq[Any](v, Snapshots.versionFiles(spark, loc, v).length)
+    Seq[Any](v, Snapshots.version(spark, loc, v).files.length)
   }
 
   /** O(deleted-from files) delete-vector fold
@@ -251,7 +251,7 @@ object SnapshotProcedures {
     val v = Snapshots.commitFoldDvs(spark, loc,
       targetBytes = input.getInt(1).toLong * 1024 * 1024)
     Snapshots.autoStats(spark, loc)
-    Seq[Any](v, Snapshots.versionDvs(spark, loc, v).length)
+    Seq[Any](v, Snapshots.version(spark, loc, v).dvs.length)
   }
 
   /** Layout advisor — the operator verb behind the `t.buckets` skew
@@ -283,9 +283,9 @@ object SnapshotProcedures {
       StructField("statement", StringType)))) { (loc, input) =>
     val tbl = str(input, 0)
     val targetBytes = input.getInt(1).toLong * 1024 * 1024
-    val v = Snapshots.latestVersion(spark, loc)
-    val spec = Snapshots.versionLayout(spark, loc, v)
-      .flatMap(graft.ops.BucketLayout.parse).getOrElse(
+    val tip = Snapshots.version(spark, loc)
+    val v = tip.version
+    val spec = tip.layout.flatMap(graft.ops.BucketLayout.parse).getOrElse(
         throw new IllegalStateException(
           s"$loc has no active bucket layout to advise on — " +
             "CALL system.bucket first"))

@@ -174,15 +174,15 @@ private[v2] class SnapshotMicroBatchStream(spark: SparkSession, loc: String,
     val from = start.asInstanceOf[VersionOffset].version
     val to = end.asInstanceOf[VersionOffset].version
     val parts = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    var prevFiles = Snapshots.versionFiles(spark, loc, from)
-    var prevDvs = Snapshots.versionDvs(spark, loc, from)
+    // one listing for the whole span, one manifest read per version
+    val log = Snapshots.log(spark, loc)
+    var prev = Snapshots.at(spark, loc, log, from)
     (from + 1 to to).foreach { v =>
-      val files = Snapshots.versionFiles(spark, loc, v)
-      val dvs = Snapshots.versionDvs(spark, loc, v)
-      val removed = prevFiles.filterNot(files.toSet)
-      val appendOnly = removed.isEmpty && prevDvs == dvs
+      val cur = Snapshots.at(spark, loc, log, v)
+      val removed = prev.files.filterNot(cur.files.toSet)
+      val appendOnly = removed.isEmpty && prev.dvs == cur.dvs
       if (appendOnly) {
-        val added = files.filterNot(prevFiles.toSet)
+        val added = cur.files.filterNot(prev.files.toSet)
         // one listStatus per commit directory, not one RPC per file
         val sizes = Snapshots.fileSizes(spark, added)
         added.foreach { f =>
@@ -195,8 +195,7 @@ private[v2] class SnapshotMicroBatchStream(spark: SparkSession, loc: String,
             "skipChangeCommits=true to skip it, or consume via " +
             "Snapshots.changeFeed / SnapshotTail")
       }
-      prevFiles = files
-      prevDvs = dvs
+      prev = cur
     }
     parts.toArray
   }

@@ -53,16 +53,19 @@ import graft.ops.Snapshots
   * rewrites on such versions read DV-subtracted rows, so a SQL UPDATE
   * can never resurrect a deleted row.
   */
-class SnapshotTable(ident: String, spark: SparkSession,
+class SnapshotTable private[graft] (ident: String, spark: SparkSession,
                     private[v2] val loc: String,
-                    val snapshotVersion: Long,
-                    private[v2] val pinned: Boolean, files: Seq[String],
-                    manifestSchema: Option[StructType] = None,
-                    dvs: Seq[String] = Nil,
-                    layout: Option[graft.ops.BucketLayout.Spec] = None)
+                    version: Snapshots.Version,
+                    private[v2] val pinned: Boolean)
   extends Table with SupportsRead with SupportsWrite with SupportsDelete
     with SupportsRowLevelOperations
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
+
+  val snapshotVersion: Long = version.version
+  private val files = version.files
+  private val manifestSchema = version.schema
+  private val dvs = version.dvs
+  private val layout = version.layout.flatMap(graft.ops.BucketLayout.parse)
 
   /** The version's bucket layout, ACTIVE only when every live file
     * carries its `__graft_bucket=<k>` path segment — a commit that mixed

@@ -957,7 +957,7 @@ object AdversarialProbe {
           "SELECT * FROM ins_probe_batch")
         1L
       }
-      require(graft.ops.Snapshots.versionLayout(spark, loc, -1L).isDefined,
+      require(graft.ops.Snapshots.version(spark, loc, -1L).layout.isDefined,
         "probe ingest dropped the layout")
       verdict("sql_insert_vs_api_append", apiW, sqlW, 1.0)
     }
@@ -1046,7 +1046,7 @@ object AdversarialProbe {
       val splitW = time("bucket_split 16 -> 32 (local refine)", reps = 1) {
         graft.ops.BucketLayout.splitBuckets(spark, loc, Seq(32))
       }
-      require(graft.ops.Snapshots.versionLayout(spark, loc, -1L)
+      require(graft.ops.Snapshots.version(spark, loc, -1L).layout
         .contains("bucket,32,id"), "split lost the layout")
       val rebucketW = time("full re-layout at 32 (shuffle rewrite)", reps = 1) {
         graft.ops.BucketLayout.commitBucketed(spark, loc, "id", 32)
@@ -1074,8 +1074,7 @@ object AdversarialProbe {
       val foldW = time("fold_dvs (range-local delete, 16 files)", reps = 1) {
         graft.ops.Snapshots.commitFoldDvs(spark, loc)
       }
-      require(graft.ops.Snapshots.versionDvs(spark, loc,
-        graft.ops.Snapshots.latestVersion(spark, loc)).isEmpty,
+      require(graft.ops.Snapshots.version(spark, loc).dvs.isEmpty,
         "probe fold left vectors behind")
       // the comparator: the same cleanup done the only way that existed
       // before — a full-table rewrite
@@ -1313,7 +1312,7 @@ object AdversarialProbe {
     val ga4 = time("gram-bloom attach x4", reps = 1)(
       { graft.ops.BloomSidecar.attachGramBlooms(spark, gt4, 1L, Seq("text")); 1L })
     verdict("gram_bloom_attach_linear", ga1, ga4, 4.0)
-    val gFiles4 = graft.ops.Snapshots.versionFiles(spark, gt4, 1L)
+    val gFiles4 = graft.ops.Snapshots.version(spark, gt4, 1L).files
     val gKeep = graft.ops.BloomSidecar.gramFiles(
       spark, gt4, 1L, gFiles4, "text", "marker2tail")
     // marker2tail lives only in copy m=2's quarter of the files; the
@@ -1340,10 +1339,9 @@ object AdversarialProbe {
     def refCycle(loc: String): Long = {
       graft.ops.Refs.createBranch(spark, loc, "probe")
       graft.ops.Refs.tag(spark, loc, "pin")
-      val before = graft.ops.Snapshots.versionFiles(
-        spark, loc, graft.ops.Snapshots.latestVersion(spark, loc)).toSet
+      val before = graft.ops.Snapshots.version(spark, loc).files.toSet
       val v = graft.ops.Refs.fastForward(spark, loc, "probe")
-      val after = graft.ops.Snapshots.versionFiles(spark, loc, v).toSet
+      val after = graft.ops.Snapshots.version(spark, loc, v).files.toSet
       if (after != before) { failed = true
         println("REFS zero-copy publish: FAIL (file set changed)") }
       graft.ops.Refs.dropBranch(spark, loc, "probe")
@@ -1390,9 +1388,8 @@ object AdversarialProbe {
     verdict("bucket_fold_ingest_only", bf1, bf4, 1.0)
     // the fold must have CARRIED the big base files (v2 = the bucketed
     // rewrite; v1 is the pre-layout append)
-    val base4 = graft.ops.Snapshots.versionFiles(spark, bt4, 2L).toSet
-    val after4 = graft.ops.Snapshots.versionFiles(spark, bt4,
-      graft.ops.Snapshots.latestVersion(spark, bt4)).toSet
+    val base4 = graft.ops.Snapshots.version(spark, bt4, 2L).files.toSet
+    val after4 = graft.ops.Snapshots.version(spark, bt4).files.toSet
     if (!base4.subsetOf(after4)) { failed = true
       println("BUCKET-FOLD carry: FAIL (base files rewritten)") }
     else println("BUCKET-FOLD carry: PASS (base files carried by reference)")

@@ -6,7 +6,7 @@ import graft.ops.Snapshots
   * the manifest layer's costs are O(live files) driver-side work and
   * never open a data file), and measure the three operations every
   * reader/committer pays: publishing a manifest naming n files, parsing
-  * it back (`versionFiles`), and the incremental commit that carries n
+  * it back (`Snapshots.version(…).files`), and the incremental commit that carries n
   * prior lines plus a delta. Ghost paths are deliberate — the same
   * device ZoneMapTypedSpec uses — because nothing here stats or opens a
   * file, which is exactly the property being certified.
@@ -32,7 +32,7 @@ object ManifestProbe {
       val ghosts = (0 until n).map(i =>
         f"$loc/data/${i % 997}%03d-commit/part-$i%08d-probe.parquet")
       val (_, tPub) = time(Snapshots.publishAppend(spark, loc, ghosts))
-      val ((files, tRead)) = time(Snapshots.versionFiles(spark, loc, 1L))
+      val ((files, tRead)) = time(Snapshots.version(spark, loc, 1L).files)
       require(files.length == n)
       // the incremental commit at n live files: reads the n-line manifest,
       // writes n+1 lines — the steady-state append cost
@@ -70,10 +70,10 @@ object ManifestProbe {
       Runtime.getRuntime.totalMemory - Runtime.getRuntime.freeMemory
     }
     val h0 = heap()
-    val ms = Snapshots.manifests(spark, loc2)
+    val ms = Snapshots.log(spark, loc2)
     val (live, tFold) = time {
       val acc = scala.collection.mutable.HashSet.empty[String]
-      ms.foreach { case (_, mp) => acc ++= Snapshots.manifestRefs(spark, mp) }
+      ms.foreach(acc ++= _.refs)
       acc
     }
     val h1 = heap()
@@ -99,7 +99,7 @@ object ManifestProbe {
       })
       val (latest, tList) = time(Snapshots.latestVersion(spark, loc))
       require(latest == n.toLong)
-      val (tipFiles, tTip) = time(Snapshots.versionFiles(spark, loc, n.toLong))
+      val (tipFiles, tTip) = time(Snapshots.version(spark, loc, n.toLong).files)
       require(tipFiles.length == 1)
       val (mk, tCold) = time(Snapshots.markers(spark, loc))
       require(mk.size == n, s"marker sweep lost entries: ${mk.size}")

@@ -43,7 +43,7 @@ class BloomSidecarSpec extends SparkTestBase {
       .filter(col("k").cast("string").isin(values: _*))
     assert(pruned.orderBy("k").collect().toSeq ===
       plain.orderBy("k").collect().toSeq)
-    val all = Snapshots.versionFiles(spark, loc, 1L).toSet
+    val all = Snapshots.version(spark, loc, 1L).files.toSet
     val kept = pruned.inputFiles.map(Snapshots.normPath).toSet
     assert(kept.subsetOf(all.map(Snapshots.normPath)))
     // 3 values in an 8-file hash layout: at most 3 true files + rare FPs
@@ -64,13 +64,13 @@ class BloomSidecarSpec extends SparkTestBase {
     val pruned = BloomSidecar.readBloomPruned(spark, loc, "name", Seq("name_77"))
     assert(pruned.select("k").collect().map(_.getLong(0)).toSeq === Seq(77L))
     assert(pruned.inputFiles.length <
-      Snapshots.versionFiles(spark, loc, 1L).length)
+      Snapshots.version(spark, loc, 1L).files.length)
   }
 
   test("uncovered column and missing sidecar fall back to the full list") {
     val loc = "/tmp/graft-test/bloom_fallback"
     fixture(loc)
-    val all = Snapshots.versionFiles(spark, loc, 1L)
+    val all = Snapshots.version(spark, loc, 1L).files
     // no sidecar at all
     assert(BloomSidecar.bloomFiles(spark, loc, 1L, all, "k", Seq("7")) === all)
     BloomSidecar.attachBlooms(spark, loc, 1L, Seq("name"))
@@ -87,7 +87,7 @@ class BloomSidecarSpec extends SparkTestBase {
     fixture(loc, n = 2000, parts = 2)
     // cap far below the ~1000 distinct per file: every filter saturates
     BloomSidecar.attachBlooms(spark, loc, 1L, Seq("k"), maxDistinct = 16)
-    val all = Snapshots.versionFiles(spark, loc, 1L)
+    val all = Snapshots.version(spark, loc, 1L).files
     assert(BloomSidecar.bloomFiles(spark, loc, 1L, all, "k", Seq("42")) === all)
     val bits = spark.read
       .parquet(BloomSidecar.dataPath(loc, 1L).toString)
@@ -121,7 +121,7 @@ class BloomSidecarSpec extends SparkTestBase {
       .count() === 1)
     val old = BloomSidecar.readBloomPruned(spark, loc, "k", Seq("1234"))
     assert(old.count() === 1)
-    val all = Snapshots.versionFiles(spark, loc, 2L)
+    val all = Snapshots.version(spark, loc, 2L).files
     assert(BloomSidecar.bloomFiles(spark, loc, 2L, all, "k",
       Seq("100000")).length < all.length)
   }
@@ -131,7 +131,7 @@ class BloomSidecarSpec extends SparkTestBase {
     val loc = "/tmp/graft-test/ndv_incr"
     fixture(loc) // 4000 rows over 8 files; grp has 17 distinct, k 4000
     BloomSidecar.attachNdv(spark, loc, 1L, Seq("grp", "k"))
-    val files1 = Snapshots.versionFiles(spark, loc, 1L)
+    val files1 = Snapshots.version(spark, loc, 1L).files
     val n1 = BloomSidecar.ndvCounts(spark, loc, 1L, files1)
     // sparse regime (17 and 4000 are both <= 2^12/4 per file... k is not:
     // 4000 distinct total but ~500 per file — each per-file summary is
@@ -151,7 +151,7 @@ class BloomSidecarSpec extends SparkTestBase {
       "delta must hold only the fresh file's sketches")
     assert(f.listStatus(v1Path).map(_.getModificationTime).toSeq === v1Mtime,
       "carried sketch parquet must not be rewritten")
-    val files2 = Snapshots.versionFiles(spark, loc, 2L)
+    val files2 = Snapshots.version(spark, loc, 2L).files
     val n2 = BloomSidecar.ndvCounts(spark, loc, 2L, files2)
     assert(n2("grp") == 18L, s"union after append must see the new value: $n2")
     // coverage-or-absent: a pruned subset still answers (per-file
@@ -169,7 +169,7 @@ class BloomSidecarSpec extends SparkTestBase {
     val loc = "/tmp/graft-test/ndv_reattach"
     fixture(loc)
     BloomSidecar.attachNdv(spark, loc, 1L, Seq("grp"))
-    val files = Snapshots.versionFiles(spark, loc, 1L)
+    val files = Snapshots.version(spark, loc, 1L).files
     val before = BloomSidecar.ndvCounts(spark, loc, 1L, files) // caches
     assert(before.keySet == Set("grp"))
     // the sidecar is rewritten at the SAME version with a wider column
@@ -206,7 +206,7 @@ class BloomSidecarSpec extends SparkTestBase {
     assert(f.exists(BloomSidecar.dataPath(loc, 1L)),
       "v1 parquet is referenced by v2's #base and must survive")
     // the kept version still prunes through the surviving chain
-    val all = Snapshots.versionFiles(spark, loc, 2L)
+    val all = Snapshots.version(spark, loc, 2L).files
     assert(BloomSidecar.bloomFiles(spark, loc, 2L, all, "k",
       Seq("1234")).length < all.length)
   }
@@ -253,7 +253,7 @@ class BloomSidecarSpec extends SparkTestBase {
           case _ => 0
         }
     }.sum
-    val total = Snapshots.versionFiles(spark, loc, 1L).length
+    val total = Snapshots.version(spark, loc, 1L).files.length
     assert(planned < total, s"SQL bloom skipped nothing: $planned of $total")
     assert(df.collect().map(_.getLong(0)).toSeq === Seq(1234L))
   }

@@ -51,7 +51,7 @@ class GramBloomSpec extends SparkTestBase {
     val loc = s"$root/basic"
     fixture(loc)
     BloomSidecar.attachGramBlooms(spark, loc, 1L, Seq("text"))
-    val files = Snapshots.versionFiles(spark, loc, 1L)
+    val files = Snapshots.version(spark, loc, 1L).files
     val keep = BloomSidecar.gramFiles(spark, loc, 1L, files, "text", "zebra3x")
     // every true match's file survives (no false negatives) ...
     val truthFiles = trueFiles(loc, "zebra3x")
@@ -67,7 +67,7 @@ class GramBloomSpec extends SparkTestBase {
     val loc = s"$root/case"
     fixture(loc)
     BloomSidecar.attachGramBlooms(spark, loc, 1L, Seq("text"))
-    val files = Snapshots.versionFiles(spark, loc, 1L)
+    val files = Snapshots.version(spark, loc, 1L).files
     // the probe is uppercase, the data lowercase: both sides lowercase
     // before gramming, so the containing file is kept
     val keep = BloomSidecar.gramFiles(spark, loc, 1L, files, "text", "ZEBRA2X")
@@ -78,7 +78,7 @@ class GramBloomSpec extends SparkTestBase {
   test("short needles, uncovered columns, missing sidecars prune nothing") {
     val loc = s"$root/fallback"
     fixture(loc)
-    val files = Snapshots.versionFiles(spark, loc, 1L)
+    val files = Snapshots.version(spark, loc, 1L).files
     // no sidecar yet
     assert(BloomSidecar.gramFiles(spark, loc, 1L, files, "text", "zebra1x") == files)
     BloomSidecar.attachGramBlooms(spark, loc, 1L, Seq("text"))
@@ -129,7 +129,7 @@ class GramBloomSpec extends SparkTestBase {
       "INSERT INTO gbloomcat.autog VALUES (9000, 'freshly inserted zebra7x doc', 9)")
     val v = Snapshots.latestVersion(spark, loc)
     assert(v == 2L)
-    val files = Snapshots.versionFiles(spark, loc, v)
+    val files = Snapshots.version(spark, loc, v).files
     val keep = BloomSidecar.gramFiles(spark, loc, v, files, "text", "zebra7x")
     assert(keep.length < files.length,
       s"post-INSERT version not covered: kept ${keep.length} of ${files.length}")
@@ -151,7 +151,7 @@ class GramBloomSpec extends SparkTestBase {
       BloomSidecar.gramDataPath(loc, v2).toString)
     assert(delta.count() == 1L)
     // probes work across the carried chain
-    val files = Snapshots.versionFiles(spark, loc, v2)
+    val files = Snapshots.version(spark, loc, v2).files
     val keep = BloomSidecar.gramFiles(spark, loc, v2, files, "text", "zebra9x")
     assert(keep.length < files.length)
     assert(trueFiles(loc, "zebra9x")

@@ -60,10 +60,10 @@ class MvBucketedSpec extends SparkTestBase {
     val got = content(Snapshots.read(spark, mv))
     assert(got === recompute(base))
     assert(!got.exists(_._1 == 42L), "fully-deleted key must vanish")
-    val tipFiles = Snapshots.versionFiles(spark, mv, r.mvVersion)
+    val tipFiles = Snapshots.version(spark, mv, r.mvVersion).files
     assert(tipFiles.nonEmpty && !tipFiles.exists(_.contains(s"__graft_bucket=$b42/")),
       s"emptied bucket $b42 must leave no file: $tipFiles")
-    assert(Snapshots.versionLayout(spark, mv, r.mvVersion).contains("bucket,8,key"))
+    assert(Snapshots.version(spark, mv, r.mvVersion).layout.contains("bucket,8,key"))
   }
 
   test("repeated refreshes converge with one-shot application") {

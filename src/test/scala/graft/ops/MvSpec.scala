@@ -102,11 +102,11 @@ class MvSpec extends SparkTestBase {
     // insert then delete the same row: the delta cancels group-by-group
     Snapshots.commitAppend(docs(Seq((9L, "a", 4L))), base)
     Snapshots.commitDelete(spark, base, col("id") === 9L)
-    val files1 = Snapshots.versionFiles(spark, mv, 1L).map(Snapshots.normPath)
+    val files1 = Snapshots.version(spark, mv, 1L).files.map(Snapshots.normPath)
     val r = Mv.refresh(spark, mv)
     assert(r.mvVersion == 2L && r.groupsTouched == 0L)
-    assert(Mv.baseVersionOfTip(spark, mv).contains(3L))
-    assert(Snapshots.versionFiles(spark, mv, 2L).map(Snapshots.normPath)
+    assert(Snapshots.version(spark, mv).mvBase.contains(3L))
+    assert(Snapshots.version(spark, mv, 2L).files.map(Snapshots.normPath)
       == files1, "cursor-only advance must carry files by reference")
     assert(mvContent(mv) == recompute(base))
   }
@@ -145,7 +145,7 @@ class MvSpec extends SparkTestBase {
     val mvTip = Snapshots.latestVersion(spark, mv)
     Snapshots.rollback(spark, mv, 1L) // header shed at version mvTip+1
     assert(Snapshots.latestVersion(spark, mv) == mvTip + 1)
-    assert(Mv.baseVersionOfTip(spark, mv).isEmpty)
+    assert(Snapshots.version(spark, mv).mvBase.isEmpty)
     val e4 = intercept[IllegalStateException](Mv.refresh(spark, mv))
     assert(e4.getMessage.contains("full => true"))
     val rf = Mv.refresh(spark, mv, full = true)
@@ -195,15 +195,15 @@ class MvSpec extends SparkTestBase {
     Snapshots.commitAppend((1L to 400L).map(i => (i, s"k${i % 40}", i % 7))
       .toDF("id", "k", "v"), base)
     Mv.create(spark, mv, base, Seq("k"), Seq("v"), buckets = 8)
-    assert(Snapshots.versionLayout(spark, mv, 1L).contains("bucket,8,k"))
+    assert(Snapshots.version(spark, mv, 1L).layout.contains("bucket,8,k"))
     assert(mvContent(mv) == recompute(base))
-    val files1 = Snapshots.versionFiles(spark, mv, 1L)
+    val files1 = Snapshots.version(spark, mv, 1L).files
       .map(Snapshots.normPath).toSet
     // a delta touching ONE key must replace exactly that key's bucket
     Snapshots.commitAppend(Seq((401L, "k1", 3L)).toDF("id", "k", "v"), base)
     val r = Mv.refresh(spark, mv)
     assert(r.groupsTouched == 1L)
-    val files2 = Snapshots.versionFiles(spark, mv, 2L)
+    val files2 = Snapshots.version(spark, mv, 2L).files
       .map(Snapshots.normPath).toSet
     val hot = spark.range(1).select(
       BucketLayout.bucketId(lit("k1"), 8)).head().getInt(0)
@@ -216,7 +216,7 @@ class MvSpec extends SparkTestBase {
       s"only bucket $hot may change: -$replaced +$added")
     assert(mvContent(mv) == recompute(base))
     // the layout header survives refresh — SPJ plans keep working
-    assert(Snapshots.versionLayout(spark, mv, 2L).contains("bucket,8,k"))
+    assert(Snapshots.version(spark, mv, 2L).layout.contains("bucket,8,k"))
     // deletes fold through the same path: leave k1 the only key of its
     // bucket, then empty its group — the emptied bucket keeps no file
     val mates = spark.range(40).select(concat(lit("k"), col("id")).as("k"))
@@ -230,8 +230,8 @@ class MvSpec extends SparkTestBase {
     Mv.refresh(spark, mv)
     assert(mvContent(mv) == recompute(base))
     assert(!mvContent(mv).exists(_._1 == "k1"))
-    val tipFiles = Snapshots.versionFiles(spark, mv,
-      Snapshots.latestVersion(spark, mv))
+    val tipFiles = Snapshots.version(spark, mv,
+      Snapshots.latestVersion(spark, mv)).files
     assert(tipFiles.nonEmpty && !tipFiles.exists(_.contains(s"__graft_bucket=$hot/")),
       s"emptied bucket $hot must leave no file: $tipFiles")
   }
@@ -246,7 +246,7 @@ class MvSpec extends SparkTestBase {
     Mv.create(spark, mv, base, Seq("k"), Seq("v"), buckets = 8)
     Snapshots.commitDelete(spark, base, col("id") % 7 === 0L)
     Snapshots.commitAppend(rows(401L to 440L), base)
-    val baseManifests = Snapshots.manifests(spark, base).map(_._1)
+    val baseManifests = Snapshots.log(spark, base).map(_.version)
     var foreign = -1L
     (1 to 3).foreach { call =>
       if (call == 2) {
@@ -256,13 +256,13 @@ class MvSpec extends SparkTestBase {
         assert(mvContent(mv).exists(_._2 == 999999L))
       }
       Mv.rewind(spark, mv, 1L)
-      assert(Mv.baseVersionOfTip(spark, mv).contains(1L))
-      assert(Snapshots.versionLayout(spark, mv, -1L).contains("bucket,8,k"))
+      assert(Snapshots.version(spark, mv).mvBase.contains(1L))
+      assert(Snapshots.version(spark, mv, -1L).layout.contains("bucket,8,k"))
       val r = Mv.refresh(spark, mv)
       assert(r.fromBase == 1L && r.toBase == 3L && r.groupsTouched > 0L)
       assert(mvContent(mv) == recompute(base), s"call $call")
     }
-    assert(Snapshots.manifests(spark, base).map(_._1) == baseManifests,
+    assert(Snapshots.log(spark, base).map(_.version) == baseManifests,
       "rewind and refresh never commit to the base")
     val e = intercept[IllegalArgumentException](Mv.rewind(spark, mv, foreign))
     assert(e.getMessage.contains("#mvbase"))
@@ -326,7 +326,7 @@ class MvSpec extends SparkTestBase {
     Replicate.replicate(spark, mv, s"$rep/mv6")
     val d = Mv.readDef(spark, s"$rep/mv6").get
     assert(d.baseLoc == s"$rep/base6", s"re-rooted base: ${d.baseLoc}")
-    assert(Mv.baseVersionOfTip(spark, s"$rep/mv6").contains(1L),
+    assert(Snapshots.version(spark, s"$rep/mv6").mvBase.contains(1L),
       "the #mvbase cursor must survive the manifest rewrite")
     // the replica pair evolves on its own: append + refresh locally
     Snapshots.commitAppend(docs(Seq((3L, "b", 10L))), s"$rep/base6")

@@ -190,7 +190,7 @@ class ReplicateSpec extends SparkTestBase {
       "withHistory must ship every version's sidecars")
     // the shipped historical sidecar actually PRUNES a pinned read at
     // the replica: v1's files classify against the replica's own paths
-    val v1Files = Snapshots.versionFiles(spark, dstAll, 1L)
+    val v1Files = Snapshots.version(spark, dstAll, 1L).files
     val kept = Snapshots.statFiles(spark, dstAll, 1L, v1Files, "id", "1", "5")
     assert(kept.length < v1Files.length,
       s"replicated v1 sidecar must prune: ${kept.length}/${v1Files.length}")
@@ -205,8 +205,8 @@ class ReplicateSpec extends SparkTestBase {
     BucketLayout.commitBucketed(spark, src, Seq("id"), Seq(4))
     Replicate.replicate(spark, src, dst)
     val v = Snapshots.latestVersion(spark, dst)
-    assert(Snapshots.versionLayout(spark, dst, v).contains("bucket,4,id"))
-    assert(Snapshots.versionFiles(spark, dst, v)
+    assert(Snapshots.version(spark, dst, v).layout.contains("bucket,4,id"))
+    assert(Snapshots.version(spark, dst, v).files
       .forall(f => BucketLayout.bucketOfPath(f).isDefined))
     assert(Snapshots.read(spark, dst).count() == 400L)
   }

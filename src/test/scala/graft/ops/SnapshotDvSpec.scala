@@ -267,12 +267,12 @@ class SnapshotDvSpec extends SparkTestBase {
     val after = dataFiles(loc)
     assert(after.get(bigFile) == before.get(bigFile),
       "partial compaction must not rewrite well-sized files")
-    assert(Snapshots.versionFiles(spark, loc, v)
+    assert(Snapshots.version(spark, loc, v).files
       .map(f => new Path(f).toUri.getPath)
       .contains(new Path(bigFile).toUri.getPath))
     // fewer files, same rows: both deletes still effective (one via the
     // carried vector, one folded into the rewrite)
-    val files = Snapshots.versionFiles(spark, loc, v)
+    val files = Snapshots.version(spark, loc, v).files
     assert(files.size < before.size, s"no bin-packing happened: ${files.size}")
     assert(manifestText(loc, v).exists(_.startsWith("#dv=")),
       "the kept file's vector must be carried")
@@ -308,7 +308,7 @@ class SnapshotDvSpec extends SparkTestBase {
     // the carried entry set names ONLY files the new manifest carries —
     // entries for just-folded files are dropped at publish, so DV scans'
     // broadcast builds never re-read dead weight
-    val live = Snapshots.versionFiles(spark, loc, v)
+    val live = Snapshots.version(spark, loc, v).files
       .map(f => new Path(f).toUri.getPath).toSet
     val named = spark.read.parquet(dvs: _*).select("file").distinct()
       .as[String].collect()

@@ -73,8 +73,41 @@ class SnapshotsSpec extends SparkTestBase {
     val loc = "/tmp/graft-test/snap_missing"
     wipe(loc)
     intercept[IllegalArgumentException](Snapshots.read(spark, loc))
+    assert(Snapshots.version(spark, loc).version == 0L)
     Snapshots.commitAppend(Seq(1L).toDF("id"), loc)
     intercept[NoSuchElementException](Snapshots.read(spark, loc, version = 7))
+    // the one version reader: -1 = the tip, 0 = the empty pre-history,
+    // an expired number fails like one never committed
+    Snapshots.commitAppend(Seq(2L).toDF("id"), loc)
+    val tip = Snapshots.version(spark, loc)
+    assert(tip.version == 2L && tip.files.length == 2 && tip.schema.isDefined)
+    assert(tip.files == Snapshots.version(spark, loc, 2L).files)
+    assert(Snapshots.version(spark, loc, 1L).files.length == 1)
+    val pre = Snapshots.version(spark, loc, 0L)
+    assert(pre.version == 0L && pre.files.isEmpty && pre.dvs.isEmpty &&
+      pre.schema.isEmpty && pre.mvBase.isEmpty)
+    Snapshots.expire(spark, loc, retainLast = 1)
+    val e = intercept[NoSuchElementException](Snapshots.version(spark, loc, 1L))
+    assert(e.getMessage == s"version 1 not found at $loc")
+    intercept[NoSuchElementException](Snapshots.version(spark, loc, 7L))
+    assert(Snapshots.version(spark, loc).version == 2L)
+  }
+
+  test("version carries the MV cursor (#mvbase) a create or refresh recorded") {
+    import spark.implicits._
+    val base = "/tmp/graft-test/snap_version_mvbase"
+    val mv = "/tmp/graft-test/snap_version_mvbase_mv"
+    wipe(base); wipe(mv)
+    Snapshots.commitAppend(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), base)
+    assert(Snapshots.version(spark, base).mvBase.isEmpty)
+    Mv.create(spark, mv, base, Seq("k"), Seq("v"))
+    assert(Snapshots.version(spark, mv).mvBase.contains(1L))
+    Snapshots.commitAppend(Seq(("a", 3L)).toDF("k", "v"), base)
+    Snapshots.commitAppend(Seq(("c", 4L)).toDF("k", "v"), base)
+    val r = Mv.refresh(spark, mv)
+    assert(r.mvVersion == 2L && r.fromBase == 1L && r.toBase == 3L)
+    assert(Snapshots.version(spark, mv).mvBase.contains(3L))
+    assert(Snapshots.version(spark, mv, 1L).mvBase.contains(1L))
   }
 
   // URI spellings differ between FileStatus and inputFiles — compare
@@ -378,7 +411,7 @@ class SnapshotsSpec extends SparkTestBase {
     Snapshots.commitAppend(
       (1L to 8000L).toDF("id").repartitionByRange(8, col("id")), loc)
     Snapshots.attachStats(spark, loc, 1L, Seq("id"))
-    val files = Snapshots.versionFiles(spark, loc, 1L)
+    val files = Snapshots.version(spark, loc, 1L).files
     // delete every data file from disk: if pruning opened any footer (for
     // schema or stats) it would now throw — the typed sidecar carries the
     // column's Catalyst type, so the decision is pure driver metadata
@@ -479,7 +512,7 @@ class SnapshotsSpec extends SparkTestBase {
     assert(Snapshots.read(spark, loc, v).agg(sum(col("id"))).head.getLong(0)
       == (1L to 110L).sum)
     // the requested layout header DROPPED: the riders weren't routed for it
-    assert(Snapshots.versionLayout(spark, loc, v).isEmpty)
+    assert(Snapshots.version(spark, loc, v).layout.isEmpty)
 
     // --- a non-append interleave (DELETE) REFUSES: first-committer-wins ---
     val loc2 = "/tmp/graft-test/snapshots/derived_refuse"
@@ -509,7 +542,7 @@ class SnapshotsSpec extends SparkTestBase {
     // plumbed-through path still works uncontended
     val v3 = Snapshots.commitCompaction(spark, loc3)
     assert(Snapshots.read(spark, loc3, v3).count() == 90L)
-    assert(Snapshots.versionDvs(spark, loc3, v3).isEmpty)
+    assert(Snapshots.version(spark, loc3, v3).dvs.isEmpty)
   }
 
   test("commit primitive: a lost claim drops its scratch and re-derives; 64 losses raise") {
@@ -640,7 +673,7 @@ class SnapshotsSpec extends SparkTestBase {
     stamp(loc, dvFiles)
     val folded = Snapshots.commitFoldDvs(spark, loc)
     assertClean(loc, folded)
-    assert(Snapshots.versionDvs(spark, loc, folded).isEmpty)
+    assert(Snapshots.version(spark, loc, folded).dvs.isEmpty)
     assert(Snapshots.read(spark, loc).count() == 2L)
   }
 }

@@ -179,8 +179,8 @@ class SidecarAggSpec extends SparkTestBase {
         case _ => 0
       }
     }.sum
-    val total = Snapshots.versionFiles(spark, loc,
-      Snapshots.latestVersion(spark, loc)).length
+    val total = Snapshots.version(spark, loc,
+      Snapshots.latestVersion(spark, loc)).files.length
     assert(planned < total,
       s"post-fast-forward skipping dead: planned $planned of $total")
     // bucketed exactly-once ingest refreshes coverage per epoch too —

@@ -79,7 +79,7 @@ class SnapshotCatalogSpec extends SparkTestBase {
           case _ => Nil
         }
     }.flatten.map(f => new Path(f).toUri.getPath).toSet
-    val all = Snapshots.versionFiles(spark, loc, 4L)
+    val all = Snapshots.version(spark, loc, 4L).files
     val survivors = Snapshots.statFiles(spark, loc, 4L, all, "id", "120", "180")
       .map(f => new Path(f).toUri.getPath).toSet
     assert(scanned == survivors, s"scan planned $scanned, sidecar says $survivors")

@@ -57,9 +57,9 @@ class SnapshotDdlSpec extends SparkTestBase {
     init()
     val loc = s"$root/t_alter"
     Snapshots.commitAppend(Seq((1L, "a")).toDF("id", "v"), loc)
-    val filesBefore = Snapshots.versionFiles(spark, loc, 1L)
+    val filesBefore = Snapshots.version(spark, loc, 1L).files
     spark.sql("ALTER TABLE sqlddl.t_alter ADD COLUMNS (score BIGINT)")
-    assert(Snapshots.versionFiles(spark, loc, 2L) == filesBefore,
+    assert(Snapshots.version(spark, loc, 2L).files == filesBefore,
       "ADD COLUMNS must not touch data files")
     assert(spark.sql("SELECT id, score FROM sqlddl.t_alter")
       .as[(Long, Option[Long])].collect().toSeq == Seq((1L, None)))
@@ -148,12 +148,12 @@ class SnapshotDdlSpec extends SparkTestBase {
     spark.sql("CREATE TABLE sqlddl.t_def (id BIGINT, v STRING)")
     spark.sql("INSERT INTO sqlddl.t_def VALUES (1, 'a'), (2, 'b')")
     val loc = s"$root/t_def"
-    val before = Snapshots.versionFiles(spark, loc,
-      Snapshots.latestVersion(spark, loc)).toSet
+    val before = Snapshots.version(spark, loc,
+      Snapshots.latestVersion(spark, loc)).files.toSet
     spark.sql("ALTER TABLE sqlddl.t_def ADD COLUMN src STRING DEFAULT 'legacy'")
     // metadata-only: same data files, one more version
-    assert(Snapshots.versionFiles(spark, loc,
-      Snapshots.latestVersion(spark, loc)).toSet == before)
+    assert(Snapshots.version(spark, loc,
+      Snapshots.latestVersion(spark, loc)).files.toSet == before)
     // (a) rows predating the column read the add-time constant
     assert(spark.sql("SELECT src FROM sqlddl.t_def WHERE id = 1")
       .as[String].head() == "legacy")
@@ -193,8 +193,8 @@ class SnapshotDdlSpec extends SparkTestBase {
     spark.sql("CREATE TABLE sqlddl.t_nnap (id BIGINT NOT NULL, v STRING)")
     spark.sql("INSERT INTO sqlddl.t_nnap VALUES (1, 'a')")
     val loc = s"$root/t_nnap"
-    assert(!Snapshots.versionSchema(spark, loc,
-      Snapshots.latestVersion(spark, loc)).get("id").nullable)
+    assert(!Snapshots.version(spark, loc,
+      Snapshots.latestVersion(spark, loc)).schema.get("id").nullable)
     // a parquet-read batch reports nullable even when it holds no nulls:
     // silently widening would permanently erase the DDL-declared NOT NULL
     // (and the null-check elision the optimizer plans on) — refused, the
@@ -205,8 +205,8 @@ class SnapshotDdlSpec extends SparkTestBase {
       Snapshots.commitAppend(batch, loc))
     assert(e.getMessage.contains("NOT NULL"), e.getMessage)
     // header unchanged, SQL path (runtime null check) still works
-    assert(!Snapshots.versionSchema(spark, loc,
-      Snapshots.latestVersion(spark, loc)).get("id").nullable)
+    assert(!Snapshots.version(spark, loc,
+      Snapshots.latestVersion(spark, loc)).schema.get("id").nullable)
     spark.sql("INSERT INTO sqlddl.t_nnap VALUES (2, 'b')")
     assert(spark.table("sqlddl.t_nnap").count() == 2L)
   }

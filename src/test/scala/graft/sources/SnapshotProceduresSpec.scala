@@ -54,12 +54,12 @@ class SnapshotProceduresSpec extends SparkTestBase {
     assert(pruned.inputFiles.length < 8)
     assert(pruned.count() == 101L)
     // merge-on-read delete via CALL: data files untouched
-    val before = Snapshots.versionFiles(spark, loc, 1L).toSet
+    val before = Snapshots.version(spark, loc, 1L).files.toSet
     val v = spark.sql(
       "CALL sqlproc.system.delete_mor('t_stats', 'id BETWEEN 10 AND 20')")
       .as[Long].collect().head
     assert(v == 2L)
-    assert(Snapshots.versionFiles(spark, loc, 2L).toSet == before,
+    assert(Snapshots.version(spark, loc, 2L).files.toSet == before,
       "delete_mor must not rewrite data files")
     assert(Snapshots.read(spark, loc).count() == 8000L - 11L)
   }
@@ -153,7 +153,7 @@ class SnapshotProceduresSpec extends SparkTestBase {
           case _ => 0
         }
     }.sum
-    val total = Snapshots.versionFiles(spark, loc, 2L).length
+    val total = Snapshots.version(spark, loc, 2L).files.length
     assert(planned < total, s"blooms must skip: planned $planned of $total")
   }
 
@@ -199,13 +199,13 @@ class SnapshotProceduresSpec extends SparkTestBase {
     val loc = fresh("t_rb")
     Snapshots.commitAppend((1L to 100L).toDF("id"), loc)
     Snapshots.commitAppend((101L to 200L).toDF("id"), loc)
-    val filesV2 = Snapshots.versionFiles(spark, loc, 2L).toSet
+    val filesV2 = Snapshots.version(spark, loc, 2L).files.toSet
     Snapshots.commitReplace((900L to 905L).toDF("id"), loc) // the bad commit
     val res = spark.sql("CALL sqlproc.system.rollback('t_rb', 2)")
       .as[(Long, Long)].collect().head
     assert(res == ((4L, 2L)))
     // metadata-only: version 4 references EXACTLY version 2's files
-    assert(Snapshots.versionFiles(spark, loc, 4L).toSet == filesV2)
+    assert(Snapshots.version(spark, loc, 4L).files.toSet == filesV2)
     assert(Snapshots.read(spark, loc).as[Long].collect().sorted.toSeq
       == (1L to 200L))
     // non-destructive: the bad version stays time-travelable

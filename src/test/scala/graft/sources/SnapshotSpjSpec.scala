@@ -94,7 +94,7 @@ class SnapshotSpjSpec extends SparkTestBase {
     import spark.implicits._
     fixture()
     Snapshots.commitAppend(Seq((401L, "x")).toDF("id", "v"), s"$root/fact")
-    assert(Snapshots.versionLayout(spark, s"$root/fact", -1L).isEmpty)
+    assert(Snapshots.version(spark, s"$root/fact", -1L).layout.isEmpty)
     noBroadcast {
       val df = spark.sql(
         """SELECT f.id, d.w FROM spjcat.fact f
@@ -137,7 +137,7 @@ class SnapshotSpjSpec extends SparkTestBase {
     // and the join still plans shuffle-free with exact rows
     graft.ops.Snapshots.commitDeleteMoR(spark, s"$root/fact",
       org.apache.spark.sql.functions.col("id") <= 10)
-    assert(Snapshots.versionLayout(spark, s"$root/fact", -1L).isDefined)
+    assert(Snapshots.version(spark, s"$root/fact", -1L).layout.isDefined)
     noBroadcast {
       val df = spark.sql(
         """SELECT f.id, d.w FROM spjcat.fact f
@@ -231,7 +231,7 @@ class SnapshotSpjSpec extends SparkTestBase {
       .toSeq.map(_.getPath.toString)
     val v = Snapshots.publishAppend(spark, loc, newFiles,
       routedLayout = Some("bucket,8,id")) // table header says bucket,4,id
-    assert(Snapshots.versionLayout(spark, loc, v).isEmpty,
+    assert(Snapshots.version(spark, loc, v).layout.isEmpty,
       "a mismatched routing spec must drop the layout, not corrupt it")
     assert(Snapshots.read(spark, loc).count() ==
       Snapshots.read(spark, loc, before).count() + 20)
@@ -272,10 +272,10 @@ class SnapshotSpjSpec extends SparkTestBase {
     spark.sql("INSERT INTO spjcat.fact SELECT id + 500, concat('f', id + 500) " +
       "FROM spjcat.dim WHERE id <= 10")
     val loc = s"$root/fact"
-    assert(Snapshots.versionLayout(spark, loc, -1L).contains("bucket,4,id"),
+    assert(Snapshots.version(spark, loc, -1L).layout.contains("bucket,4,id"),
       "SQL INSERT must carry the layout header")
-    val files = Snapshots.versionFiles(spark, loc,
-      Snapshots.latestVersion(spark, loc))
+    val files = Snapshots.version(spark, loc,
+      Snapshots.latestVersion(spark, loc)).files
     assert(files.forall(f => BucketLayout.bucketOfPath(f).isDefined),
       s"INSERT landed unrouted files: ${files.filterNot(f =>
         BucketLayout.bucketOfPath(f).isDefined)}")
@@ -308,7 +308,7 @@ class SnapshotSpjSpec extends SparkTestBase {
     fixture()
     spark.sql("INSERT OVERWRITE spjcat.dim SELECT id, w * 2 FROM spjcat.dim")
     val loc = s"$root/dim"
-    assert(Snapshots.versionLayout(spark, loc, -1L).contains("bucket,4,id"))
+    assert(Snapshots.version(spark, loc, -1L).layout.contains("bucket,4,id"))
     noBroadcast {
       val df = spark.sql(
         """SELECT f.id, d.w FROM spjcat.fact f
@@ -335,7 +335,7 @@ class SnapshotSpjSpec extends SparkTestBase {
       s"$root/mdim")
     spark.sql("CALL spjcat.system.bucket('mfact', 'tenant,ent', 4)")
     spark.sql("CALL spjcat.system.bucket('mdim', 'tenant,ent', 4)")
-    assert(Snapshots.versionLayout(spark, s"$root/mfact", -1L)
+    assert(Snapshots.version(spark, s"$root/mfact", -1L).layout
       .contains("bucket,4*4,tenant,ent"))
     noBroadcast {
       val df = spark.sql(
@@ -347,7 +347,7 @@ class SnapshotSpjSpec extends SparkTestBase {
     }
     // SQL INSERT routes through the composite layout too
     spark.sql("INSERT INTO spjcat.mfact VALUES (3, 301, 'f301')")
-    assert(Snapshots.versionLayout(spark, s"$root/mfact", -1L)
+    assert(Snapshots.version(spark, s"$root/mfact", -1L).layout
       .contains("bucket,4*4,tenant,ent"), "composite-key INSERT dropped the layout")
     noBroadcast {
       val df2 = spark.sql(
@@ -365,10 +365,10 @@ class SnapshotSpjSpec extends SparkTestBase {
       (1L to 120L).map(i => (i % 4, i, s"v$i")).toDF("a", "b", "v"),
       s"$root/pc")
     spark.sql("CALL spjcat.system.bucket('pc', 'a:2,b:3', 0)")
-    assert(Snapshots.versionLayout(spark, s"$root/pc", -1L)
+    assert(Snapshots.version(spark, s"$root/pc", -1L).layout
       .contains("bucket,2*3,a,b"))
-    val files = Snapshots.versionFiles(spark, s"$root/pc",
-      Snapshots.latestVersion(spark, s"$root/pc"))
+    val files = Snapshots.version(spark, s"$root/pc",
+      Snapshots.latestVersion(spark, s"$root/pc")).files
     assert(files.flatMap(BucketLayout.bucketOfPath).forall(k => k >= 0 && k < 6))
     assert(Snapshots.read(spark, s"$root/pc").count() == 120L)
   }
@@ -505,20 +505,20 @@ class SnapshotSpjSpec extends SparkTestBase {
     // (same RequiresDistributionAndOrdering write as INSERT), kept files
     // carry, and the exact-version publish keeps the #layout header
     spark.sql("UPDATE spjcat.fact SET v = concat(v, '!') WHERE id <= 10")
-    assert(Snapshots.versionLayout(spark, loc, -1L).contains("bucket,4,id"),
+    assert(Snapshots.version(spark, loc, -1L).layout.contains("bucket,4,id"),
       "SQL UPDATE dropped the layout")
     spark.sql("DELETE FROM spjcat.fact WHERE id = 400")
-    assert(Snapshots.versionLayout(spark, loc, -1L).contains("bucket,4,id"),
+    assert(Snapshots.version(spark, loc, -1L).layout.contains("bucket,4,id"),
       "SQL DELETE dropped the layout (canDeleteWhere must refuse under " +
         "a layout so the routed row-level path runs)")
     spark.sql(
       """MERGE INTO spjcat.fact t
         |USING (SELECT 401L AS id, 'f401' AS v) s ON t.id = s.id
         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-    assert(Snapshots.versionLayout(spark, loc, -1L).contains("bucket,4,id"),
+    assert(Snapshots.version(spark, loc, -1L).layout.contains("bucket,4,id"),
       "SQL MERGE dropped the layout")
-    val files = Snapshots.versionFiles(spark, loc,
-      Snapshots.latestVersion(spark, loc))
+    val files = Snapshots.version(spark, loc,
+      Snapshots.latestVersion(spark, loc)).files
     assert(files.forall(f => BucketLayout.bucketOfPath(f).isDefined))
     noBroadcast {
       val df = spark.sql(
@@ -603,11 +603,11 @@ class SnapshotSpjSpec extends SparkTestBase {
       mem.addData(403L); q.processAllAvailable()
     } finally q.stop()
     val loc = s"$root/fact"
-    assert(Snapshots.versionLayout(spark, loc, -1L).contains("bucket,4,id"),
+    assert(Snapshots.version(spark, loc, -1L).layout.contains("bucket,4,id"),
       "streamed epochs must carry the layout")
     assert(Snapshots.read(spark, loc).count() == 403L)
-    val files = Snapshots.versionFiles(spark, loc,
-      Snapshots.latestVersion(spark, loc))
+    val files = Snapshots.version(spark, loc,
+      Snapshots.latestVersion(spark, loc)).files
     assert(files.forall(f => BucketLayout.bucketOfPath(f).isDefined),
       "epoch landed unrouted files")
     noBroadcast {
@@ -623,8 +623,8 @@ class SnapshotSpjSpec extends SparkTestBase {
   test("bucket ids in file paths match the bucket function contract") {
     import spark.implicits._
     fixture()
-    val files = Snapshots.versionFiles(spark, s"$root/dim",
-      Snapshots.latestVersion(spark, s"$root/dim"))
+    val files = Snapshots.version(spark, s"$root/dim",
+      Snapshots.latestVersion(spark, s"$root/dim")).files
     assert(files.nonEmpty && files.forall(f =>
       BucketLayout.bucketOfPath(f).isDefined))
     // every row's writer-side bucket equals its file's path bucket, and
@@ -679,16 +679,16 @@ class SnapshotSpjSpec extends SparkTestBase {
     fixture()
     Snapshots.commitDeleteMoR(spark, s"$root/fact",
       org.apache.spark.sql.functions.col("id") <= 10)
-    assert(Snapshots.versionDvs(spark, s"$root/fact",
-      Snapshots.latestVersion(spark, s"$root/fact")).nonEmpty)
+    assert(Snapshots.version(spark, s"$root/fact",
+      Snapshots.latestVersion(spark, s"$root/fact")).dvs.nonEmpty)
     Snapshots.commitFoldDvs(spark, s"$root/fact")
     val v = Snapshots.latestVersion(spark, s"$root/fact")
-    assert(Snapshots.versionDvs(spark, s"$root/fact", v).isEmpty,
+    assert(Snapshots.version(spark, s"$root/fact", v).dvs.isEmpty,
       "fold_dvs must leave a DV-free version")
-    assert(Snapshots.versionLayout(spark, s"$root/fact", v)
+    assert(Snapshots.version(spark, s"$root/fact", v).layout
       .contains("bucket,4,id"),
       "the routed fold must keep the bucket layout")
-    assert(Snapshots.versionFiles(spark, s"$root/fact", v)
+    assert(Snapshots.version(spark, s"$root/fact", v).files
       .forall(f => BucketLayout.bucketOfPath(f).isDefined))
     noBroadcast {
       val df = spark.sql(
@@ -704,7 +704,7 @@ class SnapshotSpjSpec extends SparkTestBase {
   test("ALTER TABLE ADD COLUMN keeps the layout: metadata-only widen, SPJ intact") {
     fixture()
     spark.sql("ALTER TABLE spjcat.fact ADD COLUMNS (note STRING)")
-    assert(Snapshots.versionLayout(spark, s"$root/fact", -1L)
+    assert(Snapshots.version(spark, s"$root/fact", -1L).layout
       .contains("bucket,4,id"),
       "a pure metadata commit must not drop the layout (files unchanged)")
     noBroadcast {
@@ -762,10 +762,10 @@ class SnapshotSpjSpec extends SparkTestBase {
     } finally sc.removeSparkListener(listener)
     // layout header scaled, every file routed, one-or-more files per
     // refined bucket only where the parent bucket had rows
-    assert(Snapshots.versionLayout(spark, s"$root/fact", -1L)
+    assert(Snapshots.version(spark, s"$root/fact", -1L).layout
       .contains("bucket,8,id"))
-    val files = Snapshots.versionFiles(spark, s"$root/fact",
-      Snapshots.latestVersion(spark, s"$root/fact"))
+    val files = Snapshots.version(spark, s"$root/fact",
+      Snapshots.latestVersion(spark, s"$root/fact")).files
     assert(files.forall(f => BucketLayout.bucketOfPath(f).isDefined))
     // the split table joins an n=8 dim with zero Exchange and exact rows
     Snapshots.commitAppend(
@@ -795,7 +795,7 @@ class SnapshotSpjSpec extends SparkTestBase {
     spark.sql("CALL spjcat.system.bucket('cfact', 'a:2,b:2', 0)")
     // scale only the first column's count: (2,2) -> (4,2)
     BucketLayout.splitBuckets(spark, s"$root/cfact", Seq(4, 2))
-    assert(Snapshots.versionLayout(spark, s"$root/cfact", -1L)
+    assert(Snapshots.version(spark, s"$root/cfact", -1L).layout
       .contains("bucket,4*2,a,b"))
     Snapshots.commitAppend(
       (0L to 16L).flatMap(a => (0 to 4).map(t => (a, s"t$t", a * 100)))
@@ -821,7 +821,7 @@ class SnapshotSpjSpec extends SparkTestBase {
     spark.sql("""CREATE TABLE spjcat.bdim (id BIGINT, w BIGINT)
                 |PARTITIONED BY (bucket(4, id))""".stripMargin)
     // the EMPTY v1 already carries the header and declares partitioning
-    assert(Snapshots.versionLayout(spark, s"$root/bfact", 1L)
+    assert(Snapshots.version(spark, s"$root/bfact", 1L).layout
       .contains("bucket,4,id"))
     val desc = spark.sql("DESCRIBE TABLE spjcat.bfact")
       .collect().map(_.mkString(" ")).mkString("\n")
@@ -835,9 +835,9 @@ class SnapshotSpjSpec extends SparkTestBase {
     spark.sql("INSERT INTO spjcat.bdim SELECT * FROM bdim_src")
     Seq("bfact", "bdim").foreach { t =>
       val v = Snapshots.latestVersion(spark, s"$root/$t")
-      assert(Snapshots.versionLayout(spark, s"$root/$t", v).contains("bucket,4,id"),
+      assert(Snapshots.version(spark, s"$root/$t", v).layout.contains("bucket,4,id"),
         s"$t lost its birth layout by v$v")
-      assert(Snapshots.versionFiles(spark, s"$root/$t", v)
+      assert(Snapshots.version(spark, s"$root/$t", v).files
         .forall(f => BucketLayout.bucketOfPath(f).isDefined))
     }
     noBroadcast {
@@ -860,8 +860,8 @@ class SnapshotSpjSpec extends SparkTestBase {
                 |PARTITIONED BY (bucket(4, id))
                 |AS SELECT * FROM ctas_src""".stripMargin)
     val v = Snapshots.latestVersion(spark, s"$root/bctas")
-    assert(Snapshots.versionLayout(spark, s"$root/bctas", v).contains("bucket,4,id"))
-    assert(Snapshots.versionFiles(spark, s"$root/bctas", v)
+    assert(Snapshots.version(spark, s"$root/bctas", v).layout.contains("bucket,4,id"))
+    assert(Snapshots.version(spark, s"$root/bctas", v).files
       .forall(f => BucketLayout.bucketOfPath(f).isDefined))
     assert(spark.table("spjcat.bctas").count() == 300L)
   }
@@ -878,20 +878,20 @@ class SnapshotSpjSpec extends SparkTestBase {
     (1L to 20L).map(i => (i, s"x$i")).toDF("id", "v")
       .createOrReplaceTempView("brace_src")
     spark.sql("INSERT INTO spjcat.brace SELECT * FROM brace_src")
-    val schemaJson = Snapshots.versionSchema(spark, loc, 2L).get.json
+    val schemaJson = Snapshots.version(spark, loc, 2L).schema.get.json
     val v = Snapshots.publishLayout(spark, loc, 1L, Nil, schemaJson,
       "bucket,4,id")
     // the rider files were routed under the BIRTH spec: the merge must
     // keep that layout (the rider set satisfies it) rather than claiming
     // the unapplied refinement or — worse — silently dropping the
     // CREATE-declared layout entirely
-    assert(Snapshots.versionLayout(spark, loc, v).contains("bucket,2,id"),
-      Snapshots.versionLayout(spark, loc, v).toString)
+    assert(Snapshots.version(spark, loc, v).layout.contains("bucket,2,id"),
+      Snapshots.version(spark, loc, v).layout.toString)
     assert(Snapshots.read(spark, loc).count() == 20L)
     // a later real split applies cleanly and keeps every row
     spark.sql("CALL spjcat.system.bucket_split('brace', 2)")
     val v2 = Snapshots.latestVersion(spark, loc)
-    assert(Snapshots.versionLayout(spark, loc, v2).contains("bucket,4,id"))
+    assert(Snapshots.version(spark, loc, v2).layout.contains("bucket,4,id"))
     assert(Snapshots.read(spark, loc).count() == 20L)
   }
 
@@ -901,16 +901,16 @@ class SnapshotSpjSpec extends SparkTestBase {
     spark.sql("""CREATE TABLE spjcat.bempty (id BIGINT, v STRING)
                 |PARTITIONED BY (bucket(2, id))""".stripMargin)
     spark.sql("CALL spjcat.system.bucket_split('bempty', 4)")
-    assert(Snapshots.versionLayout(spark, s"$root/bempty",
-      Snapshots.latestVersion(spark, s"$root/bempty")).contains("bucket,8,id"))
+    assert(Snapshots.version(spark, s"$root/bempty",
+      Snapshots.latestVersion(spark, s"$root/bempty")).layout.contains("bucket,8,id"))
     // the scaled birth layout still routes the first INSERT
     (1L to 40L).map(i => (i, s"x$i")).toDF("id", "v")
       .createOrReplaceTempView("bempty_src")
     spark.sql("INSERT INTO spjcat.bempty SELECT * FROM bempty_src")
     val v = Snapshots.latestVersion(spark, s"$root/bempty")
-    assert(Snapshots.versionLayout(spark, s"$root/bempty", v)
+    assert(Snapshots.version(spark, s"$root/bempty", v).layout
       .contains("bucket,8,id"))
-    assert(Snapshots.versionFiles(spark, s"$root/bempty", v)
+    assert(Snapshots.version(spark, s"$root/bempty", v).files
       .forall(f => BucketLayout.bucketOfPath(f).isDefined))
     assert(spark.table("spjcat.bempty").count() == 40L)
   }
@@ -920,13 +920,13 @@ class SnapshotSpjSpec extends SparkTestBase {
     wipe(); register()
     spark.sql("""CREATE TABLE spjcat.bmulti (a BIGINT, b STRING, x DOUBLE)
                 |PARTITIONED BY (bucket(2, a), bucket(4, b))""".stripMargin)
-    assert(Snapshots.versionLayout(spark, s"$root/bmulti", 1L)
+    assert(Snapshots.version(spark, s"$root/bmulti", 1L).layout
       .contains("bucket,2*4,a,b"))
     (1L to 200L).map(i => (i, s"s${i % 13}", i * 0.5)).toDF("a", "b", "x")
       .createOrReplaceTempView("bmulti_src")
     spark.sql("INSERT INTO spjcat.bmulti SELECT * FROM bmulti_src")
     val v = Snapshots.latestVersion(spark, s"$root/bmulti")
-    assert(Snapshots.versionLayout(spark, s"$root/bmulti", v)
+    assert(Snapshots.version(spark, s"$root/bmulti", v).layout
       .contains("bucket,2*4,a,b"))
     assert(spark.table("spjcat.bmulti").count() == 200L)
   }

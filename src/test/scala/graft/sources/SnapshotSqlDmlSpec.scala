@@ -261,7 +261,7 @@ class SnapshotSqlDmlSpec extends SparkTestBase {
     Snapshots.commitAppend((201L to 300L).map(i => (i, s"c$i")).toDF("id", "v")
       .coalesce(1), loc)
     Snapshots.setAutoStats(spark, loc, Seq("id"))
-    def vf(v: Long) = Snapshots.versionFiles(spark, loc, v)
+    def vf(v: Long) = Snapshots.version(spark, loc, v).files
     val f1 = vf(1L).head
     val f2 = (vf(2L).toSet -- vf(1L).toSet).head
     val f3 = (vf(3L).toSet -- vf(2L).toSet).head
@@ -300,9 +300,9 @@ class SnapshotSqlDmlSpec extends SparkTestBase {
     Snapshots.commitDeleteMoR(spark, loc, col("id").isin(5L, 250L))
     spark.sql("DELETE FROM sqldml.t_ret_dv WHERE id < 150")
     val v = Snapshots.latestVersion(spark, loc)
-    val dvs = Snapshots.versionDvs(spark, loc, v)
+    val dvs = Snapshots.version(spark, loc, v).dvs
     assert(dvs.nonEmpty, "the carried file's vector must survive")
-    val live = Snapshots.versionFiles(spark, loc, v)
+    val live = Snapshots.version(spark, loc, v).files
       .map(f => new Path(f).toUri.getPath).toSet
     spark.read.parquet(dvs: _*).select("file").distinct()
       .as[String].collect().foreach(f =>
@@ -331,9 +331,9 @@ class SnapshotSqlDmlSpec extends SparkTestBase {
     val before = dataFiles(loc)
     spark.sql("DELETE FROM sqldml.t_ret_bkt WHERE ts < 150")
     val v = Snapshots.latestVersion(spark, loc)
-    assert(Snapshots.versionLayout(spark, loc, v).contains("bucket,4,id"),
+    assert(Snapshots.version(spark, loc, v).layout.contains("bucket,4,id"),
       "retention must not cost the table its layout")
-    val files = Snapshots.versionFiles(spark, loc, v)
+    val files = Snapshots.version(spark, loc, v).files
     assert(files.forall(f => graft.ops.BucketLayout.bucketOfPath(f).isDefined))
     // pure metadata: every surviving file is byte-identical
     files.foreach(f => assert(dataFiles(loc).get(f) == before.get(f),
@@ -344,9 +344,9 @@ class SnapshotSqlDmlSpec extends SparkTestBase {
     // (every bucket file straddles ts=220) — the layout still carries
     spark.sql("DELETE FROM sqldml.t_ret_bkt WHERE ts < 220")
     val v2 = Snapshots.latestVersion(spark, loc)
-    assert(Snapshots.versionLayout(spark, loc, v2).contains("bucket,4,id"),
+    assert(Snapshots.version(spark, loc, v2).layout.contains("bucket,4,id"),
       "routed straddler rewrite must keep the layout")
-    assert(Snapshots.versionFiles(spark, loc, v2)
+    assert(Snapshots.version(spark, loc, v2).files
       .forall(f => graft.ops.BucketLayout.bucketOfPath(f).isDefined))
     assert(spark.sql("SELECT id FROM sqldml.t_ret_bkt").as[Long]
       .collect().sorted.toSeq

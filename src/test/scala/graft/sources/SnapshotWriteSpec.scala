@@ -38,7 +38,7 @@ class SnapshotWriteSpec extends SparkTestBase {
     df.collect().map(_.toString).sorted.toSeq
 
   private def tipDvs(loc: String): Seq[String] =
-    Snapshots.versionDvs(spark, loc, Snapshots.latestVersion(spark, loc))
+    Snapshots.version(spark, loc, Snapshots.latestVersion(spark, loc)).dvs
 
   /** The on-disk contract of `loc`'s tip, then its rows against `model`. */
   private def check(loc: String, model: DataFrame): Unit = {
@@ -50,8 +50,8 @@ class SnapshotWriteSpec extends SparkTestBase {
     assert(leftovers.isEmpty, s"committer leftovers: $leftovers")
 
     val v = Snapshots.latestVersion(spark, loc)
-    val files = Snapshots.versionFiles(spark, loc, v)
-    val manifestFiles = files ++ Snapshots.versionDvs(spark, loc, v)
+    val files = Snapshots.version(spark, loc, v).files
+    val manifestFiles = files ++ Snapshots.version(spark, loc, v).dvs
     val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
     manifestFiles.foreach { f =>
       assert(fs.exists(new Path(f)), s"manifest names a missing file: $f")
@@ -65,7 +65,7 @@ class SnapshotWriteSpec extends SparkTestBase {
         counts.getOrElse(Snapshots.normPath(f), 0L) > 0L, s"0-row file: $f"))
     }
 
-    Snapshots.versionLayout(spark, loc, v).flatMap(BucketLayout.parse)
+    Snapshots.version(spark, loc, v).layout.flatMap(BucketLayout.parse)
       .foreach { spec =>
         files.foreach { f =>
           val bucket = BucketLayout.bucketOfPath(f)
@@ -119,18 +119,18 @@ class SnapshotWriteSpec extends SparkTestBase {
     Snapshots.commitAppend(rows(1 to 60).toDF("k", "g", "x"), loc)
     BucketLayout.commitBucketed(spark, loc, Seq("k"), Seq(4))
     var model = rows(1 to 60)
-    assert(Snapshots.versionLayout(spark, loc, -1L).contains("bucket,4,k"))
+    assert(Snapshots.version(spark, loc, -1L).layout.contains("bucket,4,k"))
     check(loc, model.toDF("k", "g", "x"))
 
     // unsorted input: the writer's routing still lands every row home
     BucketLayout.appendBucketed(spark, loc,
       rows(61 to 90).reverse.toDF("k", "g", "x"))
     model = model ++ rows(61 to 90)
-    assert(Snapshots.versionLayout(spark, loc, -1L).contains("bucket,4,k"))
+    assert(Snapshots.version(spark, loc, -1L).layout.contains("bucket,4,k"))
     check(loc, model.toDF("k", "g", "x"))
 
     BucketLayout.splitBuckets(spark, loc, Seq(8))
-    assert(Snapshots.versionLayout(spark, loc, -1L).contains("bucket,8,k"))
+    assert(Snapshots.version(spark, loc, -1L).layout.contains("bucket,8,k"))
     check(loc, model.toDF("k", "g", "x"))
   }
 
@@ -151,7 +151,7 @@ class SnapshotWriteSpec extends SparkTestBase {
     BucketLayout.commitBucketed(spark, bucketed, Seq("k"), Seq(4))
     spark.sql("INSERT INTO swcat.sql_bucketed SELECT id, concat('g', id % 3), " +
       "id * 10 FROM range(21, 41)")
-    assert(Snapshots.versionLayout(spark, bucketed, -1L).contains("bucket,4,k"))
+    assert(Snapshots.version(spark, bucketed, -1L).layout.contains("bucket,4,k"))
     check(bucketed, rows(1 to 40).toDF("k", "g", "x"))
   }
 
@@ -182,7 +182,7 @@ class SnapshotWriteSpec extends SparkTestBase {
     val empty = rows(1 to 5).toDF("k", "g", "x").filter($"k" < 0)
       .repartition(4)
     val v = Snapshots.commitAppend(empty, loc)
-    assert(Snapshots.versionFiles(spark, loc, v).isEmpty)
+    assert(Snapshots.version(spark, loc, v).files.isEmpty)
     val back = Snapshots.read(spark, loc)
     assert(back.schema == empty.schema)
     assert(back.count() == 0L)

@@ -26,8 +26,8 @@ class DvScanMapSpec extends SparkTestBase {
     // MoR-delete rows spread over every file → DV entries name all 4 files
     Snapshots.commitDeleteMoR(spark, loc, col("id") % 7 === 0)
     val v = Snapshots.latestVersion(spark, loc)
-    val files = Snapshots.versionFiles(spark, loc, v)
-    val dvs = Snapshots.versionDvs(spark, loc, v)
+    val files = Snapshots.version(spark, loc, v).files
+    val dvs = Snapshots.version(spark, loc, v).dvs
     assert(files.length == 4 && dvs.nonEmpty)
     val allNorm = files.map(SnapshotRowScan.norm)
     // full keep: every DV-bearing file appears, positions sorted

@@ -50,8 +50,8 @@ class SnapshotSinkSpec extends SparkTestBase {
       mem.addData(53L); q.processAllAvailable()
     } finally q.stop()
     // every epoch's files are bucket-routed, so the layout survived
-    assert(Snapshots.versionLayout(spark, loc,
-      Snapshots.latestVersion(spark, loc)).contains("bucket,4,id"))
+    assert(Snapshots.version(spark, loc,
+      Snapshots.latestVersion(spark, loc)).layout.contains("bucket,4,id"))
     assert(Snapshots.read(spark, loc).count() == 53L)
     // at-least-once replay of a committed epoch commits nothing
     assert(SnapshotSink.commitBatchBucketed(
@@ -230,7 +230,7 @@ class SnapshotSinkSpec extends SparkTestBase {
     // linear history: every version from 1 to latest published and reads
     val vmax = Snapshots.latestVersion(spark, loc)
     (1L to vmax).foreach(v =>
-      assert(Snapshots.versionFiles(spark, loc, v) != null))
+      assert(Snapshots.version(spark, loc, v).files != null))
     // no lost epoch, no lost insert, no double-publish: the final state
     // is exactly the seed + 10 streamed ids + 5 inserted ids, once each
     val want = (Seq(-1L) ++ (0 until 5).flatMap(i => Seq(i * 10L, i * 10L + 1L))
