@@ -113,7 +113,7 @@ object BloomSidecar {
                    maxDistinct: Int = 1 << 21): Unit = {
     require(cols.nonEmpty, "attachBlooms needs at least one column")
     val bloomU = udaf(new BloomAgg(fpp, maxDistinct), Encoders.LONG)
-    val normU = udf((p: String) => Snapshots.normPath(p))
+    val normU = udf((p: String) => Snapshots.normUrl(p))
     attachCore(s, loc, version, cols, fpp,
       headerPath(loc, _), dataPath(loc, _), extraHeader = "",
       build = { fresh =>
@@ -151,7 +151,7 @@ object BloomSidecar {
     require(cols.nonEmpty, "attachGramBlooms needs at least one column")
     require(gram >= 2 && gram <= 16, s"gram length $gram out of range")
     val bloomU = udaf(new BloomAgg(fpp, maxDistinct), Encoders.LONG)
-    val normU = udf((p: String) => Snapshots.normPath(p))
+    val normU = udf((p: String) => Snapshots.normUrl(p))
     val gramsU = udf { t: String =>
       if (t == null || t.length < gram) Array.empty[String]
       else t.toLowerCase(java.util.Locale.ROOT)
@@ -192,7 +192,7 @@ object BloomSidecar {
     require(cols.nonEmpty, "attachNdv needs at least one column")
     require(p >= 4 && p <= 16, s"HLL precision $p out of [4, 16]")
     graft.functions.GraftFunctions.register(s) // idempotent
-    val normU = udf((pth: String) => Snapshots.normPath(pth))
+    val normU = udf((pth: String) => Snapshots.normUrl(pth))
     attachCore(s, loc, version, cols, fpp = 0.0,
       ndvHeaderPath(loc, _), ndvDataPath(loc, _),
       extraHeader = s"#p=$p\n",
@@ -534,6 +534,6 @@ object BloomSidecar {
       df.filter(col(column).cast("string").isin(values: _*))
     if (keep.isEmpty)
       residual(Snapshots.readData(s, files, m.schema)).filter(lit(false))
-    else residual(Snapshots.applyDv(s, Snapshots.readData(s, keep, m.schema), m.dvs))
+    else residual(Snapshots.readLive(s, keep, m.schema, m.dvs))
   }
 }

@@ -249,7 +249,7 @@ object BucketLayout {
         val kept = files.filterNot(multi.toSet)
         val dataDir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
         val newFiles = writeBucketed(
-          Snapshots.applyDv(s, Snapshots.readData(s, multi, tip.schema), tip.dvs),
+          Snapshots.readLive(s, multi, tip.schema, tip.dvs),
           spec, dataDir)
         // carried files keep their vectors, FILTERED to entries naming
         // kept files — entries for just-folded files are dead weight
@@ -396,8 +396,7 @@ object BucketLayout {
     val slots = math.max(1, s.sparkContext.defaultParallelism)
     scoped.conf.set("spark.sql.files.maxPartitionBytes",
       math.max(4L * 1024 * 1024, totalBytes / (2L * slots)).toString)
-    val df = Snapshots.applyDv(scoped,
-      Snapshots.readData(scoped, files, schema), dvs)
+    val df = Snapshots.readLive(scoped, files, schema, dvs)
     val dataDir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
     val f = dataDir.getFileSystem(s.sparkContext.hadoopConfiguration)
     val newFiles = Snapshots.writeData(df.sortWithinPartitions(

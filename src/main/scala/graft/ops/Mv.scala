@@ -261,7 +261,9 @@ object Mv {
     // landed (each round re-derives them from its own tip)
     var from, to, touched = 0L
     val v = Snapshots.commit(s, mvLoc) { tip =>
-      val vb = Snapshots.latestVersion(s, d.baseLoc)
+      // one listing of the base per round: its tip and the feed's versions
+      val baseLog = Snapshots.log(s, d.baseLoc)
+      val vb = baseLog.lastOption.fold(0L)(_.version)
       to = vb
       val tipLayout = tip.layout.flatMap(BucketLayout.parse)
       if (full) {
@@ -282,7 +284,8 @@ object Mv {
           // cancelled groups are already out of the delta, so
           // `groups_touched` counts groups CHANGED and pure churn takes
           // the carry path
-          val dAgg = deltaAggregate(Snapshots.changeFeed(s, d.baseLoc, v0, vb),
+          val dAgg = deltaAggregate(
+            Snapshots.changeFeed(s, d.baseLoc, baseLog, v0, vb),
             d.keys, d.sums).localCheckpoint(true)
           touched = dAgg.count()
           if (touched == 0L)

@@ -169,9 +169,8 @@ object Replicate {
       val (freshDvs, freshData) = fresh.partition(dvRefs)
       copyFiles(s, freshData.map(n => n -> rewritePath(n)), numTasks)
       // delete vectors are CONTENT-rewritten, not byte-copied: their
-      // `file` column names source data files in the source scan's
-      // qualified spelling — the replica's anti-join must see ITS OWN
-      // files' spelling or deleted rows resurrect
+      // `file` column names source data files — the replica's readers
+      // must see ITS OWN files' paths or deleted rows resurrect
       freshDvs.foreach(dv =>
         copyDvRewritten(s, dv, rewritePath(dv), srcRoot, dstRoot))
       val text = rewrittenText(m.path.get)
@@ -223,13 +222,12 @@ object Replicate {
   /** One delete-vector sidecar, content-rewritten for the replica: each
     * `file` value maps to the SAME relative path under the replica root
     * (`dstRoot` — always the PARENT table's root, so a branch DV naming
-    * fork-carried parent files rewrites correctly too), spelled exactly
-    * as the replica's scan will spell `_metadata.file_path`
-    * (filesystem-qualified), so the read-side anti-join subtracts
-    * precisely the same rows. Written to the exact target path the
-    * rewritten manifest names (atomic rename of the one tiny part
-    * file); an existing target is a finished prior attempt — skipped,
-    * resume-safe. */
+    * fork-carried parent files rewrites correctly too), filesystem-
+    * qualified, so the replica's readers (which key both the vector and
+    * their own files by normalized path) subtract precisely the same
+    * rows. Written to the exact target path the rewritten manifest names
+    * (atomic rename of the one tiny part file); an existing target is a
+    * finished prior attempt — skipped, resume-safe. */
   private def copyDvRewritten(s: SparkSession, from: String, to: String,
                               srcRoot: String, dstRoot: String): Unit = {
     import org.apache.spark.sql.functions.udf
@@ -240,14 +238,14 @@ object Replicate {
       dfs.makeQualified(new Path(dstRoot)).toString
     val srcPrefix = srcRoot
     val requalify = udf { p: String =>
-      val n = Snapshots.normPath(p)
+      val n = Snapshots.normUrl(p)
       require(n.startsWith(srcPrefix + "/"),
         s"delete vector names a file outside the source root: $p")
       qualifiedDstRoot + n.stripPrefix(srcPrefix)
     }
     val tmp = new Path(toP.getParent,
       s"_tmp_dv_${java.util.UUID.randomUUID()}")
-    s.read.parquet(from)
+    DeleteVectors.read(s, Seq(from))
       .withColumn("file", requalify(org.apache.spark.sql.functions.col("file")))
       .coalesce(1)
       .write.parquet(tmp.toString)

@@ -192,7 +192,7 @@ object Snapshots {
         schema.map(sc => s.createDataFrame(
             s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc))
           .getOrElse(s.emptyDataFrame)
-      else applyDv(s, readData(s, files, schema), dvs)
+      else readLive(s, files, schema, dvs)
     /** Every file this version references — data lines plus `#dv=`
       * headers — NORMALIZED ([[normPath]]). The one set every liveness/
       * identity comparison must go through: manifest lines are spelled
@@ -874,23 +874,22 @@ object Snapshots {
     v
   }
 
-  /** Subtract delete-vector rows: anti-join on the parquet metadata
-    * identity (file path, row index) — exactly how every merge-on-read
-    * table format resolves DVs at scan time. The DV relation is broadcast
-    * (DVs are bounded small by contract: [[commitCompaction]] folds them
-    * into data files, so they never accumulate past a compaction cycle);
-    * with no DVs the input is returned untouched — zero overhead on the
-    * common path. */
-  private[graft] def applyDv(s: SparkSession, df: DataFrame,
-                      dvs: Seq[String]): DataFrame = {
-    if (dvs.isEmpty) return df
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val dv = broadcast(s.read.parquet(dvs: _*))
-    df.withColumn("__graft_fp", col("_metadata.file_path"))
-      .withColumn("__graft_ri", col("_metadata.row_index"))
-      .join(dv, col("__graft_fp") === dv("file") &&
-        col("__graft_ri") === dv("pos"), "left_anti")
-      .drop("__graft_fp", "__graft_ri")
+  /** The rows of `files` under `schema`, minus the rows the delete
+    * vectors `dvs` name: the vectors' entries for these files are read
+    * on the driver ([[DeleteVectors.positions]], no Spark job) and
+    * probed per row on parquet's (`_metadata.file_path`,
+    * `_metadata.row_index`) identity, the identity the vector was
+    * recorded from. With no entry for these files the plain read is
+    * returned: zero overhead on the common path. Vectors stay small
+    * because compaction and `fold_dvs` fold them into data files. */
+  private[graft] def readLive(s: SparkSession, files: Seq[String],
+                              schema: Option[StructType], dvs: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val df = readData(s, files, schema)
+    if (dvs.isEmpty) df
+    else DeleteVectors.subtract(df,
+      DeleteVectors.positions(s, dvs, files.map(normPath).toSet),
+      col("_metadata.file_path"), col("_metadata.row_index"))
   }
 
   /** Exact multiset row-level delta `from → to`: one row per inserted /
@@ -930,10 +929,7 @@ object Snapshots {
     // delta targets (reading only the tiny DV files), and re-read exactly
     // those on both sides — still O(changed data), never O(table)
     val dvDelta = toDv.filterNot(fromDv.toSet) ++ fromDv.filterNot(toDv.toSet)
-    val dvChangedTargets: Set[String] =
-      if (dvDelta.isEmpty) Set.empty
-      else s.read.parquet(dvDelta.distinct: _*).select(col("file")).distinct()
-        .collect().map(r => normPath(r.getString(0))).toSet
+    val dvChangedTargets = DeleteVectors.positions(s, dvDelta).keySet
     val commonChanged = fromF.filter(toF.toSet)
       .filter(f => dvChangedTargets.contains(normPath(f)))
     // both sides read under the TO-version schema: the delta is expressed
@@ -941,7 +937,7 @@ object Snapshots {
     val toSchema = to.schema
     def readState(files: Seq[String], dvs: Seq[String]): Option[DataFrame] =
       if (files.isEmpty) None
-      else Some(applyDv(s, readData(s, files, toSchema), dvs))
+      else Some(readLive(s, files, toSchema, dvs))
     val fromSide = readState(removedF ++ commonChanged, fromDv)
     val toSide = readState(addedF ++ commonChanged, toDv)
     (toSide, fromSide) match {
@@ -990,6 +986,15 @@ object Snapshots {
       p
     else new Path(p).toUri.getPath
 
+  /** [[normPath]] of a file named by URL: parquet's `_metadata.file_path`
+    * and a delete vector's `file` column escape a path (a space is
+    * `%20`), where a manifest line and a listing do not. The escapes are
+    * decoded first, so both spellings of one file get one key. */
+  private[graft] def normUrl(u: String): String =
+    if (u.indexOf('%') < 0) normPath(u)
+    else try normPath(new Path(new java.net.URI(u)).toUri.getPath)
+    catch { case _: java.net.URISyntaxException => normPath(u) }
+
   /** Every file under `root`, depth first in `listStatus` order (the
     * order of a recursive `FileSystem.listFiles`), lazily: a caller that
     * stops early lists no further directories. The engine's one recursive
@@ -1014,7 +1019,7 @@ object Snapshots {
     if (files.isEmpty) return (Nil, Nil)
     val hit = readData(s, files, schema).filter(pred)
       .select(input_file_name().as("f")).distinct()
-      .collect().map(r => normPath(r.getString(0))).toSet
+      .collect().map(r => normUrl(r.getString(0))).toSet
     files.partition(f => hit.contains(normPath(f)))
   }
 
@@ -1112,7 +1117,7 @@ object Snapshots {
         else {
           // DV-applied read, survivors only; ROUTED when a layout is live
           // so retention never costs the table its co-partitioned plans
-          val df = applyDv(s, readData(s, affected, schema), tip.dvs)
+          val df = readLive(s, affected, schema, tip.dvs)
             .filter(!coalesce(pred, lit(false)))
           routed match {
             case Some(spec) => BucketLayout.writeBucketed(df, spec, dataDir)
@@ -1232,11 +1237,12 @@ object Snapshots {
   /** Row-level DELETE, merge-on-read: instead of rewriting every file
     * that holds a matching row ([[commitDelete]]'s copy-on-write), commit
     * a DELETE VECTOR — a small parquet of (file path, row index) pairs
-    * that readers subtract with an anti-join — and carry every data file
+    * that readers subtract by row position — and carry every data file
     * untouched. ZERO data-file writes at commit time (SnapshotsSpec pins
     * it), which is what a frequent-small-delete workload needs at 100 TB:
     * a one-row delete costs one tiny sidecar, not a file rewrite. The
-    * read-side cost (one broadcast anti-join) is bounded because
+    * read-side cost (a driver read of the vector and one per-row probe
+    * of its broadcast position map) is bounded because
     * [[commitCompaction]] folds accumulated DVs back into data files
     * (it reads through [[read]], which applies them). `pruneBy` gates the
     * match-detection scan via the zone-map sidecar exactly as in
@@ -1273,7 +1279,7 @@ object Snapshots {
         else {
           val dvDir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
           // coalesce(1): a DV is tiny by contract — one file keeps the
-          // manifest header and the read-side broadcast build cheap
+          // manifest header and the readers' driver-side read cheap
           val newDvs = writeData(freshHits.coalesce(1), dvDir)
           tip.carry.copy(dvs = tip.dvs ++ newDvs, scratch = Seq(dvDir))
         }
@@ -1282,20 +1288,15 @@ object Snapshots {
   }
 
   /** Rows an earlier delete vector already removed must never re-enter a
-    * new vector: double-counting is harmless for reads (the anti-join is
-    * idempotent) but poisons the change feed, which attributes each DV
-    * delta to its introducing commit. `hits` must carry string `file` /
-    * long `pos` columns (any extra columns ride through). */
+    * new vector: double-counting is harmless for reads (the subtraction
+    * is idempotent) but poisons the change feed, which attributes each DV
+    * delta to its introducing commit. `hits` must carry string `fileCol`
+    * / long `posCol` columns (any extra columns ride through). */
   private def subtractDv(s: SparkSession, hits: DataFrame, dvs: Seq[String],
                          fileCol: String, posCol: String): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
-    if (dvs.isEmpty) hits
-    else {
-      val existing = s.read.parquet(dvs: _*)
-      hits.join(broadcast(existing),
-        hits(fileCol) === existing("file") && hits(posCol) === existing("pos"),
-        "left_anti")
-    }
+    import org.apache.spark.sql.functions.col
+    DeleteVectors.subtract(hits, DeleteVectors.positions(s, dvs),
+      col(fileCol), col(posCol))
   }
 
   /** Write `df` into a fresh commit-local directory and return the data
@@ -1475,7 +1476,7 @@ object Snapshots {
         // Carried files keep their DV entries; entries for rewritten files
         // go inert with the paths they name (never reused).
         val newFiles = writeData(
-          rewrite(applyDv(s, readData(s, affected, tip.schema), tip.dvs)), dataDir)
+          rewrite(readLive(s, affected, tip.schema, tip.dvs)), dataDir)
         carry.copy(files = kept ++ newFiles, scratch = Seq(dataDir))
       }
     }
@@ -1519,12 +1520,12 @@ object Snapshots {
           .select(col(keyCol), input_file_name().as("f"))
           .join(keys, Seq(keyCol), "left_semi")
           .select(col("f")).distinct()
-          .collect().map(r => normPath(r.getString(0))).toSet
+          .collect().map(r => normUrl(r.getString(0))).toSet
       val (affected, kept) = files.partition(x => hit.contains(normPath(x)))
       val dataDir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
       val survivors =
         if (affected.isEmpty) source
-        else applyDv(s, readData(s, affected, schema), tip.dvs)
+        else readLive(s, affected, schema, tip.dvs)
           .join(keys, Seq(keyCol), "left_anti")
           .unionByName(source)
       Publish(kept ++ writeData(survivors, dataDir), dvs = tip.dvs,
@@ -1541,11 +1542,15 @@ object Snapshots {
     * never a full-table read for append-shaped histories. Output:
     * (change, _commit_version, <row columns...>). */
   def changeFeed(s: SparkSession, loc: String, fromVersion: Long,
-                 toVersion: Long = -1L): DataFrame = {
+                 toVersion: Long = -1L): DataFrame =
+    changeFeed(s, loc, log(s, loc), fromVersion, toVersion)
+
+  /** [[changeFeed]] over a [[log]] the caller already listed — one
+    * listing for the whole interval, each manifest read once. */
+  private[graft] def changeFeed(s: SparkSession, loc: String, ms: Seq[Version],
+                                fromVersion: Long, toVersion: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, element_at, input_file_name,
       lit, regexp_extract, typedLit}
-    // one listing for the whole interval, each manifest read once
-    val ms = log(s, loc)
     val to = if (toVersion < 0) ms.lastOption.fold(0L)(_.version) else toVersion
     require(to > fromVersion,
       s"empty feed: toVersion $to must exceed fromVersion $fromVersion")
@@ -1602,7 +1607,7 @@ object Snapshots {
     }
     if (parts.isEmpty) {
       // only no-op steps in the interval — schema-shaped empty feed
-      val base = read(s, loc, to)
+      val base = states.last.data
       base.filter(lit(false)).select(lit("insert").as("change") +:
         lit(0L).as("_commit_version") +: base.columns.map(col).toIndexedSeq: _*)
     } else parts.reduce(_.unionByName(_, allowMissingColumns = true))
@@ -1871,7 +1876,7 @@ object Snapshots {
             cols.zipWithIndex.map { case (c, i) =>
               count(col(c)).as(s"nn$i") }): _*)
         .collect().toSeq.map { r =>
-          val path = normPath(r.getString(0))
+          val path = normUrl(r.getString(0))
           val vals = (0 until cols.length).flatMap(i =>
             Seq(clean(Option(r.getString(1 + 2 * i)).getOrElse("")),
               clean(Option(r.getString(2 + 2 * i)).getOrElse(""))))
@@ -1893,7 +1898,7 @@ object Snapshots {
 
   // DV-cardinality cache for the CBO feed: delete-vector sidecars are
   // immutable per (loc, version), so the count of entries naming a given
-  // active-file set is a constant — computed once (distributed), then a
+  // active-file set is a constant — read once on the driver, then a
   // map hit on every later plan of the same (version, pruned-file-set).
   // Keyed by the FULL digest of the sorted set (BloomSidecar
   // .pathSetDigest): the count is correctness-bearing, so a 32-bit hash
@@ -1910,11 +1915,11 @@ object Snapshots {
     * entries naming those files. None when the sidecar cannot prove
     * every file (the caller reports unknown, never a guess). Feeds
     * DSv2 `estimateStatistics().numRows` — what lets Spark's CBO
-    * reorder multi-joins over snapshot tables. The DV adjustment is
-    * DISTRIBUTED — a broadcast semi-join against the active set and a
-    * count, one long to the driver, never one row per deleted row —
-    * and cached per (loc, version, active-set): DV sidecars are
-    * immutable, so each distinct pruned shape pays the job once. */
+    * reorder multi-joins over snapshot tables. The DV adjustment counts
+    * the vectors' entries for the active set, read on the driver
+    * ([[DeleteVectors.positions]], no Spark job), and is cached per
+    * (loc, version, active-set): DV sidecars are immutable, so each
+    * distinct pruned shape reads them once. */
   private[graft] def sidecarNumRows(s: SparkSession, loc: String,
                                     version: Long, files: Seq[String],
                                     dvs: Seq[String]): Option[Long] =
@@ -1929,14 +1934,8 @@ object Snapshots {
           val deleted: Long =
             if (hit != null) hit.longValue()
             else {
-              import org.apache.spark.sql.functions.{broadcast, col, udf}
-              import s.implicits._
-              val normU = udf((p: String) => normPath(p))
-              val n = s.read.parquet(dvs: _*)
-                .withColumn("__fnorm", normU(col("file")))
-                .join(broadcast(active.toDF("__keep")),
-                  col("__fnorm") === col("__keep"), "left_semi")
-                .count()
+              val n = DeleteVectors.positions(s, dvs, active.toSet)
+                .valuesIterator.map(_.length.toLong).sum
               dvCountCache.put(key, n)
               n
             }
@@ -2356,7 +2355,7 @@ object Snapshots {
     val keep = statFiles(s, loc, m.version, files, column, lo, hi)
     if (keep.isEmpty)
       readData(s, files, m.schema).filter(org.apache.spark.sql.functions.lit(false))
-    else applyDv(s, readData(s, keep, m.schema), m.dvs)
+    else readLive(s, keep, m.schema, m.dvs)
       .filter(col(column).between(lo, hi))
   }
 
@@ -2430,9 +2429,8 @@ object Snapshots {
     * files DV-applied and carries `kept` by reference: entries naming
     * kept files must survive (their rows are still subtracted at scan
     * time); entries naming rewritten files are dead weight every later
-    * DV scan's broadcast build would re-read. Cost is O(distinct
-    * deleted-from files) driver strings — the commitFoldDvs named-set
-    * logic. Returns the original sidecars when every entry is live, Nil
+    * DV read would re-read. The vectors are read once on the driver
+    * ([[DeleteVectors.positions]]), the commitFoldDvs named-set logic. Returns the original sidecars when every entry is live, Nil
     * when none is, and otherwise writes ONE consolidated filtered
     * sidecar under `dataDir` (so a lost publish race cleans it up with
     * the data directory). */
@@ -2440,15 +2438,15 @@ object Snapshots {
                                       kept: Seq[String],
                                       dataDir: Path): Seq[String] = {
     if (dvs.isEmpty || kept.isEmpty) return Nil
+    import org.apache.spark.sql.functions.col
     val keptSet = kept.map(normPath).toSet
-    val named = s.read.parquet(dvs: _*).select("file").distinct()
-      .collect().map(_.getString(0))
-    val (live, dead) = named.partition(f => keptSet(normPath(f)))
+    val entries = DeleteVectors.positions(s, dvs)
+    val dead = entries.filter { case (f, _) => !keptSet(f) }
     if (dead.isEmpty) return dvs
-    if (live.isEmpty) return Nil
-    writeData(s.read.parquet(dvs: _*)
-      .filter(org.apache.spark.sql.functions.col("file").isin(live.toSeq: _*))
-      .coalesce(1), new Path(dataDir, "dv"))
+    if (dead.size == entries.size) return Nil
+    // the vectors' rows minus the rewritten files' own entries
+    writeData(DeleteVectors.subtract(DeleteVectors.read(s, dvs), dead,
+      col("file"), col("pos")).coalesce(1), new Path(dataDir, "dv"))
   }
 
   private def scopedAdvisory(s: SparkSession, targetBytes: Long): SparkSession = {
@@ -2487,12 +2485,12 @@ object Snapshots {
       else {
         val scoped = scopedAdvisory(s, targetBytes)
         val dataDir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
-        val newFiles = writeData(applyDv(scoped,
-          readData(scoped, small, tip.schema), tip.dvs).hint("rebalance"), dataDir)
+        val newFiles = writeData(
+          readLive(scoped, small, tip.schema, tip.dvs).hint("rebalance"), dataDir)
         // kept files may still be DV-covered — carry the vectors with them,
         // FILTERED to entries naming kept files (entries whose files were
-        // just rewritten DV-applied are dead weight every later DV scan's
-        // broadcast build would re-read)
+        // just rewritten DV-applied are dead weight every later DV read
+        // would re-read)
         Publish(kept ++ newFiles, dvs = filterCarriedDvs(s, tip.dvs, kept, dataDir),
           schemaJson = tip.schemaJson, carriedValid = true, scratch = Seq(dataDir))
       }
@@ -2524,8 +2522,7 @@ object Snapshots {
       else {
         // the files the vectors actually name — O(distinct deleted-from
         // files) driver strings, the same cardinality class as a manifest
-        val named = s.read.parquet(dvs: _*).select("file").distinct()
-          .collect().map(r => normPath(r.getString(0))).toSet
+        val named = DeleteVectors.positions(s, dvs).keySet
         val (affected, kept) = tip.files.partition(x => named(normPath(x)))
         // every entry names a gone file: dropping the refs is metadata
         if (affected.isEmpty) carry
@@ -2534,14 +2531,14 @@ object Snapshots {
           val routed = layout.flatMap(BucketLayout.parse)
           val newFiles = routed match {
             case Some(spec) => BucketLayout.writeBucketed(
-              applyDv(s, readData(s, affected, schema), dvs), spec, dataDir)
+              readLive(s, affected, schema, dvs), spec, dataDir)
             case None =>
               // the rebalance hint resolves advisoryPartitionSizeInBytes
               // from df.sparkSession, so the READ must be built under the
               // scoped session too — else targetBytes is silently inert
               val scoped = scopedAdvisory(s, targetBytes)
               writeData(
-                applyDv(scoped, readData(scoped, affected, schema), dvs)
+                readLive(scoped, affected, schema, dvs)
                   .hint("rebalance"), dataDir)
           }
           // all kept files were routed (the layout was active) and the

@@ -1091,7 +1091,7 @@ object OpsQueries {
     * commits a (file, row-index) DELETE VECTOR and rewrites NOTHING —
     * the frequent-small-delete path every production table format grew
     * (a one-row delete at 100 TB costs one tiny sidecar, not a file
-    * rewrite); readers subtract the vector with a broadcast anti-join
+    * rewrite); readers subtract the vector by row position
     * and compaction folds it back into data files. The in-query guard
     * pins the zero-rewrite contract: every pre-delete data file is still
     * named, byte-identical, by the post-delete manifest (SnapshotDvSpec

@@ -1,6 +1,5 @@
 package graft.sources.v2
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
@@ -94,9 +93,9 @@ private[v2] class RowLevelScanState {
   *  - merge-on-read DELETE VECTORS: subtraction keyed on the reader's
   *    native row index (each row's true position in its file), so it
   *    stays correct under pushdown; vectors ship as ONE broadcast map of
-  *    per-file sorted position arrays (grouped executor-side, one row
-  *    per file collected; `graft.snapshot.dv.maxScanEntries`, default
-  *    8M, fail-fasts a pathological vector toward compaction);
+  *    per-file sorted position arrays, read on the driver with no Spark
+  *    job (`graft.snapshot.dv.maxScanEntries`, default 8M, fail-fasts a
+  *    pathological vector toward compaction);
   *  - parquet filter pushdown + column pruning + zone-map file skipping
   *    (best-effort: every filter is also returned residual);
   *  - the `__graft_file` metadata column (each row's normalized data-file
@@ -246,47 +245,29 @@ private[v2] object SnapshotRowScan {
   }
   val FileCol = "__graft_file"
   val fileField: StructField = StructField(FileCol, StringType, nullable = true)
-  def norm(p: String): String = new Path(p).toUri.getPath
+  def norm(p: String): String = Snapshots.normPath(p)
 
   /** The (file → sorted deleted-position array) map a DV-bearing scan
     * broadcasts, restricted to `keepNorm` (the files the — possibly
-    * zone-map-pruned — scan will actually open) BEFORE any aggregation:
-    * pruned files' vectors are dropped by an executor-side semi-join
-    * against the broadcast kept set, so neither the groupBy shuffle nor
-    * the driver collect ever pays for a skipped file's positions (a
-    * pruned point read of a DV-heavy version previously aggregated and
-    * shipped ~100% dead weight). Paths normalize through the SAME
-    * [[graft.ops.Snapshots.normPath]] the planner keys on — a UDF, but
-    * one that runs once per DV entry in planning metadata, never in the
-    * row hot path. Grouping + sorting stay executor-side: the driver
-    * receives one row per kept file holding a sorted position array. */
+    * zone-map-pruned — scan will actually open): the vectors are read
+    * on the driver ([[graft.ops.DeleteVectors.positions]], no Spark
+    * job), and a pruned file's entries are dropped as they are read, so
+    * neither the map nor the broadcast carries them. DVs are bounded
+    * small by contract (compaction folds them); the guard counts the
+    * KEPT entries and turns a pathological vector into a clear
+    * instruction instead of a driver OOM at broadcast time. */
   def loadDvMap(spark: org.apache.spark.sql.SparkSession, dvs: Seq[String],
                 keepNorm: Set[String]): Map[String, Array[Long]] = {
-    import org.apache.spark.sql.functions.{broadcast, col, collect_list, sort_array, udf}
-    val normU = udf((p: String) => graft.ops.Snapshots.normPath(p))
-    val keepDf = {
-      import spark.implicits._
-      broadcast(keepNorm.toSeq.toDF("__keep"))
-    }
-    val dvKept = spark.read.parquet(dvs: _*)
-      .withColumn("__fnorm", normU(col("file")))
-      .join(keepDf, col("__fnorm") === col("__keep"), "left_semi")
-    // DVs are bounded small by contract (compaction folds them); the
-    // guard turns a pathological vector into a clear instruction
-    // instead of a driver OOM at collect time
+    val dead = graft.ops.DeleteVectors.positions(spark, dvs, keepNorm)
     val maxEntries = spark.conf.getOption("graft.snapshot.dv.maxScanEntries")
       .map(_.toLong).getOrElse(8L * 1000 * 1000)
-    val n = dvKept.count()
+    val n = dead.valuesIterator.map(_.length.toLong).sum
     require(n <= maxEntries,
       s"delete vectors hold $n entries (> $maxEntries) for the scanned " +
         "files — run Snapshots.commitCompaction (CALL <cat>.system" +
         ".optimize) to fold them before scanning, or raise " +
         "graft.snapshot.dv.maxScanEntries")
-    dvKept.groupBy(col("__fnorm"))
-      .agg(sort_array(collect_list(col("pos"))).as("poss"))
-      .collect()
-      .map(r => r.getString(0) -> r.getSeq[Long](1).toArray)
-      .toMap
+    dead
   }
 
   /** The linear bucket ids a pushed conjunction can possibly match, or
@@ -504,8 +485,11 @@ private[v2] class SnapshotRowScan(spark: SparkSession, schema: StructType,
   require(fileIdx < 0 || fileIdx == required.length - 1,
     s"${SnapshotRowScan.FileCol} must be the trailing (metadata) column: $required")
 
+  // Spark may plan a scan's partitions more than once; the vectors are
+  // read once per kept-file set
+  @volatile private var dvMemo: (Set[String], Map[String, Array[Long]]) = (null, null)
+
   override def planInputPartitions(): Array[InputPartition] = {
-    import org.apache.spark.sql.functions.{col, collect_list, sort_array}
     // driver-side zone-map file skipping applies to DV versions too: a
     // skipped file's DV entries are simply never consulted
     val keep =
@@ -537,8 +521,16 @@ private[v2] class SnapshotRowScan(spark: SparkSession, schema: StructType,
     if (keep.isEmpty) return Array.empty
     val deleted: Map[String, Array[Long]] =
       if (dvs.isEmpty) Map.empty
-      else SnapshotRowScan.loadDvMap(spark, dvs,
-        keep.map(SnapshotRowScan.norm).toSet)
+      else {
+        val keepNorm = keep.map(SnapshotRowScan.norm).toSet
+        dvMemo match {
+          case (k, m) if k == keepNorm => m
+          case _ =>
+            val m = SnapshotRowScan.loadDvMap(spark, dvs, keepNorm)
+            dvMemo = (keepNorm, m)
+            m
+        }
+      }
     val lengths = fileLengths(keep)
     val bc = spark.sparkContext.broadcast(deleted)
     layout match {

@@ -46,7 +46,7 @@ import graft.ops.Snapshots
   * automatically via `SupportsDelete`.
   *
   * Versions carrying merge-on-read delete vectors scan through the
-  * DV-subtracting per-file reader ([[SnapshotDvScanBuilder]]), which
+  * DV-subtracting per-file reader ([[SnapshotRowScanBuilder]]), which
   * keeps parquet filter pushdown, column pruning, and zone-map file
   * skipping intact by keying the subtraction on the reader's native row
   * index; `commitCompaction` folds the vectors away entirely. Row-level
@@ -133,7 +133,7 @@ class SnapshotTable private[graft] (ident: String, spark: SparkSession,
     * the version's stats sidecar and hands the parquet scan only the
     * surviving files — O(matching files) planning). Versions carrying
     * merge-on-read delete vectors scan through the DV-subtracting
-    * per-file reader ([[SnapshotDvScanBuilder]]); compacted versions use
+    * per-file reader ([[SnapshotRowScanBuilder]]); compacted versions use
     * Spark's native parquet scan with full pushdown/pruning. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     if (files.isEmpty) delegate.newScanBuilder(options)
