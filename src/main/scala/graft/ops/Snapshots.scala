@@ -959,15 +959,13 @@ object Snapshots {
     }
   }
 
-  // ---- row-level operations (copy-on-write) ----
-  // The format stores immutable files, so row-level DELETE/UPDATE are
-  // file REWRITES: find the files that contain affected rows, rewrite
-  // ONLY those without/with the change, publish kept ∪ rewritten as a
-  // new version. Untouched files are carried by reference — byte-for-
-  // byte the same files (spec-pinned via mtimes) — so the cost is
-  // O(affected files), not O(table), and every historical version stays
-  // pinned-readable. This is the Delta/Iceberg copy-on-write path; a
-  // merge-on-read (delete vectors) variant changes only read-side cost.
+  // ---- row-level operations ----
+  // The format stores immutable files, so a row-level DELETE/UPDATE/
+  // MERGE either REWRITES the files holding a hit row (copy-on-write)
+  // or records the hit rows in a delete vector (merge-on-read). Every
+  // verb runs the one kernel, [[rowLevel]]: untouched files are carried
+  // by reference — byte-for-byte the same files (spec-pinned via
+  // mtimes) — and every historical version stays pinned-readable.
 
   /** Canonical path spelling for identity compares (manifest lines are
     * written by different paths with/without scheme). Fast path: a
@@ -1007,46 +1005,23 @@ object Snapshots {
       if (st.isDirectory) filesUnder(f, st.getPath) else Iterator.single(st)
     }
 
-  /** Files of the latest version whose rows intersect `pred`, found by
-    * one scan of the live file list tagged with `input_file_name` —
-    * exact (no false positives), delta-agnostic. Returns (affected,
-    * kept) in manifest spelling. */
-  private def affectedFiles(s: SparkSession, files: Seq[String],
-                            pred: org.apache.spark.sql.Column,
-                            schema: Option[org.apache.spark.sql.types.StructType])
-      : (Seq[String], Seq[String]) = {
-    import org.apache.spark.sql.functions.input_file_name
-    if (files.isEmpty) return (Nil, Nil)
-    val hit = readData(s, files, schema).filter(pred)
-      .select(input_file_name().as("f")).distinct()
-      .collect().map(r => normUrl(r.getString(0))).toSet
-    files.partition(f => hit.contains(normPath(f)))
-  }
-
   /** Row-level DELETE as a commit: remove every row matching `pred`,
-    * rewriting only the files that contain one. Returns the published
-    * version (a no-op delete still publishes — an auditable statement
-    * that the predicate was applied).
+    * rewriting only the files that contain one ([[rowLevel]]'s
+    * copy-on-write rule). Returns the published version (a no-op delete
+    * still publishes — an auditable statement that the predicate was
+    * applied). Rows where `pred` is NULL survive (SQL DELETE semantics).
     *
-    * `pruneBy = (column, lo, hi)` narrows the affected-file DETECTION
-    * scan using the version's zone-map sidecar ([[attachStats]]): only
-    * files whose [min, max] intersects the range are scanned for
-    * matches, making the detection O(candidate files) instead of
-    * O(table) — the standard stats-pruned DML path. CONTRACT: the range
-    * must over-approximate `pred` (every row `pred` matches has
-    * `column` in [lo, hi]); files outside it are kept unscanned. */
+    * `pruneBy = (column, lo, hi)` narrows the match scan using the
+    * version's zone-map sidecar ([[attachStats]]): only files whose
+    * [min, max] intersects the range are scanned for matches, making the
+    * scan O(candidate files) instead of O(table) — the standard
+    * stats-pruned DML path. CONTRACT: the range must over-approximate
+    * `pred` (every row `pred` matches has `column` in [lo, hi]); files
+    * outside it are kept unscanned. */
   def commitDelete(s: SparkSession, loc: String,
                    pred: org.apache.spark.sql.Column,
-                   pruneBy: Option[(String, String, String)] = None): Long = {
-    import org.apache.spark.sql.functions.{coalesce, lit}
-    // SQL DELETE semantics: remove rows where pred is TRUE; rows where it
-    // evaluates NULL (nullable columns) SURVIVE. `!pred` alone would drop
-    // them from rewritten files while identical rows in unaffected files
-    // survive — layout-dependent silent data loss. Detection (filter(pred))
-    // is consistent: NULL rows never mark a file affected.
-    rewriteAffected(s, loc, pred,
-      df => df.filter(!coalesce(pred, lit(false))), pruneBy)
-  }
+                   pruneBy: Option[(String, String, String)] = None): Long =
+    rowLevel(s, loc, mor = false)(tip => Scan(tip.files, DeleteWhere(pred), pruneBy))
 
   /** RANGE retention DELETE — `DELETE FROM t WHERE column < cutoff` (any
     * one- or two-sided range) in O(straddling files). The stats sidecar
@@ -1061,9 +1036,9 @@ object Snapshots {
     *    since NULL never satisfies a comparison): carried BY REFERENCE,
     *    never scanned;
     *  - STRADDLING the cutoff (or unprovable: sidecar gap, unorderable
-    *    type): the existing copy-on-write path, confined to exactly
-    *    those files — usually 0–1 per ingest stream when data arrives
-    *    roughly in `column` order.
+    *    type): the copy-on-write rule of [[rowLevel]], confined to
+    *    exactly those files — usually 0–1 per ingest stream when data
+    *    arrives roughly in `column` order.
     *
     * Classification is PROOF-gated: only types whose sidecar string
     * round-trip provably orders (numerics via BigDecimal, UTF-8 strings,
@@ -1080,20 +1055,18 @@ object Snapshots {
   def commitDeleteRange(s: SparkSession, loc: String, column: String,
                         lo: Option[(String, Boolean)],
                         hi: Option[(String, Boolean)]): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    import org.apache.spark.sql.functions.{col, lit}
     require(lo.isDefined || hi.isDefined,
       "a range delete needs at least one bound")
-    commit(s, loc) { t =>
-      val tip = t.committed
-      val (inside, outside, straddle) =
+    rowLevel(s, loc, mor = false) { tip =>
+      val (inside, _, straddle) =
         classifyRange(s, loc, tip.version, tip.files, column, lo, hi)
-      val schema = tip.schema
       // the predicate for the straddler scan, typed through the table
       // schema (CAST the rendered bound back in the column's own type) —
       // only built when a straddler exists (an empty/fully-classified
       // version never opens a footer)
       lazy val pred = {
-        val dt = schema
+        val dt = tip.schema
           .flatMap(_.fields.find(_.name.equalsIgnoreCase(column)))
           .map(_.dataType)
           .getOrElse(s.read.parquet(straddle.head).schema
@@ -1107,28 +1080,8 @@ object Snapshots {
           hi.map { case (v, inc) =>
             if (inc) c <= bound(v) else c < bound(v) }).reduce(_ && _)
       }
-      val (affected, keptStraddle) =
-        if (straddle.isEmpty) (Nil, Nil)
-        else affectedFiles(s, straddle, pred, schema)
-      val dataDir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
-      val routed = tip.layout.flatMap(BucketLayout.parse)
-      val newFiles: Seq[String] =
-        if (affected.isEmpty) Nil
-        else {
-          // DV-applied read, survivors only; ROUTED when a layout is live
-          // so retention never costs the table its co-partitioned plans
-          val df = readLive(s, affected, schema, tip.dvs)
-            .filter(!coalesce(pred, lit(false)))
-          routed match {
-            case Some(spec) => BucketLayout.writeBucketed(df, spec, dataDir)
-            case None => writeData(df, dataDir)
-          }
-        }
-      val kept = outside ++ keptStraddle
-      Publish(kept ++ newFiles, dvs = filterCarriedDvs(s, tip.dvs, kept, dataDir),
-        schemaJson = tip.schemaJson,
-        layout = tip.layout.filter(_ => routed.isDefined || affected.isEmpty),
-        scratch = Seq(dataDir))
+      Scan(straddle, DeleteWhere(if (straddle.isEmpty) lit(false) else pred),
+        dropped = inside)
     }
   }
 
@@ -1218,21 +1171,8 @@ object Snapshots {
   def commitUpdate(s: SparkSession, loc: String,
                    pred: org.apache.spark.sql.Column,
                    set: Map[String, org.apache.spark.sql.Column],
-                   pruneBy: Option[(String, String, String)] = None): Long = {
-    import org.apache.spark.sql.functions.{col, when}
-    rewriteAffected(s, loc, pred, { df =>
-      require(set.keySet.subsetOf(df.columns.toSet),
-        s"SET names unknown columns: ${set.keySet -- df.columns.toSet}")
-      // SQL UPDATE evaluates every RHS against the OLD row, so a swap
-      // (`SET a = b, b = a`) works — one select, all assignments computed
-      // from the pre-update attributes, never the sequential fold that
-      // would let one assignment observe another's result
-      df.select(df.columns.toIndexedSeq.map { c =>
-        set.get(c).map(v => when(pred, v).otherwise(col(c)).as(c))
-          .getOrElse(col(c))
-      }: _*)
-    }, pruneBy)
-  }
+                   pruneBy: Option[(String, String, String)] = None): Long =
+    rowLevel(s, loc, mor = false)(tip => Scan(tip.files, UpdateWhere(pred, set), pruneBy))
 
   /** Row-level DELETE, merge-on-read: instead of rewriting every file
     * that holds a matching row ([[commitDelete]]'s copy-on-write), commit
@@ -1244,60 +1184,14 @@ object Snapshots {
     * read-side cost (a driver read of the vector and one per-row probe
     * of its broadcast position map) is bounded because
     * [[commitCompaction]] folds accumulated DVs back into data files
-    * (it reads through [[read]], which applies them). `pruneBy` gates the
-    * match-detection scan via the zone-map sidecar exactly as in
-    * [[commitDelete]]. NULL-predicate rows survive (SQL DELETE
-    * semantics). */
+    * (it reads through [[read]], which applies them). The file set is
+    * untouched, so a bucket layout carries. `pruneBy` gates the match
+    * scan via the zone-map sidecar exactly as in [[commitDelete]].
+    * NULL-predicate rows survive (SQL DELETE semantics). */
   def commitDeleteMoR(s: SparkSession, loc: String,
                       pred: org.apache.spark.sql.Column,
-                      pruneBy: Option[(String, String, String)] = None): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    // a DV-only commit leaves the FILE SET untouched, so a bucket layout
-    // stays valid and carries (tip.carry) — the one non-bucket commit
-    // kind that preserves co-partitioned joins (the scan subtracts
-    // vectors per file without reordering)
-    commit(s, loc) { t =>
-      val tip = t.committed
-      val candidates = pruneBy match {
-        case Some((c, lo, hi)) => statFiles(s, loc, tip.version, tip.files, c, lo, hi)
-        case None => tip.files
-      }
-      // auditable no-op, same contract as a no-match copy-on-write delete
-      if (candidates.isEmpty) tip.carry
-      else {
-        val hits = readData(s, candidates, tip.schema)
-          .filter(coalesce(pred, lit(false)))
-          .select(col("_metadata.file_path").as("file"),
-            col("_metadata.row_index").as("pos"))
-        val freshHits = subtractDv(s, hits, tip.dvs, "file", "pos")
-        // candidates held no fresh match: publish the carry-only no-op
-        // commit (as the candidates.isEmpty branch does) — writing an
-        // EMPTY vector would still produce a part file (coalesce(1) emits
-        // one even for zero rows), flipping every later SQL read onto the
-        // DV scan and tripping a tailing stream's DV fail-fast for nothing
-        if (freshHits.isEmpty) tip.carry
-        else {
-          val dvDir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
-          // coalesce(1): a DV is tiny by contract — one file keeps the
-          // manifest header and the readers' driver-side read cheap
-          val newDvs = writeData(freshHits.coalesce(1), dvDir)
-          tip.carry.copy(dvs = tip.dvs ++ newDvs, scratch = Seq(dvDir))
-        }
-      }
-    }
-  }
-
-  /** Rows an earlier delete vector already removed must never re-enter a
-    * new vector: double-counting is harmless for reads (the subtraction
-    * is idempotent) but poisons the change feed, which attributes each DV
-    * delta to its introducing commit. `hits` must carry string `fileCol`
-    * / long `posCol` columns (any extra columns ride through). */
-  private def subtractDv(s: SparkSession, hits: DataFrame, dvs: Seq[String],
-                         fileCol: String, posCol: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    DeleteVectors.subtract(hits, DeleteVectors.positions(s, dvs),
-      col(fileCol), col(posCol))
-  }
+                      pruneBy: Option[(String, String, String)] = None): Long =
+    rowLevel(s, loc, mor = true)(tip => Scan(tip.files, DeleteWhere(pred), pruneBy))
 
   /** Write `df` into a fresh commit-local directory and return the data
     * files it produced — the data half of every commit attempt; the
@@ -1346,57 +1240,13 @@ object Snapshots {
     * (SQL UPDATE semantics: `SET a = b, b = a` swaps); rows a prior DV
     * deleted are invisible to `pred` and are never re-recorded.
     * NULL-predicate rows survive untouched. `pruneBy` gates the
-    * match-detection scan via the zone-map sidecar exactly as in
+    * match scan via the zone-map sidecar exactly as in
     * [[commitDelete]]. */
   def commitUpdateMoR(s: SparkSession, loc: String,
                       pred: org.apache.spark.sql.Column,
                       set: Map[String, org.apache.spark.sql.Column],
-                      pruneBy: Option[(String, String, String)] = None): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    commit(s, loc) { t =>
-      val tip = t.committed
-      val carry = Publish(tip.files, dvs = tip.dvs, schemaJson = tip.schemaJson)
-      val candidates = pruneBy match {
-        case Some((c, lo, hi)) => statFiles(s, loc, tip.version, tip.files, c, lo, hi)
-        case None => tip.files
-      }
-      if (candidates.isEmpty) carry
-      else {
-        val base = readData(s, candidates, tip.schema)
-        val matched = base
-          .withColumn("__graft_fp", col("_metadata.file_path"))
-          .withColumn("__graft_ri", col("_metadata.row_index"))
-          .filter(coalesce(pred, lit(false)))
-        val dataCols = base.columns.toIndexedSeq
-        require(set.keySet.subsetOf(dataCols.toSet),
-          s"SET names unknown columns: ${set.keySet -- dataCols.toSet}")
-        val fresh = subtractDv(s, matched, tip.dvs, "__graft_fp", "__graft_ri")
-        // no fresh match → carry-only no-op commit, never an empty vector
-        // (an empty DV file would degrade every later scan; see
-        // commitDeleteMoR)
-        if (fresh.isEmpty) carry
-        else {
-          val commitId = java.util.UUID.randomUUID().toString
-          // the vector and the updated images are two actions over the same
-          // deterministic frame (immutable files, fixed DV set within the
-          // attempt), so they name exactly the same rows
-          val dvDir = new Path(loc, s"data/$commitId-dv")
-          val updDir = new Path(loc, s"data/$commitId")
-          // coalesce(1): a DV is tiny by contract (compaction folds it)
-          val newDvs = writeData(
-            fresh.select(col("__graft_fp").as("file"),
-              col("__graft_ri").as("pos")).coalesce(1), dvDir)
-          // all RHS computed from the pre-update attributes in ONE select —
-          // matched-only rows, so no when(pred) guard is needed
-          val newFiles = writeData(
-            fresh.select(dataCols.map(c =>
-              set.get(c).map(_.as(c)).getOrElse(col(c))): _*), updDir)
-          carry.copy(files = tip.files ++ newFiles, dvs = tip.dvs ++ newDvs,
-            scratch = Seq(dvDir, updDir))
-        }
-      }
-    }
-  }
+                      pruneBy: Option[(String, String, String)] = None): Long =
+    rowLevel(s, loc, mor = true)(tip => Scan(tip.files, UpdateWhere(pred, set), pruneBy))
 
   /** Row-level MERGE (upsert), merge-on-read: matched keys are removed
     * via a DELETE VECTOR and the WHOLE source lands as new files
@@ -1409,128 +1259,188 @@ object Snapshots {
     * must be key-unique and carry every table column — the same contract
     * the copy-on-write path imposes. */
   def commitMergeMoR(s: SparkSession, loc: String, source: DataFrame,
-                     keyCol: String): Long = {
-    import org.apache.spark.sql.functions.{col, max, min}
-    val keys = source.select(col(keyCol)).distinct()
-    val env = source.agg(min(col(keyCol)).cast("string").as("lo"),
-      max(col(keyCol)).cast("string").as("hi")).head()
-    val envelope: Option[(String, String)] =
-      if (env.isNullAt(0) || env.isNullAt(1)) None
-      else Some((env.getString(0), env.getString(1)))
-    commit(s, loc) { t =>
-      val tip = t.committed
-      val (files, schema) = (tip.files, tip.schema)
-      val candidates = envelope match {
-        case Some((lo, hi)) => statFiles(s, loc, tip.version, files, keyCol, lo, hi)
-        case None => Nil // empty/all-NULL-key source: nothing can match
-      }
-      val commitId = java.util.UUID.randomUUID().toString
-      val dvDir = new Path(loc, s"data/$commitId-dv")
-      val newDvs =
-        if (candidates.isEmpty) Nil
-        else {
-          val hits = readData(s, candidates, schema)
-            .select(col(keyCol), col("_metadata.file_path").as("__graft_fp"),
-              col("_metadata.row_index").as("__graft_ri"))
-            .join(keys, Seq(keyCol), "left_semi")
-          val freshHits = subtractDv(s, hits, tip.dvs, "__graft_fp", "__graft_ri")
-          // candidate files held no fresh key match → pure insert merge:
-          // no vector at all, never an empty DV file (see commitDeleteMoR)
-          if (freshHits.isEmpty) Nil
-          else writeData(
-            freshHits.select(col("__graft_fp").as("file"),
-              col("__graft_ri").as("pos")).coalesce(1), dvDir)
-        }
-      // the source lands under the table's column order so every data
-      // file shares one shape (it must carry all table columns, the same
-      // unionByName contract the copy-on-write path imposes)
-      val srcDir = new Path(loc, s"data/$commitId")
-      val newFiles = writeData(
-        schema.map(sc => source.select(
-          sc.fieldNames.toIndexedSeq.map(col): _*)).getOrElse(source), srcDir)
-      Publish(files ++ newFiles, dvs = tip.dvs ++ newDvs,
-        schemaJson = tip.schemaJson, scratch = Seq(dvDir, srcDir))
-    }
-  }
-
-  private def rewriteAffected(s: SparkSession, loc: String,
-                              pred: org.apache.spark.sql.Column,
-                              rewrite: DataFrame => DataFrame,
-                              pruneBy: Option[(String, String, String)] = None): Long =
-    commit(s, loc) { t =>
-      val tip = t.committed
-      val files = tip.files
-      val candidates = pruneBy match {
-        case Some((c, lo, hi)) => statFiles(s, loc, tip.version, files, c, lo, hi)
-        case None => files
-      }
-      val (affected, keptCand) = affectedFiles(s, candidates, pred, tip.schema)
-      val kept = keptCand ++ files.filterNot(candidates.toSet)
-      val carry = Publish(files, dvs = tip.dvs, schemaJson = tip.schemaJson)
-      if (affected.isEmpty) carry
-      else {
-        val dataDir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
-        // the rewrite reads dv-APPLIED content under the TABLE schema: a
-        // row already merge-on-read deleted must not be resurrected, and
-        // a file predating an added column rewrites with it null-filled.
-        // Carried files keep their DV entries; entries for rewritten files
-        // go inert with the paths they name (never reused).
-        val newFiles = writeData(
-          rewrite(readLive(s, affected, tip.schema, tip.dvs)), dataDir)
-        carry.copy(files = kept ++ newFiles, scratch = Seq(dataDir))
-      }
-    }
+                     keyCol: String): Long =
+    merge(s, loc, source, keyCol, mor = true)
 
   /** Row-level MERGE (upsert) as a commit: rows of `source` REPLACE
     * same-key rows of the table and insert where no key matches —
     * latest-wins over the whole row, the [[Merge]] CDC fold's
     * storage-native counterpart. Copy-on-write: a file is rewritten iff
     * it contains a matched key (kept files can hold no source key by
-    * construction, so ALL source rows ride in the rewrite's output).
+    * construction, so ALL source rows ride in the commit's one write).
     * `source` must be key-unique — one upsert per key per commit, the
     * same contract every MERGE statement imposes. */
   def commitMerge(s: SparkSession, loc: String, source: DataFrame,
-                  keyCol: String): Long = {
-    import org.apache.spark.sql.functions.{col, input_file_name, max, min}
+                  keyCol: String): Long =
+    merge(s, loc, source, keyCol, mor = false)
+
+  private def merge(s: SparkSession, loc: String, source: DataFrame,
+                    keyCol: String, mor: Boolean): Long = {
+    import org.apache.spark.sql.functions.{col, max, min}
     val keys = source.select(col(keyCol)).distinct()
     // the source's key envelope, computed ONCE: every matched key lies in
     // [lo, hi] by definition, so the envelope is a valid pruneBy range for
-    // the matched-file detection scan — with a zone-map sidecar on the key
-    // column, a narrow upsert's detection is O(key-range files), not
-    // O(table) (the same stats-pruned DML path DELETE/UPDATE take)
+    // the match scan — with a zone-map sidecar on the key column, a
+    // narrow upsert scans O(key-range files), not O(table)
     val env = source.agg(min(col(keyCol)).cast("string").as("lo"),
       max(col(keyCol)).cast("string").as("hi")).head()
-    val envelope: Option[(String, String)] =
+    val envelope =
       if (env.isNullAt(0) || env.isNullAt(1)) None
-      else Some((env.getString(0), env.getString(1)))
+      else Some((keyCol, env.getString(0), env.getString(1)))
+    rowLevel(s, loc, mor) { tip =>
+      // the source lands under the table's column order so every data
+      // file shares one shape; an empty or all-NULL-key source can match
+      // nothing, so no file is scanned and every row inserts
+      Scan(if (envelope.isEmpty) Nil else tip.files,
+        MergeKeys(keyCol, keys, tip.schema.fold(source)(sc =>
+          source.select(sc.fieldNames.toIndexedSeq.map(col): _*))),
+        envelope)
+    }
+  }
+
+  /** What a row-level verb does to the rows of its scan: which rows it
+    * hits, and what takes their place under each publish rule of
+    * [[rowLevel]]. */
+  private sealed trait RowChange {
+    /** The rows of `rows` this change hits. */
+    def hits(rows: DataFrame): DataFrame
+    /** A hit file's live rows after the change (copy-on-write). */
+    def rewrite(live: DataFrame): DataFrame
+    /** The rows written beside the vector of `hits` (merge-on-read). */
+    def images(hits: DataFrame): Option[DataFrame] = None
+    /** Rows the change adds whatever its scan hits. */
+    def source: Option[DataFrame] = None
+  }
+
+  /** Hits the rows where `pred` is TRUE. A NULL-predicate row is not hit
+    * and survives: `!pred` alone would drop it from rewritten files while
+    * identical rows in unscanned files survive — layout-dependent silent
+    * data loss. */
+  private final case class DeleteWhere(pred: org.apache.spark.sql.Column)
+      extends RowChange {
+    import org.apache.spark.sql.functions.{coalesce, lit}
+    private val hit = coalesce(pred, lit(false))
+    def hits(rows: DataFrame): DataFrame = rows.filter(hit)
+    def rewrite(live: DataFrame): DataFrame = live.filter(!hit)
+  }
+
+  /** Hits as [[DeleteWhere]] and sets each column of `set` on a hit row.
+    * SQL UPDATE evaluates every RHS against the OLD row, so a swap
+    * (`SET a = b, b = a`) works — one select, all assignments computed
+    * from the pre-update attributes, never the sequential fold that
+    * would let one assignment observe another's result. */
+  private final case class UpdateWhere(pred: org.apache.spark.sql.Column,
+                                       set: Map[String, org.apache.spark.sql.Column])
+      extends RowChange {
+    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
+    private val hit = coalesce(pred, lit(false))
+    def hits(rows: DataFrame): DataFrame = rows.filter(hit)
+    def rewrite(live: DataFrame): DataFrame = assign(live, (c, v) => when(hit, v).otherwise(col(c)))
+    override def images(hits: DataFrame): Option[DataFrame] = Some(assign(hits, (_, v) => v))
+    private def assign(rows: DataFrame,
+                       value: (String, org.apache.spark.sql.Column) => org.apache.spark.sql.Column) = {
+      val cols = rows.columns.toIndexedSeq.filterNot(Set(FileCol, PosCol))
+      require(set.keySet.subsetOf(cols.toSet),
+        s"SET names unknown columns: ${set.keySet -- cols.toSet}")
+      rows.select(cols.map(c => set.get(c).fold(col(c))(value(c, _)).as(c)): _*)
+    }
+  }
+
+  /** Hits the rows whose `keyCol` is among `keys`; `rows` land whole. */
+  private final case class MergeKeys(keyCol: String, keys: DataFrame, rows: DataFrame)
+      extends RowChange {
+    def hits(scan: DataFrame): DataFrame = scan.join(keys, Seq(keyCol), "left_semi")
+    def rewrite(live: DataFrame): DataFrame = live.join(keys, Seq(keyCol), "left_anti")
+    override def source: Option[DataFrame] = Some(rows)
+  }
+
+  /** One attempt's scan for [[rowLevel]]: the files a verb classifies
+    * (narrowed by `pruneBy`'s zone-map range), what it does to their
+    * rows, and the files it drops unread. */
+  private final case class Scan(files: Seq[String], change: RowChange,
+                                pruneBy: Option[(String, String, String)] = None,
+                                dropped: Seq[String] = Nil)
+
+  // a scanned row's identity: the data file as parquet spells it, and
+  // the row's position in that file — what a delete vector records
+  private val FileCol = "__graft_fp"
+  private val PosCol = "__graft_ri"
+
+  /** THE row-level kernel: the one [[commit]] attempt behind every
+    * delete, update and merge verb. It scans the candidate files once,
+    * tags each row with its (file, pos) identity, and lets the verb's
+    * [[RowChange]] classify it as hit or not; rows an earlier vector
+    * already deleted never hit (counting one twice is harmless to reads,
+    * but the change feed attributes each vector entry to the commit that
+    * wrote it). Two rules publish the one tagged frame:
+    *
+    *  - MERGE-ON-READ (`mor`): a vector of the hit rows, every data file
+    *    carried, plus the change's images or source as new files;
+    *  - COPY-ON-WRITE: the distinct hit files are rewritten through the
+    *    change's projection, plus its source. The rewrite reads
+    *    DV-APPLIED content under the TABLE schema (a deleted row is never
+    *    resurrected; a file predating an added column rewrites with it
+    *    null-filled), and the carried vectors are filtered to the kept
+    *    files ([[filterCarriedDvs]]). Untouched files carry by reference,
+    *    byte-identical, so the cost is O(hit files), not O(table).
+    *
+    * An all-empty write publishes no file, so a verb that changed nothing
+    * publishes the tip's content as it was — no probe job asks first.
+    * Under a live bucket layout every added file is written ROUTED and
+    * the layout carries. */
+  private def rowLevel(s: SparkSession, loc: String, mor: Boolean)
+                      (scan: Tip => Scan): Long = {
+    import org.apache.spark.sql.functions.col
     commit(s, loc) { t =>
       val tip = t.committed
-      val (files, schema) = (tip.files, tip.schema)
-      val candidates = envelope match {
-        case Some((lo, hi)) => statFiles(s, loc, tip.version, files, keyCol, lo, hi)
-        // empty or all-NULL-key source: equality can never match, so no
-        // file needs scanning — every row becomes an insert
-        case None => Nil
+      val Scan(files, change, pruneBy, dropped) = scan(tip)
+      val candidates = pruneBy.fold(files) { case (c, lo, hi) =>
+        statFiles(s, loc, tip.version, files, c, lo, hi)
       }
-      val hit =
-        if (candidates.isEmpty) Set.empty[String]
-        else readData(s, candidates, schema)
-          // tag the file on the single-source scan side BEFORE the join —
-          // input_file_name() is undefined over a multi-source plan
-          .select(col(keyCol), input_file_name().as("f"))
-          .join(keys, Seq(keyCol), "left_semi")
-          .select(col("f")).distinct()
-          .collect().map(r => normUrl(r.getString(0))).toSet
-      val (affected, kept) = files.partition(x => hit.contains(normPath(x)))
-      val dataDir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
-      val survivors =
-        if (affected.isEmpty) source
-        else readLive(s, affected, schema, tip.dvs)
-          .join(keys, Seq(keyCol), "left_anti")
-          .unionByName(source)
-      Publish(kept ++ writeData(survivors, dataDir), dvs = tip.dvs,
-        schemaJson = tip.schemaJson, scratch = Seq(dataDir))
+      lazy val hits = DeleteVectors.subtract(
+        change.hits(readData(s, candidates, tip.schema)
+          .withColumn(FileCol, col("_metadata.file_path"))
+          .withColumn(PosCol, col("_metadata.row_index"))),
+        DeleteVectors.positions(s, tip.dvs, candidates.map(normPath).toSet),
+        col(FileCol), col(PosCol))
+      val dir = new Path(loc, s"data/${java.util.UUID.randomUUID()}")
+      val (kept, dvs, added) =
+        if (mor) {
+          // coalesce(1): a vector is tiny by contract — one file keeps the
+          // manifest header and the readers' driver-side read cheap
+          val newDvs =
+            if (candidates.isEmpty) Nil
+            else writeData(hits.select(col(FileCol).as("file"),
+              col(PosCol).as("pos")).coalesce(1), new Path(dir, "dv"))
+          (tip.files, tip.dvs ++ newDvs,
+            (if (candidates.isEmpty) None else change.images(hits)) ++ change.source)
+        } else {
+          val hit = if (candidates.isEmpty) Set.empty[String] else hitFiles(hits)
+          val rewritten = candidates.filter(f => hit(normPath(f)))
+          val gone = (rewritten ++ dropped).toSet
+          val kept = tip.files.filterNot(gone)
+          (kept, if (gone.isEmpty) tip.dvs else filterCarriedDvs(s, tip.dvs, kept, dir),
+            Option.when(rewritten.nonEmpty)(
+              change.rewrite(readLive(s, rewritten, tip.schema, tip.dvs))) ++ change.source)
+        }
+      val routed = tip.layout.flatMap(BucketLayout.parse)
+      val newFiles = added.reduceOption(_ unionByName _).fold(Seq.empty[String]) { df =>
+        routed.fold(writeData(df, dir))(BucketLayout.writeBucketed(df, _, dir))
+      }
+      tip.carry.copy(files = kept ++ newFiles, dvs = dvs,
+        layout = tip.layout.filter(_ => routed.isDefined || newFiles.isEmpty),
+        scratch = Seq(dir))
     }
+  }
+
+  /** The normalized files `hits` names, in one job: each task reports
+    * its partition's distinct files, and the driver merges them — no
+    * shuffle for a set of file names. */
+  private def hitFiles(hits: DataFrame): Set[String] = {
+    import org.apache.spark.sql.Encoders
+    hits.select(FileCol).as(Encoders.STRING)
+      .mapPartitions((it: Iterator[String]) => it.distinct)(Encoders.STRING)
+      .collect().iterator.map(normUrl).toSet
   }
 
   /** Change data feed: every row-level change from `fromVersion`

@@ -485,16 +485,29 @@ private[v2] class SnapshotRowScan(spark: SparkSession, schema: StructType,
   require(fileIdx < 0 || fileIdx == required.length - 1,
     s"${SnapshotRowScan.FileCol} must be the trailing (metadata) column: $required")
 
-  // Spark may plan a scan's partitions more than once; the vectors are
-  // read once per kept-file set
-  @volatile private var dvMemo: (Set[String], Map[String, Array[Long]]) = (null, null)
+  // Spark plans a scan's partitions more than once per read: the zone-map
+  // and bucket pruning, the commit-directory listings and the vectors'
+  // broadcast run once per active-file set (runtime group filtering
+  // narrows it between the plans)
+  @volatile private var planned: (Seq[String], Array[InputPartition]) = (null, null)
 
   override def planInputPartitions(): Array[InputPartition] = {
+    val (key, parts) = planned
+    if (key eq activeFiles) parts
+    else {
+      val active = activeFiles
+      val p = plan(active)
+      planned = (active, p)
+      p
+    }
+  }
+
+  private def plan(active: Seq[String]): Array[InputPartition] = {
     // driver-side zone-map file skipping applies to DV versions too: a
     // skipped file's DV entries are simply never consulted
     val keep =
       if (allowPushdown) {
-        val ranged = pushed.foldLeft(activeFiles) { (fs, f) =>
+        val ranged = pushed.foldLeft(active) { (fs, f) =>
           SnapshotRowScan.v1Bound(f) match {
             case Some((c, lo, hi)) =>
               Snapshots.statFilesBounds(spark, loc, version, fs, c, lo, hi)
@@ -517,20 +530,11 @@ private[v2] class SnapshotRowScan(spark: SparkSession, schema: StructType,
           case None => ranged
         }
       }
-      else activeFiles
+      else active
     if (keep.isEmpty) return Array.empty
     val deleted: Map[String, Array[Long]] =
       if (dvs.isEmpty) Map.empty
-      else {
-        val keepNorm = keep.map(SnapshotRowScan.norm).toSet
-        dvMemo match {
-          case (k, m) if k == keepNorm => m
-          case _ =>
-            val m = SnapshotRowScan.loadDvMap(spark, dvs, keepNorm)
-            dvMemo = (keepNorm, m)
-            m
-        }
-      }
+      else SnapshotRowScan.loadDvMap(spark, dvs, keep.map(SnapshotRowScan.norm).toSet)
     val lengths = fileLengths(keep)
     val bc = spark.sparkContext.broadcast(deleted)
     layout match {

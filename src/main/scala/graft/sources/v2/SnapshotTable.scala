@@ -24,10 +24,9 @@ import graft.ops.Snapshots
   *    SPJ plan) survives pure-SQL ingest
   *  - `DELETE FROM snap.t WHERE <pred>`   → [[Snapshots.commitDelete]]'s
   *    copy-on-write path when every conjunct translates to a v1 filter
-  *    AND the table has no layout (`SupportsDelete` — the metadata-only
-  *    route, rewriting ONLY affected files and carrying the rest by
-  *    reference; under a layout the row-level path below runs instead,
-  *    whose routed write keeps the layout at the same cost class)
+  *    (`SupportsDelete` — the metadata-only route, rewriting ONLY
+  *    affected files, routed under a layout, and carrying the rest by
+  *    reference)
   *  - `DELETE` with a subquery, `UPDATE`, `MERGE INTO` →
   *    `SupportsRowLevelOperations` group-based rewrite: Spark computes
   *    the surviving rows, writes them through the same data writer
@@ -215,13 +214,10 @@ class SnapshotTable private[graft] (ident: String, spark: SparkSession,
   // wholly inside the range DROP as pure metadata, wholly-outside files
   // carry by reference, and only cutoff-straddling files rewrite — the
   // daily 100 TB "expire data older than N days" in O(straddling files).
-  // It routes its rewrite, so range deletes are accepted even under an
-  // active bucket layout. Anything else: commitDelete's generic CoW when
-  // layout-free, else the row-level fallback (whose routed write keeps
-  // the layout at the same O(affected files) cost class).
+  // Anything else: commitDelete's generic copy-on-write. Both route their
+  // rewrite under an active bucket layout, so the layout survives.
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    !pinned && filters.forall(f => SnapshotTable.toColumn(f).isDefined) &&
-      (layout.isEmpty || SnapshotTable.rangeOf(filters).isDefined)
+    !pinned && filters.forall(f => SnapshotTable.toColumn(f).isDefined)
   override def deleteWhere(filters: Array[Filter]): Unit = {
     requireMutable("DELETE")
     SnapshotTable.rangeOf(filters) match {

@@ -537,6 +537,50 @@ class SnapshotSpjSpec extends SparkTestBase {
     assert(all.filter(org.apache.spark.sql.functions.col("id") === 401L).count() == 1L)
   }
 
+  test("API delete / update / MoR update keep the layout, matching or not") {
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    fixture()
+    val loc = s"$root/fact"
+    // every outcome, no-match included, publishes the tip's layout: a
+    // rewrite or an image lands ROUTED, and a no-op carries
+    def kept(verb: String): Unit = {
+      val v = Snapshots.version(spark, loc)
+      assert(v.layout.contains("bucket,4,id"), s"$verb dropped the layout")
+      assert(v.files.forall(f => BucketLayout.bucketOfPath(f).isDefined),
+        s"$verb left an unrouted file: ${v.files}")
+    }
+    Snapshots.commitDelete(spark, loc, col("id") > 1000)
+    kept("a no-match commitDelete")
+    Snapshots.commitDelete(spark, loc, col("id") % 7 === 0)
+    kept("commitDelete")
+    Snapshots.commitUpdate(spark, loc, col("id") > 1000, Map("v" -> lit("x")))
+    kept("a no-match commitUpdate")
+    Snapshots.commitUpdate(spark, loc, col("id") <= 10, Map("v" -> concat(col("v"), lit("!"))))
+    kept("commitUpdate")
+    Snapshots.commitUpdateMoR(spark, loc, col("id") > 1000, Map("v" -> lit("x")))
+    kept("a no-match commitUpdateMoR")
+    // the images move keys 11..20 to 1011..1020: routed by the new key
+    Snapshots.commitUpdateMoR(spark, loc, col("id").between(11, 20),
+      Map("id" -> (col("id") + 1000)))
+    kept("commitUpdateMoR")
+    noBroadcast {
+      val df = spark.sql(
+        """SELECT f.id, f.v, d.w FROM spjcat.fact f
+          |JOIN spjcat.dim d ON f.id = d.id""".stripMargin)
+      assert(shuffles(df) == 0, "row-level commits broke the SPJ:\n" +
+        df.queryExecution.executedPlan)
+      val got = df.collect().map(r => (r.getLong(0), r.getString(1))).toMap
+      val want = (1L to 100L).filterNot(i => i % 7 == 0 || (i >= 11 && i <= 20))
+      assert(got.keySet == want.toSet)
+      assert((1L to 10L).filter(want.contains).forall(i => got(i) == s"f$i!"))
+    }
+    val moved = Snapshots.read(spark, loc).filter(col("id") > 1000)
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(moved == (11L to 20L).filterNot(_ % 7 == 0).map(_ + 1000))
+    // a point lookup prunes to the new key's bucket and still finds it
+    assert(spark.sql("SELECT v FROM spjcat.fact WHERE id = 1015").count() == 1L)
+  }
+
   test("partiallyClusteredDistribution: Zipf-hot bucket splits, rows exact") {
     import spark.implicits._
     wipe(); register()

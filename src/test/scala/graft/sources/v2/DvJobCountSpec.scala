@@ -1,8 +1,5 @@
 package graft.sources.v2
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -13,9 +10,7 @@ import graft.ops.Snapshots
 
 /** A delete vector is version metadata: it is read on the driver like
   * the manifest, so a DV-bearing read runs the same one Spark job as a
-  * DV-free one. Jobs are counted per job group by a listener; a control
-  * job in its own group, seen last on the FIFO bus, proves every earlier
-  * event was delivered. */
+  * DV-free one ([[SparkTestBase.jobsOf]] counts them). */
 class DvJobCountSpec extends SparkTestBase {
 
   private val root = "/tmp/graft-test/dvjobs"
@@ -35,33 +30,6 @@ class DvJobCountSpec extends SparkTestBase {
     t
   }
   private val live = (1L to 600L).count(_ % 29 != 0)
-
-  /** The Spark jobs `body` launches. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"dvjobs-${java.util.UUID.randomUUID()}"
-    val control = s"$group-control"
-    val started = new ConcurrentHashMap[String, AtomicInteger]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(g => started.computeIfAbsent(g, _ => new AtomicInteger).incrementAndGet())
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "under test")
-      body
-      sc.setJobGroup(control, "proves listener delivery")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!started.containsKey(control) && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(started.containsKey(control), "listener never saw the control job")
-      Option(started.get(group)).fold(0)(_.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   /** Write `df` to the noop sink, counting its rows on the way. */
   private def drain(df: DataFrame): Long = {
