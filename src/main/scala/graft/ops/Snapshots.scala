@@ -1407,7 +1407,10 @@ object Snapshots {
       val (kept, dvs, added) =
         if (mor) {
           // coalesce(1): a vector is tiny by contract — one file keeps the
-          // manifest header and the readers' driver-side read cheap
+          // manifest header and the readers' driver-side read cheap. The
+          // vector and an update's images are two jobs over `hits`; the
+          // files are immutable and the attempt's vectors fixed, so both
+          // name the same rows
           val newDvs =
             if (candidates.isEmpty) Nil
             else writeData(hits.select(col(FileCol).as("file"),

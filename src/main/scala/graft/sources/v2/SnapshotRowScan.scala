@@ -492,10 +492,10 @@ private[v2] class SnapshotRowScan(spark: SparkSession, schema: StructType,
   @volatile private var planned: (Seq[String], Array[InputPartition]) = (null, null)
 
   override def planInputPartitions(): Array[InputPartition] = {
+    val active = activeFiles
     val (key, parts) = planned
-    if (key eq activeFiles) parts
+    if (key eq active) parts
     else {
-      val active = activeFiles
       val p = plan(active)
       planned = (active, p)
       p
